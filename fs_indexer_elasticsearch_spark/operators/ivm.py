@@ -108,7 +108,7 @@ def maintain_min_max(
         else []
     )
     inc = feed.groupBy(*g).agg(
-        F.sum(F.when(is_add, 1).otherwise(-1)).alias("_dn"),
+        F.sum(_sign()).alias("_dn"),
         F.min(F.when(is_add, val)).alias("_ma"),
         F.max(F.when(is_add, val)).alias("_xa"),
         F.min(F.when(~is_add, val)).alias("_mr"),
@@ -224,6 +224,236 @@ def maintain_min_max(
     return kept.unionByName(recomputed)
 
 
+def _sign():
+    """The Z-set weight of a ``read_changes(update_images="both")`` row:
+    +1 for a row that adds to the state (insert, update post-image),
+    -1 for one that removes it (delete, update pre-image)."""
+    return F.when(
+        F.col("_change").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
+
+
+def _follow(rows: DataFrame, dim: DataFrame) -> DataFrame:
+    """Follow one link of a key chain: each row's ``_k`` becomes the
+    attribute ``_da`` of the dim row ``(_dk, _da)`` it names. An inner
+    join, so an unmatched or NULL key drops (SQL join semantics). A
+    signed dim frame's ``_w`` rides along; at most one side of any
+    join in a chain carries a weight."""
+    return (
+        rows.join(dim, F.col("_k") == F.col("_dk"))
+        .drop("_k", "_dk")
+        .withColumnRenamed("_da", "_k")
+    )
+
+
+def _compose(dims: list[DataFrame]) -> DataFrame:
+    """Compose dim frames left to right into one frame of the same
+    ``(_dk, _da[, _w])`` shape: the first dim's key mapped to the last
+    dim's attribute."""
+    out = dims[0]
+    for d in dims[1:]:
+        out = _follow(
+            out.withColumnsRenamed({"_dk": "_fk", "_da": "_k"}), d
+        ).withColumnsRenamed({"_fk": "_dk", "_k": "_da"})
+    return out
+
+
+class _KeyChain:
+    """A joined view's inputs: fact ⋈ dim1 [⋈ dim2], where the fact's
+    ``fact_key`` names a dim1 row, a dim's attribute names the next
+    dim's row, and the last dim's attribute is the view's group.
+    ``links`` holds one ``(store, key_col, attr_col, (from, to))`` per
+    dim; every store advances over its own version window, so an
+    out-of-band dim writer never has to share the fact's counter.
+    Frames carry the group (named after the last attribute column),
+    the fact's measure ``_v`` and a signed weight ``_w``; every joined
+    algebra is a fold of them.
+
+    Join strategies are left to AQE throughout: the typically small
+    dims and dim feeds broadcast at runtime, while a dim-wide
+    re-grouping touching millions of keys stays free to shuffle
+    instead of hitting the driver-built broadcast cap."""
+
+    def __init__(self, fact, fact_key, value, window, links):
+        self.fact, self.fact_key, self.value = fact, fact_key, value
+        self.window, self.links = window, links
+        self.group = links[-1][2]
+
+    def _facts(self, version: int) -> DataFrame:
+        return self.fact.read(version=version).select(
+            F.col(self.fact_key).alias("_k"), self.value.alias("_v")
+        )
+
+    def _dim(self, i: int, end: int) -> DataFrame:
+        store, key, attr, window = self.links[i]
+        return store.read(version=window[end]).select(
+            F.col(key).alias("_dk"), F.col(attr).alias("_da")
+        )
+
+    def rows(self, end: int, groups: DataFrame | None = None) -> DataFrame:
+        """The joined rows, each with ``_w`` = 1, at every store's
+        window start (``end=0``) or end (``end=1``): the input of every
+        from-scratch fold. ``groups`` (one column ``_x``) keeps only
+        those groups, NULL included. The dim map is pruned to them
+        before the key join, so the join prunes the fact scan to
+        exactly their facts and never rescans the base."""
+        m = _compose([self._dim(i, end) for i in range(len(self.links))])
+        if groups is not None:
+            m = m.join(
+                groups, F.col("_da").eqNullSafe(F.col("_x")), "left_semi"
+            )
+        return (
+            _follow(self._facts(self.window[end]), m)
+            .withColumnRenamed("_k", self.group)
+            .withColumn("_w", F.lit(1))
+        )
+
+    def delta(self) -> DataFrame | None:
+        """``V(to) − V(from)`` as one consolidated signed multiset
+        ``(group, _v, _w)``, the Z-set form of DBSP (Budiu et al.,
+        VLDB 2023), or None when every window is empty. Joins are
+        bilinear over signed multisets, so telescoping one store at a
+        time gives the exact identity (1 = pre-state, 2 = post-state;
+        X = C ⋈ N, the dims' composed fact-key → group map)
+
+            ΔV = ΔF ⋈ X1  +  F2 ⋈ ΔX,    ΔX = ΔC ⋈ N1  +  C2 ⋈ ΔN
+
+        - the fact feed joins the pre-state dims;
+        - each dim's signed feed joins the post-state dims to its left
+          and the pre-state dims to its right. These terms are summed
+          per (fact key, group) and cancelled to ΔX first, so a dim
+          update that keeps its group costs nothing; then ONE scan of
+          the post-state fact joins ΔX, which AQE broadcasts;
+        - the union is summed per (group, value) and zero weights
+          drop. Consolidation must precede any extremum fold: a fact
+          added under a key that moved away in the same window gets a
+          +1 in its old group that only the dim term's -1 cancels. It
+          also makes the departed values exact, so a dim move costs a
+          recompute only if a departed value reaches the horizon."""
+        fvf, fvt = self.window
+        terms, moves = [], []
+        if fvf != fvt:
+            feed = self.fact.read_changes(fvf, fvt, update_images="both")
+            terms.append(_follow(
+                feed.select(
+                    F.col(self.fact_key).alias("_k"),
+                    self.value.alias("_v"),
+                    _sign().alias("_w"),
+                ),
+                _compose([self._dim(i, 0) for i in range(len(self.links))]),
+            ))
+        for i, (store, key, attr, (vf, vt)) in enumerate(self.links):
+            if vf == vt:
+                continue
+            dfeed = store.read_changes(vf, vt, update_images="both").select(
+                F.col(key).alias("_dk"), F.col(attr).alias("_da"),
+                _sign().alias("_w"),
+            )
+            moves.append(_compose(
+                [self._dim(j, 1) for j in range(i)]
+                + [dfeed]
+                + [self._dim(j, 0) for j in range(i + 1, len(self.links))]
+            ))
+        if moves:
+            dx = (
+                reduce(DataFrame.unionByName, moves)
+                .groupBy("_dk", "_da")
+                .agg(F.sum("_w").alias("_w"))
+                .filter(F.col("_w") != 0)
+            )
+            terms.append(_follow(self._facts(fvt), dx))
+        if not terms:
+            return None
+        return (
+            reduce(DataFrame.unionByName, terms)
+            .groupBy(F.col("_k").alias(self.group), "_v")
+            .agg(F.sum("_w").alias("_w"))
+            .filter(F.col("_w") != 0)
+        )
+
+
+def _plus(c: str):
+    """A distributive measure merged with its folded delta."""
+    return (
+        (F.coalesce(f"_o_{c}", F.lit(0)) + F.coalesce(c, F.lit(0)))
+        .cast("long")
+        .alias(c)
+    )
+
+
+def _joined_view(
+    chain: _KeyChain,
+    old_view: DataFrame | None,
+    fold,
+    cols: list[str],
+    merged: list,
+    *,
+    keys: list[str] | None = None,
+    threat=None,
+) -> DataFrame:
+    """The maintenance step every joined view shares. ``fold(rows)``
+    is the algebra's one from-scratch fold over signed rows; it also
+    folds the chain's delta. The old view (``old_view``, or the fold at
+    the window start) meets the folded delta in ONE null-safe full
+    outer join on ``keys`` (default: the group), where the old
+    measures read ``_o_<col>`` and ``merged`` computes the new
+    ``cols``. A NULL group is one group, as in SQL GROUP BY. Rows
+    whose first measure (the count) reaches zero drop.
+
+    Extremum algebras pass ``threat``: a predicate over the combined
+    row, true when a removal in the delta ties or beats the stored
+    horizon; where it is NULL (no stored horizon), any removal counts.
+    The fold names its largest removal ``_xr``. Additions
+    can only improve an extremum, but a removal there may retire a
+    member, so exactly those groups refold from the chain's
+    post-state rows, pruned to them. The affected groups stay a
+    DataFrame end to end: no driver key list, no literal predicate,
+    and AQE picks broadcast or shuffle for the semi-join."""
+    keys = keys or [chain.group]
+    old = old_view if old_view is not None else fold(chain.rows(0))
+    old = old.select(*keys, *cols)
+    delta = chain.delta()
+    if delta is None:
+        return old
+    j = _multi_null_safe_outer(
+        old.select(*keys, *[F.col(c).alias(f"_o_{c}") for c in cols]),
+        fold(delta),
+        keys,
+    )
+    if threat is None:
+        return j.select(*keys, *merged).filter(F.col(cols[0]) > 0)
+    # Two consumers (kept rows + affected groups) share one execution.
+    j = j.withColumn(
+        "_recompute", F.coalesce(threat, F.col("_xr").isNotNull())
+    ).transform(ckpt_shared)
+    kept = (
+        j.filter(~F.col("_recompute"))
+        .select(*keys, *merged)
+        .filter(F.col(cols[0]) > 0)
+    )
+    affected = j.filter(F.col("_recompute")).select(
+        F.col(chain.group).alias("_x")
+    )
+    # Bounded existence probe, not a key collect: the common cycle
+    # with no departure never plans the post-state read.
+    if affected.isEmpty():
+        return kept
+    return kept.unionByName(
+        fold(chain.rows(1, affected)).select(*keys, *cols)
+    )
+
+
+def _count_sum() -> list:
+    return [
+        F.sum("_w").cast("long").alias("n"),
+        F.sum(F.col("_w") * F.col("_v")).cast("long").alias("s"),
+    ]
+
+
+def _cents(cents_col: str):
+    return F.round(F.col(cents_col) * 100).cast("long")
+
+
 def maintain_joined_agg(
     fact_store,
     dim_store,
@@ -237,149 +467,32 @@ def maintain_joined_agg(
     old_view: DataFrame | None = None,
 ) -> DataFrame:
     """Maintain a fact ⋈ dim per-group (count, cents-sum) view across
-    one window in which BOTH stores changed, by the exact two-term
-    delta decomposition
+    one window in which BOTH stores changed. Returns columns
+    ``[group_col, n, s]`` (``s`` in integer cents) equal to a
+    from-scratch ``F(v_to) ⋈ D(v_to)`` aggregate.
 
-        V2 - V1 = ΔF ⋈ D1  +  F2 ⋈ ΔD
-
-    (first change the facts under yesterday's dim, then move whole
-    per-key fact aggregates between groups as the dim rows move).
-    Returns columns ``[group_col, n, s]`` (``s`` in integer cents)
-    equal to a from-scratch ``F(v_to) ⋈ D(v_to)`` aggregate.
-
-    - Term 1 joins the FACT feed to the pre-state dim with signed
-      algebra: pre-images subtract, post-images add.
-    - Term 2 signs the DIM feed (a re-grouped key subtracts its
-      entire post-state fact aggregate from the old group and adds it
-      to the new one; inserts/deletes are one-sided) against per-key
-      aggregates of F(v_to) RESTRICTED by a semi-join to only the
-      dim-changed keys — the fact table is never rescanned; O(facts
-      of changed keys).
-
-    Join strategies are left to AQE (same reasoning as
-    ``maintain_min_max``'s affected-group join): the typically-small
-    dim and changed-key set broadcast at runtime, while a dim-wide
-    re-grouping touching millions of keys stays free to take a
-    shuffled join instead of hitting the driver-built broadcast cap.
+    Count and sum are linear, so they fold the chain's signed delta
+    directly (:class:`_KeyChain`): the fact feed under the pre-state
+    dim, plus the dim feed carrying each moved key's post-state facts
+    out of its old group and into its new one. The fact table is read
+    only for the facts of dim-changed keys.
 
     ``old_view`` is the PREVIOUSLY MAINTAINED view (this function's
     own output) — feed each cycle's result back in and the base is
-    never rescanned after the first derivation, exactly like
-    ``maintain_min_max``'s steady state. Omitted, V1 derives from the
-    two ``v_from`` snapshots (one O(v_from) join, the demo /
-    first-cycle path).
-
-    A NULL ``group_col`` is a legitimate group (SQL GROUP BY treats
-    NULL as one group — a dim row with an unset attribute): the
-    three-way combine pairs terms with eqNullSafe joins, same as
-    ``maintain_min_max``'s old/feed join, so the NULL group's three
-    contributions land on one output row instead of splitting."""
-    cents = F.round(F.col(cents_col) * 100).cast("long")
-    d_prev = dim_store.read(version=v_from).select(dim_key_col, group_col)
-    if old_view is not None:
-        old = old_view.select(
-            group_col, F.col("n").alias("_n0"), F.col("s").alias("_s0")
-        )
-    else:
-        old = (
-            fact_store.read(version=v_from)
-            .join(d_prev, F.col(fact_key_col) == F.col(dim_key_col))
-            .groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("_n0"), F.sum(cents).alias("_s0"))
-        )
-    sign_of = lambda col: F.when(  # noqa: E731
-        col.isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    ffeed = fact_store.read_changes(v_from, v_to, update_images="both").join(
-        d_prev, F.col(fact_key_col) == F.col(dim_key_col)
+    never rescanned after the first derivation. Omitted, V1 derives
+    from the two ``v_from`` snapshots (one O(v_from) join, the demo /
+    first-cycle path). A NULL ``group_col`` is one legitimate group
+    (a dim row with an unset attribute)."""
+    chain = _KeyChain(
+        fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
+        [(dim_store, dim_key_col, group_col, (v_from, v_to))],
     )
-    fsign = sign_of(F.col("_change"))
-    t1 = ffeed.groupBy(group_col).agg(
-        F.sum(fsign).alias("_n1"), F.sum(fsign * cents).alias("_s1")
-    )
-    # Two consumers (changed-key set + signed contributions) share one
-    # execution of the dim feed's classification join.
-    dfeed = (
-        dim_store.read_changes(v_from, v_to, update_images="both")
-        .select(
-            F.col(dim_key_col).alias("_dk"),
-            group_col,
-            sign_of(F.col("_change")).alias("_dsign"),
-        )
-        .transform(ckpt_shared)
-    )
-    changed_keys = dfeed.select(F.col("_dk").alias("_ck")).distinct()
-    per_key = (
-        fact_store.read(version=v_to)
-        .join(
-            changed_keys,
-            F.col(fact_key_col) == F.col("_ck"),
-            "left_semi",
-        )
-        .groupBy(fact_key_col)
-        .agg(F.count(F.lit(1)).alias("_kn"), F.sum(cents).alias("_ks"))
-    )
-    # Left join: a dim-changed key with no facts contributes zero.
-    t2 = (
-        dfeed.join(per_key, F.col("_dk") == F.col(fact_key_col), "left")
-        .groupBy(group_col)
-        .agg(
-            F.sum(F.col("_dsign") * F.coalesce("_kn", F.lit(0))).alias("_n2"),
-            F.sum(F.col("_dsign") * F.coalesce("_ks", F.lit(0))).alias("_s2"),
-        )
-    )
-    # Null-safe combine: a plain USING full-outer would never pair the
-    # NULL group's rows across the three terms (NULL != NULL), so its
-    # old count, fact delta and dim moves would emerge as three
-    # separate rows. eqNullSafe pairs them; the group value coalesces
-    # from whichever side is present (still NULL for the NULL group —
-    # that IS its label).
-    m = _null_safe_outer(old, t1, group_col, ["_n0", "_s0"], ["_n1", "_s1"])
-    return (
-        _null_safe_outer(
-            m, t2, group_col, ["_n0", "_s0", "_n1", "_s1"], ["_n2", "_s2"]
-        )
-        .select(
-            group_col,
-            (
-                F.coalesce("_n0", F.lit(0))
-                + F.coalesce("_n1", F.lit(0))
-                + F.coalesce("_n2", F.lit(0))
-            )
-            .cast("long")
-            .alias("n"),
-            (
-                F.coalesce("_s0", F.lit(0))
-                + F.coalesce("_s1", F.lit(0))
-                + F.coalesce("_s2", F.lit(0))
-            )
-            .cast("long")
-            .alias("s"),
-        )
-        .filter(F.col("n") > 0)
-    )
-
-
-def _null_safe_outer(
-    left: DataFrame,
-    right: DataFrame,
-    group_col: str,
-    left_cols: list[str],
-    right_cols: list[str],
-) -> DataFrame:
-    """Full-outer join of two per-group frames on ``group_col`` with
-    NULL-as-a-group semantics (eqNullSafe — SQL GROUP BY's one NULL
-    group must pair across terms, where plain equality would split
-    it), coalescing the group label from whichever side is present."""
-    l, r = left.alias("l"), right.alias("r")
-    return l.join(
-        r,
-        F.col(f"l.{group_col}").eqNullSafe(F.col(f"r.{group_col}")),
-        "full_outer",
-    ).select(
-        F.coalesce(f"l.{group_col}", f"r.{group_col}").alias(group_col),
-        *left_cols,
-        *right_cols,
+    return _joined_view(
+        chain,
+        old_view,
+        lambda rows: rows.groupBy(group_col).agg(*_count_sum()),
+        ["n", "s"],
+        [_plus("n"), _plus("s")],
     )
 
 
@@ -395,247 +508,51 @@ def maintain_joined_min_max(
     cents_col: str = "price",
     old_view: DataFrame | None = None,
 ) -> DataFrame:
-    """Compose the two IVM algebras (r10 verdict #5): maintain a
-    fact ⋈ dim per-group ``(n, s, min_c, max_c)`` view — count,
-    integer-cents sum, AND extremum measures — across one window in
-    which BOTH stores changed. Returns
-    ``[group_col, n, s, min_c, max_c]`` equal to a from-scratch
-    ``F(v_to) ⋈ D(v_to)`` aggregate.
+    """Compose the two IVM algebras: maintain a fact ⋈ dim per-group
+    ``(n, s, min_c, max_c)`` view — count, integer-cents sum AND
+    extremum measures — across one window in which BOTH stores
+    changed. Returns ``[group_col, n, s, min_c, max_c]`` equal to a
+    from-scratch ``F(v_to) ⋈ D(v_to)`` aggregate.
 
-    Why neither parent covers this: ``maintain_joined_agg`` is
-    count/sum only (distributive — pure signed algebra), and
-    ``maintain_min_max`` is single-table — a DIM MOVE can retire a
-    group's extremum without any fact delete (the extremum-holding
-    key re-groups away), which no fact-feed inspection can see.
+    Neither parent covers this alone: ``maintain_joined_agg`` is
+    count/sum only, and ``maintain_min_max`` is single-table, while a
+    DIM MOVE can retire a group's extremum without any fact delete.
+    The chain's consolidated delta names every value that left a
+    group, by a fact removal or by its key moving away, so one rule
+    serves both: the ``_w > 0`` values are add-candidates, and a group
+    recomputes from its pruned post-state join only when a ``_w < 0``
+    value ties or beats its stored min or max."""
+    chain = _KeyChain(
+        fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
+        [(dim_store, dim_key_col, group_col, (v_from, v_to))],
+    )
+    pos, neg = F.col("_w") > 0, F.col("_w") < 0
 
-    n and s maintain by the exact two-term decomposition
-    ``V2 − V1 = ΔF ⋈ D1 + F2 ⋈ ΔD`` (same algebra as
-    ``maintain_joined_agg``). min/max are SEMI-incremental, split per
-    group exactly like ``maintain_min_max``:
+    def fold(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(group_col).agg(
+            *_count_sum(),
+            F.min(F.when(pos, F.col("_v"))).alias("min_c"),
+            F.max(F.when(pos, F.col("_v"))).alias("max_c"),
+            F.min(F.when(neg, F.col("_v"))).alias("_mr"),
+            F.max(F.when(neg, F.col("_v"))).alias("_xr"),
+        )
 
-    - additions can only improve an extremum, so add-candidates come
-      from (a) fact-feed post-images assigned to their POST-state dim
-      group and (b) moved-in dim keys' post-state per-key extrema
-      (already aggregated for term 2 — one shared scan);
-    - a group is RECOMPUTED from the post-state join when an extremum
-      may have departed: a fact-feed removal under the PRE-state dim
-      ties-or-beats the stored extremum, OR any dim key genuinely
-      left the group (pre-group ≠ post-group null-safe, or deleted) —
-      the departed key's pre-state fact values are unknown without a
-      rescan, so departure is conservatively a threat. Attribute-only
-      dim updates (pre-group = post-group) threaten nothing and are
-      filtered out of the threat set (their term-2 rows still cancel
-      in the n/s algebra).
-
-    The recompute restricts BOTH sides before the join: D2 is
-    semi-joined to the affected groups first, so the fact scan is
-    pruned by the key join to only the threatened groups' facts —
-    never a full rescan. Affected groups stay a DataFrame end to end
-    (no driver key list); join strategies are left to AQE, same
-    reasoning as both parents. NULL groups pair via eqNullSafe
-    everywhere (a NULL dim attribute is one legitimate group)."""
-    cents = F.round(F.col(cents_col) * 100).cast("long")
-    d_prev = dim_store.read(version=v_from).select(dim_key_col, group_col)
-    d_cur = dim_store.read(version=v_to).select(
-        F.col(dim_key_col).alias("_dk2"), F.col(group_col).alias("_g2")
+    return _joined_view(
+        chain,
+        old_view,
+        fold,
+        ["n", "s", "min_c", "max_c"],
+        [
+            _plus("n"),
+            _plus("s"),
+            # least/greatest skip NULLs: a new group takes the delta's
+            # extremum, an untouched one keeps the stored value.
+            F.least("_o_min_c", "min_c").alias("min_c"),
+            F.greatest("_o_max_c", "max_c").alias("max_c"),
+        ],
+        threat=(F.col("_mr") <= F.col("_o_min_c"))
+        | (F.col("_xr") >= F.col("_o_max_c")),
     )
-    if old_view is not None:
-        old = old_view.select(
-            group_col,
-            F.col("n").alias("_n0"),
-            F.col("s").alias("_s0"),
-            F.col("min_c").alias("_m0"),
-            F.col("max_c").alias("_x0"),
-        )
-    else:
-        old = (
-            fact_store.read(version=v_from)
-            .join(d_prev, F.col(fact_key_col) == F.col(dim_key_col))
-            .groupBy(group_col)
-            .agg(
-                F.count(F.lit(1)).alias("_n0"),
-                F.sum(cents).alias("_s0"),
-                F.min(cents).alias("_m0"),
-                F.max(cents).alias("_x0"),
-            )
-        )
-    sign_of = lambda col: F.when(  # noqa: E731
-        col.isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    feed = fact_store.read_changes(
-        v_from, v_to, update_images="both"
-    ).transform(ckpt_shared)
-    is_add = F.col("_change").isin("insert", "update_postimage")
-    # Term 1 (n/s algebra + removal threats): fact feed under the
-    # PRE-state dim — removals happened to rows grouped by D1.
-    ffeed = feed.join(d_prev, F.col(fact_key_col) == F.col(dim_key_col))
-    fsign = sign_of(F.col("_change"))
-    t1 = ffeed.groupBy(group_col).agg(
-        F.sum(fsign).alias("_n1"),
-        F.sum(fsign * cents).alias("_s1"),
-        F.min(F.when(~is_add, cents)).alias("_fr_min"),
-        F.max(F.when(~is_add, cents)).alias("_fr_max"),
-    )
-    # Add-candidates: fact-feed post-images land in their POST-state
-    # dim group (an added row is a v_to row — its group is D2's).
-    fadd = (
-        feed.filter(is_add)
-        .join(d_cur, F.col(fact_key_col) == F.col("_dk2"))
-        .groupBy(F.col("_g2").alias(group_col))
-        .agg(
-            F.min(cents).alias("_fa_min"),
-            F.max(cents).alias("_fa_max"),
-        )
-    )
-    # Dim feed, shared by the n/s term 2, the moved-in candidates and
-    # the departure threats (one classification join execution).
-    dfeed = (
-        dim_store.read_changes(v_from, v_to, update_images="both")
-        .select(
-            F.col(dim_key_col).alias("_dk"),
-            group_col,
-            sign_of(F.col("_change")).alias("_dsign"),
-        )
-        .transform(ckpt_shared)
-    )
-    changed_keys = dfeed.select(F.col("_dk").alias("_ck")).distinct()
-    per_key = (
-        fact_store.read(version=v_to)
-        .join(changed_keys, F.col(fact_key_col) == F.col("_ck"), "left_semi")
-        .groupBy(fact_key_col)
-        .agg(
-            F.count(F.lit(1)).alias("_kn"),
-            F.sum(cents).alias("_ks"),
-            F.min(cents).alias("_kmin"),
-            F.max(cents).alias("_kmax"),
-        )
-        .transform(ckpt_shared)
-    )
-    dj = dfeed.join(per_key, F.col("_dk") == F.col(fact_key_col), "left")
-    t2 = dj.groupBy(group_col).agg(
-        F.sum(F.col("_dsign") * F.coalesce("_kn", F.lit(0))).alias("_n2"),
-        F.sum(F.col("_dsign") * F.coalesce("_ks", F.lit(0))).alias("_s2"),
-        # Moved-in (and attribute-updated) keys' post-state extrema:
-        # their F2 values are v_to members of this group, so they are
-        # valid min/max candidates; for a no-op move they're already
-        # in the group — least/greatest make the redundancy harmless.
-        F.min(F.when(F.col("_dsign") == 1, F.col("_kmin"))).alias("_da_min"),
-        F.max(F.when(F.col("_dsign") == 1, F.col("_kmax"))).alias("_da_max"),
-    )
-    # Departure threats: a key whose PRE-group differs (null-safe)
-    # from its POST-group — or that was deleted outright — may have
-    # held its old group's extremum; its pre-state fact values are
-    # unknown without a rescan, so its old group recomputes. The
-    # struct flag distinguishes "no pre row" from "pre row with a
-    # NULL group" (a NULL group is real and must be threatenable).
-    mv = dfeed.groupBy("_dk").agg(
-        F.max(
-            F.when(
-                F.col("_dsign") == -1,
-                F.struct(F.lit(1).alias("h"), F.col(group_col).alias("g")),
-            )
-        ).alias("_pre"),
-        F.max(
-            F.when(
-                F.col("_dsign") == 1,
-                F.struct(F.lit(1).alias("h"), F.col(group_col).alias("g")),
-            )
-        ).alias("_post"),
-    )
-    dthreat = (
-        mv.filter(
-            F.col("_pre").isNotNull()
-            & (
-                F.col("_post").isNull()
-                | ~F.col("_pre.g").eqNullSafe(F.col("_post.g"))
-            )
-        )
-        .select(F.col("_pre.g").alias(group_col))
-        .distinct()
-        .withColumn("_dthreat", F.lit(True))
-    )
-    j = (
-        _null_safe_outer(old, t1, group_col,
-                         ["_n0", "_s0", "_m0", "_x0"],
-                         ["_n1", "_s1", "_fr_min", "_fr_max"])
-        .transform(lambda df: _null_safe_outer(
-            df, t2, group_col,
-            ["_n0", "_s0", "_m0", "_x0", "_n1", "_s1", "_fr_min", "_fr_max"],
-            ["_n2", "_s2", "_da_min", "_da_max"]))
-        .transform(lambda df: _null_safe_outer(
-            df, fadd, group_col,
-            ["_n0", "_s0", "_m0", "_x0", "_n1", "_s1", "_fr_min", "_fr_max",
-             "_n2", "_s2", "_da_min", "_da_max"],
-            ["_fa_min", "_fa_max"]))
-        .transform(lambda df: _null_safe_outer(
-            df, dthreat, group_col,
-            ["_n0", "_s0", "_m0", "_x0", "_n1", "_s1", "_fr_min", "_fr_max",
-             "_n2", "_s2", "_da_min", "_da_max", "_fa_min", "_fa_max"],
-            ["_dthreat"]))
-        .withColumn(
-            "_n_new",
-            (
-                F.coalesce("_n0", F.lit(0))
-                + F.coalesce("_n1", F.lit(0))
-                + F.coalesce("_n2", F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            "_s_new",
-            (
-                F.coalesce("_s0", F.lit(0))
-                + F.coalesce("_s1", F.lit(0))
-                + F.coalesce("_s2", F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            "_recompute",
-            F.coalesce("_dthreat", F.lit(False))
-            | F.coalesce(
-                (
-                    F.col("_fr_min").isNotNull()
-                    & (
-                        F.col("_m0").isNull()
-                        | (F.col("_fr_min") <= F.col("_m0"))
-                        | (F.col("_fr_max") >= F.col("_x0"))
-                    )
-                ),
-                F.lit(False),
-            ),
-        )
-        .transform(ckpt_shared)
-    )
-    kept = j.filter(~F.col("_recompute") & (F.col("_n_new") > 0)).select(
-        group_col,
-        F.col("_n_new").alias("n"),
-        F.col("_s_new").alias("s"),
-        F.least("_m0", "_fa_min", "_da_min").alias("min_c"),
-        F.greatest("_x0", "_fa_max", "_da_max").alias("max_c"),
-    )
-    affected = j.filter(F.col("_recompute")).select(
-        F.col(group_col).alias("_ag")
-    )
-    if affected.isEmpty():
-        return kept
-    # Prune D2 to the threatened groups FIRST, so the key join prunes
-    # the fact scan to those groups' facts — the recompute never
-    # rescans the whole base (maintain_min_max's honesty note does
-    # not apply here: the dim key join IS the per-group index).
-    d_aff = d_cur.join(
-        affected, F.col("_g2").eqNullSafe(F.col("_ag")), "left_semi"
-    )
-    recomputed = (
-        fact_store.read(version=v_to)
-        .join(d_aff, F.col(fact_key_col) == F.col("_dk2"))
-        .groupBy(F.col("_g2").alias(group_col))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(cents).alias("s"),
-            F.min(cents).alias("min_c"),
-            F.max(cents).alias("max_c"),
-        )
-    )
-    return kept.unionByName(recomputed)
 
 
 def maintain_value_counts(
@@ -696,9 +613,8 @@ def maintain_value_counts(
             .agg(F.count(F.lit(1)).alias("_c0"))
         )
     feed = store.read_changes(v_from, v_to, update_images="both")
-    is_add = F.col("_change").isin("insert", "update_postimage")
     inc = feed.groupBy(*gv).agg(
-        F.sum(F.when(is_add, 1).otherwise(-1)).alias("_dc")
+        F.sum(_sign()).alias("_dc")
     )
     o, i = old.alias("o"), inc.alias("i")
     joined = o.join(
@@ -895,7 +811,7 @@ def maintain_top_k(
     is_add = F.col("_change").isin("insert", "update_postimage")
     adds = ranked_topk(feed.filter(is_add)).withColumnRenamed("_tk", "_ta")
     counts = feed.groupBy(*g).agg(
-        F.sum(F.when(is_add, 1).otherwise(-1)).alias("_dn"),
+        F.sum(_sign()).alias("_dn"),
         F.max(F.when(~is_add, val)).alias("_xr"),
     )
     inc = _multi_null_safe_outer(counts, adds, g).select(
@@ -971,8 +887,9 @@ def _multi_null_safe_outer(
     left: DataFrame, right: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Full-outer join on ALL group columns with NULL-as-a-group
-    pairing, group labels coalesced — the multi-column sibling of
-    ``_null_safe_outer``."""
+    pairing (eqNullSafe — SQL GROUP BY's one NULL group must pair
+    across sides, where plain equality would split it), group labels
+    coalesced from whichever side is present."""
     l, r = left.alias("l"), right.alias("r")
     return l.join(
         r,
@@ -1047,10 +964,9 @@ def maintain_moments(
             )
         )
     feed = store.read_changes(v_from, v_to, update_images="both")
-    is_add = F.col("_change").isin("insert", "update_postimage")
-    sign = F.when(is_add, F.lit(1)).otherwise(F.lit(-1)).cast("decimal(19,0)")
+    sign = _sign().cast("decimal(19,0)")
     inc = feed.groupBy(*g).agg(
-        F.sum(F.when(is_add, 1).otherwise(-1)).alias("_dn"),
+        F.sum(_sign()).alias("_dn"),
         F.sum((sign * val).cast("decimal(38,0)")).cast("decimal(38,0)").alias("_ds"),
         F.sum((sign * sq).cast("decimal(38,0)")).cast("decimal(38,0)").alias("_dq"),
     )
@@ -1086,24 +1002,15 @@ def maintain_joined_value_counts(
     group_col: str,
     value_col: str,
     old_hist: DataFrame | None = None,
-    dim_v_from: int | None = None,
-    dim_v_to: int | None = None,
+    dim_window: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Maintain the fact ⋈ dim per-(group, value) multiplicity
     histogram across one window in which BOTH stores changed — the
-    composition of ``maintain_joined_agg``'s two-term decomposition
-    with ``maintain_value_counts``'s bin algebra. Bins are counts
-    grouped one level finer than the joined (n, s) view, so the same
-    exact identity applies:
-
-        bins(V2) - bins(V1) = bins(ΔF ⋈ D1) + bins(F2 ⋈ ΔD)
-
-    - Term 1 joins the FACT feed to the pre-state dim and signs bin
-      deltas per (group, value): pre-images −1, post-images +1.
-    - Term 2 signs the DIM feed against per-(key, value) counts of
-      F(v_to) RESTRICTED by a semi-join to the dim-changed keys — a
-      re-grouped key moves its whole value multiset between groups;
-      the fact table is never rescanned.
+    composition of ``maintain_joined_agg``'s chain delta with
+    ``maintain_value_counts``'s bin algebra. Bins are counts grouped
+    one level finer than the joined (n, s) view, and the chain's
+    consolidated ``(group, value, _w)`` delta IS the bin delta: a
+    re-grouped key moves its whole value multiset between groups.
 
     Serve the holistic aggregates — exact COUNT(DISTINCT), MEDIAN /
     quantiles, MODE per dim group — from the result with
@@ -1112,84 +1019,26 @@ def maintain_joined_value_counts(
     departure withdraws a group's entire contribution. Returns
     ``[group_col, value_col, c]`` equal to a from-scratch
     ``F(v_to) ⋈ D(v_to)`` bin count; ``old_hist`` feeds back the
-    previous cycle's output for the never-rescan steady state. Join
-    strategies are left to AQE throughout (same reasoning as
-    ``maintain_joined_agg``).
+    previous cycle's output for the never-rescan steady state.
 
-    ``dim_v_from`` / ``dim_v_to`` (default: the fact window's numbers)
-    let the DIM side advance over its OWN version window — the
-    identity bins(V2) − bins(V1) = bins(ΔF⋈D1) + bins(F2⋈ΔD) never
-    required the two stores' version counters to align, only that V1
-    is (f_from, d_from) and V2 is (f_to, d_to). The streaming joined
+    ``dim_window`` (default: the fact window) lets the DIM side
+    advance over its OWN ``(from, to)`` version window: V1 is
+    (f_from, d_from) and V2 is (f_to, d_to), and the identity never
+    required the two stores' counters to align. The streaming joined
     maintainer records one reflected version PER STORE and passes
     both windows here."""
-    gv = [group_col, value_col]
-    d_from = v_from if dim_v_from is None else dim_v_from
-    d_to = v_to if dim_v_to is None else dim_v_to
-    d_prev = dim_store.read(version=d_from).select(dim_key_col, group_col)
-    if old_hist is not None:
-        old = old_hist.select(*gv, F.col("c").alias("_c0"))
-    else:
-        old = (
-            fact_store.read(version=v_from)
-            .join(d_prev, F.col(fact_key_col) == F.col(dim_key_col))
-            .groupBy(*gv)
-            .agg(F.count(F.lit(1)).alias("_c0"))
-        )
-    sign_of = lambda col: F.when(  # noqa: E731
-        col.isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    ffeed = fact_store.read_changes(v_from, v_to, update_images="both").join(
-        d_prev, F.col(fact_key_col) == F.col(dim_key_col)
+    chain = _KeyChain(
+        fact_store, fact_key_col, F.col(value_col), (v_from, v_to),
+        [(dim_store, dim_key_col, group_col, dim_window or (v_from, v_to))],
     )
-    t1 = ffeed.groupBy(*gv).agg(
-        F.sum(sign_of(F.col("_change"))).alias("_c1")
-    )
-    dfeed = (
-        dim_store.read_changes(d_from, d_to, update_images="both")
-        .select(
-            F.col(dim_key_col).alias("_dk"),
-            group_col,
-            sign_of(F.col("_change")).alias("_dsign"),
-        )
-        .transform(ckpt_shared)
-    )
-    changed_keys = dfeed.select(F.col("_dk").alias("_ck")).distinct()
-    per_key_val = (
-        fact_store.read(version=v_to)
-        .join(
-            changed_keys,
-            F.col(fact_key_col) == F.col("_ck"),
-            "left_semi",
-        )
-        .groupBy(fact_key_col, value_col)
-        .agg(F.count(F.lit(1)).alias("_kc"))
-    )
-    # Left join: a dim-changed key with no facts yields one
-    # (group, NULL-value) row with _kc NULL — it contributes 0 and the
-    # c > 0 filter drops the phantom bin (a REAL NULL-value bin, if
-    # the data has one, just absorbs a harmless +0).
-    t2 = (
-        dfeed.join(per_key_val, F.col("_dk") == F.col(fact_key_col), "left")
-        .groupBy(*gv)
-        .agg(
-            F.sum(F.col("_dsign") * F.coalesce("_kc", F.lit(0))).alias("_c2")
-        )
-    )
-    m = _multi_null_safe_outer(old, t1, gv)
-    return (
-        _multi_null_safe_outer(m, t2, gv)
-        .select(
-            *gv,
-            (
-                F.coalesce("_c0", F.lit(0))
-                + F.coalesce("_c1", F.lit(0))
-                + F.coalesce("_c2", F.lit(0))
-            )
-            .cast("long")
-            .alias("c"),
-        )
-        .filter(F.col("c") > 0)
+    return _joined_view(
+        chain,
+        old_hist,
+        lambda rows: rows.groupBy(group_col, F.col("_v").alias(value_col))
+        .agg(F.sum("_w").cast("long").alias("c")),
+        ["c"],
+        [_plus("c")],
+        keys=[group_col, value_col],
     )
 
 
@@ -1385,14 +1234,12 @@ def _merge_count_sum(
     cascade level shares; callers always supply a view frame (the
     cascade derives both levels when no feedback is given)."""
     return (
-        _null_safe_outer(
+        _multi_null_safe_outer(
             old.select(
                 group_col, F.col("n").alias("_n0"), F.col("s").alias("_s0")
             ),
             delta,
-            group_col,
-            ["_n0", "_s0"],
-            ["_dn", "_ds"],
+            [group_col],
         )
         .select(
             group_col,
@@ -1451,8 +1298,7 @@ def maintain_rollup_cascade(
     the maintained form of the same size-tree idea."""
     val = F.col(value_col)
     feed = store.read_changes(v_from, v_to, update_images="both")
-    is_add = F.col("_change").isin("insert", "update_postimage")
-    sign = F.when(is_add, F.lit(1)).otherwise(F.lit(-1))
+    sign = _sign()
     # ONE aggregation of the feed produces the fine delta; both levels
     # consume it (localCheckpoint shares the execution).
     d_fine = (
@@ -1537,9 +1383,7 @@ def maintain_cms(
             .agg(F.count(F.lit(1)).cast("long").alias("_c0"))
         )
     feed = store.read_changes(v_from, v_to, update_images="both")
-    sign = F.when(
-        F.col("_change").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
+    sign = _sign()
     delta = (
         feed.select(key.alias("_k"), sign.alias("_s"), F.explode(depths).alias("d"))
         .select("d", cms_bucket(F.col("d"), F.col("_k"), width).alias("bucket"), "_s")
@@ -1568,8 +1412,7 @@ def join_membership_delta(
     fact_key_col: str,
     dim_key_col: str,
     view_df: DataFrame,
-    dim_v_from: int | None = None,
-    dim_v_to: int | None = None,
+    dim_window: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The DELTA form of :func:`maintain_join_membership`, for a view
     that is PUBLISHED AS A KEYED STORE rather than rewritten whole:
@@ -1588,11 +1431,11 @@ def join_membership_delta(
     Merging these into the view store costs O(feed + flips), never
     O(|fact|). ``view_df`` is the current published view (fact columns
     + ``matched``); the caller reads it from the view store, so the
-    store IS the feedback loop. ``dim_v_from``/``dim_v_to`` let the
-    dim window differ from the fact window (an out-of-band dim writer
-    has its own version counter); they default to the fact window."""
-    dvf = v_from if dim_v_from is None else dim_v_from
-    dvt = v_to if dim_v_to is None else dim_v_to
+    store IS the feedback loop. ``dim_window`` lets the dim's
+    ``(from, to)`` window differ from the fact window (an out-of-band
+    dim writer has its own version counter); it defaults to the fact
+    window."""
+    dvf, dvt = dim_window or (v_from, v_to)
     out_cols = [c for c in view_df.columns if c != "_bucket"]
     view_df = view_df.drop("_bucket")
     fact_pk = fact_store.key
@@ -1655,165 +1498,36 @@ def maintain_joined3_agg(
 
     (joins are multilinear over signed multisets, so the exact
     identity follows from telescoping F2⋈C2⋈N2 − F1⋈C1⋈N1 one factor
-    at a time). Each term is delta-bound:
+    at a time). The n-table generalization is the same ladder:
+    post-state factors to the LEFT of the changed one, pre-state to
+    the right. Both dim terms share the post-state fact, so they sum
+    into one signed customer → region map first and the fact is
+    scanned once, joined to that map (:meth:`_KeyChain.delta`).
 
-    - Term 1 joins the FACT feed (signed images) to the two PRE-state
-      dims — O(feed).
-    - Term 2 signs the DIM1 feed; each image carries its whole
-      per-key fact aggregate (F2 restricted by a semi-join to the
-      dim1-changed keys — the fact is never rescanned) and re-groups
-      through the PRE-state dim2.
-    - Term 3 signs the DIM2 feed; each image carries the per-dim2-key
-      aggregate of F2 ⋈ C2 restricted to the dim2-changed keys — the
-      POST dim1 is filtered to those keys FIRST, so the fact join is
-      pruned to exactly the affected snowflake slice.
-
-    The n-table generalization is the same ladder (pre-state factors
-    to the left of the changed one, post-state to the right), each
-    term pruned by its own changed-key semi-join; Spark's AQE picks
-    broadcast vs shuffle per term at runtime. ``old_view`` feeds back
-    this function's own output; ``dim1_window``/``dim2_window`` let
-    out-of-band dim writers advance on their own version counters
-    (default: the fact window). Returns ``[group_col, n, s]``.
+    ``old_view`` feeds back this function's own output;
+    ``dim1_window``/``dim2_window`` let out-of-band dim writers
+    advance on their own version counters (default: the fact window).
+    Returns ``[group_col, n, s]``.
 
     Reference parity: the reference's 3-way files × direct_links ×
     directory_sizes join (direct_links.py:194-260) is recomputed per
     scan; this is its maintained form."""
-    cents = F.round(F.col(cents_col) * 100).cast("long")
-    d1vf, d1vt = dim1_window or (v_from, v_to)
-    d2vf, d2vt = dim2_window or (v_from, v_to)
-    c1 = dim1_store.read(version=d1vf).select(dim1_key_col, dim1_attr_col)
-    n1 = dim2_store.read(version=d2vf).select(dim2_key_col, group_col)
-    sign_of = lambda col: F.when(  # noqa: E731
-        col.isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-
-    if old_view is not None:
-        old = old_view.select(
-            group_col, F.col("n").alias("_n0"), F.col("s").alias("_s0")
-        )
-    else:
-        old = (
-            fact_store.read(version=v_from)
-            .join(c1, F.col(fact_key_col) == F.col(dim1_key_col))
-            .join(n1, F.col(dim1_attr_col) == F.col(dim2_key_col))
-            .groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("_n0"), F.sum(cents).alias("_s0"))
-        )
-
-    # Term 1: ΔF ⋈ C1 ⋈ N1
-    ffeed = fact_store.read_changes(v_from, v_to, update_images="both")
-    t1 = (
-        ffeed.withColumn("_sg", sign_of(F.col("_change")))
-        .join(c1, F.col(fact_key_col) == F.col(dim1_key_col))
-        .join(n1, F.col(dim1_attr_col) == F.col(dim2_key_col))
-        .groupBy(group_col)
-        .agg(
-            F.sum("_sg").alias("_n1"),
-            F.sum(F.col("_sg") * cents).alias("_s1"),
-        )
+    chain = _KeyChain(
+        fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
+        [
+            (dim1_store, dim1_key_col, dim1_attr_col,
+             dim1_window or (v_from, v_to)),
+            (dim2_store, dim2_key_col, group_col,
+             dim2_window or (v_from, v_to)),
+        ],
     )
-
-    # Terms 2 and 3 both need post-state fact slices. The fact store
-    # is bucketed on its own pk, so a changed-key semi-join prunes
-    # shuffle volume but not storage I/O — paying that scan TWICE
-    # (once per term) would double the heaviest read of the cycle
-    # (review finding). Instead, ONE scan restricted to the union of
-    # both changed-key slices is shared: it is delta-sized (facts of
-    # dim1-changed customers plus facts of dim2-changed nations'
-    # customers), so the lazy checkpoint materializes O(affected), not
-    # O(fact).
-    d1feed = (
-        dim1_store.read_changes(d1vf, d1vt, update_images="both")
-        .select(
-            F.col(dim1_key_col).alias("_d1k"),
-            F.col(dim1_attr_col).alias("_d1a"),
-            sign_of(F.col("_change")).alias("_d1s"),
-        )
-        .transform(ckpt_shared)
+    return _joined_view(
+        chain,
+        old_view,
+        lambda rows: rows.groupBy(group_col).agg(*_count_sum()),
+        ["n", "s"],
+        [_plus("n"), _plus("s")],
     )
-    d2feed = (
-        dim2_store.read_changes(d2vf, d2vt, update_images="both")
-        .select(
-            F.col(dim2_key_col).alias("_d2k"),
-            group_col,
-            sign_of(F.col("_change")).alias("_d2s"),
-        )
-        .transform(ckpt_shared)
-    )
-    changed_cks = d1feed.select(F.col("_d1k").alias("_ck")).distinct()
-    changed_nks = d2feed.select(F.col("_d2k").alias("_nk")).distinct()
-    # Post dim1 filtered to the changed dim2 keys FIRST, so the fact
-    # join sees only the affected snowflake slice.
-    c2_changed = (
-        dim1_store.read(version=d1vt)
-        .select(dim1_key_col, dim1_attr_col)
-        .join(changed_nks, F.col(dim1_attr_col) == F.col("_nk"), "left_semi")
-        .transform(ckpt_shared)
-    )
-    combined_keys = changed_cks.unionByName(
-        c2_changed.select(F.col(dim1_key_col).alias("_ck"))
-    ).distinct()
-    f_slice = (
-        fact_store.read(version=v_to)
-        .join(combined_keys, F.col(fact_key_col) == F.col("_ck"), "left_semi")
-        .transform(ckpt_shared)
-    )
-
-    # Term 2: F2 ⋈ ΔC ⋈ N1 — per-key fact aggregates move whole.
-    per_key = (
-        f_slice.join(
-            changed_cks, F.col(fact_key_col) == F.col("_ck"), "left_semi"
-        )
-        .groupBy(fact_key_col)
-        .agg(F.count(F.lit(1)).alias("_kn"), F.sum(cents).alias("_ks"))
-    )
-    t2 = (
-        d1feed.join(per_key, F.col("_d1k") == F.col(fact_key_col), "left")
-        .join(n1, F.col("_d1a") == F.col(dim2_key_col))
-        .groupBy(group_col)
-        .agg(
-            F.sum(F.col("_d1s") * F.coalesce("_kn", F.lit(0))).alias("_n2"),
-            F.sum(F.col("_d1s") * F.coalesce("_ks", F.lit(0))).alias("_s2"),
-        )
-    )
-
-    # Term 3: F2 ⋈ C2 ⋈ ΔN over the shared slice.
-    per_nation = (
-        f_slice.join(c2_changed, F.col(fact_key_col) == F.col(dim1_key_col))
-        .groupBy(dim1_attr_col)
-        .agg(F.count(F.lit(1)).alias("_gn"), F.sum(cents).alias("_gs"))
-    )
-    t3 = (
-        d2feed.join(
-            per_nation, F.col("_d2k") == F.col(dim1_attr_col), "left"
-        )
-        .groupBy(group_col)
-        .agg(
-            F.sum(F.col("_d2s") * F.coalesce("_gn", F.lit(0))).alias("_n3"),
-            F.sum(F.col("_d2s") * F.coalesce("_gs", F.lit(0))).alias("_s3"),
-        )
-    )
-
-    m = _null_safe_outer(old, t1, group_col, ["_n0", "_s0"], ["_n1", "_s1"])
-    m = _null_safe_outer(
-        m, t2, group_col, ["_n0", "_s0", "_n1", "_s1"], ["_n2", "_s2"]
-    )
-    m = _null_safe_outer(
-        m,
-        t3,
-        group_col,
-        ["_n0", "_s0", "_n1", "_s1", "_n2", "_s2"],
-        ["_n3", "_s3"],
-    )
-    zsum = lambda cols: reduce(  # noqa: E731
-        lambda a, b: a + b, [F.coalesce(c, F.lit(0)) for c in cols]
-    )
-    return m.select(
-        group_col,
-        zsum(["_n0", "_n1", "_n2", "_n3"]).cast("long").alias("n"),
-        zsum(["_s0", "_s1", "_s2", "_s3"]).cast("long").alias("s"),
-    ).filter(F.col("n") > 0)
 
 
 def maintain_joined_top_k(
@@ -1831,267 +1545,69 @@ def maintain_joined_top_k(
     dim_window: tuple[int, int] | None = None,
 ) -> DataFrame:
     """The last cell of the composition matrix: per-group TOP-K over a
-    JOINED view with BOTH stores changing — count/sum ride the exact
-    two-term decomposition (``maintain_joined_agg``), the k-deep
-    extremum rides the horizon rule (``maintain_top_k``), and the dim
-    feed contributes both directions exactly as in
-    ``maintain_joined_min_max``: a moved-IN key's post-state fact
-    values are candidates that can only improve the stored array, a
-    moved-OUT (or deleted) key may have held any of its old group's
-    top-k and forces that group's recompute. Returns
-    ``[group_col, n, s, topk]`` (``topk`` = k largest cents,
-    descending) equal to a from-scratch ranked top-k over
-    ``F(v_to) ⋈ D(v_to)``.
+    JOINED view with BOTH stores changing. Count/sum fold the chain's
+    delta linearly (``maintain_joined_agg``); the k-deep extremum
+    rides the horizon rule of ``maintain_top_k``, with the k-th stored
+    value as the horizon. Returns ``[group_col, n, s, topk]``
+    (``topk`` = k largest cents, descending) equal to a from-scratch
+    ranked top-k over ``F(v_to) ⋈ D(v_to)``.
 
-    Per cycle: O(feed) candidate ranking (pre-ranked per group before
-    any array collect, so state stays O(groups × k)), plus ONE
-    group-pruned post-state join for the threatened groups — D2 is
-    semi-joined to the affected set first, so the fact scan is pruned
-    by the key join (never a rescan); all join strategies left to
-    AQE. NULL groups pair null-safely end to end."""
+    The delta's ``_w > 0`` values, each repeated ``_w`` times, are
+    the candidates merged into the stored array: an added fact or a
+    moved-in key's facts. A group recomputes from its pruned
+    post-state join only when a ``_w < 0`` value ties or beats the
+    horizon. Because the delta is consolidated, a dim row re-merged
+    into its own group cancels before any candidate is taken, so its
+    facts cannot enter the array twice.
+
+    Per cycle: the delta's fold ranks candidates per group by
+    cumulative weight before any array collect, so state stays
+    O(groups × k). ``dim_window`` lets an out-of-band dim writer
+    advance on its own version counter (default: the fact window),
+    as the streaming twin requires."""
     from pyspark.sql import Window
 
-    cents = F.round(F.col(cents_col) * 100).cast("long")
-    # ``dim_window`` lets an out-of-band dim writer advance on its own
-    # version counter (default: the fact window) — the same contract
-    # as maintain_joined3_agg's dim windows / maintain_joined_value_
-    # counts' dim_v_from/dim_v_to, required by the streaming twin
-    # where the dim evolves outside the fact stream.
-    dvf, dvt = dim_window or (v_from, v_to)
-    d_prev = dim_store.read(version=dvf).select(dim_key_col, group_col)
-    d_cur = dim_store.read(version=dvt).select(
-        F.col(dim_key_col).alias("_dk2"), F.col(group_col).alias("_g2")
+    chain = _KeyChain(
+        fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
+        [(dim_store, dim_key_col, group_col, dim_window or (v_from, v_to))],
     )
+    w = (
+        Window.partitionBy(group_col)
+        .orderBy(F.desc("_v"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    pos = F.greatest(F.col("_w"), F.lit(0))
+    # Copies of this row's value among the group's k largest: its
+    # weight, cut to the room the larger values left.
+    take = F.least(pos, F.lit(k) - (F.sum(pos).over(w) - pos))
 
-    def ranked(df: DataFrame, val_col: str) -> DataFrame:
-        w = Window.partitionBy(group_col).orderBy(F.desc(val_col))
-        return (
-            df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k)
-            .groupBy(group_col)
-            .agg(
-                F.reverse(
-                    F.array_sort(F.collect_list(F.col(val_col)))
-                ).alias("_cand")
-            )
+    def fold(rows: DataFrame) -> DataFrame:
+        return rows.withColumn("_take", take).groupBy(group_col).agg(
+            *_count_sum(),
+            F.reverse(F.array_sort(F.flatten(F.collect_list(
+                F.when(
+                    F.col("_take") > 0,
+                    F.array_repeat("_v", F.col("_take").cast("int")),
+                )
+            )))).alias("topk"),
+            F.max(F.when(F.col("_w") < 0, F.col("_v"))).alias("_xr"),
         )
 
-    if old_view is not None:
-        old = old_view.select(
-            group_col,
-            F.col("n").alias("_n0"),
-            F.col("s").alias("_s0"),
-            F.col("topk").alias("_tk0"),
-        )
-    else:
-        base = (
-            fact_store.read(version=v_from)
-            .join(d_prev, F.col(fact_key_col) == F.col(dim_key_col))
-            .select(group_col, cents.alias("_c"))
-            .transform(ckpt_shared)
-        )
-        w = Window.partitionBy(group_col).orderBy(F.desc("_c"))
-        old = (
-            base.withColumn("_rk", F.row_number().over(w))
-            .groupBy(group_col)
-            .agg(
-                F.count(F.lit(1)).alias("_n0"),
-                F.sum("_c").alias("_s0"),
-                F.reverse(
-                    F.array_sort(
-                        F.collect_list(F.when(F.col("_rk") <= k, F.col("_c")))
-                    )
-                ).alias("_tk0"),
-            )
-        )
-    sign_of = lambda col: F.when(  # noqa: E731
-        col.isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    feed = fact_store.read_changes(
-        v_from, v_to, update_images="both"
-    ).transform(ckpt_shared)
-    is_add = F.col("_change").isin("insert", "update_postimage")
-    # n/s algebra + removal threats under the PRE-state dim.
-    ffeed = feed.join(d_prev, F.col(fact_key_col) == F.col(dim_key_col))
-    fsign = sign_of(F.col("_change"))
-    t1 = ffeed.groupBy(group_col).agg(
-        F.sum(fsign).alias("_n1"),
-        F.sum(fsign * cents).alias("_s1"),
-        F.max(F.when(~is_add, cents)).alias("_xr"),
+    merged = F.concat(
+        F.coalesce("_o_topk", F.array()), F.coalesce("topk", F.array())
     )
-    # Dim feed: term-2 n/s + moved-in candidates + departure threats.
-    dfeed = (
-        dim_store.read_changes(dvf, dvt, update_images="both")
-        .select(
-            F.col(dim_key_col).alias("_dk"),
-            group_col,
-            sign_of(F.col("_change")).alias("_dsign"),
-        )
-        .transform(ckpt_shared)
+    return _joined_view(
+        chain,
+        old_view,
+        fold,
+        ["n", "s", "topk"],
+        [
+            _plus("n"),
+            _plus("s"),
+            F.slice(F.reverse(F.array_sort(merged)), 1, k).alias("topk"),
+        ],
+        threat=F.col("_xr") >= F.element_at("_o_topk", -1),
     )
-    changed_keys = dfeed.select(F.col("_dk").alias("_ck")).distinct()
-    fact_pk = fact_store.key
-    pks = [fact_pk] if isinstance(fact_pk, str) else list(fact_pk)
-    f_slice = (
-        fact_store.read(version=v_to)
-        .join(changed_keys, F.col(fact_key_col) == F.col("_ck"), "left_semi")
-        .select(*pks, F.col(fact_key_col).alias("_fk"), cents.alias("_c"))
-        .transform(ckpt_shared)
-    )
-    per_key = f_slice.groupBy("_fk").agg(
-        F.count(F.lit(1)).alias("_kn"), F.sum("_c").alias("_ks")
-    )
-    t2 = (
-        dfeed.join(per_key, F.col("_dk") == F.col("_fk"), "left")
-        .groupBy(group_col)
-        .agg(
-            F.sum(F.col("_dsign") * F.coalesce("_kn", F.lit(0))).alias("_n2"),
-            F.sum(F.col("_dsign") * F.coalesce("_ks", F.lit(0))).alias("_s2"),
-        )
-    )
-    # Candidates: fact post-images under the POST dim, plus moved-in
-    # keys' post-state fact values (their group is the feed's +1 row's
-    # group) — ranked per group BEFORE any collect, O(groups x k).
-    fadd_rows = (
-        feed.filter(is_add)
-        .join(d_cur, F.col(fact_key_col) == F.col("_dk2"))
-        .select(F.col("_g2").alias(group_col), cents.alias("_v"))
-    )
-    # Moved-in keys' post-state rows, MINUS rows already contributed
-    # by the fact feed's post-images (a row that is both a feed add
-    # and a moved-in key's row must enter the candidate multiset
-    # exactly once — arrays, unlike min/max, are not idempotent).
-    din_rows = (
-        dfeed.filter(F.col("_dsign") == 1)
-        .join(
-            f_slice.join(feed.filter(is_add).select(*pks), pks, "left_anti"),
-            F.col("_dk") == F.col("_fk"),
-        )
-        .select(group_col, F.col("_c").alias("_v"))
-    )
-    cands = ranked(fadd_rows.unionByName(din_rows), "_v")
-    # Departure threats: pre-group differs null-safely from post-group,
-    # or the key was deleted (same struct trick as joined min/max).
-    mv = dfeed.groupBy("_dk").agg(
-        F.max(
-            F.when(
-                F.col("_dsign") == -1,
-                F.struct(F.lit(1).alias("h"), F.col(group_col).alias("g")),
-            )
-        ).alias("_pre"),
-        F.max(
-            F.when(
-                F.col("_dsign") == 1,
-                F.struct(F.lit(1).alias("h"), F.col(group_col).alias("g")),
-            )
-        ).alias("_post"),
-    )
-    dthreat = (
-        mv.filter(
-            F.col("_pre").isNotNull()
-            & (
-                F.col("_post").isNull()
-                | ~F.col("_pre.g").eqNullSafe(F.col("_post.g"))
-            )
-        )
-        .select(F.col("_pre.g").alias(group_col))
-        .distinct()
-        .withColumn("_dthreat", F.lit(True))
-    )
-    j = (
-        _null_safe_outer(old, t1, group_col,
-                         ["_n0", "_s0", "_tk0"], ["_n1", "_s1", "_xr"])
-        .transform(lambda df: _null_safe_outer(
-            df, t2, group_col,
-            ["_n0", "_s0", "_tk0", "_n1", "_s1", "_xr"], ["_n2", "_s2"]))
-        .transform(lambda df: _null_safe_outer(
-            df, cands, group_col,
-            ["_n0", "_s0", "_tk0", "_n1", "_s1", "_xr", "_n2", "_s2"],
-            ["_cand"]))
-        .transform(lambda df: _null_safe_outer(
-            df, dthreat, group_col,
-            ["_n0", "_s0", "_tk0", "_n1", "_s1", "_xr", "_n2", "_s2",
-             "_cand"],
-            ["_dthreat"]))
-        .withColumn(
-            "_n_new",
-            (
-                F.coalesce("_n0", F.lit(0))
-                + F.coalesce("_n1", F.lit(0))
-                + F.coalesce("_n2", F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            "_s_new",
-            (
-                F.coalesce("_s0", F.lit(0))
-                + F.coalesce("_s1", F.lit(0))
-                + F.coalesce("_s2", F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            # Horizon rule: a removal ties-or-beats the k-th stored
-            # value (or the group was never fully stored — _tk0 null),
-            # or a dim key departed the group.
-            "_recompute",
-            F.coalesce("_dthreat", F.lit(False))
-            | F.coalesce(
-                F.col("_xr").isNotNull()
-                & (
-                    F.col("_tk0").isNull()
-                    | (F.col("_xr") >= F.element_at("_tk0", -1))
-                ),
-                F.lit(False),
-            ),
-        )
-        .transform(ckpt_shared)
-    )
-    empty_arr = F.slice(F.coalesce("_cand", "_tk0"), 1, 0)
-    kept = j.filter(~F.col("_recompute") & (F.col("_n_new") > 0)).select(
-        group_col,
-        F.col("_n_new").alias("n"),
-        F.col("_s_new").alias("s"),
-        F.slice(
-            F.reverse(
-                F.array_sort(
-                    F.concat(
-                        F.coalesce("_tk0", empty_arr),
-                        F.coalesce("_cand", empty_arr),
-                    )
-                )
-            ),
-            1,
-            k,
-        ).alias("topk"),
-    )
-    affected = j.filter(F.col("_recompute")).select(
-        F.col(group_col).alias("_ag")
-    )
-    if affected.isEmpty():
-        return kept
-    d_aff = d_cur.join(
-        affected, F.col("_g2").eqNullSafe(F.col("_ag")), "left_semi"
-    )
-    rebase = (
-        fact_store.read(version=v_to)
-        .join(d_aff, F.col(fact_key_col) == F.col("_dk2"))
-        .select(F.col("_g2").alias(group_col), cents.alias("_c"))
-    )
-    w2 = Window.partitionBy(group_col).orderBy(F.desc("_c"))
-    recomputed = (
-        rebase.withColumn("_rk", F.row_number().over(w2))
-        .groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("_c").alias("s"),
-            F.reverse(
-                F.array_sort(
-                    F.collect_list(F.when(F.col("_rk") <= k, F.col("_c")))
-                )
-            ).alias("topk"),
-        )
-    )
-    return kept.unionByName(recomputed)
 
 
 def dyadic_bucket(lvl_col, d_col, node_col, width: int):
@@ -2217,9 +1733,7 @@ def maintain_dyadic_cms(
             store.read(version=v_from), F.lit(1)
         ).select(*keys, F.col("_dc").alias("_c0"))
     feed = store.read_changes(v_from, v_to, update_images="both")
-    sign = F.when(
-        F.col("_change").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
+    sign = _sign()
     delta = cells_of(feed, sign)
     # NULL-safe key pairing: a NULL stratum is one group (SQL GROUP
     # BY semantics) — a plain list-key join would leave its old and
@@ -2718,7 +2232,7 @@ def maintain_bm25(
     postings = old_postings.join(changed, "doc_id", "anti").unionByName(
         bm25_postings_of(post_docs, id_col, text_col, terms)
     )
-    sign = F.when(is_post, F.lit(1)).otherwise(F.lit(-1))
+    sign = _sign()
     delta = feed.select(
         sign.alias("_s"), F.size(tokens(F.col(text_col))).alias("_dl")
     ).agg(

@@ -87,6 +87,17 @@ from . import layout_queries  # noqa: E402,F401
 # prefix. Five multi-round driver-green queries slide below the
 # boundary by order; every family keeps a prefix anchor.
 _PRIORITY = [
+    # Rotated into the prefix for the joined-view core (plans changed,
+    # mechanical rule): the five joined maintainers now fold one
+    # signed-row core (operators/ivm._KeyChain), so every query built
+    # on them plans differently — same rows, same oracle hashes.
+    "incremental_view_joined3",
+    "incremental_view_joined_topk",
+    "incremental_view_joined_histogram",
+    "incremental_view_joined_minmax",
+    "incremental_view_joined_nullgroup",
+    "incremental_view_joined_chained",
+    "incremental_view_joined_dimchange",
     # New in r14 (late) — IVF-PQ (IVFADC): coarse inverted-file pruning
     # + product quantization on RESIDUALS + per-(query, probed-cell)
     # ADC LUTs + exact float rerank — the composed cascade a 100 TB ANN
@@ -183,19 +194,12 @@ _PRIORITY = [
     # the k-means family inherit the spread through their shared
     # augmented/fitted frames.
     "similarity_bruteforce_topk",
-    "dedup_embedding_cosine",
-    "quantized_ann_int8_topk",
-    "semantic_dedup_clusters",
-    "embedding_outliers",
     "kmeans_cluster_profile",
-    "ann_neardup_recall_lsh",
-    "ann_neardup_recall_multiprobe",
     # ... and the minhash/ngram operators' shared frames moved from
     # cache() to eager checkpoints (cache let the self-join legs race
     # and leaked reuse across warm runs): the two callers not already
     # behind their own checkpoint rotate in.
     "dedup_cascade_attrition",
-    "ngram_jaccard_pairs",
     # Rotated into the prefix for r14 (plans changed, mechanical rule):
     # dedup_simhash — single-int band key (band<<16 | value) self-join;
     # similarity_ivf_topk / ann_recall_at_k — assign_cells' n_keep=1
@@ -346,15 +350,22 @@ _PRIORITY = [
     "incremental_view_rollup_cascade",
     "incremental_view_cms_topk",
     "incremental_view_sample",
-    "incremental_view_joined3",
-    "incremental_view_joined_topk",
+    # Swapped below the boundary for the joined-view core rotation:
+    # r14 optimisation-round rotations, verified green in every round
+    # since, plans unchanged. Their families stay anchored in the
+    # prefix by similarity_bruteforce_topk (the spread embeddings scan),
+    # kmeans_cluster_profile, ann_recall_at_k, quantized_ann_pq_topk
+    # and dedup_cascade_attrition (the minhash/ngram shared frames).
+    "dedup_embedding_cosine",
+    "quantized_ann_int8_topk",
+    "semantic_dedup_clusters",
+    "embedding_outliers",
+    "ann_neardup_recall_lsh",
+    "ann_neardup_recall_multiprobe",
+    "ngram_jaccard_pairs",
     "ann_ivf_coldmerge_topk",
     "incremental_view_moments",
-    "incremental_view_joined_histogram",
-    "incremental_view_joined_minmax",
-    "incremental_view_joined_nullgroup",
     "ann_ivf_split_topk",
-    "incremental_view_joined_chained",
     "incremental_view_minmax_hicard",
     # Displaced below the boundary by the r14 rebalance (the six
     # r14 prefix entries would otherwise have evicted the window /
@@ -363,7 +374,6 @@ _PRIORITY = [
     # anchored by histogram / joined / minmax / joined_minmax /
     # cms_topk in the prefix.
     "incremental_view_histogram_chained",
-    "incremental_view_joined_dimchange",
     "incremental_view_minmax_chained",
     "incremental_view_summinmax",
     "incremental_view_hll_distinct",

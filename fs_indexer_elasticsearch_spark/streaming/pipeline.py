@@ -90,71 +90,6 @@ def run_incremental_pipeline(
     )
 
 
-def _maintained_view_on_batch(store, view_store, derive, maintain):
-    """The crash-safe maintained-view foreachBatch skeleton, shared by
-    every streaming maintainer (min/max view, histogram view):
-
-    - merge the deduped batch into the base store;
-    - maintain over the window (reflected -> current base), where
-      ``reflected`` is the base version recorded in the view's own
-      commit meta — a crash between merge and publish is caught up in
-      one spanning pass on the next epoch (foreachBatch is
-      at-least-once);
-    - epoch guard: an empty spanning feed (replayed or no-change
-      epoch) skips the commit — the view over an empty window is the
-      same view;
-    - publish with ``expected_base`` pinned to the view version the
-      feedback was read from (a concurrent publisher raises instead
-      of silently folding over the loop);
-    - SELF-HEAL (r11 advice): a vacuum deeper than the view's lag
-      makes the window unreadable ("not retained") — degrade once to
-      ``derive(v_after)``, the from-scratch derivation, which
-      re-stamps ``base_version`` and restores the incremental steady
-      state from the next cycle on.
-
-    ``derive(v_after)`` returns the full view at a base version;
-    ``maintain(reflected, v_after, old_view)`` advances the fed-back
-    view across the window."""
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        store.merge(_dedup_newest(batch, store))
-        v_after = store.current_version()
-        view_base = view_store.current_version()
-        reflected = (view_store.read_meta(view_base) or {}).get(
-            "base_version"
-        ) if view_base is not None else None
-        if reflected == v_after:
-            return  # replay after a completed publish: nothing to do
-
-        def publish(view: DataFrame) -> None:
-            view_store.overwrite(
-                view.localCheckpoint(eager=False),
-                meta={"base_version": v_after},
-                expected_base=view_base,
-            )
-
-        if reflected is None:
-            publish(derive(v_after))
-            return
-        try:
-            if store.read_changes(
-                reflected, v_after, update_images="both"
-            ).isEmpty():
-                return
-            old_view = view_store.read(version=view_base).drop("_bucket")
-            view = maintain(reflected, v_after, old_view)
-        except ValueError as e:
-            if "not retained" not in str(e):
-                raise
-            publish(derive(v_after))
-            return
-        publish(view)
-
-    return on_batch
-
-
 def streaming_maintained_view_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -168,50 +103,22 @@ def streaming_maintained_view_pipeline(
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
     """A DECLARED VIEW maintained incrementally inside the streaming
-    loop (r10 verdict #6): each micro-batch merges into the base
-    snapshot store, then the per-group ``(n, min_v, max_v, s)`` view
-    is advanced across exactly that merge's CDC window with
-    ``operators/ivm.maintain_min_max(with_sum=True)`` and published
-    to ``view_store`` — the foreachBatch twin of the
-    ``incremental_view_*`` registered queries, closing the gap where
-    the streaming layer still republished views by recompute.
+    loop: each micro-batch merges into the base snapshot store, then
+    the per-group ``(n, min_v, max_v, s)`` view is advanced across
+    exactly that merge's CDC window with
+    ``operators/ivm.maintain_min_max(with_sum=True)`` and published to
+    ``view_store`` — the foreachBatch twin of the
+    ``incremental_view_*`` registered queries.
 
     Steady state: the PREVIOUS cycle's published view feeds back in
     as ``old_view``, so after the first derivation (one base
     aggregate when the view store seeds) every cycle costs O(feed)
     plus the affected-group recompute — the base is NEVER rescanned
     on insert-only or interior-delete cycles (adds can only improve
-    an extremum; the view store read is O(groups)).
-
-    CRASH SAFETY (r11 review): foreachBatch is at-least-once, and a
-    crash can land BETWEEN the base merge and the view publish. The
-    view therefore records the base version it REFLECTS in its own
-    version meta (``base_version``) and every cycle maintains over
-    the window (reflected -> current base) — never (v_before ->
-    v_after) of this epoch's merge alone, which would skip the
-    crashed epoch's window forever (its replay classifies stale and
-    produces an empty feed). A multi-version window is exactly what
-    the feed API serves, so catch-up is one maintenance pass, not a
-    rescan. Corollary: the base store must retain versions back to
-    the view's reflected one (vacuum no deeper than the view lags).
-
-    Epoch guard: when the reflected->current feed is EMPTY (replayed
-    or no-change epoch) the view commit is skipped entirely — the
-    recorded base_version intentionally stays put, because a view
-    over an empty window is the same view (same no-op-version rule
-    as the changefeed pipeline). Publication is ``overwrite`` (the
-    view is O(groups), tiny next to the base; a keyed merge would
-    need removals for vanished groups) with ``expected_base`` pinned
-    to the view version the old_view was read from — a concurrent
-    publisher raises instead of silently folding over the feedback
-    loop."""
+    an extremum; the view store read is O(groups)). Crash safety,
+    epoch guard and self-heal ride the shared loop
+    (``streaming_maintained_nstore_pipeline``)."""
     from ..operators.ivm import maintain_min_max
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def derive(v_after: int) -> DataFrame:
         return (
@@ -236,12 +143,10 @@ def streaming_maintained_view_pipeline(
             with_sum=True,
         )
 
-    on_batch = _maintained_view_on_batch(store, view_store, derive, maintain)
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return streaming_maintained_pipeline(
+        spark, input_dir, schema, store, view_store, checkpoint_dir,
+        derive=derive, maintain=maintain,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -271,16 +176,8 @@ def streaming_maintained_histogram_pipeline(
     under deletes: there is NO recompute branch, so after the first
     derivation the base store is never read again — not even on
     delete-heavy cycles that retire bins (the scan-count test pins
-    this). Crash safety, epoch guard, expected_base pinning, and the
-    deep-vacuum self-heal all ride the shared skeleton
-    (``_maintained_view_on_batch``)."""
+    this)."""
     from ..operators.ivm import maintain_value_counts
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def derive(v_after: int) -> DataFrame:
         return (
@@ -299,12 +196,10 @@ def streaming_maintained_histogram_pipeline(
             old_hist=old_hist,
         )
 
-    on_batch = _maintained_view_on_batch(store, hist_store, derive, maintain)
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return streaming_maintained_pipeline(
+        spark, input_dir, schema, store, hist_store, checkpoint_dir,
+        derive=derive, maintain=maintain,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -320,28 +215,22 @@ def streaming_maintained_pipeline(
     maintain,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    """The GENERAL maintained-view stream: plug ANY view algebra into
-    the crash-safe foreachBatch skeleton (`_maintained_view_on_batch`
-    — reflected-window catch-up, epoch guard, expected_base pinning,
-    deep-vacuum self-heal). ``derive(v_after) -> DataFrame`` returns
-    the full view at a base version; ``maintain(reflected, v_after,
-    old_view) -> DataFrame`` advances the fed-back view across the
-    window. The min/max (`streaming_maintained_view_pipeline`) and
-    histogram (`streaming_maintained_histogram_pipeline`) streams are
-    canned instances; pair this with `operators/ivm.maintain_top_k`
-    or `maintain_moments` (or any caller-defined algebra with the
-    same old-view contract) for the rest of the family."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    on_batch = _maintained_view_on_batch(store, view_store, derive, maintain)
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    """The GENERAL single-store maintained-view stream: plug ANY view
+    algebra into the crash-safe loop of
+    ``streaming_maintained_nstore_pipeline`` with no dim stores.
+    ``derive(v_after) -> DataFrame`` returns the full view at a base
+    version; ``maintain(reflected, v_after, old_view) -> DataFrame``
+    advances the fed-back view across the window. The min/max
+    (`streaming_maintained_view_pipeline`) and histogram
+    (`streaming_maintained_histogram_pipeline`) streams are canned
+    instances; pair this with `operators/ivm.maintain_top_k` or
+    `maintain_moments` (or any caller-defined algebra with the same
+    old-view contract) for the rest of the family."""
+    return streaming_maintained_nstore_pipeline(
+        spark, input_dir, schema, store, [], view_store, checkpoint_dir,
+        derive=lambda versions: derive(versions[0]),
+        maintain=lambda windows, old: maintain(*windows[0], old),
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -365,103 +254,38 @@ def streaming_maintained_joined_histogram_pipeline(
     ``fact_store`` while any other writer commits to ``dim_store`` on
     its own schedule, and every epoch advances the fact ⋈ dim
     per-(group, value) bins across BOTH stores' windows —
-    ``maintain_joined_value_counts`` with one reflected version PER
-    STORE recorded in the view's commit meta (``fact_version`` /
-    ``dim_version``; the two-term identity never required the
-    counters to align). Downstream consumers serve exact per-group
-    COUNT(DISTINCT)/MEDIAN/MODE from the published bins with
-    ``histogram_stats``.
-
-    Same crash contract as the single-store skeleton, per store: a
-    crash between the fact merge and the publish is caught up by the
-    next epoch's spanning windows; an epoch whose BOTH feeds are
-    empty skips the commit; the publish pins ``expected_base``; a
-    vacuum (of either store) deeper than the view's lag self-heals
-    with one from-scratch rejoin. Dim-only changes are reflected on
-    the NEXT fact epoch — a quiet fact stream defers dim catch-up,
-    which is the honest batch-driven trade (a caller needing tighter
-    dim freshness drops a zero-row marker file to tick the stream)."""
+    ``maintain_joined_value_counts`` on the N-store loop, which
+    records one reflected version per store. Downstream consumers
+    serve exact per-group COUNT(DISTINCT)/MEDIAN/MODE from the
+    published bins with ``histogram_stats``."""
     from ..operators.ivm import maintain_joined_value_counts
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    def bins(windows, old_hist=None):
+        (fvf, fvt), dw = windows
+        return maintain_joined_value_counts(
+            fact_store,
+            dim_store,
+            fvf,
+            fvt,
+            fact_key_col=fact_key_col,
+            dim_key_col=dim_key_col,
+            group_col=group_col,
+            value_col=value_col,
+            old_hist=old_hist,
+            dim_window=dw,
+        )
 
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fact_store.merge(_dedup_newest(batch, fact_store))
-        f_now = fact_store.current_version()
-        d_now = dim_store.current_version()
-        view_base = hist_store.current_version()
-        meta = (
-            hist_store.read_meta(view_base) or {}
-        ) if view_base is not None else {}
-        f_ref, d_ref = meta.get("fact_version"), meta.get("dim_version")
-        if f_ref == f_now and d_ref == d_now:
-            return  # replay after a completed publish
-
-        def publish(view: DataFrame) -> None:
-            hist_store.overwrite(
-                view.localCheckpoint(eager=False),
-                meta={"fact_version": f_now, "dim_version": d_now},
-                expected_base=view_base,
-            )
-
-        def derive() -> DataFrame:
-            return (
-                fact_store.read(version=f_now)
-                .join(
-                    dim_store.read(version=d_now).select(
-                        dim_key_col, group_col
-                    ),
-                    F.col(fact_key_col) == F.col(dim_key_col),
-                )
-                .groupBy(group_col, value_col)
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-
-        if f_ref is None or d_ref is None:
-            publish(derive())
-            return
-        try:
-            if (
-                fact_store.read_changes(
-                    f_ref, f_now, update_images="both"
-                ).isEmpty()
-                and dim_store.read_changes(
-                    d_ref, d_now, update_images="both"
-                ).isEmpty()
-            ):
-                return
-            old = hist_store.read(version=view_base).drop("_bucket")
-            view = maintain_joined_value_counts(
-                fact_store,
-                dim_store,
-                f_ref,
-                f_now,
-                fact_key_col=fact_key_col,
-                dim_key_col=dim_key_col,
-                group_col=group_col,
-                value_col=value_col,
-                old_hist=old,
-                dim_v_from=d_ref,
-                dim_v_to=d_now,
-            )
-        except ValueError as e:
-            if "not retained" not in str(e):
-                raise
-            publish(derive())
-            return
-        publish(view)
-
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return streaming_maintained_nstore_pipeline(
+        spark,
+        input_dir,
+        schema,
+        fact_store,
+        [dim_store],
+        hist_store,
+        checkpoint_dir,
+        derive=lambda versions: bins([(v, v) for v in versions]),
+        maintain=bins,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -478,11 +302,12 @@ def streaming_maintained_nstore_pipeline(
     maintain,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    """The N-STORE generalization of the joined maintained-view stream
-    (r12 verdict #6): fact micro-batches merge into ``fact_store``
-    while ANY NUMBER of dim stores evolve out of band on their own
-    version counters, and every epoch advances the joined view across
-    ALL stores' windows. The view's commit meta records one reflected
+    """The ONE crash-safe maintained-view loop, for a view over a base
+    ``fact_store`` and ANY NUMBER of dim stores (none for a
+    single-store view) that evolve out of band on their own version
+    counters. Each micro-batch merges, deduped, into ``fact_store``;
+    then the view advances across ALL stores' windows and publishes
+    to ``view_store``. The view's commit meta records one reflected
     version PER STORE (``store_versions`` — index 0 the fact, then
     the dims in order), so the telescoping decompositions (joined,
     joined3, joined top-k, ...) never require the counters to align.
@@ -492,15 +317,37 @@ def streaming_maintained_nstore_pipeline(
     DataFrame`` advances the fed-back view across one ``(reflected,
     current)`` window per store, same order.
 
-    Crash contract identical to the 2-store joined-histogram stream,
-    per store: a crash between the fact merge and the publish is
-    caught up by the next epoch's spanning windows; an epoch in which
-    EVERY store's window is empty skips the commit; the publish pins
-    ``expected_base``; a vacuum of ANY store deeper than the view's
-    lag self-heals with one from-scratch ``derive``. Dim-only changes
-    are reflected on the NEXT fact epoch — the batch-driven trade
-    (a caller needing tighter dim freshness drops a zero-row marker
-    file to tick the stream)."""
+    CRASH SAFETY: foreachBatch is at-least-once, and a crash can land
+    BETWEEN the fact merge and the view publish. Every epoch therefore
+    maintains over the window (reflected -> current) of each store —
+    never over this epoch's merge alone, which would skip the crashed
+    epoch's window forever (its replay classifies stale and produces
+    an empty feed). A multi-version window is exactly what the feed
+    API serves, so catch-up is one maintenance pass, not a rescan.
+    Corollary: every store must retain versions back to the view's
+    reflected ones.
+
+    - Replay guard: reflected == current for every store means a
+      completed publish; nothing to do.
+    - Epoch guard: when EVERY store's window feed is empty (replayed
+      or no-change epoch) the commit is skipped — the reflected
+      versions stay put, because a view over an empty window is the
+      same view.
+    - Publication is ``overwrite`` (the view is O(groups), tiny next
+      to the base; a keyed merge would need removals for vanished
+      groups) with ``expected_base`` pinned to the view version the
+      old view was read from — a concurrent publisher raises instead
+      of silently folding over the feedback loop.
+    - SELF-HEAL: a vacuum of ANY store deeper than the view's lag
+      makes a window unreadable ("not retained"); the epoch degrades
+      once to ``derive``, which re-stamps the reflected versions and
+      restores the incremental steady state from the next cycle on.
+      A view store without ``store_versions`` meta takes the same
+      from-scratch path once.
+
+    Dim-only changes are reflected on the NEXT fact epoch — the
+    batch-driven trade (a caller needing tighter dim freshness drops
+    a zero-row marker file to tick the stream)."""
     stores = [fact_store, *dim_stores]
     stream = (
         spark.readStream.schema(schema)
@@ -576,34 +423,11 @@ def streaming_maintained_joined3_pipeline(
     """The THREE-TABLE joined view (fact ⋈ dim1 ⋈ dim2 per-group
     count/cents-sum — ``maintain_joined3_agg``'s telescoping
     three-term decomposition) at streaming cadence on the N-store
-    skeleton: both dims evolve out of band, every term stays
-    delta-bound, and the fact is never rescanned outside the shared
-    changed-key slice."""
+    loop: both dims evolve out of band, every term stays delta-bound,
+    and the fact is read only for the facts of dim-changed keys."""
     from ..operators.ivm import maintain_joined3_agg
 
-    def derive(versions):
-        fv, d1v, d2v = versions
-        cents = F.round(F.col(cents_col) * 100).cast("long")
-        return (
-            fact_store.read(version=fv)
-            .join(
-                dim1_store.read(version=d1v).select(
-                    dim1_key_col, dim1_attr_col
-                ),
-                F.col(fact_key_col) == F.col(dim1_key_col),
-            )
-            .join(
-                dim2_store.read(version=d2v).select(dim2_key_col, group_col),
-                F.col(dim1_attr_col) == F.col(dim2_key_col),
-            )
-            .groupBy(group_col)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(cents).cast("long").alias("s"),
-            )
-        )
-
-    def maintain(windows, old_view):
+    def view(windows, old_view=None):
         (fvf, fvt), d1w, d2w = windows
         return maintain_joined3_agg(
             fact_store,
@@ -630,8 +454,8 @@ def streaming_maintained_joined3_pipeline(
         [dim1_store, dim2_store],
         view_store,
         checkpoint_dir,
-        derive=derive,
-        maintain=maintain,
+        derive=lambda versions: view([(v, v) for v in versions]),
+        maintain=view,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -653,42 +477,14 @@ def streaming_maintained_joined_topk_pipeline(
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
     """The JOINED TOP-K view (per-group count/sum + k largest cents
-    over fact ⋈ dim — ``maintain_joined_top_k``: two-term n/s algebra,
-    horizon-ruled candidate arrays, dim-departure threats) at
-    streaming cadence: the dim evolves out of band via its own
-    reflected version, insert-only cycles stay O(feed) array merges,
-    and only horizon-threatened groups pay the group-pruned rejoin."""
-    from pyspark.sql import Window
-
+    over fact ⋈ dim — ``maintain_joined_top_k``: linear n/s folds,
+    horizon-ruled candidate arrays) at streaming cadence: the dim
+    evolves out of band via its own reflected version, insert-only
+    cycles stay O(feed) array merges, and only horizon-threatened
+    groups pay the group-pruned rejoin."""
     from ..operators.ivm import maintain_joined_top_k
 
-    def derive(versions):
-        fv, dv = versions
-        cents = F.round(F.col(cents_col) * 100).cast("long")
-        w = Window.partitionBy(group_col).orderBy(F.desc("_c"))
-        return (
-            fact_store.read(version=fv)
-            .join(
-                dim_store.read(version=dv).select(dim_key_col, group_col),
-                F.col(fact_key_col) == F.col(dim_key_col),
-            )
-            .select(group_col, cents.alias("_c"))
-            .withColumn("_rk", F.row_number().over(w))
-            .groupBy(group_col)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("_c").cast("long").alias("s"),
-                F.reverse(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("_rk") <= k, F.col("_c"))
-                        )
-                    )
-                ).alias("topk"),
-            )
-        )
-
-    def maintain(windows, old_view):
+    def view(windows, old_view=None):
         (fvf, fvt), dw = windows
         return maintain_joined_top_k(
             fact_store,
@@ -712,8 +508,8 @@ def streaming_maintained_joined_topk_pipeline(
         [dim_store],
         view_store,
         checkpoint_dir,
-        derive=derive,
-        maintain=maintain,
+        derive=lambda versions: view([(v, v) for v in versions]),
+        maintain=view,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -1454,8 +1250,7 @@ def streaming_maintained_partition_pipeline(
                 fact_key_col=fact_key_col,
                 dim_key_col=dim_key_col,
                 view_df=view_store.read(version=view_base).drop("_vm"),
-                dim_v_from=d_ref,
-                dim_v_to=d_now,
+                dim_window=(d_ref, d_now),
             )
         except ValueError as e:
             if "not retained" not in str(e):

@@ -1730,6 +1730,47 @@ def test_maintain_joined_top_k_all_branches(spark, tmp_path):
     assert got2["c"][2] == (6,)  # new key + new group same window
 
 
+def test_maintain_joined_top_k_same_group_dim_update_no_duplicate(
+    spark, tmp_path
+):
+    """A dim row re-merged into its SAME group (an update that keeps
+    the group) must not re-add its key's facts to the stored top-k
+    array: the dim feed's -1 and +1 images cancel before any candidate
+    is taken. An unrelated fact add rides the same window. Without the
+    cancellation customer 1's 9 enters twice: [9, 9, 7]."""
+    from fs_indexer_elasticsearch_spark.operators.ivm import (
+        maintain_joined_top_k,
+    )
+
+    fact = SnapshotStore(
+        spark, str(tmp_path / "fact"), key="fk", version_col="v",
+        num_buckets=4, layout="manifest",
+    )
+    dim = SnapshotStore(
+        spark, str(tmp_path / "dim"), key="ck", version_col="v",
+        num_buckets=4, layout="manifest",
+    )
+    fsch = "fk long, v int, cust long, price double"
+    dsch = "ck long, v int, grp string"
+    dim.overwrite(spark.createDataFrame([(1, 1, "a"), (2, 1, "a")], dsch))
+    fact.overwrite(spark.createDataFrame(
+        [(10, 1, 1, 0.09), (11, 1, 2, 0.07), (12, 1, 2, 0.05)], fsch))
+    old = spark.createDataFrame(
+        [("a", 3, 21, [9, 7, 5])],
+        "grp string, n long, s long, topk array<long>",
+    )
+    dim.merge(spark.createDataFrame([(1, 2, "a")], dsch))
+    fact.merge(spark.createDataFrame([(13, 2, 2, 0.01)], fsch))
+    got = {
+        r.grp: (r.n, r.s, list(r.topk))
+        for r in maintain_joined_top_k(
+            fact, dim, 1, 2, fact_key_col="cust", dim_key_col="ck",
+            group_col="grp", k=3, old_view=old,
+        ).collect()
+    }
+    assert got == {"a": (4, 22, [9, 7, 5])}
+
+
 def test_join_membership_delta_replay_idempotent(spark, tmp_path):
     """The delta publication's at-least-once claim, pinned at operator
     level: applying join_membership_delta's (upserts, removed) to the

@@ -102,13 +102,17 @@ class CkptRecorder:
         self._orig_reliable = DataFrame.checkpoint
         orig_local, orig_reliable = self._orig_local, self._orig_reliable
 
-        def local(df, eager=True):
+        # Both tiers log under ONE kind: ckpt_shared picks the tier
+        # from the box's checkpoint-dir configuration, and a
+        # fingerprint must depend on the code only. Extra keyword
+        # arguments (storageLevel, ...) pass through unrecorded.
+        def local(df, eager=True, **kwargs):
             rec._log("localCheckpoint", eager, df)
-            return orig_local(df, eager=eager)
+            return orig_local(df, eager=eager, **kwargs)
 
-        def reliable(df, eager=True):
-            rec._log("checkpoint", eager, df)
-            return orig_reliable(df, eager=eager)
+        def reliable(df, eager=True, **kwargs):
+            rec._log("localCheckpoint", eager, df)
+            return orig_reliable(df, eager=eager, **kwargs)
 
         DataFrame.localCheckpoint = local
         DataFrame.checkpoint = reliable
