@@ -1,25 +1,33 @@
 """Incremental view maintenance from the snapshot store's change feed.
 
-Distributive aggregates (count/sum) maintain purely algebraically —
-add post-images, subtract pre-images (see the
-``incremental_view_maintenance`` registered query). MIN/MAX are only
-SEMI-incremental: an insert can only improve the extremum (pure delta
-math), but deleting the extremum row leaves the new extremum unknown
-without looking at the group again. ``maintain_min_max`` therefore
-splits the groups per cycle:
+Every maintained view here is a fold over SIGNED ROWS, the Z-set form
+of DBSP (Budiu et al., VLDB 2023): a row ``(group…, _v, _w)`` carries
+the view's measure ``_v`` and a weight ``_w``, +1 for a row that adds
+to the state and -1 for one that removes it. :class:`_KeyChain` turns
+a store window into such rows: ``rows(end)`` is the state at one end
+of the window (every weight 1), ``delta()`` is ``V(to) − V(from)``.
+A chain with dims follows the fact's key through one or more dim
+stores to the group; a chain with no dims reads the group columns
+straight off the fact. Each algebra is then ONE fold, and
+:func:`_joined_view` is the one maintenance step they all share: the
+old view meets the folded delta in one null-safe full outer join on
+the group (a NULL group is one group, as in SQL GROUP BY).
 
-- groups whose feed removals can't have touched the stored extremum
-  (every removed value strictly inside the (min, max) interval) update
-  from the delta alone — O(feed);
-- groups where a removal ties-or-beats the stored extremum are
-  RECOMPUTED from the post-state base, restricted to exactly those
-  groups by a LEFT-SEMI JOIN of the affected-group frame against the
-  base — the affected set never becomes a driver-side key list or a
-  literal predicate. The join strategy is left to AQE: the common
-  cycle's handful of affected groups broadcasts, while a mass delete
-  touching millions of groups falls back to a shuffled semi-join
-  (an explicit broadcast hint here would smuggle the
-  driver-proportional cost back in through the broadcast build).
+Count, sum, moments and histogram bins are linear: they fold the
+weights and never look at the base again. MIN/MAX and top-k are only
+SEMI-incremental. An added value can only improve the extremum, so
+the positive-weight values are merged as candidates; but a removed
+value at or past the group's HORIZON (its stored min or max, or the
+k-th stored value) may have been a member, and the new extremum is
+unknown without looking at the group again. Exactly those groups are
+RECOMPUTED from the post-state rows, restricted to them by a
+LEFT-SEMI JOIN of the affected-group frame against the base — the
+affected set never becomes a driver-side key list or a literal
+predicate. The join strategy is left to AQE: the common cycle's
+handful of affected groups broadcasts, while a mass delete touching
+millions of groups falls back to a shuffled semi-join (an explicit
+broadcast hint here would smuggle the driver-proportional cost back
+in through the broadcast build).
 
 Cost honesty at 100 TB: the recompute's aggregation work is
 O(affected groups' rows), but a base bucketed on the KEY (the
@@ -47,181 +55,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..tables import ckpt_shared
-
-
-def maintain_min_max(
-    store,
-    v_from: int,
-    v_to: int,
-    group_cols: list[str],
-    value_col: str,
-    *,
-    old_view: DataFrame | None = None,
-    with_sum: bool = False,
-) -> DataFrame:
-    """Maintain a per-group (count, min, max) view across a feed
-    window. Returns columns ``group_cols + [n, min_v, max_v]`` equal to
-    a from-scratch ``groupBy(group).agg(count, min, max)`` over the
-    ``v_to`` state. ``value_col`` is assumed non-null (the view's
-    measure). ``with_sum=True`` adds a distributive ``s`` column
-    (``sum(value_col)`` — adds add, removals subtract; the recompute
-    branch re-sums) for callers maintaining a combined sum+extremum
-    view (the streaming pipeline's declared view); the default leaves
-    the established three-measure plan untouched.
-
-    ``old_view`` is the PREVIOUSLY MAINTAINED view (columns
-    ``group_cols + [n, min_v, max_v]``, as this function returns) — in
-    steady state the caller feeds each cycle's output back in, so the
-    common path touches ONLY the feed plus the affected-group
-    recompute, never the base. When omitted (first cycle, or the
-    oracle-gated demo, which must re-derive deterministically) the old
-    view is computed from the ``v_from`` snapshot — one O(v_from)
-    aggregate."""
-    g = list(group_cols)
-    val = F.col(value_col)
-    sum_old = [F.col("s").alias("_s0")] if with_sum else []
-    sum_old_agg = [F.sum(val).alias("_s0")] if with_sum else []
-    if old_view is not None:
-        old = old_view.select(
-            *g,
-            F.col("n").alias("_n0"),
-            F.col("min_v").alias("_m0"),
-            F.col("max_v").alias("_x0"),
-            *sum_old,
-        )
-    else:
-        old = (
-            store.read(version=v_from)
-            .groupBy(*g)
-            .agg(
-                F.count(F.lit(1)).alias("_n0"),
-                F.min(val).alias("_m0"),
-                F.max(val).alias("_x0"),
-                *sum_old_agg,
-            )
-        )
-    feed = store.read_changes(v_from, v_to, update_images="both")
-    is_add = F.col("_change").isin("insert", "update_postimage")
-    sum_inc = (
-        [F.sum(F.when(is_add, val).otherwise(-val)).alias("_ds")]
-        if with_sum
-        else []
-    )
-    inc = feed.groupBy(*g).agg(
-        F.sum(_sign()).alias("_dn"),
-        F.min(F.when(is_add, val)).alias("_ma"),
-        F.max(F.when(is_add, val)).alias("_xa"),
-        F.min(F.when(~is_add, val)).alias("_mr"),
-        F.max(F.when(~is_add, val)).alias("_xr"),
-        *sum_inc,
-    )
-    # Null-safe full outer: a NULL group value is a legitimate group
-    # (SQL GROUP BY treats NULL as one group), but an equi-join on the
-    # group columns would never pair its old row with its feed row —
-    # the old extremum would pass through untouched. eqNullSafe joins
-    # them like classify_changes does; group values coalesce from
-    # whichever side is present.
-    o, i = old.alias("o"), inc.alias("i")
-    joined = o.join(
-        i,
-        reduce(
-            lambda a, b: a & b,
-            [F.col(f"o.{c}").eqNullSafe(F.col(f"i.{c}")) for c in g],
-        ),
-        "full_outer",
-    ).select(
-        *[F.coalesce(F.col(f"o.{c}"), F.col(f"i.{c}")).alias(c) for c in g],
-        "_n0",
-        "_m0",
-        "_x0",
-        "_dn",
-        "_ma",
-        "_xa",
-        "_mr",
-        "_xr",
-        *(["_s0", "_ds"] if with_sum else []),
-    )
-    # Two consumers (kept branch + affected-group collect) share one
-    # execution of the old-view/feed join.
-    j = (
-        joined
-        .withColumn(
-            "_n_new",
-            (
-                F.coalesce("_n0", F.lit(0)) + F.coalesce("_dn", F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            "_recompute",
-            F.coalesce(
-                (
-                    F.col("_mr").isNotNull()
-                    & F.col("_m0").isNotNull()
-                    & (F.col("_mr") <= F.col("_m0"))
-                )
-                | (
-                    F.col("_xr").isNotNull()
-                    & F.col("_x0").isNotNull()
-                    & (F.col("_xr") >= F.col("_x0"))
-                ),
-                F.lit(False),
-            ),
-        )
-        .transform(ckpt_shared)
-    )
-    kept = j.filter(~F.col("_recompute") & (F.col("_n_new") > 0)).select(
-        *g,
-        F.col("_n_new").alias("n"),
-        # least/greatest skip NULLs: a brand-new group takes the
-        # feed's extremum, an untouched group keeps the stored one.
-        F.least("_m0", "_ma").alias("min_v"),
-        F.greatest("_x0", "_xa").alias("max_v"),
-        *(
-            [
-                (
-                    F.coalesce("_s0", F.lit(0)) + F.coalesce("_ds", F.lit(0))
-                ).alias("s")
-            ]
-            if with_sum
-            else []
-        ),
-    )
-    # Affected groups stay a DataFrame — no key list on the driver, no
-    # literal predicate in the plan. The eqNullSafe semi-join keeps an
-    # affected NULL group (plain == would drop it from the view). No
-    # explicit broadcast hint: the common cycle's affected set is tiny
-    # and AQE broadcasts it on its own, while a mass delete touching
-    # millions of groups must be FREE to fall back to a shuffled
-    # semi-join — a forced broadcast would rebuild exactly the
-    # driver-proportional failure (collect to driver + 8 GB broadcast
-    # cap) this path exists to avoid.
-    affected = j.filter(F.col("_recompute")).select(
-        *[F.col(c).alias(f"_ag_{c}") for c in g]
-    )
-    # Bounded existence probe (LIMIT 1 over the checkpointed branch),
-    # not a key collect: skips planning the base read on the common
-    # no-extremum-departure cycle.
-    if affected.isEmpty():
-        return kept
-    cur = store.read(version=v_to)
-    recomputed = (
-        cur.join(
-            affected,
-            reduce(
-                lambda a, b: a & b,
-                [F.col(c).eqNullSafe(F.col(f"_ag_{c}")) for c in g],
-            ),
-            "left_semi",
-        )
-        .groupBy(*g)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(val).alias("min_v"),
-            F.max(val).alias("max_v"),
-            *([F.sum(val).alias("s")] if with_sum else []),
-        )
-    )
-    return kept.unionByName(recomputed)
 
 
 def _sign():
@@ -259,25 +92,32 @@ def _compose(dims: list[DataFrame]) -> DataFrame:
 
 
 class _KeyChain:
-    """A joined view's inputs: fact ⋈ dim1 [⋈ dim2], where the fact's
+    """A view's inputs: fact ⋈ dim1 [⋈ dim2], where the fact's
     ``fact_key`` names a dim1 row, a dim's attribute names the next
     dim's row, and the last dim's attribute is the view's group.
     ``links`` holds one ``(store, key_col, attr_col, (from, to))`` per
     dim; every store advances over its own version window, so an
     out-of-band dim writer never has to share the fact's counter.
-    Frames carry the group (named after the last attribute column),
-    the fact's measure ``_v`` and a signed weight ``_w``; every joined
-    algebra is a fold of them.
+    With no links the chain is the fact alone, grouped by the
+    caller's ``group_cols`` (any number of them). Frames carry the
+    group columns (named after the last attribute column, or the
+    ``group_cols``), the fact's measure ``_v`` and a signed weight
+    ``_w``; every algebra is a fold of them.
 
     Join strategies are left to AQE throughout: the typically small
     dims and dim feeds broadcast at runtime, while a dim-wide
     re-grouping touching millions of keys stays free to shuffle
     instead of hitting the driver-built broadcast cap."""
 
-    def __init__(self, fact, fact_key, value, window, links):
+    def __init__(self, fact, fact_key, value, window, links, group_cols=()):
         self.fact, self.fact_key, self.value = fact, fact_key, value
         self.window, self.links = window, links
-        self.group = links[-1][2]
+        self.groups = [links[-1][2]] if links else list(group_cols)
+        # The affected-group frame's column per group column.
+        self.tags = (
+            ["_x"] if len(self.groups) == 1
+            else [f"_x{i}" for i in range(len(self.groups))]
+        )
 
     def _facts(self, version: int) -> DataFrame:
         return self.fact.read(version=version).select(
@@ -293,10 +133,28 @@ class _KeyChain:
     def rows(self, end: int, groups: DataFrame | None = None) -> DataFrame:
         """The joined rows, each with ``_w`` = 1, at every store's
         window start (``end=0``) or end (``end=1``): the input of every
-        from-scratch fold. ``groups`` (one column ``_x``) keeps only
-        those groups, NULL included. The dim map is pruned to them
-        before the key join, so the join prunes the fact scan to
-        exactly their facts and never rescans the base."""
+        from-scratch fold. ``groups`` (columns ``tags``) keeps only
+        those groups, NULL included. With dims, the dim map is pruned
+        to them before the key join, so the join prunes the fact scan
+        to exactly their facts and never rescans the base; with none,
+        the fact itself is semi-joined on every group column."""
+        if not self.links:
+            rows = self.fact.read(version=self.window[end]).select(
+                *self.groups, self.value.alias("_v")
+            )
+            if groups is not None:
+                rows = rows.join(
+                    groups,
+                    reduce(
+                        lambda a, b: a & b,
+                        [
+                            F.col(c).eqNullSafe(F.col(t))
+                            for c, t in zip(self.groups, self.tags)
+                        ],
+                    ),
+                    "left_semi",
+                )
+            return rows.withColumn("_w", F.lit(1))
         m = _compose([self._dim(i, end) for i in range(len(self.links))])
         if groups is not None:
             m = m.join(
@@ -304,16 +162,15 @@ class _KeyChain:
             )
         return (
             _follow(self._facts(self.window[end]), m)
-            .withColumnRenamed("_k", self.group)
+            .withColumnRenamed("_k", self.groups[0])
             .withColumn("_w", F.lit(1))
         )
 
     def delta(self) -> DataFrame | None:
-        """``V(to) − V(from)`` as one consolidated signed multiset
-        ``(group, _v, _w)``, the Z-set form of DBSP (Budiu et al.,
-        VLDB 2023), or None when every window is empty. Joins are
-        bilinear over signed multisets, so telescoping one store at a
-        time gives the exact identity (1 = pre-state, 2 = post-state;
+        """``V(to) − V(from)`` as one signed multiset ``(group…, _v,
+        _w)``, or None when every window is empty. Joins are bilinear
+        over signed multisets, so telescoping one store at a time
+        gives the exact identity (1 = pre-state, 2 = post-state;
         X = C ⋈ N, the dims' composed fact-key → group map)
 
             ΔV = ΔF ⋈ X1  +  F2 ⋈ ΔX,    ΔX = ΔC ⋈ N1  +  C2 ⋈ ΔN
@@ -329,8 +186,21 @@ class _KeyChain:
           added under a key that moved away in the same window gets a
           +1 in its old group that only the dim term's -1 cancels. It
           also makes the departed values exact, so a dim move costs a
-          recompute only if a departed value reaches the horizon."""
+          recompute only if a departed value reaches the horizon.
+
+        With no dims the delta is the fact's signed feed itself, NOT
+        consolidated: there is one term, so nothing can cancel across
+        terms, and an update's -1/+1 pair is left for the folds (the
+        linear ones sum it away; the extremum ones treat its -1 at the
+        horizon conservatively, as a departure)."""
         fvf, fvt = self.window
+        if not self.links:
+            if fvf == fvt:
+                return None
+            feed = self.fact.read_changes(fvf, fvt, update_images="both")
+            return feed.select(
+                *self.groups, self.value.alias("_v"), _sign().alias("_w")
+            )
         terms, moves = [], []
         if fvf != fvt:
             feed = self.fact.read_changes(fvf, fvt, update_images="both")
@@ -366,18 +236,17 @@ class _KeyChain:
             return None
         return (
             reduce(DataFrame.unionByName, terms)
-            .groupBy(F.col("_k").alias(self.group), "_v")
+            .groupBy(F.col("_k").alias(self.groups[0]), "_v")
             .agg(F.sum("_w").alias("_w"))
             .filter(F.col("_w") != 0)
         )
 
 
-def _plus(c: str):
-    """A distributive measure merged with its folded delta."""
-    return (
-        (F.coalesce(f"_o_{c}", F.lit(0)) + F.coalesce(c, F.lit(0)))
-        .cast("long")
-        .alias(c)
+def _table_chain(store, v_from, v_to, group_cols, value_col) -> _KeyChain:
+    """The chain of a single-table view: the store alone, grouped by
+    ``group_cols``, measuring ``value_col``."""
+    return _KeyChain(
+        store, None, F.col(value_col), (v_from, v_to), [], group_cols
     )
 
 
@@ -391,12 +260,12 @@ def _joined_view(
     keys: list[str] | None = None,
     threat=None,
 ) -> DataFrame:
-    """The maintenance step every joined view shares. ``fold(rows)``
-    is the algebra's one from-scratch fold over signed rows; it also
-    folds the chain's delta. The old view (``old_view``, or the fold at
-    the window start) meets the folded delta in ONE null-safe full
-    outer join on ``keys`` (default: the group), where the old
-    measures read ``_o_<col>`` and ``merged`` computes the new
+    """The maintenance step every view shares. ``fold(rows)`` is the
+    algebra's one from-scratch fold over signed rows; it also folds
+    the chain's delta. The old view (``old_view``, or the fold at the
+    window start) meets the folded delta in ONE null-safe full outer
+    join on ``keys`` (default: the chain's group columns), where the
+    old measures read ``_o_<col>`` and ``merged`` computes the new
     ``cols``. A NULL group is one group, as in SQL GROUP BY. Rows
     whose first measure (the count) reaches zero drop.
 
@@ -409,7 +278,7 @@ def _joined_view(
     post-state rows, pruned to them. The affected groups stay a
     DataFrame end to end: no driver key list, no literal predicate,
     and AQE picks broadcast or shuffle for the semi-join."""
-    keys = keys or [chain.group]
+    keys = keys or chain.groups
     old = old_view if old_view is not None else fold(chain.rows(0))
     old = old.select(*keys, *cols)
     delta = chain.delta()
@@ -432,7 +301,7 @@ def _joined_view(
         .filter(F.col(cols[0]) > 0)
     )
     affected = j.filter(F.col("_recompute")).select(
-        F.col(chain.group).alias("_x")
+        *[F.col(c).alias(t) for c, t in zip(chain.groups, chain.tags)]
     )
     # Bounded existence probe, not a key collect: the common cycle
     # with no departure never plans the post-state read.
@@ -443,15 +312,138 @@ def _joined_view(
     )
 
 
+def _linear(name: str, expr, cast: str | None = "long") -> tuple:
+    """A linear measure ``name`` = Σ ``expr`` over signed rows, as a
+    ``(name, fold aggregate, merge)`` triple: the merge adds the old
+    view's ``_o_<name>`` to the folded delta, a missing side reading
+    0. ``cast=None`` keeps the sum's own type."""
+
+    def typed(c):
+        return (c if cast is None else c.cast(cast)).alias(name)
+
+    old, new = F.coalesce(f"_o_{name}", F.lit(0)), F.coalesce(name, F.lit(0))
+    return name, typed(F.sum(expr)), typed(old + new)
+
+
 def _count_sum() -> list:
+    """The joined views' count and integer-cents sum."""
     return [
-        F.sum("_w").cast("long").alias("n"),
-        F.sum(F.col("_w") * F.col("_v")).cast("long").alias("s"),
+        _linear("n", F.col("_w")),
+        _linear("s", F.col("_w") * F.col("_v")),
     ]
 
 
 def _cents(cents_col: str):
     return F.round(F.col(cents_col) * 100).cast("long")
+
+
+def _linear_view(
+    chain: _KeyChain, old_view, linear: list, value_col: str | None = None
+) -> DataFrame:
+    """A view of linear measures only (``_linear`` triples): the
+    algebra is closed under deletes, so there is no recompute branch.
+    ``value_col`` also groups by the measure's value, under that name:
+    the per-(group, value) multiplicity bins of a histogram."""
+    names, aggs, merges = zip(*linear)
+    by = [F.col("_v").alias(value_col)] if value_col else []
+    return _joined_view(
+        chain,
+        old_view,
+        lambda rows: rows.groupBy(*chain.groups, *by).agg(*aggs),
+        list(names),
+        list(merges),
+        keys=[*chain.groups, value_col] if value_col else None,
+    )
+
+
+def _min_max_view(
+    chain: _KeyChain, old_view, linear: list, lo: str, hi: str
+) -> DataFrame:
+    """The extremum fold: linear measures ``linear`` (``(name, fold
+    aggregate, merge)`` triples, the first the count) plus the min
+    ``lo`` and max ``hi`` of the measure. The ``_w > 0`` values are
+    the add-candidates; a group recomputes only when a ``_w < 0``
+    value ties or beats its stored min or max."""
+    names, aggs, merges = zip(*linear)
+    pos, neg = F.col("_w") > 0, F.col("_w") < 0
+
+    def fold(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*chain.groups).agg(
+            *aggs,
+            F.min(F.when(pos, F.col("_v"))).alias(lo),
+            F.max(F.when(pos, F.col("_v"))).alias(hi),
+            F.min(F.when(neg, F.col("_v"))).alias("_mr"),
+            F.max(F.when(neg, F.col("_v"))).alias("_xr"),
+        )
+
+    return _joined_view(
+        chain,
+        old_view,
+        fold,
+        [*names, lo, hi],
+        [
+            *merges,
+            # least/greatest skip NULLs: a new group takes the delta's
+            # extremum, an untouched one keeps the stored value.
+            F.least(f"_o_{lo}", lo).alias(lo),
+            F.greatest(f"_o_{hi}", hi).alias(hi),
+        ],
+        threat=(F.col("_mr") <= F.col(f"_o_{lo}"))
+        | (F.col("_xr") >= F.col(f"_o_{hi}")),
+    )
+
+
+def _top_k_view(
+    chain: _KeyChain, old_view, linear: list, k: int
+) -> DataFrame:
+    """The k-deep extremum fold: linear measures ``linear`` (as in
+    :func:`_min_max_view`) plus ``topk``, the k largest values sorted
+    descending, with the k-th stored value as the horizon. The
+    ``_w > 0`` values, each repeated ``_w`` times, are the candidates
+    merged into the stored array; a group recomputes only when a
+    ``_w < 0`` value ties or beats the horizon. The fold ranks
+    candidates per group by cumulative weight before any array
+    collect, so a mass-insert cycle never materializes an unbounded
+    list and the state stays O(groups × k)."""
+    from pyspark.sql import Window
+
+    names, aggs, merges = zip(*linear)
+    w = (
+        Window.partitionBy(*chain.groups)
+        .orderBy(F.desc("_v"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    pos = F.greatest(F.col("_w"), F.lit(0))
+    # Copies of this row's value among the group's k largest: its
+    # weight, cut to the room the larger values left.
+    take = F.least(pos, F.lit(k) - (F.sum(pos).over(w) - pos))
+
+    def fold(rows: DataFrame) -> DataFrame:
+        return rows.withColumn("_take", take).groupBy(*chain.groups).agg(
+            *aggs,
+            F.reverse(F.array_sort(F.flatten(F.collect_list(
+                F.when(
+                    F.col("_take") > 0,
+                    F.array_repeat("_v", F.col("_take").cast("int")),
+                )
+            )))).alias("topk"),
+            F.max(F.when(F.col("_w") < 0, F.col("_v"))).alias("_xr"),
+        )
+
+    merged = F.concat(
+        F.coalesce("_o_topk", F.array()), F.coalesce("topk", F.array())
+    )
+    return _joined_view(
+        chain,
+        old_view,
+        fold,
+        [*names, "topk"],
+        [
+            *merges,
+            F.slice(F.reverse(F.array_sort(merged)), 1, k).alias("topk"),
+        ],
+        threat=F.col("_xr") >= F.element_at("_o_topk", -1),
+    )
 
 
 def maintain_joined_agg(
@@ -487,12 +479,58 @@ def maintain_joined_agg(
         fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
         [(dim_store, dim_key_col, group_col, (v_from, v_to))],
     )
-    return _joined_view(
-        chain,
-        old_view,
-        lambda rows: rows.groupBy(group_col).agg(*_count_sum()),
-        ["n", "s"],
-        [_plus("n"), _plus("s")],
+    return _linear_view(chain, old_view, _count_sum())
+
+
+def maintain_min_max(
+    store,
+    v_from: int,
+    v_to: int,
+    group_cols: list[str],
+    value_col: str,
+    *,
+    old_view: DataFrame | None = None,
+    with_sum: bool = False,
+) -> DataFrame:
+    """Maintain a per-group (count, min, max) view across a feed
+    window. Returns columns ``group_cols + [n, min_v, max_v]`` equal to
+    a from-scratch ``groupBy(group).agg(count, min, max)`` over the
+    ``v_to`` state. ``value_col`` is assumed non-null (the view's
+    measure). ``with_sum=True`` adds a distributive ``s`` column
+    (``sum(value_col)``, in the sum's own type) for callers
+    maintaining a combined sum+extremum view (the streaming
+    pipeline's declared view).
+
+    The extremum fold of ``maintain_joined_min_max`` over a chain with
+    no dims: the feed's added values are candidates, and a group is
+    recomputed from its post-state rows only when a removed value
+    ties or beats its stored min or max — so insert-only and
+    interior-delete cycles never touch the base. An update's
+    pre-image is a removal: an update at the extremum recomputes its
+    group even when the post-image would keep it (conservative, never
+    wrong).
+
+    ``old_view`` is the PREVIOUSLY MAINTAINED view (as this function
+    returns) — in steady state the caller feeds each cycle's output
+    back in, so the common path touches ONLY the feed plus the
+    affected-group recompute, never the base. When omitted (first
+    cycle, or the oracle-gated demo, which must re-derive
+    deterministically) the old view is computed from the ``v_from``
+    snapshot — one O(v_from) aggregate."""
+    linear = [_linear("n", F.col("_w"))]
+    if with_sum:
+        # A chain with no dims weighs every row ±1; negating the value
+        # keeps the sum in the type a from-scratch sum has.
+        v = F.col("_v")
+        linear.append(
+            _linear("s", F.when(F.col("_w") > 0, v).otherwise(-v), None)
+        )
+    view = _min_max_view(
+        _table_chain(store, v_from, v_to, group_cols, value_col),
+        old_view, linear, "min_v", "max_v",
+    )
+    return view.select(
+        *group_cols, "n", "min_v", "max_v", *(["s"] if with_sum else [])
     )
 
 
@@ -515,7 +553,7 @@ def maintain_joined_min_max(
     from-scratch ``F(v_to) ⋈ D(v_to)`` aggregate.
 
     Neither parent covers this alone: ``maintain_joined_agg`` is
-    count/sum only, and ``maintain_min_max`` is single-table, while a
+    count/sum only, and ``maintain_min_max`` has no dims, while a
     DIM MOVE can retire a group's extremum without any fact delete.
     The chain's consolidated delta names every value that left a
     group, by a fact removal or by its key moving away, so one rule
@@ -526,33 +564,7 @@ def maintain_joined_min_max(
         fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
         [(dim_store, dim_key_col, group_col, (v_from, v_to))],
     )
-    pos, neg = F.col("_w") > 0, F.col("_w") < 0
-
-    def fold(rows: DataFrame) -> DataFrame:
-        return rows.groupBy(group_col).agg(
-            *_count_sum(),
-            F.min(F.when(pos, F.col("_v"))).alias("min_c"),
-            F.max(F.when(pos, F.col("_v"))).alias("max_c"),
-            F.min(F.when(neg, F.col("_v"))).alias("_mr"),
-            F.max(F.when(neg, F.col("_v"))).alias("_xr"),
-        )
-
-    return _joined_view(
-        chain,
-        old_view,
-        fold,
-        ["n", "s", "min_c", "max_c"],
-        [
-            _plus("n"),
-            _plus("s"),
-            # least/greatest skip NULLs: a new group takes the delta's
-            # extremum, an untouched one keeps the stored value.
-            F.least("_o_min_c", "min_c").alias("min_c"),
-            F.greatest("_o_max_c", "max_c").alias("max_c"),
-        ],
-        threat=(F.col("_mr") <= F.col("_o_min_c"))
-        | (F.col("_xr") >= F.col("_o_max_c")),
-    )
+    return _min_max_view(chain, old_view, _count_sum(), "min_c", "max_c")
 
 
 def maintain_value_counts(
@@ -573,8 +585,10 @@ def maintain_value_counts(
     back to full rescans or approximate sketches, and sketches like
     HLL are not even delete-capable), but all of them are PURE
     FUNCTIONS of this histogram, and the histogram itself maintains
-    with count's trivial algebra: +1 per added (group, value) row,
-    −1 per removed one, bins dropped at zero.
+    with count's trivial algebra: the bins fold the feed's signed
+    weights linearly, and a bin drops when its count reaches zero
+    (a negative count can only mean ``old_hist`` was not the true
+    ``v_from`` histogram — a caller contract violation).
 
     Returns columns ``group_cols + [value_col, c]`` equal to a
     from-scratch ``groupBy(group, value).count()`` over the ``v_to``
@@ -602,39 +616,10 @@ def maintain_value_counts(
     Reference parity: the reference recomputes its per-extension /
     per-root stats queries from scratch each scan
     (db_duckdb.py:342-356); this is the exact-holistic scale path."""
-    g = list(group_cols)
-    gv = g + [value_col]
-    if old_hist is not None:
-        old = old_hist.select(*gv, F.col("c").alias("_c0"))
-    else:
-        old = (
-            store.read(version=v_from)
-            .groupBy(*gv)
-            .agg(F.count(F.lit(1)).alias("_c0"))
-        )
-    feed = store.read_changes(v_from, v_to, update_images="both")
-    inc = feed.groupBy(*gv).agg(
-        F.sum(_sign()).alias("_dc")
+    return _linear_view(
+        _table_chain(store, v_from, v_to, group_cols, value_col),
+        old_hist, [_linear("c", F.col("_w"))], value_col,
     )
-    o, i = old.alias("o"), inc.alias("i")
-    joined = o.join(
-        i,
-        reduce(
-            lambda a, b: a & b,
-            [F.col(f"o.{c}").eqNullSafe(F.col(f"i.{c}")) for c in gv],
-        ),
-        "full_outer",
-    ).select(
-        *[F.coalesce(F.col(f"o.{c}"), F.col(f"i.{c}")).alias(c) for c in gv],
-        (F.coalesce("_c0", F.lit(0)) + F.coalesce("_dc", F.lit(0)))
-        .cast("long")
-        .alias("c"),
-    )
-    # c == 0: the bin's last row departed — dropped, so the histogram
-    # stays dense (a negative c can only mean old_hist was not the
-    # true v_from histogram — a caller contract violation, same class
-    # as feeding a foreign old_view into maintain_min_max).
-    return joined.filter(F.col("c") > 0)
 
 
 def histogram_stats(
@@ -723,7 +708,6 @@ def histogram_stats(
         ).drop(f"_{name}_lo", f"_{name}_hi")
     return agged
 
-
 def maintain_top_k(
     store,
     v_from: int,
@@ -741,146 +725,30 @@ def maintain_top_k(
     fewer rows), equal to a from-scratch ranked top-k over the
     ``v_to`` state. ``value_col`` is assumed non-null.
 
-    The same semi-incremental split as min/max, with the k-th stored
-    value as the HORIZON:
+    The top-k fold of ``maintain_joined_top_k`` over a chain with no
+    dims, with the k-th stored value as the HORIZON:
 
     - inserts merge algebraically — the new top-k is the top-k of
-      (stored array ∪ feed adds' own top-k), O(k) per group;
+      (stored array ∪ the feed's added values), O(k) per group;
     - a removal strictly BELOW the horizon (the smallest stored
       element) cannot touch the membership — pure delta, only ``n``
       moves. This covers the n0 <= k case for free: there every
       group value IS stored, so any genuine removal ties-or-beats
       the horizon;
     - a removal that ties-or-beats the horizon RECOMPUTES that group
-      from the post-state base via the same AQE-adaptive eqNullSafe
+      from its post-state rows via the same AQE-adaptive eqNullSafe
       left-semi join (no driver key list, no forced broadcast — see
       the module docstring's cost note).
 
-    Feed adds are pre-ranked per group (window row_number, keep
-    ``<= k``) BEFORE the array collect, so a mass-insert cycle never
-    materializes an unbounded collect_list — the maintenance state
-    stays O(groups × k) everywhere. The first derivation (no
-    ``old_view``) ranks the ``v_from`` snapshot the same way."""
-    from pyspark.sql import Window
-
-    g = list(group_cols)
-    val = F.col(value_col)
-
-    def ranked_topk(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*g).orderBy(F.desc(value_col))
-        return (
-            df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= k)
-            .groupBy(*g)
-            .agg(
-                F.reverse(F.array_sort(F.collect_list(val))).alias("_tk")
-            )
-        )
-
-    def n_and_topk(df: DataFrame) -> DataFrame:
-        # ONE pass for (n, topk): collect_list skips the NULL the
-        # when() assigns past rank k, so the array stays O(k) while
-        # the count covers every row — and no group-key join is
-        # needed (a join on the group columns would drop the NULL
-        # group; GROUP BY keeps it).
-        w = Window.partitionBy(*g).orderBy(F.desc(value_col))
-        return (
-            df.withColumn("_rk", F.row_number().over(w))
-            .groupBy(*g)
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.reverse(
-                    F.array_sort(
-                        F.collect_list(F.when(F.col("_rk") <= k, val))
-                    )
-                ).alias("_tk"),
-            )
-        )
-
-    if old_view is not None:
-        old = old_view.select(
-            *g, F.col("n").alias("_n0"), F.col("topk").alias("_tk0")
-        )
-    else:
-        old = (
-            n_and_topk(store.read(version=v_from))
-            .withColumnRenamed("_n", "_n0")
-            .withColumnRenamed("_tk", "_tk0")
-        )
-    feed = store.read_changes(v_from, v_to, update_images="both")
-    is_add = F.col("_change").isin("insert", "update_postimage")
-    adds = ranked_topk(feed.filter(is_add)).withColumnRenamed("_tk", "_ta")
-    counts = feed.groupBy(*g).agg(
-        F.sum(_sign()).alias("_dn"),
-        F.max(F.when(~is_add, val)).alias("_xr"),
+    Added values are ranked per group BEFORE the array collect, so a
+    mass-insert cycle never materializes an unbounded collect_list —
+    the maintenance state stays O(groups × k) everywhere. The first
+    derivation (no ``old_view``) ranks the ``v_from`` snapshot the
+    same way."""
+    return _top_k_view(
+        _table_chain(store, v_from, v_to, group_cols, value_col),
+        old_view, [_linear("n", F.col("_w"))], k,
     )
-    inc = _multi_null_safe_outer(counts, adds, g).select(
-        *g, "_dn", "_xr", "_ta"
-    )
-    joined = _multi_null_safe_outer(old, inc, g)
-    j = (
-        joined.withColumn(
-            "_n_new",
-            (
-                F.coalesce("_n0", F.lit(0)) + F.coalesce("_dn", F.lit(0))
-            ).cast("long"),
-        )
-        .withColumn(
-            # Horizon = the smallest STORED top-k element; a removal
-            # that ties-or-beats it may retire a member (or, when the
-            # whole group is stored, must — a removed value always
-            # exists in the group).
-            "_recompute",
-            F.coalesce(
-                F.col("_xr").isNotNull()
-                & F.col("_tk0").isNotNull()
-                & (F.col("_xr") >= F.element_at("_tk0", -1)),
-                F.lit(False),
-            ),
-        )
-        .transform(ckpt_shared)
-    )
-    # Typed empty fallbacks (slice-to-zero of the OTHER side) — a bare
-    # F.array() is array<void> and won't coerce to the value type. A
-    # row always has at least one side present, so the coalesce chain
-    # never needs both.
-    merged_tk = F.slice(
-        F.reverse(
-            F.array_sort(
-                F.concat(
-                    F.coalesce("_tk0", F.slice("_ta", 1, 0)),
-                    F.coalesce("_ta", F.slice("_tk0", 1, 0)),
-                )
-            )
-        ),
-        1,
-        k,
-    )
-    kept = j.filter(~F.col("_recompute") & (F.col("_n_new") > 0)).select(
-        *g,
-        F.col("_n_new").alias("n"),
-        merged_tk.alias("topk"),
-    )
-    affected = j.filter(F.col("_recompute")).select(
-        *[F.col(c).alias(f"_ag_{c}") for c in g]
-    )
-    if affected.isEmpty():
-        return kept
-    cur = store.read(version=v_to)
-    scoped = cur.join(
-        affected,
-        reduce(
-            lambda a, b: a & b,
-            [F.col(c).eqNullSafe(F.col(f"_ag_{c}")) for c in g],
-        ),
-        "left_semi",
-    )
-    recomputed = (
-        n_and_topk(scoped)
-        .withColumnRenamed("_n", "n")
-        .withColumnRenamed("_tk", "topk")
-    )
-    return kept.unionByName(recomputed)
 
 
 def _multi_null_safe_outer(
@@ -910,7 +778,6 @@ def _multi_null_safe_outer(
         *[F.col(f"r.{c}") for c in right.columns if c not in group_cols],
     )
 
-
 def maintain_moments(
     store,
     v_from: int,
@@ -923,8 +790,9 @@ def maintain_moments(
     """Maintain the per-group MOMENT view ``(n, s, s2)`` — count, sum,
     and sum of squares — the distributive state behind every
     mean/variance/stddev dashboard. Like count/sum (and unlike
-    min/max), the algebra is CLOSED under deletes: adds add, removals
-    subtract, no recompute branch, one feed-sized pass.
+    min/max), the algebra is CLOSED under deletes: the three
+    measures fold the feed's signed weights linearly, no recompute
+    branch, one feed-sized pass.
 
     The accumulators are ``decimal(38,0)``, not long, on purpose: a
     100 TB fact table with cent-scale measures (~1e7) has per-row
@@ -942,52 +810,17 @@ def maintain_moments(
     ``old_view`` feeds back the previous cycle's output
     (``group_cols + [n, s, s2]``); omitted, the first derivation
     aggregates the ``v_from`` snapshot once."""
-    g = list(group_cols)
-    val = F.col(value_col).cast("decimal(19,0)")
-    sq = (val * val).cast("decimal(38,0)")
-    v1 = val.cast("decimal(38,0)")
-    if old_view is not None:
-        old = old_view.select(
-            *g,
-            F.col("n").alias("_n0"),
-            F.col("s").cast("decimal(38,0)").alias("_s0"),
-            F.col("s2").cast("decimal(38,0)").alias("_q0"),
-        )
-    else:
-        old = (
-            store.read(version=v_from)
-            .groupBy(*g)
-            .agg(
-                F.count(F.lit(1)).alias("_n0"),
-                F.sum(v1).cast("decimal(38,0)").alias("_s0"),
-                F.sum(sq).cast("decimal(38,0)").alias("_q0"),
-            )
-        )
-    feed = store.read_changes(v_from, v_to, update_images="both")
-    sign = _sign().cast("decimal(19,0)")
-    inc = feed.groupBy(*g).agg(
-        F.sum(_sign()).alias("_dn"),
-        F.sum((sign * val).cast("decimal(38,0)")).cast("decimal(38,0)").alias("_ds"),
-        F.sum((sign * sq).cast("decimal(38,0)")).cast("decimal(38,0)").alias("_dq"),
-    )
-    zero = F.lit(0).cast("decimal(38,0)")
-    return (
-        _multi_null_safe_outer(old, inc, g)
-        .select(
-            *g,
-            (
-                F.coalesce("_n0", F.lit(0)) + F.coalesce("_dn", F.lit(0))
-            )
-            .cast("long")
-            .alias("n"),
-            (F.coalesce("_s0", zero) + F.coalesce("_ds", zero))
-            .cast("decimal(38,0)")
-            .alias("s"),
-            (F.coalesce("_q0", zero) + F.coalesce("_dq", zero))
-            .cast("decimal(38,0)")
-            .alias("s2"),
-        )
-        .filter(F.col("n") > 0)
+    dec = "decimal(38,0)"
+    w = F.col("_w").cast("decimal(19,0)")
+    val = F.col("_v").cast("decimal(19,0)")
+    return _linear_view(
+        _table_chain(store, v_from, v_to, group_cols, value_col),
+        old_view,
+        [
+            _linear("n", F.col("_w")),
+            _linear("s", (w * val).cast(dec), dec),
+            _linear("s2", (w * (val * val).cast(dec)).cast(dec), dec),
+        ],
     )
 
 
@@ -1031,14 +864,8 @@ def maintain_joined_value_counts(
         fact_store, fact_key_col, F.col(value_col), (v_from, v_to),
         [(dim_store, dim_key_col, group_col, dim_window or (v_from, v_to))],
     )
-    return _joined_view(
-        chain,
-        old_hist,
-        lambda rows: rows.groupBy(group_col, F.col("_v").alias(value_col))
-        .agg(F.sum("_w").cast("long").alias("c")),
-        ["c"],
-        [_plus("c")],
-        keys=[group_col, value_col],
+    return _linear_view(
+        chain, old_hist, [_linear("c", F.col("_w"))], value_col
     )
 
 
@@ -1521,13 +1348,7 @@ def maintain_joined3_agg(
              dim2_window or (v_from, v_to)),
         ],
     )
-    return _joined_view(
-        chain,
-        old_view,
-        lambda rows: rows.groupBy(group_col).agg(*_count_sum()),
-        ["n", "s"],
-        [_plus("n"), _plus("s")],
-    )
+    return _linear_view(chain, old_view, _count_sum())
 
 
 def maintain_joined_top_k(
@@ -1565,49 +1386,11 @@ def maintain_joined_top_k(
     O(groups × k). ``dim_window`` lets an out-of-band dim writer
     advance on its own version counter (default: the fact window),
     as the streaming twin requires."""
-    from pyspark.sql import Window
-
     chain = _KeyChain(
         fact_store, fact_key_col, _cents(cents_col), (v_from, v_to),
         [(dim_store, dim_key_col, group_col, dim_window or (v_from, v_to))],
     )
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.desc("_v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pos = F.greatest(F.col("_w"), F.lit(0))
-    # Copies of this row's value among the group's k largest: its
-    # weight, cut to the room the larger values left.
-    take = F.least(pos, F.lit(k) - (F.sum(pos).over(w) - pos))
-
-    def fold(rows: DataFrame) -> DataFrame:
-        return rows.withColumn("_take", take).groupBy(group_col).agg(
-            *_count_sum(),
-            F.reverse(F.array_sort(F.flatten(F.collect_list(
-                F.when(
-                    F.col("_take") > 0,
-                    F.array_repeat("_v", F.col("_take").cast("int")),
-                )
-            )))).alias("topk"),
-            F.max(F.when(F.col("_w") < 0, F.col("_v"))).alias("_xr"),
-        )
-
-    merged = F.concat(
-        F.coalesce("_o_topk", F.array()), F.coalesce("topk", F.array())
-    )
-    return _joined_view(
-        chain,
-        old_view,
-        fold,
-        ["n", "s", "topk"],
-        [
-            _plus("n"),
-            _plus("s"),
-            F.slice(F.reverse(F.array_sort(merged)), 1, k).alias("topk"),
-        ],
-        threat=F.col("_xr") >= F.element_at("_o_topk", -1),
-    )
+    return _top_k_view(chain, old_view, _count_sum(), k)
 
 
 def dyadic_bucket(lvl_col, d_col, node_col, width: int):

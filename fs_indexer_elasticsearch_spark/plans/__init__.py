@@ -98,6 +98,19 @@ _PRIORITY = [
     "incremental_view_joined_nullgroup",
     "incremental_view_joined_chained",
     "incremental_view_joined_dimchange",
+    # Rotated into the prefix for the single-table core change (plans
+    # changed, mechanical rule): the single-table min/max, histogram,
+    # top-k and moment maintainers now fold the same signed-row core
+    # over a chain with no dims — same rows, same oracle hashes.
+    "incremental_view_minmax",
+    "incremental_view_minmax_chained",
+    "incremental_view_minmax_hicard",
+    "incremental_view_summinmax",
+    "incremental_view_histogram",
+    "incremental_view_histogram_chained",
+    "incremental_view_moments",
+    "incremental_view_topk",
+    "incremental_view_sample",
     # New in r14 (late) — IVF-PQ (IVFADC): coarse inverted-file pruning
     # + product quantization on RESIDUALS + per-(query, probed-cell)
     # ADC LUTs + exact float rerank — the composed cascade a 100 TB ANN
@@ -137,10 +150,6 @@ _PRIORITY = [
     # store's hash-bucket pruning; oracle scans the raw table, tests
     # assert the pruning ratio and property-check soundness).
     "zorder_pruned_scan",
-    # ... and its MAINTAINED form: base write + idempotent appended
-    # delta with zone-map widening, same rectangle, oracle = raw-table
-    # recompute.
-    "zorder_incremental_scan",
     # New in r14 (late) — maintained as-of join view (delta-bound key
     # recompute incl. delete-induced re-matching; oracle = DuckDB
     # native ASOF LEFT JOIN over the post state).
@@ -173,33 +182,6 @@ _PRIORITY = [
     # read |terms| buckets; tombstone deletions adjust the turnstile
     # normalizer via the doc-keyed length sidecar in O(removal)).
     "bm25_store_search_topk",
-    # Rotated into the prefix for the r15 OPTIMIZATION round (r14
-    # verdict #10): the five queries whose r14 eager-checkpoint flips
-    # changed executed-plan topology WITHOUT changing analyzed plans —
-    # the hole the plan-only rotation rule could not see (fingerprints
-    # now carry a checkpoint-topology component so this class rotates
-    # mechanically from r16 on). All five also ride this round's
-    # ckpt_shared policy conversion.
-    "pagerank_neardup_graph",
-    "curation_pipeline_e2e",
-    "q21_waiting_suppliers",
-    "crossdoc_shingle_boilerplate",
-    "substring_dedup_clean",
-    # Rotated into the prefix for the r14 OPTIMIZATION round (plans
-    # changed, mechanical rule): the embeddings-family scan now
-    # round-robin spreads past the single-file parquet scan before the
-    # per-row fold work (spread_small — no-op on wide real scans), the
-    # recall gates checkpoint their ground truth EAGERLY instead of
-    # recomputing it per consumer, and dedup_embedding_cosine /
-    # the k-means family inherit the spread through their shared
-    # augmented/fitted frames.
-    "similarity_bruteforce_topk",
-    "kmeans_cluster_profile",
-    # ... and the minhash/ngram operators' shared frames moved from
-    # cache() to eager checkpoints (cache let the self-join legs race
-    # and leaked reuse across warm runs): the two callers not already
-    # behind their own checkpoint rotate in.
-    "dedup_cascade_attrition",
     # Rotated into the prefix for r14 (plans changed, mechanical rule):
     # dedup_simhash — single-int band key (band<<16 | value) self-join;
     # similarity_ivf_topk / ann_recall_at_k — assign_cells' n_keep=1
@@ -323,6 +305,23 @@ _PRIORITY = [
     # Event-time windows and temporal joins (+ r6 range-frame MA) —
     # window_moving_avg_7d is the family's prefix anchor
     "window_moving_avg_7d",
+    # Swapped below the boundary for the single-table core rotation:
+    # the r15 rotations (eager-checkpoint topology flips), the r14
+    # optimisation-round rotations and the Z-order maintained scan, all
+    # verified green in r15 (hash_match) with plans unchanged since.
+    # Their families stay anchored in the prefix by graph_triangle_count
+    # (near-dup graph), dedup_exact / dedup_minhash_lsh (shingle,
+    # substring and minhash/ngram dedup), zorder_pruned_scan (Z-order
+    # layout) and similarity_ivf_topk / ann_recall_at_k (embeddings).
+    "pagerank_neardup_graph",
+    "curation_pipeline_e2e",
+    "q21_waiting_suppliers",
+    "crossdoc_shingle_boilerplate",
+    "substring_dedup_clean",
+    "zorder_incremental_scan",
+    "similarity_bruteforce_topk",
+    "kmeans_cluster_profile",
+    "dedup_cascade_attrition",
     "incremental_curation_cycle",
     "multimodal_frame_sample",
     # Evicted from the prefix by the r14 optimization round's eight
@@ -332,9 +331,6 @@ _PRIORITY = [
     # text_quality_stats + sequence_packing_stats for text analytics,
     # dedup_exact/minhash/CC for dedup):
     "multimodal_wav_stats",
-    "incremental_view_histogram",
-    "incremental_view_topk",
-    "incremental_view_minmax",
     "vocab_concentration",
     "token_budget_mixture",
     "collocations_pmi",
@@ -349,13 +345,11 @@ _PRIORITY = [
     "incremental_view_join_membership_chained",
     "incremental_view_rollup_cascade",
     "incremental_view_cms_topk",
-    "incremental_view_sample",
     # Swapped below the boundary for the joined-view core rotation:
     # r14 optimisation-round rotations, verified green in every round
     # since, plans unchanged. Their families stay anchored in the
-    # prefix by similarity_bruteforce_topk (the spread embeddings scan),
-    # kmeans_cluster_profile, ann_recall_at_k, quantized_ann_pq_topk
-    # and dedup_cascade_attrition (the minhash/ngram shared frames).
+    # prefix by ann_recall_at_k, quantized_ann_pq_topk and
+    # dedup_minhash_lsh.
     "dedup_embedding_cosine",
     "quantized_ann_int8_topk",
     "semantic_dedup_clusters",
@@ -364,18 +358,11 @@ _PRIORITY = [
     "ann_neardup_recall_multiprobe",
     "ngram_jaccard_pairs",
     "ann_ivf_coldmerge_topk",
-    "incremental_view_moments",
     "ann_ivf_split_topk",
-    "incremental_view_minmax_hicard",
     # Displaced below the boundary by the r14 rebalance (the six
     # r14 prefix entries would otherwise have evicted the window /
-    # tokenization / packing / skew family anchors entirely): five
-    # multi-round driver-green IVM siblings whose families stay
-    # anchored by histogram / joined / minmax / joined_minmax /
-    # cms_topk in the prefix.
-    "incremental_view_histogram_chained",
-    "incremental_view_minmax_chained",
-    "incremental_view_summinmax",
+    # tokenization / packing / skew family anchors entirely); its
+    # IVM siblings rotated back in for the single-table core change.
     "incremental_view_hll_distinct",
     # Displaced to the boundary by the r13 grouped-sketch newcomer:
     # shard_balance_audit (packing family stays anchored by

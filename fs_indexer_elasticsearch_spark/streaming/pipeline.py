@@ -112,7 +112,9 @@ def streaming_maintained_view_pipeline(
 
     Steady state: the PREVIOUS cycle's published view feeds back in
     as ``old_view``, so after the first derivation (one base
-    aggregate when the view store seeds) every cycle costs O(feed)
+    aggregate when the view store seeds: the same maintainer over the
+    empty window ``(v, v)``, so the two paths share one fold) every
+    cycle costs O(feed)
     plus the affected-group recompute — the base is NEVER rescanned
     on insert-only or interior-delete cycles (adds can only improve
     an extremum; the view store read is O(groups)). Crash safety,
@@ -120,19 +122,7 @@ def streaming_maintained_view_pipeline(
     (``streaming_maintained_nstore_pipeline``)."""
     from ..operators.ivm import maintain_min_max
 
-    def derive(v_after: int) -> DataFrame:
-        return (
-            store.read(version=v_after)
-            .groupBy(*group_cols)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min(value_col).alias("min_v"),
-                F.max(value_col).alias("max_v"),
-                F.sum(value_col).alias("s"),
-            )
-        )
-
-    def maintain(reflected: int, v_after: int, old_view: DataFrame) -> DataFrame:
+    def view(reflected: int, v_after: int, old_view=None) -> DataFrame:
         return maintain_min_max(
             store,
             reflected,
@@ -145,7 +135,7 @@ def streaming_maintained_view_pipeline(
 
     return streaming_maintained_pipeline(
         spark, input_dir, schema, store, view_store, checkpoint_dir,
-        derive=derive, maintain=maintain,
+        derive=lambda v: view(v, v), maintain=view,
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -167,10 +157,11 @@ def streaming_maintained_histogram_pipeline(
     per-(group, value) multiplicity view advances across exactly that
     merge's CDC window (``operators/ivm.maintain_value_counts`` with
     the previous cycle's published bins fed back as ``old_hist``) and
-    publishes to ``hist_store``. Downstream consumers serve the exact
-    holistic aggregates — COUNT(DISTINCT), MEDIAN/quantiles, MODE —
-    from the published bins with ``histogram_stats``, O(bins), no
-    base access.
+    publishes to ``hist_store``; the first derivation is the same
+    maintainer over the empty window ``(v, v)``. Downstream consumers
+    serve the exact holistic aggregates — COUNT(DISTINCT),
+    MEDIAN/quantiles, MODE — from the published bins with
+    ``histogram_stats``, O(bins), no base access.
 
     Unlike the min/max maintainer, the histogram algebra is CLOSED
     under deletes: there is NO recompute branch, so after the first
@@ -179,14 +170,7 @@ def streaming_maintained_histogram_pipeline(
     this)."""
     from ..operators.ivm import maintain_value_counts
 
-    def derive(v_after: int) -> DataFrame:
-        return (
-            store.read(version=v_after)
-            .groupBy(*group_cols, value_col)
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-
-    def maintain(reflected: int, v_after: int, old_hist: DataFrame) -> DataFrame:
+    def bins(reflected: int, v_after: int, old_hist=None) -> DataFrame:
         return maintain_value_counts(
             store,
             reflected,
@@ -198,7 +182,7 @@ def streaming_maintained_histogram_pipeline(
 
     return streaming_maintained_pipeline(
         spark, input_dir, schema, store, hist_store, checkpoint_dir,
-        derive=derive, maintain=maintain,
+        derive=lambda v: bins(v, v), maintain=bins,
         max_files_per_trigger=max_files_per_trigger,
     )
 

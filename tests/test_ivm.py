@@ -773,7 +773,14 @@ def test_ivm_model_random_program_all_maintainers(spark, tmp_path, seed):
     the post state. The interleavings that break IVM (an update that
     is simultaneously a horizon removal and a new-bin insert, a group
     vanishing and reappearing within one window, NULL groups crossing
-    the combine) arise from the seed, not from hand-written cases."""
+    the combine) arise from the seed, not from hand-written cases.
+
+    Every view is maintained twice: grouped by ``grp`` alone, and by
+    ``(grp, sub)``, where both columns take NULLs, so the null-safe
+    combine and the recompute's group semi-join run on several
+    columns. The second min/max view also carries ``with_sum``. Each
+    view's schema is pinned: counts are long, extrema and top-k keep
+    the measure's type, moments are ``decimal(38,0)``."""
     import random as _random
 
     from fs_indexer_elasticsearch_spark.operators.ivm import (
@@ -784,8 +791,13 @@ def test_ivm_model_random_program_all_maintainers(spark, tmp_path, seed):
     )
 
     rng = _random.Random(seed)
+    # A separate stream for the second group column keeps the
+    # one-column program identical for a given seed.
+    sub_rng = _random.Random(seed + 1000)
     keys = [f"k{i:02d}" for i in range(18)]
     groups = ["A", "B", None]
+    subs = ["x", "y", None]
+    schema = "k string, v int, grp string, sub string, val int"
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v", num_buckets=4
     )
@@ -794,15 +806,27 @@ def test_ivm_model_random_program_all_maintainers(spark, tmp_path, seed):
     def batch_rows(ver):
         rows = []
         for k in rng.sample(keys, rng.randint(2, 8)):
-            rows.append((k, ver, rng.choice(groups), rng.randint(0, 9)))
+            g_, val = rng.choice(groups), rng.randint(0, 9)
+            rows.append((k, ver, g_, sub_rng.choice(subs), val))
         return rows
 
     rows0 = batch_rows(1)
-    store.overwrite(_df(spark, rows0))
-    for k, v, g_, val in rows0:
-        live[k] = (g_, val)
+    store.overwrite(spark.createDataFrame(rows0, schema))
+    for k, v, g_, sub, val in rows0:
+        live[k] = (g_, sub, val)
 
-    views = {"mm": None, "hist": None, "topk": None, "mom": None}
+    gsets = {"g1": ["grp"], "g2": ["grp", "sub"]}
+    views = {
+        (gs, name): None
+        for gs in gsets
+        for name in ("mm", "hist", "topk", "mom")
+    }
+    want_types = {
+        "mm": {"n": "bigint", "min_v": "int", "max_v": "int"},
+        "hist": {"val": "int", "c": "bigint"},
+        "topk": {"n": "bigint", "topk": "array<int>"},
+        "mom": {"n": "bigint", "s": "decimal(38,0)", "s2": "decimal(38,0)"},
+    }
     for cycle in range(2, 6):
         rows = batch_rows(cycle)
         removable = [k for k in live if k not in {r[0] for r in rows}]
@@ -812,68 +836,93 @@ def test_ivm_model_random_program_all_maintainers(spark, tmp_path, seed):
             else []
         )
         store.merge(
-            _df(spark, rows),
+            spark.createDataFrame(rows, schema),
             removed=spark.createDataFrame([(k,) for k in removed], "k string")
             if removed
             else None,
         )
-        for k, v, g_, val in rows:
-            live[k] = (g_, val)
+        for k, v, g_, sub, val in rows:
+            live[k] = (g_, sub, val)
         for k in removed:
             live.pop(k, None)
 
         vf, vt = cycle - 1, cycle
-        views["mm"] = maintain_min_max(
-            store, vf, vt, ["grp"], "val", old_view=views["mm"]
-        ).localCheckpoint(eager=False)
-        views["hist"] = maintain_value_counts(
-            store, vf, vt, ["grp"], "val", old_hist=views["hist"]
-        ).localCheckpoint(eager=False)
-        views["topk"] = maintain_top_k(
-            store, vf, vt, ["grp"], "val", 3, old_view=views["topk"]
-        ).localCheckpoint(eager=False)
-        views["mom"] = maintain_moments(
-            store, vf, vt, ["grp"], "val", old_view=views["mom"]
-        ).localCheckpoint(eager=False)
+        for gs, gcols in gsets.items():
+            views[gs, "mm"] = maintain_min_max(
+                store, vf, vt, gcols, "val", old_view=views[gs, "mm"],
+                with_sum=gs == "g2",
+            ).localCheckpoint(eager=False)
+            views[gs, "hist"] = maintain_value_counts(
+                store, vf, vt, gcols, "val", old_hist=views[gs, "hist"]
+            ).localCheckpoint(eager=False)
+            views[gs, "topk"] = maintain_top_k(
+                store, vf, vt, gcols, "val", 3, old_view=views[gs, "topk"]
+            ).localCheckpoint(eager=False)
+            views[gs, "mom"] = maintain_moments(
+                store, vf, vt, gcols, "val", old_view=views[gs, "mom"]
+            ).localCheckpoint(eager=False)
 
-        # Pure-python scratch model from `live`.
-        by_grp = {}
-        for k, (g_, val) in live.items():
-            by_grp.setdefault(g_, []).append(val)
-        got_mm = {
-            r.grp: (r.n, r.min_v, r.max_v) for r in views["mm"].collect()
-        }
-        want_mm = {
-            g_: (len(vs), min(vs), max(vs)) for g_, vs in by_grp.items()
-        }
-        assert got_mm == want_mm, f"min/max diverged at cycle {cycle}"
+            def gk(r):
+                return tuple(r[c] for c in gcols)
 
-        got_h = {
-            (r.grp, r.val): r.c for r in views["hist"].collect()
-        }
-        want_h = {}
-        for g_, vs in by_grp.items():
-            for v_ in vs:
-                want_h[(g_, v_)] = want_h.get((g_, v_), 0) + 1
-        assert got_h == want_h, f"histogram diverged at cycle {cycle}"
+            types = {
+                name: {
+                    f.name: f.dataType.simpleString()
+                    for f in views[gs, name].schema.fields
+                }
+                for name in want_types
+            }
+            for name, want in want_types.items():
+                assert list(types[name])[: len(gcols)] == gcols, (gs, name)
+                assert {c: types[name][c] for c in want} == want, (gs, name)
+            if gs == "g2":
+                assert types["mm"]["s"] == "bigint"
 
-        got_tk = {
-            r.grp: (r.n, tuple(r.topk)) for r in views["topk"].collect()
-        }
-        want_tk = {
-            g_: (len(vs), tuple(sorted(vs, reverse=True)[:3]))
-            for g_, vs in by_grp.items()
-        }
-        assert got_tk == want_tk, f"top-k diverged at cycle {cycle}"
+            # Pure-python scratch model from `live`.
+            by_grp = {}
+            for k, (g_, sub, val) in live.items():
+                key = (g_,) if gs == "g1" else (g_, sub)
+                by_grp.setdefault(key, []).append(val)
+            got_mm = {
+                gk(r): (r.n, r.min_v, r.max_v)
+                + ((r.s,) if gs == "g2" else ())
+                for r in views[gs, "mm"].collect()
+            }
+            want_mm = {
+                g_: (len(vs), min(vs), max(vs))
+                + ((sum(vs),) if gs == "g2" else ())
+                for g_, vs in by_grp.items()
+            }
+            assert got_mm == want_mm, f"{gs} min/max diverged at cycle {cycle}"
 
-        got_mom = {
-            r.grp: (r.n, int(r.s), int(r.s2)) for r in views["mom"].collect()
-        }
-        want_mom = {
-            g_: (len(vs), sum(vs), sum(v_ * v_ for v_ in vs))
-            for g_, vs in by_grp.items()
-        }
-        assert got_mom == want_mom, f"moments diverged at cycle {cycle}"
+            got_h = {
+                (gk(r), r.val): r.c for r in views[gs, "hist"].collect()
+            }
+            want_h = {}
+            for g_, vs in by_grp.items():
+                for v_ in vs:
+                    want_h[(g_, v_)] = want_h.get((g_, v_), 0) + 1
+            assert got_h == want_h, f"{gs} histogram diverged at cycle {cycle}"
+
+            got_tk = {
+                gk(r): (r.n, tuple(r.topk))
+                for r in views[gs, "topk"].collect()
+            }
+            want_tk = {
+                g_: (len(vs), tuple(sorted(vs, reverse=True)[:3]))
+                for g_, vs in by_grp.items()
+            }
+            assert got_tk == want_tk, f"{gs} top-k diverged at cycle {cycle}"
+
+            got_mom = {
+                gk(r): (r.n, int(r.s), int(r.s2))
+                for r in views[gs, "mom"].collect()
+            }
+            want_mom = {
+                g_: (len(vs), sum(vs), sum(v_ * v_ for v_ in vs))
+                for g_, vs in by_grp.items()
+            }
+            assert got_mom == want_mom, f"{gs} moments diverged at cycle {cycle}"
 
 
 def test_joined_value_counts_both_sides_change_equals_scratch(spark, tmp_path):

@@ -174,7 +174,7 @@ def test_registry_priority_prefix_covers_llm_layer():
         "graph_label_propagation", "zorder_bloom_lookup",
         "graph_triangle_count", "graph_link_prediction_jaccard",
         "quantized_ann_pq_topk", "ann_pq_recall",
-        "zorder_pruned_scan", "zorder_incremental_scan",
+        "zorder_pruned_scan",
         "incremental_view_asof", "incremental_view_sessions",
         "incremental_view_retention", "incremental_view_funnel",
         "incremental_view_sketch_quantiles_hc",
@@ -194,18 +194,21 @@ def test_registry_priority_prefix_covers_llm_layer():
         "sequence_packing_stats",
         "skew_salted_hot_join",
         "window_moving_avg_7d",
-        # r15 rotation (r14 verdict #10): the five queries whose r14
-        # eager-checkpoint flips changed executed-plan topology without
-        # changing analyzed plans — rotated in for driver verification.
-        # (This set was STALE after the r14 rebalance — nine displaced
-        # queries were still listed here, and the resulting red test is
-        # what the r14 driver's tests_ok:false tail actually hid; the
-        # required set now tracks the committed _PRIORITY prefix.)
-        "pagerank_neardup_graph",
-        "curation_pipeline_e2e",
-        "q21_waiting_suppliers",
-        "crossdoc_shingle_boilerplate",
-        "substring_dedup_clean",
+        # The single-table core change: the nine queries over the
+        # single-table min/max, histogram, top-k and moment maintainers
+        # changed plans and rotate in. The r15 rotation five and
+        # zorder_incremental_scan, verified in r15, slid below.
+        # (The required set tracks the committed _PRIORITY prefix; a
+        # stale entry here is a red test.)
+        "incremental_view_minmax",
+        "incremental_view_minmax_chained",
+        "incremental_view_minmax_hicard",
+        "incremental_view_summinmax",
+        "incremental_view_histogram",
+        "incremental_view_histogram_chained",
+        "incremental_view_moments",
+        "incremental_view_topk",
+        "incremental_view_sample",
     }
     assert required <= first50, sorted(required - first50)
     assert len(names) == len(set(names))
