@@ -75,7 +75,6 @@ EXTRA = [
     # r7: incremental band-store dedup, exact tokenizer, domain
     # curation, multi-probe LSH recall gate
     "dedup_incremental_batch",
-    "dedup_incremental_batch_manifest",
     "token_count_exact",
     "domain_extract_counts",
     "per_domain_cap",
@@ -89,19 +88,16 @@ EXTRA = [
     "substring_dedup_clean",
     "quality_classifier_score",
     "substring_dup_incremental",
-    # r8: composed curation pipeline, tombstone-path dedup, manifest-
-    # layout incremental IVF
+    # r8: composed curation pipeline, tombstone-path dedup
     "curation_pipeline_e2e",
     "incremental_curation_cycle",
     "dedup_incremental_tombstone",
     "substring_incremental_tombstone",
-    "ann_incremental_ivf_manifest",
     # r8: bucket-count evolution under the incremental dedup cycle
     "dedup_incremental_rebucket",
     # r8: clustered point lookup through the snapshot store
     "store_point_lookup",
-    # r8: change data feed between two store versions (manifest layout;
-    # the hardlink twin shares the implementation above the layout)
+    # r8: change data feed between two store versions
     "store_read_changes",
     # r8: CDC-driven materialized-view maintenance from the feed
     "incremental_view_maintenance",
@@ -215,9 +211,9 @@ def _cpu_canary() -> float:
 
 def _io_canary() -> float:
     """Filesystem-syscall canary: create / hardlink / listdir / unlink
-    a small file farm — the syscall mix of a SnapshotStore commit
-    (hardlink-forward layout = one link per carried bucket file, plus
-    dir listings and tiny writes). Added r14: the r13 "+23% extras
+    a small file farm — the syscall mix of a SnapshotStore commit (the
+    claim's atomic link, dir listings and tiny manifest/sidecar
+    writes). Added r14: the r13 "+23% extras
     regression" turned out to be RUN-DAY FS VARIANCE — the store-backed
     queries are commit-bound, the CPU-md5 canary moved only +1.9%, and
     a controlled same-box A/B of r12 vs r13 code showed parity — so
@@ -630,7 +626,7 @@ def build_payloads(
             else {}
         ),
         # I/O-speed twin of the CPU canary (r14): the store-backed
-        # extras are commit-bound (hardlink/listdir/tiny-write), and
+        # extras are commit-bound (link/listdir/tiny-write), and
         # r13 proved that FS speed can move 20%+ while md5 moves 2% —
         # io_drifted tells the judge which comparison basis to use for
         # the store-query families.

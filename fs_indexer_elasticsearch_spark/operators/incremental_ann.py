@@ -8,7 +8,7 @@ and maintained by deltas:
 - The index is a :class:`SnapshotStore` holding one row per vector
   (vec_id, cid, emb), keyed by ``vec_id`` for upsert but physically
   BUCKETED BY THE CELL ID (``bucket_key="cid"``), so a search probing
-  ``nprobe`` cells reads only those cells' buckets (partition/manifest
+  ``nprobe`` cells reads only those cells' buckets (manifest
   pruning — the on-disk analog of an inverted list) and an ``add``
   batch touches only the buckets its vectors' cells hash to.
 - Centroids are fixed at :meth:`seed` and committed atomically with
@@ -40,9 +40,9 @@ and maintained by deltas:
   (``similarity.assign_cells``) — so an index built as seed + N adds
   is ROW-IDENTICAL to one built in a single pass, and a search over
   it returns exactly what ``ivf_ann_topk`` returns on the union
-  corpus. The registered queries ``ann_incremental_ivf_topk`` /
-  ``ann_incremental_ivf_manifest`` pin that under the oracle gate by
-  REUSING similarity_ivf_topk's oracle verbatim.
+  corpus. The registered query ``ann_incremental_ivf_topk`` pins that
+  under the oracle gate by REUSING similarity_ivf_topk's oracle
+  verbatim.
 - Re-adding a batch is idempotent (LWW upsert on vec_id); a vector's
   embedding update lands in its (possibly new) cell's bucket and the
   stale row is superseded only if the cell didn't change — like the
@@ -131,7 +131,6 @@ class IvfIndexStore:
         path: str,
         *,
         num_buckets: int = 32,
-        layout: str = "hardlink",
     ):
         from ..sinks.snapshot import SnapshotStore
 
@@ -143,7 +142,6 @@ class IvfIndexStore:
             key="vec_id",
             version_col="ivf_seq",
             num_buckets=num_buckets,
-            layout=layout,
             bucket_key="cid",
             # Maintenance re-buckets rows (split/merge move vecs
             # between cells), so a touched slice can hold a vec's
@@ -159,7 +157,6 @@ class IvfIndexStore:
             path,
             "vec_id",
             num_buckets=num_buckets,
-            layout=layout,
             gen_of=lambda: (self.store.read_meta() or {}).get(
                 "tombstone_gen", 0
             ),

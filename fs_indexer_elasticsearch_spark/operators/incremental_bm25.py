@@ -84,7 +84,6 @@ class Bm25IndexStore:
         path: str,
         *,
         num_buckets: int = 32,
-        layout: str = "hardlink",
     ):
         import os
 
@@ -98,7 +97,6 @@ class Bm25IndexStore:
             key=["term", "doc_id"],
             version_col="batch_seq",
             num_buckets=num_buckets,
-            layout=layout,
             bucket_key="term",
         )
         # Doc-length sidecar: doc-keyed, doc-bucketed — removals prune
@@ -109,7 +107,6 @@ class Bm25IndexStore:
             key="doc_id",
             version_col="batch_seq",
             num_buckets=num_buckets,
-            layout=layout,
         )
 
     # -- derivation -----------------------------------------------------------

@@ -72,7 +72,6 @@ class MinHashBandStore:
         bands: int = 4,
         shingle_n: int = 3,
         num_buckets: int = 32,
-        layout: str = "hardlink",
     ):
         from ..sinks.snapshot import SnapshotStore
 
@@ -85,7 +84,6 @@ class MinHashBandStore:
             key="band_row",
             version_col="batch_seq",
             num_buckets=num_buckets,
-            layout=layout,
             bucket_key="h",
         )
         self.tombstones = TombstoneStore(
@@ -93,7 +91,6 @@ class MinHashBandStore:
             path,
             "sid",
             num_buckets=num_buckets,
-            layout=layout,
             gen_of=lambda: (self.store.read_meta() or {}).get(
                 "tombstone_gen", 0
             ),

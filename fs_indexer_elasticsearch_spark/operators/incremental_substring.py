@@ -79,7 +79,6 @@ class ShingleSpanStore:
         *,
         k: int = 5,
         num_buckets: int = 32,
-        layout: str = "hardlink",
     ):
         from ..sinks.snapshot import SnapshotStore
 
@@ -90,7 +89,6 @@ class ShingleSpanStore:
             key=["sid", "pos"],
             version_col="batch_seq",
             num_buckets=num_buckets,
-            layout=layout,
             bucket_key="h",
         )
         self.tombstones = TombstoneStore(
@@ -98,7 +96,6 @@ class ShingleSpanStore:
             path,
             "sid",
             num_buckets=num_buckets,
-            layout=layout,
             gen_of=lambda: (self.store.read_meta() or {}).get(
                 "tombstone_gen", 0
             ),

@@ -152,7 +152,6 @@ class TombstoneStore:
         id_col: str,
         *,
         num_buckets: int = 32,
-        layout: str = "hardlink",
         gen_of=None,
     ):
         from ..sinks.snapshot import SnapshotStore
@@ -165,7 +164,6 @@ class TombstoneStore:
             key=id_col,
             version_col="rm_seq",
             num_buckets=num_buckets,
-            layout=layout,
         )
 
     def add(self, ids: DataFrame, *, max_retries: int = 0) -> int:

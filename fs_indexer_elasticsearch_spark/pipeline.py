@@ -12,7 +12,9 @@ physical strategy — compare SURVEY §3.1's hand-managed queues/threads):
   6. rollup      recursive directory sizes (explode-ancestors)
   7. publish     ES document projection → bulk NDJSON (or connector);
                  deletes propagated from the diff — uncapped
-  8. stats       observe()-collected counters (A-7 accumulator parity)
+  8. stats       counters over the committed table (A-7 accumulator
+                 parity): one in-memory aggregate of the cached
+                 ``current``
 
 Returns a PipelineResult with the per-stage DataFrames/metrics so
 callers (tests, notebooks) can assert on any intermediate.
@@ -20,15 +22,12 @@ callers (tests, notebooks) can assert on any intermediate.
 
 from __future__ import annotations
 
-import itertools
 import os
 from dataclasses import dataclass, field
 from typing import Any
 
-_OBS_SEQ = itertools.count()
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .functions import skip_filter
 from .operators.enrich import (
@@ -93,7 +92,6 @@ def run_pipeline(
         key="id",
         version_col="modified_time",
         num_buckets=cfg.num_buckets,
-        layout=cfg.snapshot_layout,
     )
     previous = store.read()
     if previous is not None:
@@ -102,7 +100,7 @@ def run_pipeline(
         # here cost a full extra pass over the table per cycle).
         previous = previous.drop("_bucket")
 
-    # 1-2: scan + normalize (+ observe-based counters, A-7).
+    # 1-2: scan + normalize.
     raw = scan_filesystem(
         spark,
         cfg.root_path,
@@ -110,20 +108,9 @@ def run_pipeline(
         max_entries_per_task=cfg.max_entries_per_task,
     )
     entries = to_fs_entries(raw, cfg.root_path)
-    entries = entries.filter(skip_filter(F.col("relative_path"), cfg.skip_patterns))
-    # Unique per cycle: two runs in one session with the same name make
-    # the listener's get() trip a JVM-side assertion (observed names are
-    # session-global), and an identical-plan cache hit could even skip
-    # the observe aggregation entirely.
-    obs = Observation(f"scan_stats_{next(_OBS_SEQ)}")
-    entries = entries.observe(
-        obs,
-        F.count(F.lit(1)).alias("total_entries"),
-        F.sum(F.when(F.col("type") == "file", 1).otherwise(0)).alias("files"),
-        F.sum(F.when(F.col("type") == "directory", 1).otherwise(0)).alias("dirs"),
-        F.sum(F.coalesce("size_bytes", F.lit(0))).alias("total_bytes"),
-    )
-    entries = entries.cache()
+    entries = entries.filter(
+        skip_filter(F.col("relative_path"), cfg.skip_patterns)
+    ).cache()
 
     # 3+4: diff the previous snapshot against the NEW SCAN (not the
     # merged table — merge is additive and would mask removals), then
@@ -205,7 +192,6 @@ def run_pipeline(
             key="file_id",
             version_col="last_updated",
             num_buckets=cfg.num_buckets,
-            layout=cfg.snapshot_layout,
         )
         links_prev_version = links_store.current_version()
         known = links_store.read()
@@ -347,35 +333,27 @@ def run_pipeline(
         if kibana_client is not None:
             stats_extra["kibana_ok"] = kibana_client.create_data_views(cfg.es_index)
 
+    # 8: stats — counters over `current`, the table this cycle
+    # committed and published (under a rebased retry it holds a
+    # concurrent writer's rows too, which the scan does not). It is
+    # cached, so this is one in-memory aggregate.
+    stats = current.agg(
+        F.count(F.lit(1)).alias("total_entries"),
+        F.sum(F.when(F.col("type") == "file", 1).otherwise(0)).alias("files"),
+        F.sum(F.when(F.col("type") == "directory", 1).otherwise(0)).alias("dirs"),
+        F.sum(F.coalesce("size_bytes", F.lit(0))).alias("total_bytes"),
+    ).first().asDict()
+
     # 9: retention — drop snapshot versions beyond the configured keep
     # window (reference DuckDB has one mutable table; our versioned
-    # store would otherwise accrue a v<N> dir per cycle forever).
-    # Hard links keep shared bucket bytes alive until the last
-    # referencing version goes; the current version is never dropped.
+    # store would otherwise accrue a manifest per cycle forever, and
+    # every data file one of them references). Files shared with a
+    # retained version stay; the current version is never dropped.
     if cfg.keep_versions is not None:
         store.vacuum(keep=cfg.keep_versions)
         if cfg.direct_links_enabled:
             links_store.vacuum(keep=cfg.keep_versions)
 
-    try:
-        stats = dict(obs.get)
-    except Exception:
-        # The observe() accumulator path is best-effort: when the scan
-        # plan is referenced several times inside one write query (the
-        # incremental merge reads it via delta, diff, and removals),
-        # the JVM-side metrics row can come back schema-less and
-        # Observation.get trips an assertion. The merged table is
-        # cached, so recomputing the same counters is one in-memory
-        # aggregate — same numbers, no accumulator dependency.
-        row = current.agg(
-            F.count(F.lit(1)).alias("total_entries"),
-            F.sum(F.when(F.col("type") == "file", 1).otherwise(0)).alias("files"),
-            F.sum(F.when(F.col("type") == "directory", 1).otherwise(0)).alias(
-                "dirs"
-            ),
-            F.sum(F.coalesce("size_bytes", F.lit(0))).alias("total_bytes"),
-        ).first()
-        stats = row.asDict()
     stats.update(stats_extra)
     return PipelineResult(
         snapshot_version=version,

@@ -54,9 +54,8 @@ from . import layout_queries  # noqa: E402,F401
 # streaming self-heal + deterministic batch dedup, the streaming
 # histogram/partition maintainers) leave registered plans untouched
 # and are pytest-verified. Displaced below the boundary this round:
-# store_read_changes_hardlink, dedup_simhash,
-# ann_neardup_recall_multiprobe, dedup_incremental_rebucket,
-# ann_incremental_ivf_manifest, incremental_view_maintenance,
+# dedup_simhash, ann_neardup_recall_multiprobe,
+# dedup_incremental_rebucket, incremental_view_maintenance,
 # bm25_search_topk, and (late) window_rank_lag_gap,
 # range_join_error_after_purchase, pagerank_neardup_graph,
 # incremental_agg_maintenance, quantized_ann_int8_topk,
@@ -111,23 +110,34 @@ _PRIORITY = [
     "incremental_view_moments",
     "incremental_view_topk",
     "incremental_view_sample",
+    # Rotated into the prefix for the one-layout change (plans changed,
+    # mechanical rule): these queries kept their index or feed stores
+    # on the deleted hardlink layout and now read manifest stores —
+    # same rows, same oracle hashes.
+    "dedup_incremental_batch",
+    "dedup_incremental_rebucket",
+    "incremental_curation_cycle",
+    "substring_dup_incremental",
+    "substring_incremental_tombstone",
+    "ann_incremental_ivf_topk",
+    "ann_ivf_split_topk",
+    "ann_ivf_coldmerge_topk",
+    "ann_ivf_maintain_topk",
+    "incremental_view_quantile_sketch_grouped",
     # New in r14 (late) — IVF-PQ (IVFADC): coarse inverted-file pruning
     # + product quantization on RESIDUALS + per-(query, probed-cell)
     # ADC LUTs + exact float rerank — the composed cascade a 100 TB ANN
     # deployment runs; and its measured recall gate vs exact float-L2
     # truth (bounded above by the coarse quantizer, by design).
     "ann_ivfpq_topk",
-    "ann_ivfpq_recall",
     # New in r14 (late) — deterministic synchronous label propagation
     # (4 unrolled rounds, ties to the smallest label): communities
     # FINER than connected components over the same near-dup graph —
     # the exemplar-per-duplicate-pile granularity.
-    "graph_label_propagation",
     # New in r14 (late) — Bloom file-skipping sidecar on the Z-ordered
     # layout: point lookups on a NON-curve column open only the cells
     # whose per-cell filter claims the key (the third physical-design
     # axis: hash buckets / zone maps / bloom point-in-set).
-    "zorder_bloom_lookup",
     # New in r14 (late) — exact per-node triangle participation over
     # the near-dup graph (clique-vs-hub dedup signal; two keyed
     # self-joins on the canonical low→high edge list, O(Σ deg²) wedge
@@ -136,7 +146,6 @@ _PRIORITY = [
     # ... and neighborhood-Jaccard link prediction (the LSH recall
     # repair: unlinked pairs sharing most of their near-dup
     # neighborhoods), on the same wedge frame.
-    "graph_link_prediction_jaccard",
     # New in r14 (late) — product-quantization ANN (ADC serving):
     # deterministic 8x16 codebooks, keyed encode/LUT/serve joins only
     # (no broadcast-NLJ), recall gated in tests against the float
@@ -144,7 +153,6 @@ _PRIORITY = [
     "quantized_ann_pq_topk",
     # ... and its measured-quality gate (recall@3 vs exact float-L2
     # truth, the ann_recall_at_k discipline on the quantized path).
-    "ann_pq_recall",
     # New in r14 (late) — Z-order clustered layout + zone-map pruned
     # rectangle scan (the multi-dimensional range complement of the
     # store's hash-bucket pruning; oracle scans the raw table, tests
@@ -158,15 +166,12 @@ _PRIORITY = [
     # slice combinator (gap-insert session MERGES and delete SPLITS
     # fall out of slice recomputation; oracle = from-scratch
     # lag/cumsum sessionization over the post state).
-    "incremental_view_sessions",
     # ... and the maintained RETENTION triangle: per-user contribution
     # frame on the keyed-slice combinator (a deleted first week retags
     # the user's cohort via slice recompute), distributive re-agg on top.
-    "incremental_view_retention",
     # ... and maintained ORDERED-funnel state (per-user step times on
     # the same combinator — a deleted first view cascades through
     # t2/t3, which slice recompute handles by construction).
-    "incremental_view_funnel",
     # New in r14 — distributed per-stratum quantile serving off the
     # grouped dyadic rank sketch (~1,200 strata; the binary-search
     # descent runs as `levels` chained DataFrame rounds over all
@@ -188,8 +193,6 @@ _PRIORITY = [
     # argmin fast path (array_min instead of full-array sort) sits on
     # their one-shot assignment path. (The sketch pair's serve refactor
     # also changed plans; both already live in the prefix.)
-    "dedup_simhash",
-    "similarity_ivf_topk",
     "ann_recall_at_k",
     # New in r13 — the windowed-PCM feature extraction over the
     # DECODED audio stream (real RIFF parse -> per-sample explode ->
@@ -322,7 +325,6 @@ _PRIORITY = [
     "similarity_bruteforce_topk",
     "kmeans_cluster_profile",
     "dedup_cascade_attrition",
-    "incremental_curation_cycle",
     "multimodal_frame_sample",
     # Evicted from the prefix by the r14 optimization round's eight
     # rotations (plans unchanged since their last driver green;
@@ -357,8 +359,6 @@ _PRIORITY = [
     "ann_neardup_recall_lsh",
     "ann_neardup_recall_multiprobe",
     "ngram_jaccard_pairs",
-    "ann_ivf_coldmerge_topk",
-    "ann_ivf_split_topk",
     # Displaced below the boundary by the r14 rebalance (the six
     # r14 prefix entries would otherwise have evicted the window /
     # tokenization / packing / skew family anchors entirely); its
@@ -381,6 +381,23 @@ _PRIORITY = [
     # last driver round), recent, or anchors a §2 family; everything
     # below is driver-green from an earlier round and stays green
     # under the local replica gate) ---
+    # Swapped below the boundary for the one-layout rotation: verified
+    # green in r15 (hash_match), plans unchanged since. Their families
+    # stay anchored in the prefix by graph_triangle_count (near-dup
+    # graph), ann_ivfpq_topk / quantized_ann_pq_topk (quantized ANN),
+    # incremental_view_asof (keyed-slice views), zorder_pruned_scan
+    # (Z-order layout), dedup_exact / dedup_minhash_lsh (dedup) and
+    # ann_recall_at_k / ann_incremental_ivf_topk (IVF).
+    "graph_label_propagation",
+    "graph_link_prediction_jaccard",
+    "ann_ivfpq_recall",
+    "ann_pq_recall",
+    "incremental_view_sessions",
+    "incremental_view_retention",
+    "incremental_view_funnel",
+    "zorder_bloom_lookup",
+    "dedup_simhash",
+    "similarity_ivf_topk",
     # Displaced below the boundary by the r15 rotation (all driver-
     # green in r14, plans unchanged this round; families stay
     # anchored above: sketch_quantiles_hc for the dyadic sketch,
@@ -389,8 +406,6 @@ _PRIORITY = [
     # for TPC-H relational):
     "multimodal_wav_stats16",
     "incremental_view_quantile_sketch",
-    "incremental_view_quantile_sketch_grouped",
-    "ann_ivf_maintain_topk",
     "q15_top_suppliers",
     # Rotated below late in r12 to make room for the 8 late-r12
     # newcomers (all driver-green multiple rounds, plans unchanged;
@@ -413,29 +428,21 @@ _PRIORITY = [
     # r12; families still anchored above: store_read_changes for the
     # feed, dedup_exact/minhash/cc for dedup, ann_recall_at_k +
     # quantized_ann for recall):
-    "store_read_changes_hardlink",
-    "dedup_incremental_rebucket",
-    "ann_incremental_ivf_manifest",
     "incremental_view_maintenance",
     "bm25_search_topk",
     # Rotated below in r11 (driver-green r9+r10, plans unchanged in
     # r11, families still anchored above: frame_sample/ binary_payload
-    # for multimodal, store_read_changes+hardlink for the feed,
+    # for multimodal, store_read_changes for the feed,
     # recall_multiprobe+ann_recall_at_k for recall,
     # incremental_curation_cycle for curation):
     "multimodal_ppm_decode",
     "store_read_changes_rebucket",
     "decontaminate_clean",
     "store_point_lookup",
-    "substring_incremental_tombstone",
     "per_domain_cap",
     "quality_classifier_score",
     "minhash_estimate_quality",
-    "dedup_incremental_batch",
-    "substring_dup_incremental",
     "substring_dup_spans",
-    "dedup_incremental_batch_manifest",
-    "ann_incremental_ivf_topk",
     "q01_pricing_summary",
     "retention_cohorts",
     "funnel_view_click_purchase",

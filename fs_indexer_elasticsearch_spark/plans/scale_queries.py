@@ -314,9 +314,10 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies/truncations (ids >= 1e12) of the shared augmented corpus —
     is shingled, signed, banded (O(batch)), probed against the PRUNED
     bucket slice of the stored index, scored by signature agreement,
-    and merged in (bucket-pruned upsert). The oracle recomputes the
-    same matches from scratch over the full corpus, proving the
-    incremental answer equals the full recompute.
+    and merged in (bucket-pruned upsert: only the touched buckets'
+    files are rewritten, the new manifest lists the rest unchanged).
+    The oracle recomputes the same matches from scratch over the full
+    corpus, proving the incremental answer equals the full recompute.
 
     The seeded store is CACHED per (sf_dir, band config) under one
     deterministic /tmp path: the first invocation pays the one-time
@@ -328,20 +329,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     to strictly earlier batches, so a prior run's merged batch rows
     (seq 1) are invisible to the next run's seq-1 match — byte-
     identical to a fresh store."""
-    return _incremental_batch_matches(spark, sf_dir, layout="hardlink")
-
-
-@query("dedup_incremental_batch_manifest", oracle=_incremental_dedup_oracle())
-def dedup_incremental_batch_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME incremental cycle on the OBJECT-STORE snapshot layout
-    (``layout="manifest"``: data files written once, versions commit
-    by swapping a tiny manifest — no links/renames, S3/GCS-safe).
-    Layout must be a pure storage decision, so this query shares
-    dedup_incremental_batch's oracle verbatim: seed, pruned probe
-    (manifest's bucket->files map pruned before the reader runs), and
-    merge all hash-match the from-scratch recompute — the driver-gate
-    upgrade of the pytest byte-parity check (r6 verdict #7)."""
-    return _incremental_batch_matches(spark, sf_dir, layout="manifest")
+    return _incremental_batch_matches(spark, sf_dir)
 
 
 @query("dedup_incremental_rebucket", oracle=_incremental_dedup_oracle())
@@ -377,11 +365,11 @@ def dedup_incremental_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb8rb32|hardlink|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb8rb32|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-bandstore-{tag}"
     with _store_lock(path):
-        store = MinHashBandStore(spark, path, num_buckets=8, layout="hardlink")
+        store = MinHashBandStore(spark, path, num_buckets=8)
         if store.store.current_version() is None:
             store.seed(corpus, "doc_id", "text")
         store.store.rebucket(32)
@@ -406,7 +394,7 @@ _LOOKUP_KEYS = [1, 2, 3, 4, 5, 6, 7, 32, 33, 34, 10**9]  # last one misses
 )
 def store_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operational point lookup through the snapshot store: seed a
-    manifest-layout store from ``orders`` (key-clustered bucket files),
+    store from ``orders`` (key-clustered bucket files),
     then ``read_keys`` a fixed key list. The oracle filters the raw
     table directly, so the gate proves the whole physical path —
     bucketed clustered write → manifest commit → driver-side key→bucket
@@ -437,7 +425,6 @@ def store_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             key="o_orderkey",
             version_col="o_custkey",  # unused: seed-only store, no merges
             num_buckets=32,
-            layout="manifest",
         )
         if store.current_version() is None:
             store.overwrite(load(spark, sf_dir, "orders").select(*cols))
@@ -498,7 +485,6 @@ def _cdf_store(
     spark: SparkSession,
     sf_dir: str,
     *,
-    layout: str,
     dim_col: str = "o_orderstatus",
     tag_body: str = "orders-cdf|nb16",
     path_prefix: str = "cdfstore",
@@ -518,7 +504,7 @@ def _cdf_store(
 
     fp = _dataset_fingerprint(sf_dir, "orders")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|{tag_body}|{layout}|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|{tag_body}|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-{path_prefix}-{tag}"
     base, delta, removed = _cdf_demo_frames(spark, sf_dir, dim_col)
@@ -529,7 +515,6 @@ def _cdf_store(
             key="o_orderkey",
             version_col="v",
             num_buckets=16,
-            layout=layout,
         )
         if store.current_version() is None:
             store.overwrite(base)
@@ -545,14 +530,14 @@ def _cdf_store(
     return store
 
 
-def _cdf_changes(spark: SparkSession, sf_dir: str, *, layout: str) -> DataFrame:
-    store = _cdf_store(spark, sf_dir, layout=layout)
+def _cdf_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    store = _cdf_store(spark, sf_dir)
     return store.read_changes(1, 2).withColumnRenamed("_change", "change")
 
 
 @query("store_read_changes", oracle=_CDF_ORACLE)
 def store_read_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change data feed through the snapshot store (manifest layout):
+    """Change data feed through the snapshot store:
     what tonight's merge actually DID — one row per key whose state
     differs between version 1 and version 2, labeled insert / update /
     delete (post-image for insert/update, pre-image for delete). The
@@ -569,17 +554,7 @@ def store_read_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     new/modified/removed detection between consecutive scans
     (scanner.py:414-463), served from the store's own commit metadata
     instead of a rescan."""
-    return _cdf_changes(spark, sf_dir, layout="manifest")
-
-
-@query("store_read_changes_hardlink", oracle=_CDF_ORACLE)
-def store_read_changes_hardlink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same change feed on the hardlink layout, where changed
-    buckets are resolved from per-bucket FILE NAMES (an untouched
-    bucket is hard-linked forward under the same names; a rewrite
-    mints fresh task-UUID part names) — both layouts must serve the
-    identical feed (same oracle, same hash)."""
-    return _cdf_changes(spark, sf_dir, layout="hardlink")
+    return _cdf_changes(spark, sf_dir)
 
 
 @query("store_read_changes_rebucket", oracle=_CDF_ORACLE)
@@ -598,7 +573,6 @@ def store_read_changes_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         tag_body="orders-cdf-rb|nb16-32",
         path_prefix="cdfrbstore",
         rebucket_to=32,
@@ -654,7 +628,7 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes incremental_agg_maintenance (mergeable partials) with the
     store's CDF: together they close the loop the reference's
     scan-over-scan freshness logic (scanner.py:414-463) rescans for."""
-    store = _cdf_store(spark, sf_dir, layout="manifest")
+    store = _cdf_store(spark, sf_dir)
     cents = F.round(F.col("price") * 100).cast("long")
     old_agg = (
         store.read(version=1)
@@ -728,7 +702,7 @@ def incremental_view_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     note) — still never on the common path."""
     from ..operators.ivm import maintain_min_max
 
-    store = _cdf_store(spark, sf_dir, layout="manifest")
+    store = _cdf_store(spark, sf_dir)
     view = maintain_min_max(store, 1, 2, ["o_orderstatus"], "price")
     return view.select(
         "o_orderstatus",
@@ -754,7 +728,6 @@ def incremental_view_minmax_chained(spark: SparkSession, sf_dir: str) -> DataFra
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         tag_body="orders-cdf-rb|nb16-32",
         path_prefix="cdfrbstore",
         rebucket_to=32,
@@ -819,7 +792,6 @@ def incremental_view_minmax_hicard(spark: SparkSession, sf_dir: str) -> DataFram
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -872,7 +844,6 @@ def incremental_view_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -940,7 +911,7 @@ def _demo_store(
     with _store_lock(path):
         store = SnapshotStore(
             spark, path, key=key, version_col="v",
-            num_buckets=num_buckets, layout="manifest",
+            num_buckets=num_buckets,
         )
         for step, frame, removed in frames:
             if step == "seed":
@@ -1053,7 +1024,6 @@ def incremental_view_joined_dimchange(
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -1146,7 +1116,7 @@ def incremental_view_summinmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     extremum-departure recompute alongside the sum algebra)."""
     from ..operators.ivm import maintain_min_max
 
-    store = _cdf_store(spark, sf_dir, layout="manifest")
+    store = _cdf_store(spark, sf_dir)
     view = maintain_min_max(
         _CentsView(store), 1, 2, ["o_orderstatus"], "cents", with_sum=True
     )
@@ -1259,7 +1229,7 @@ def incremental_view_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescans of db_duckdb.py:342-356, upgraded to exact-incremental."""
     from ..operators.ivm import histogram_stats, maintain_value_counts
 
-    store = _cdf_store(spark, sf_dir, layout="manifest")
+    store = _cdf_store(spark, sf_dir)
     hist = maintain_value_counts(_PKView(store), 1, 2, ["o_orderstatus"], "pk")
     return histogram_stats(hist, ["o_orderstatus"], "pk").select(
         "o_orderstatus", "n", "n_distinct", "mode_v", "median_v"
@@ -1283,7 +1253,6 @@ def incremental_view_histogram_chained(
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         tag_body="orders-cdf-rb|nb16-32",
         path_prefix="cdfrbstore",
         rebucket_to=32,
@@ -1353,7 +1322,7 @@ def incremental_view_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     outputs are bit-stable against the from-scratch oracle."""
     from ..operators.ivm import maintain_moments
 
-    store = _cdf_store(spark, sf_dir, layout="manifest")
+    store = _cdf_store(spark, sf_dir)
     view = maintain_moments(_CentsView(store), 1, 2, ["o_orderstatus"], "cents")
     nd = F.col("n").cast("double")
     sd = F.col("s").cast("double")
@@ -1417,7 +1386,7 @@ def incremental_view_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     one group-pruned scan when a horizon member departs."""
     from ..operators.ivm import maintain_top_k
 
-    store = _cdf_store(spark, sf_dir, layout="manifest")
+    store = _cdf_store(spark, sf_dir)
     view = maintain_top_k(
         _CentsView(store), 1, 2, ["o_orderstatus"], "cents", 5
     )
@@ -1497,7 +1466,6 @@ def incremental_view_joined_minmax(
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -1612,7 +1580,6 @@ def incremental_view_joined_nullgroup(
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -1760,9 +1727,7 @@ def incremental_view_joined_chained(
     )
 
 
-def _incremental_batch_matches(
-    spark: SparkSession, sf_dir: str, *, layout: str
-) -> DataFrame:
+def _incremental_batch_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
@@ -1774,11 +1739,11 @@ def _incremental_batch_matches(
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|{layout}|v2".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|manifest|v2".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-bandstore-{tag}"
     with _store_lock(path):
-        store = MinHashBandStore(spark, path, num_buckets=32, layout=layout)
+        store = MinHashBandStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
             store.seed(corpus, "doc_id", "text")
         # Pinned before the vacuum: safe against our own retention AND
@@ -1894,7 +1859,7 @@ def incremental_curation_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|cur|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|cur|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-bandstore-{tag}"
 
@@ -1971,7 +1936,7 @@ def dedup_incremental_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|tomb|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|tomb|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-bandstore-{tag}"
     with _store_lock(path):
@@ -2007,32 +1972,14 @@ def ann_incremental_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-identical to a single-pass build and the search must hash-match
     the one-shot operator — incremental maintenance proven
     behavior-preserving under the driver gate, the same guarantee
-    dedup_incremental_batch gives the dedup layer."""
-    import hashlib
-    import os
-
-    from ..operators.incremental_ann import IvfIndexStore
-
-    return _incremental_ivf_matches(spark, sf_dir, layout="hardlink")
+    dedup_incremental_batch gives the dedup layer. The WHOLE index —
+    rows, and the centroid set committed through the snapshot's
+    per-version meta payload (SnapshotStore.read_meta) — rides the
+    write-files-then-swap-manifest protocol, so it is S3/GCS-safe."""
+    return _incremental_ivf_matches(spark, sf_dir)
 
 
-@query("ann_incremental_ivf_manifest", oracle=ORACLES["similarity_ivf_topk"])
-def ann_incremental_ivf_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME incremental IVF cycle on the OBJECT-STORE snapshot
-    layout (``layout="manifest"``) — r8: the centroid set now commits
-    through the snapshot's per-version meta payload
-    (SnapshotStore.read_meta) instead of a POSIX directory sidecar, so
-    the WHOLE index (rows + centroids) rides the
-    write-files-then-swap-pointer protocol and is S3/GCS-safe. Shares
-    similarity_ivf_topk's oracle verbatim: layout must be a pure
-    storage decision (the driver-gate upgrade of the pytest
-    byte-parity check, mirroring dedup_incremental_batch_manifest)."""
-    return _incremental_ivf_matches(spark, sf_dir, layout="manifest")
-
-
-def _incremental_ivf_matches(
-    spark: SparkSession, sf_dir: str, *, layout: str
-) -> DataFrame:
+def _incremental_ivf_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
@@ -2045,11 +1992,11 @@ def _incremental_ivf_matches(
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivf|c16|nb32|{layout}|v3".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|ivf|c16|nb32|manifest|v3".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-ivfstore-{tag}"
     with _store_lock(path):
-        store = IvfIndexStore(spark, path, num_buckets=32, layout=layout)
+        store = IvfIndexStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
             store.seed(emb.filter(F.col("vec_id") % 10 != 0), centroids,
                        "vec_id", "emb")
@@ -2094,7 +2041,7 @@ def ann_ivf_split_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivfsplit|c16|nb32|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|ivfsplit|c16|nb32|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-ivfsplitstore-{tag}"
     with _store_lock(path):
@@ -2277,7 +2224,6 @@ def incremental_view_joined_histogram(
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -2355,7 +2301,7 @@ def ann_ivf_coldmerge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivfcold|c16|nb32|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|ivfcold|c16|nb32|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-ivfcoldstore-{tag}"
     with _store_lock(path):
@@ -2447,7 +2393,7 @@ def substring_incremental_tombstone(spark: SparkSession, sf_dir: str) -> DataFra
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|shingle|k5|nb32|tomb|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|shingle|k5|nb32|tomb|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-shinglestore-{tag}"
     with _store_lock(path):
@@ -2533,7 +2479,7 @@ def substring_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|shingle|k5|nb32|v2".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|shingle|k5|nb32|manifest|v2".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-shinglestore-{tag}"
     with _store_lock(path):
@@ -2599,7 +2545,6 @@ def incremental_view_join_membership(
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -3048,7 +2993,6 @@ def incremental_view_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -3284,7 +3228,6 @@ def incremental_view_joined3(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -3368,7 +3311,6 @@ def incremental_view_joined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -3500,7 +3442,6 @@ def incremental_view_quantile_sketch(
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -3581,7 +3522,7 @@ def ann_ivf_maintain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivfmaint|c16|nb32|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|ivfmaint|c16|nb32|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-ivfmaintstore-{tag}"
     with _store_lock(path):
@@ -3703,7 +3644,7 @@ def incremental_view_quantile_sketch_grouped(
     stratum-by-stratum."""
     from ..operators.ivm import dyadic_rank_probe, maintain_dyadic_cms
 
-    store = _cdf_store(spark, sf_dir, layout="hardlink")
+    store = _cdf_store(spark, sf_dir)
     val = (F.floor(F.col("price")).cast("long") % 4096).alias("_val")
     cells = maintain_dyadic_cms(
         store,
@@ -3950,7 +3891,6 @@ def incremental_view_sketch_quantiles_hc(
     store = _cdf_store(
         spark,
         sf_dir,
-        layout="manifest",
         dim_col="o_custkey",
         tag_body="orders-cdf-join|nb16",
         path_prefix="cdfjoinstore",
@@ -4043,7 +3983,7 @@ def _docs_cdf_store(spark: SparkSession, sf_dir: str):
 
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|docs-cdf|nb16|hardlink|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|docs-cdf|nb16|manifest|v1".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-docscdfstore-{tag}"
     docs = load(spark, sf_dir, "documents")
@@ -4065,7 +4005,6 @@ def _docs_cdf_store(spark: SparkSession, sf_dir: str):
             key="doc_id",
             version_col="v",
             num_buckets=16,
-            layout="hardlink",
         )
         if store.current_version() is None:
             store.overwrite(base)
@@ -4189,7 +4128,7 @@ def bm25_store_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     fp = _dataset_fingerprint(sf_dir, "documents")
     tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|bm25idx|nb16|hardlink|v2".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|bm25idx|nb16|manifest|v2".encode()
     ).hexdigest()[:12]
     path = f"/tmp/spark-graft-bm25idx-{tag}"
     base = docs.filter(

@@ -52,8 +52,7 @@ def store_scan_sql(store, version: int | None = None) -> str:
     of every retained version, so an external tool queries the same
     immutable bytes Spark does, at any retained point in time.
 
-    Works on both layouts (the manifest's file list, or the hardlink
-    version directory's bucket files) and excludes the physical
+    Reads the version manifest's file list and excludes the physical
     ``_bucket=`` partition column (``hive_partitioning=0`` — it is
     derivable layout detail, not data). This is the migration story
     for the reference's DuckDB-embedded users: keep the DuckDB

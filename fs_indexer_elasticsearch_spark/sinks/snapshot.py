@@ -3,45 +3,37 @@ bucket-pruned merges.
 
 Replaces the reference's DuckDB transactional storage
 (db_duckdb.py:184-268, scanner.py:220-248 BEGIN/COMMIT/ROLLBACK):
-each write creates a NEW snapshot directory ``v<N>``, then atomically
-updates the ``_CURRENT`` pointer file — readers always see a complete
-snapshot; a failed write leaves the pointer untouched (A5 semantics).
+each write commits a NEW version ``N`` as a ``_MANIFEST_v<N>.json``,
+then atomically updates the ``_CURRENT`` pointer file — readers always
+see a complete snapshot; a failed write leaves the pointer untouched
+(A5 semantics).
 
 Layout: data is hash-bucketed on the key (``_bucket = pmod(xxhash64(
-key), num_buckets)``) and written ``partitionBy("_bucket")`` — one
-directory per bucket.
+key), num_buckets)``). All data files live once under ``data/``, one
+fresh commit directory per write, ``partitionBy("_bucket")`` inside
+it; each version's manifest lists the exact parquet files per bucket.
+This is the Delta Lake commit protocol (write files, then swap a tiny
+metadata pointer): no links, no renames, no copies, so the store runs
+unchanged on a POSIX filesystem and on object stores (S3/GCS), where
+hard links don't exist and rename is a copy.
 
 Partition-pruned merge (the §7 "hard part" #1 — the property that
 makes upsert-without-a-table-format survive 100 TB): a merge only
-joins + rewrites the buckets the batch actually touches; every
-untouched bucket's files are hard-linked forward into the new version
-(O(1) per file, no data copy). A batch touching 1% of keys rewrites
-≈1% of the table regardless of table size.
+joins + rewrites the buckets the batch actually touches; the new
+manifest carries every untouched bucket's file list forward by
+reference (O(1) per bucket, no data copy). A batch touching 1% of keys
+rewrites ≈1% of the table regardless of table size.
 
 Old versions are retained for time travel / rollback; ``vacuum``
-drops all but the newest k. NOTE: vacuum + hard links interact
-safely — links keep bytes alive until the last referencing version
-is removed.
-
-Two storage layouts, selectable per store:
-
-- ``layout="hardlink"`` (default): one directory per version; untouched
-  bucket FILES are hard-linked forward (O(1) per file). Assumes a POSIX
-  filesystem (local disk, NFS).
-- ``layout="manifest"``: all data files live once under ``data/``;
-  each version is a ``_MANIFEST_v<N>.json`` listing the exact parquet
-  files per bucket. A merge writes ONLY the touched buckets' new files
-  plus a new manifest that carries untouched buckets' entries forward —
-  no links, no renames, no copies, so it is safe on object stores
-  (S3/GCS) where hard links don't exist and rename is a copy. This is
-  the same commit protocol Iceberg/Delta use (write files, then swap a
-  tiny metadata pointer).
+drops all but the newest k and deletes the data files no surviving
+manifest references.
 
 The bucket COUNT is a per-version property (``_STORECFG_v<N>``,
 committed before the pointer swap) evolvable via ``rebucket`` —
 partition evolution for a growing corpus; the rest of the physical
 identity (key, bucket_key, version_col, layout) is immutable and
-validated on reopen against ``_LAYOUT.json``.
+validated on reopen against ``_LAYOUT.json`` (a store written in the
+retired one-directory-per-version ``hardlink`` layout fails there).
 
 Writes are single-writer by contract, and the contract is ENFORCED
 fail-fast: every commit first atomically claims its version number
@@ -62,7 +54,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
@@ -81,8 +72,8 @@ _META_PREFIX = "_META_v"
 _CFG_PREFIX = "_STORECFG_v"
 # Immutable store identity, written at first commit and validated on
 # reopen: hashing probes against a store whose physical buckets were
-# laid out under a DIFFERENT bucket_key (or reading a manifest store
-# as a hardlink one) fails silently — pruned reads return the wrong
+# laid out under a DIFFERENT bucket_key (or reading a store written in
+# another physical layout) fails silently — pruned reads return the wrong
 # slice and merges scatter duplicate keys across buckets. Mismatch is
 # therefore a constructor-time ValueError, not a runtime mystery.
 _LAYOUT_FILE = "_LAYOUT.json"
@@ -237,7 +228,7 @@ class SnapshotStore:
         key: str | list[str],
         version_col: str,
         num_buckets: int = 32,
-        layout: str = "hardlink",
+        layout: str = "manifest",
         bucket_key: str | None = None,
         dedup_current: bool = False,
     ):
@@ -255,9 +246,15 @@ class SnapshotStore:
         re-bucketed over time — e.g. the IVF index's dead weight under
         retired cell ids). Merges then collapse the touched current
         slice to its newest row per key before joining, instead of
-        assuming key-uniqueness (see upsert_newer_wins)."""
-        if layout not in ("hardlink", "manifest"):
-            raise ValueError(f"unknown layout {layout!r}")
+        assuming key-uniqueness (see upsert_newer_wins).
+
+        ``layout`` accepts only ``"manifest"``, the one physical
+        layout; any other value raises ValueError."""
+        if layout != "manifest":
+            raise ValueError(
+                f"unknown layout {layout!r}: the snapshot store has one "
+                "layout, 'manifest'"
+            )
         if not isinstance(key, str) and bucket_key is None:
             raise ValueError(
                 "a composite key cannot derive the physical bucket "
@@ -279,7 +276,6 @@ class SnapshotStore:
         self._pinned_buckets: int | None = None  # rebucket's override
         self._rebucket_base: int | None = None  # rebucket's provenance tag
         self._cfg_cache: tuple[int | None, int] = (None, num_buckets)
-        self.layout = layout
         self.bucket_key = bucket_key or key
         os.makedirs(path, exist_ok=True)
         self._check_identity()
@@ -326,9 +322,8 @@ class SnapshotStore:
 
     def _derive_legacy_buckets(self, v: int) -> int:
         """Recover the bucket count a cfg-less legacy version was
-        PHYSICALLY written under, from the data itself. The on-disk
-        layout labels every row with its bucket (``_bucket=N``
-        partition dirs / manifest bucket->files map), and the writer
+        PHYSICALLY written under, from the data itself. The manifest's
+        bucket->files map labels every row with its bucket, and the writer
         computed that label as ``pmod(xxhash64(bucket_key), n)`` — so
         for every row, the true ``n`` divides ``xxhash64(key) −
         bucket``. The gcd of those differences is taken over EVERY
@@ -354,38 +349,24 @@ class SnapshotStore:
         own cfg."""
         import math
 
-        if self.layout == "manifest":
-            files = self._read_manifest(v)
-            occupied = sorted(b for b, rels in files.items() if rels)
-            if not occupied:
-                return self._default_buckets
-            parts = []
-            for b in occupied:
-                paths = [os.path.join(self._data_dir(), r) for r in files[b]]
-                parts.append(
-                    self.spark.read.option("recursiveFileLookup", "true")
-                    .parquet(*paths)
-                    .select(
-                        F.xxhash64(F.col(self.bucket_key)).alias("h"),
-                        F.lit(b).alias("_bucket"),
-                    )
+        files = self._read_manifest(v)
+        occupied = sorted(b for b, rels in files.items() if rels)
+        if not occupied:
+            return self._default_buckets
+        parts = []
+        for b in occupied:
+            paths = [os.path.join(self._data_dir(), r) for r in files[b]]
+            parts.append(
+                self.spark.read.option("recursiveFileLookup", "true")
+                .parquet(*paths)
+                .select(
+                    F.xxhash64(F.col(self.bucket_key)).alias("h"),
+                    F.lit(b).alias("_bucket"),
                 )
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        else:
-            vdir = self._version_dir(v)
-            occupied = sorted(
-                int(e.split("=", 1)[1])
-                for e in (os.listdir(vdir) if os.path.isdir(vdir) else ())
-                if e.startswith("_bucket=")
             )
-            if not occupied:
-                return self._default_buckets
-            df = self.spark.read.parquet(vdir).select(
-                F.xxhash64(F.col(self.bucket_key)).alias("h"),
-                F.col("_bucket").cast("int").alias("_bucket"),
-            )
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p)
 
         def _partial_gcd(batches):
             import pandas as pd
@@ -457,9 +438,6 @@ class SnapshotStore:
         with open(tmp, "w") as f:
             f.write(str(version))
         os.replace(tmp, self._pointer_path())  # atomic on POSIX
-
-    def _version_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version}")
 
     # -- write transaction (fail-fast concurrency guard) ----------------------
     def _txn_path(self, version: int) -> str:
@@ -570,7 +548,7 @@ class SnapshotStore:
             "key": [self.key] if isinstance(self.key, str) else list(self.key),
             "bucket_key": self.bucket_key,
             "version_col": self.version_col,
-            "layout": self.layout,
+            "layout": "manifest",
         }
 
     def _check_identity(self) -> None:
@@ -751,46 +729,13 @@ class SnapshotStore:
         proportional to the touched fraction of the table, not the
         table. This is the index-lookup read path (e.g. the MinHash
         band store probing only the buckets a batch's bands hash to)
-        and the change-feed's per-version slice read.
-
-        Hardlink layout: ``_bucket=N`` are partition directories, so a
-        partition filter prunes at the source. Manifest layout: the
-        manifest maps bucket -> files, so the file list itself is
-        pruned before the reader ever runs."""
+        and the change-feed's per-version slice read: the manifest
+        maps bucket -> files, so the file list itself is pruned before
+        the reader ever runs."""
         v = self.current_version() if version is None else version
         if v is None:
             return None
-        wanted = set(bucket_ids)
-        if self.layout == "manifest":
-            files = self._read_manifest(v)
-            paths = [
-                os.path.join(self._data_dir(), rel)
-                for b, rels in files.items()
-                if b in wanted
-                for rel in rels
-            ]
-            if not paths:
-                return self._empty_df()
-            # _bucket is recomputed under the count THIS version was
-            # written with (same rule as read() — a pruned time-travel
-            # read across a rebucket boundary must label rows by its
-            # own version's physical layout).
-            cfg = self._read_cfg(v)
-            # Legacy pre-_STORECFG versions were written under the
-            # CONSTRUCTOR count (rebucket always records cfg, so a
-            # cfg-less version's count never changed) — falling through
-            # to the current version's count would mislabel rows after
-            # a later rebucket.
-            n = cfg.get("num_buckets") if cfg else self._default_buckets
-            reader = self.spark.read.option("recursiveFileLookup", "true")
-            pinned = self._pinned_schema(cfg)
-            if pinned is not None:
-                # Commit-time schema: no footer inference (r15).
-                reader = reader.schema(pinned)
-            return reader.parquet(*paths).withColumn(
-                "_bucket", self._bucket_col(n)
-            )
-        return self._read_version(v).filter(F.col("_bucket").isin(list(wanted)))
+        return self._scan(v, set(bucket_ids))
 
     def _buckets_for_keys(self, keys: list) -> list[int]:
         """Which physical buckets the given key VALUES live in — the
@@ -840,45 +785,21 @@ class SnapshotStore:
     # -- change data feed ----------------------------------------------------
     def changed_buckets(self, v_from: int, v_to: int) -> list[int] | None:
         """Buckets whose PHYSICAL file set differs between two retained
-        versions — resolved from metadata only (manifest file lists, or
-        the hardlink layout's per-bucket file names: merge carries an
-        untouched bucket forward under the SAME names, while a rewrite
-        mints fresh task-UUID part names), no parquet opened. Returns
-        None when the two versions were written under different bucket
+        versions — resolved from the two manifests only (merge carries
+        an untouched bucket's file list forward unchanged, while a
+        rewrite lists fresh files), no parquet opened. Returns None
+        when the two versions were written under different bucket
         counts (a rebucket boundary) — bucket ids aren't comparable
         across layouts, so the change feed must diff every bucket."""
         nf = (self._read_cfg(v_from) or {}).get("num_buckets")
         nt = (self._read_cfg(v_to) or {}).get("num_buckets")
         if nf != nt:
             return None
-        if self.layout == "manifest":
-            mf, mt = self._read_manifest(v_from), self._read_manifest(v_to)
-            return sorted(
-                b
-                for b in set(mf) | set(mt)
-                if set(mf.get(b, ())) != set(mt.get(b, ()))
-            )
-
-        def listing(v: int) -> dict[int, set[str]]:
-            out: dict[int, set[str]] = {}
-            vdir = self._version_dir(v)
-            if os.path.isdir(vdir):
-                for entry in os.listdir(vdir):
-                    if not entry.startswith("_bucket="):
-                        continue
-                    b = int(entry.split("=", 1)[1])
-                    out[b] = {
-                        f
-                        for f in os.listdir(os.path.join(vdir, entry))
-                        if not f.startswith((".", "_"))
-                    }
-            return out
-
-        lf, lt = listing(v_from), listing(v_to)
+        mf, mt = self._read_manifest(v_from), self._read_manifest(v_to)
         return sorted(
             b
-            for b in set(lf) | set(lt)
-            if lf.get(b, set()) != lt.get(b, set())
+            for b in set(mf) | set(mt)
+            if set(mf.get(b, ())) != set(mt.get(b, ()))
         )
 
     def _cfg_count(self, version: int) -> int:
@@ -1105,7 +1026,7 @@ class SnapshotStore:
 
         return align(current, cur_types), align(batch, new_types)
 
-    # -- manifest layout ----------------------------------------------------
+    # -- manifests and data files ------------------------------------------
     def _data_dir(self) -> str:
         return os.path.join(self.path, "data")
 
@@ -1158,8 +1079,10 @@ class SnapshotStore:
 
         commit = uuid.uuid4().hex[:16]
         out = os.path.join(self._data_dir(), commit)
-        # Clustered like _write_buckets: key-sorted row groups give
-        # read_keys row-group skipping on top of bucket pruning.
+        # sortWithinPartitions clusters each written file's row groups
+        # by the bucket key: parquet min/max stats become tight, so a
+        # later key-predicate read (read_keys) skips row groups inside
+        # the pruned bucket too. In-partition sort — no extra shuffle.
         (
             df.withColumn("_bucket", self._bucket_col())
             .repartition(self.num_buckets, "_bucket")
@@ -1192,23 +1115,17 @@ class SnapshotStore:
     def _versions_on_disk(self) -> list[int]:
         """Raw version artifacts present (ascending), INCLUDING crash
         orphans above the pointer — vacuum's GC input."""
-        if self.layout == "manifest":
-            return sorted(
-                int(name[len("_MANIFEST_v") : -len(".json")])
-                for name in os.listdir(self.path)
-                if name.startswith("_MANIFEST_v") and name.endswith(".json")
-            )
         return sorted(
-            int(d[1:])
-            for d in os.listdir(self.path)
-            if d.startswith("v") and d[1:].isdigit()
+            int(name[len("_MANIFEST_v") : -len(".json")])
+            for name in os.listdir(self.path)
+            if name.startswith("_MANIFEST_v") and name.endswith(".json")
         )
 
     def versions(self) -> list[int]:
         """All RETAINED COMMITTED versions (ascending) — what
         read(version=...) can time-travel to; vacuum shrinks this
         list. Artifacts ABOVE the pointer are excluded: a crashed
-        write leaves its partial version dir/manifest orphaned there,
+        write leaves its manifest orphaned there,
         and exposing it as "retained" would serve a half-written
         snapshot (same rule as meta resolution)."""
         cur = self.current_version()
@@ -1229,70 +1146,45 @@ class SnapshotStore:
                 f"version {version} is not retained (have {self.versions()}); "
                 "vacuum(keep=...) controls time-travel depth"
             )
-        if self.layout == "manifest":
-            files = self._read_manifest(v)
-            paths = [
-                os.path.join(self._data_dir(), rel)
-                for rels in files.values()
-                for rel in rels
-            ]
-            if not paths:
-                return self._empty_df()
-            # recursiveFileLookup disables partition inference (commit
-            # dirs between data/ and _bucket= would otherwise trip
-            # CONFLICTING_DIRECTORY_STRUCTURES); _bucket is derivable
-            # from the key, so recompute it instead of inferring —
-            # under the count THIS version was written with (a
-            # time-travel read across a rebucket boundary must label
-            # rows by its own version's physical layout).
-            cfg = self._read_cfg(v)
-            # Same legacy-count rule as read_buckets above.
-            n = cfg.get("num_buckets") if cfg else self._default_buckets
-            reader = self.spark.read.option("recursiveFileLookup", "true")
-            pinned = self._pinned_schema(cfg)
-            if pinned is not None:
-                # Schema recorded at commit time: skip the per-call
-                # footer-inference round trip (r15 optimization).
-                reader = reader.schema(pinned)
-            return reader.parquet(*paths).withColumn(
-                "_bucket", self._bucket_col(n)
-            )
-        return self._read_version(v)
+        return self._scan(v)
 
-    def _read_version(self, v: int) -> DataFrame:
-        """Hardlink-layout read of one version dir, falling back to the
-        recorded schema when the version holds no bucket files (a merge
-        whose removals emptied the table writes no parquet)."""
-        vdir = self._version_dir(v)
-        has_buckets = os.path.isdir(vdir) and any(
-            e.startswith("_bucket=") for e in os.listdir(vdir)
-        )
-        if not has_buckets:
+    def _scan(self, v: int, buckets: set[int] | None = None) -> DataFrame:
+        """Version ``v``'s data files — all of them, or only those of
+        ``buckets`` — as one DataFrame: the parquet read every read
+        path shares (read, read_buckets, and through it the merge's
+        touched slice and the change feed).
+
+        recursiveFileLookup disables partition inference (commit dirs
+        between data/ and _bucket= would otherwise trip
+        CONFLICTING_DIRECTORY_STRUCTURES); _bucket is derivable from
+        the key, so it is recomputed instead of inferred — under the
+        count THIS version was written with (a time-travel read across
+        a rebucket boundary must label rows by its own version's
+        physical layout). Legacy pre-_STORECFG versions were written
+        under the CONSTRUCTOR count (rebucket always records cfg, so a
+        cfg-less version's count never changed) — falling through to
+        the current version's count would mislabel rows after a later
+        rebucket."""
+        paths = [
+            os.path.join(self._data_dir(), rel)
+            for b, rels in self._read_manifest(v).items()
+            if buckets is None or b in buckets
+            for rel in rels
+        ]
+        if not paths:
+            # A table whose rows were all deleted, or a slice of empty
+            # buckets, has no parquet to read: typed empty frame.
             return self._empty_df()
-        pinned = self._pinned_schema(self._read_cfg(v))
+        cfg = self._read_cfg(v)
+        n = cfg.get("num_buckets") if cfg else self._default_buckets
+        reader = self.spark.read.option("recursiveFileLookup", "true")
+        pinned = self._pinned_schema(cfg)
         if pinned is not None:
-            # Commit-time schema + the _bucket partition column (its
-            # values come from the _bucket=N directory names, as with
-            # inference — int, matching the writer's cast): no footer
-            # inference per read (r15).
-            from pyspark.sql.types import IntegerType, StructField
-
-            full = pinned.add(StructField("_bucket", IntegerType()))
-            return self.spark.read.schema(full).parquet(vdir)
-        return self.spark.read.parquet(vdir)
-
-    def _write_buckets(self, df: DataFrame, out: str) -> None:
-        # sortWithinPartitions clusters each written file's row groups
-        # by the bucket key: parquet min/max stats become tight, so a
-        # later key-predicate read (read_keys) skips row groups inside
-        # the pruned bucket too. In-partition sort — no extra shuffle.
-        (
-            df.withColumn("_bucket", self._bucket_col())
-            .repartition(self.num_buckets, "_bucket")
-            .sortWithinPartitions("_bucket", self.bucket_key)
-            .write.mode("append")
-            .partitionBy("_bucket")
-            .parquet(out)
+            # Schema recorded at commit time: skip the per-call
+            # footer-inference round trip (r15 optimization).
+            reader = reader.schema(pinned)
+        return reader.parquet(*paths).withColumn(
+            "_bucket", self._bucket_col(n)
         )
 
     def overwrite(
@@ -1316,12 +1208,7 @@ class SnapshotStore:
             expected_base = self.current_version()
         df = df.drop("_bucket")
         with self._txn(expected_base) as v:
-            if self.layout == "manifest":
-                self._write_manifest(v, self._write_data_files(df))
-            else:
-                out = self._version_dir(v)
-                shutil.rmtree(out, ignore_errors=True)
-                self._write_buckets(df, out)
+            self._write_manifest(v, self._write_data_files(df))
             self._record_schema(df)
             self._write_identity()
             self._commit_cfg(v, schema=df.schema)
@@ -1330,22 +1217,13 @@ class SnapshotStore:
         return v
 
     def _version_data_files(self, v: int) -> list[str]:
-        """ABSOLUTE paths of version ``v``'s data files, both layouts —
-        the single listing history() and duckdb_file.store_scan_sql
-        share (bucket_stats keeps its own per-bucket-keyed shape)."""
-        if self.layout == "manifest":
-            return sorted(
-                os.path.abspath(os.path.join(self._data_dir(), rel))
-                for rels in self._read_manifest(v).values()
-                for rel in rels
-            )
-        vdir = self._version_dir(v)
+        """ABSOLUTE paths of version ``v``'s data files — the single
+        listing history() and duckdb_file.store_scan_sql share
+        (bucket_stats keeps its own per-bucket-keyed shape)."""
         return sorted(
-            os.path.abspath(os.path.join(root, fn))
-            for root, _dirs, fnames in os.walk(vdir)
-            if os.path.basename(root).startswith("_bucket=")
-            for fn in fnames
-            if not fn.startswith((".", "_"))
+            os.path.abspath(os.path.join(self._data_dir(), rel))
+            for rels in self._read_manifest(v).values()
+            for rel in rels
         )
 
     def history(self) -> list[dict]:
@@ -1353,8 +1231,8 @@ class SnapshotStore:
         DESCRIBE HISTORY surface: per version, when it committed, the
         bucket count it was written under, its physical file count and
         bytes, and whether it carries a meta payload (index sidecar
-        state). Metadata-only — manifests / directory listings, no
-        parquet opened — so it is cheap enough for an operator
+        state). Metadata-only — manifests and file sizes, no parquet
+        opened — so it is cheap enough for an operator
         dashboard to poll. ``committed_at`` is None for versions
         written before timestamps were recorded."""
         out: list[dict] = []
@@ -1383,8 +1261,8 @@ class SnapshotStore:
 
     def bucket_stats(self) -> dict | None:
         """Physical balance of the CURRENT version — per-bucket file
-        count and bytes — from METADATA only (the manifest's file list
-        or the version dir's listing; no parquet is read). Driver-side
+        count and bytes — from METADATA only (the manifest's file list;
+        no parquet is read). Driver-side
         O(files), bounded by buckets x retained-files-per-bucket.
         None on an empty store.
 
@@ -1396,34 +1274,15 @@ class SnapshotStore:
         if v is None:
             return None
         per: dict[int, dict] = {}
-        if self.layout == "manifest":
-            for b, rels in self._read_manifest(v).items():
-                files, size = 0, 0
-                for rel in rels:
-                    try:
-                        size += os.path.getsize(os.path.join(self._data_dir(), rel))
-                        files += 1
-                    except OSError:
-                        pass
-                per[b] = {"files": files, "bytes": size}
-        else:
-            vdir = self._version_dir(v)
-            if os.path.isdir(vdir):
-                for entry in os.listdir(vdir):
-                    if not entry.startswith("_bucket="):
-                        continue
-                    b = int(entry.split("=", 1)[1])
-                    files, size = 0, 0
-                    bd = os.path.join(vdir, entry)
-                    for fname in os.listdir(bd):
-                        if fname.startswith((".", "_")):
-                            continue
-                        try:
-                            size += os.path.getsize(os.path.join(bd, fname))
-                            files += 1
-                        except OSError:
-                            pass
-                    per[b] = {"files": files, "bytes": size}
+        for b, rels in self._read_manifest(v).items():
+            files, size = 0, 0
+            for rel in rels:
+                try:
+                    size += os.path.getsize(os.path.join(self._data_dir(), rel))
+                    files += 1
+                except OSError:
+                    pass
+            per[b] = {"files": files, "bytes": size}
         total = sum(d["bytes"] for d in per.values())
         n = self.num_buckets
         return {
@@ -1520,8 +1379,8 @@ class SnapshotStore:
         (the reference's ON CONFLICT ... WHERE excluded newer), plus
         optional key deletions (the reference's DELETE ... NOT IN,
         scanner.py:447-454), joining and rewriting ONLY the buckets the
-        batch or the removals touch; untouched bucket files are
-        hard-linked into the new version.
+        batch or the removals touch; the new manifest lists untouched
+        buckets' existing files unchanged.
 
         ``removed`` is a one-column DataFrame of keys to delete.
         Removals land in the same buckets their keys hash to, so the
@@ -1621,71 +1480,18 @@ class SnapshotStore:
                 .cache()
             )
             touched |= {r._bucket for r in removed.select("_bucket").distinct().collect()}
-        touched = sorted(touched)
 
-        if self.layout == "manifest":
-            # Write the merged touched buckets as NEW data files, then
-            # commit a manifest that points untouched buckets at their
-            # EXISTING files — no link/rename/copy, object-store safe.
-            cur_files = self._read_manifest(cur_v)
-            new_files: dict[int, list[str]] = {}
-            if touched:
-                paths = [
-                    os.path.join(self._data_dir(), rel)
-                    for b in touched
-                    for rel in cur_files.get(b, [])
-                ]
-                cur_touched = (
-                    self.spark.read.option("recursiveFileLookup", "true")
-                    .parquet(*paths)
-                    .drop("_bucket")
-                    if paths
-                    else self._empty_df().drop("_bucket")
-                )
-                merged = upsert_newer_wins(
-                    cur_touched,
-                    batch.drop("_bucket"),
-                    self.key,
-                    self.version_col,
-                    dedup_current=self.dedup_current,
-                )
-                if removed is not None:
-                    merged = merged.join(
-                        removed.select(self.key), on=self.key, how="left_anti"
-                    )
-                new_files = self._write_data_files(merged)
-            batch.unpersist()
-            if removed is not None:
-                removed.unpersist()
-            manifest = {
-                b: rels for b, rels in cur_files.items() if b not in set(touched)
-            }
-            manifest.update(new_files)
-            self._write_manifest(v, manifest)
-            self._write_identity()
-            # Touched buckets were rewritten under the batch's schema;
-            # untouched files carry the same one (drift took the
-            # migrate/overwrite path above), so the batch schema IS the
-            # version's schema.
-            self._commit_cfg(v, schema=batch.schema)
-            self._commit_meta(v, meta)
-            self._swap_pointer(v)
-            return v
-
-        cur_dir = self._version_dir(cur_v)
-        out = self._version_dir(v)
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
+        # Write the merged touched buckets as NEW data files, then
+        # commit a manifest that points untouched buckets at their
+        # EXISTING files — no link/rename/copy, object-store safe.
+        new_files: dict[int, list[str]] = {}
         if touched:
-            # Merge only the touched buckets (partition pruning on the
-            # _bucket directory column keeps the read proportional to
-            # the batch, not the table).
-            cur_touched = (
-                self._read_version(cur_v)
-                .filter(F.col("_bucket").isin(touched))
-                .drop("_bucket")
-            )
+            # The pruned read pins cur_v's commit-time schema: a bare
+            # parquet read here would cost one footer-inference job
+            # per merge.
+            cur_touched = self.read_buckets(
+                sorted(touched), version=cur_v
+            ).drop("_bucket")
             merged = upsert_newer_wins(
                 cur_touched,
                 batch.drop("_bucket"),
@@ -1697,27 +1503,22 @@ class SnapshotStore:
                 merged = merged.join(
                     removed.select(self.key), on=self.key, how="left_anti"
                 )
-            self._write_buckets(merged, out)
+            new_files = self._write_data_files(merged)
         batch.unpersist()
         if removed is not None:
             removed.unpersist()
-
-        # Hard-link every untouched bucket directory forward.
-        touched_dirs = {f"_bucket={b}" for b in touched}
-        for entry in os.listdir(cur_dir):
-            if not entry.startswith("_bucket=") or entry in touched_dirs:
-                continue
-            src = os.path.join(cur_dir, entry)
-            dst = os.path.join(out, entry)
-            os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(src):
-                if fname.startswith((".", "_")):
-                    continue
-                os.link(os.path.join(src, fname), os.path.join(dst, fname))
+        manifest = {
+            b: rels
+            for b, rels in self._read_manifest(cur_v).items()
+            if b not in touched
+        }
+        manifest.update(new_files)
+        self._write_manifest(v, manifest)
         self._write_identity()
-        # Same-schema rule as the manifest path: drift took the
-        # migrate/overwrite branch, so the batch schema is the
-        # version's file schema.
+        # Touched buckets were rewritten under the batch's schema;
+        # untouched files carry the same one (drift took the
+        # migrate/overwrite path above), so the batch schema IS the
+        # version's schema.
         self._commit_cfg(v, schema=batch.schema)
         self._commit_meta(v, meta)
         self._swap_pointer(v)
@@ -1792,24 +1593,22 @@ class SnapshotStore:
         # Dead branches sit ABOVE the new pointer, so list raw disk
         # artifacts — versions() deliberately filters them out now.
         for v in self._versions_on_disk():
-            if v <= version:
-                continue
-            if self.layout == "manifest":
-                try:
-                    os.remove(self._manifest_path(v))
-                except OSError:
-                    pass
-            else:
-                shutil.rmtree(self._version_dir(v), ignore_errors=True)
+            if v > version:
+                self._remove_manifest(v)
         self._vacuum_meta([])  # drops meta above the (new) pointer
-        if self.layout == "manifest":
-            self._gc_unreferenced_data()
+        self._gc_unreferenced_data()
         return version
 
+    def _remove_manifest(self, v: int) -> None:
+        try:
+            os.remove(self._manifest_path(v))
+        except OSError:
+            pass
+
     def _gc_unreferenced_data(self) -> None:
-        """Manifest layout: delete data files no surviving manifest
-        references, then prune emptied commit/bucket dirs (shared by
-        vacuum and rollback)."""
+        """Delete data files no surviving manifest references, then
+        prune emptied commit/bucket dirs (shared by vacuum and
+        rollback)."""
         referenced: set[str] = set()
         for v in self.versions():
             for rels in self._read_manifest(v).values():
@@ -1864,8 +1663,8 @@ class SnapshotStore:
         now: float | None = None,
     ) -> list[int]:
         """Drop all but the newest ``keep`` versions (never the
-        current one). Manifest layout additionally deletes data files
-        no surviving manifest references.
+        current one), then delete the data files no surviving manifest
+        references.
 
         ``max_age_s`` adds AGE-based retention on top of the count
         bound: any non-current version whose recorded ``committed_at``
@@ -1885,13 +1684,7 @@ class SnapshotStore:
         # overwrite their numbers anyway.
         for v in self._versions_on_disk():
             if v > (cur or 0):
-                if self.layout == "manifest":
-                    try:
-                        os.remove(self._manifest_path(v))
-                    except OSError:
-                        pass
-                else:
-                    shutil.rmtree(self._version_dir(v), ignore_errors=True)
+                self._remove_manifest(v)
         versions = self.versions()
         doomed = {
             v for v in (versions[:-keep] if keep > 0 else versions) if v != cur
@@ -1905,13 +1698,8 @@ class SnapshotStore:
                 if ts is not None and ts < cutoff:
                     doomed.add(v)
         victims = sorted(doomed)
-        if self.layout == "manifest":
-            for v in victims:
-                os.remove(self._manifest_path(v))
-            self._gc_unreferenced_data()
-            self._vacuum_meta(victims)
-            return victims
         for v in victims:
-            shutil.rmtree(self._version_dir(v), ignore_errors=True)
+            os.remove(self._manifest_path(v))
+        self._gc_unreferenced_data()
         self._vacuum_meta(victims)
         return victims

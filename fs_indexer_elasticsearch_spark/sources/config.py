@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, ClassVar
 
 DEFAULT_SEARCH_PATHS = [
     "indexer-config.yaml",
@@ -32,9 +32,10 @@ class PipelineConfig:
     num_buckets: int = 32
     # Snapshot versions retained after each cycle (None = keep all).
     keep_versions: int | None = 3
-    # Snapshot storage layout: "hardlink" (POSIX fs) | "manifest"
-    # (object-store safe; see sinks/snapshot.py).
-    snapshot_layout: str = "hardlink"
+    # The snapshot store's one physical layout (sinks/snapshot.py): a
+    # constant, not a setting — kept so callers that pass it through
+    # to SnapshotStore(layout=...) still resolve.
+    snapshot_layout: ClassVar[str] = "manifest"
     # ES publish scope per cycle: "full" republishes every live doc
     # (reference parity — scanner refreshes last_seen on every row,
     # elasticsearch_integration re-bulks the table) | "changed" ships
@@ -77,6 +78,12 @@ def load_config(path: str | None = None) -> PipelineConfig:
         patterns = list(skips)
     else:
         patterns = PipelineConfig().skip_patterns
+    layout = data.get("database", {}).get("layout", "manifest")
+    if layout != "manifest":
+        raise ValueError(
+            f"database.layout {layout!r} is not supported: snapshots have "
+            "one layout, 'manifest' (remove the key)"
+        )
     perf = data.get("performance", {})
     ll = data.get("lucidlink_filespace", {})
     return PipelineConfig(
@@ -109,7 +116,6 @@ def load_config(path: str | None = None) -> PipelineConfig:
                 else None
             )
         ),
-        snapshot_layout=data.get("database", {}).get("layout", "hardlink"),
         publish_mode=data.get("elasticsearch", {}).get("publish_mode", "full"),
         merge_retries=int(data.get("database", {}).get("merge_retries", 0)),
         raw=data,

@@ -717,9 +717,9 @@ def streaming_changefeed_pipeline(
             # Replayed or no-change epoch: the classification proved
             # the merge would be a no-op, so skip BOTH sinks AND the
             # store merge — otherwise every such epoch commits a no-op
-            # version (hardlink layout: a full link-forward of every
-            # bucket), the exact version churn the match pipeline's
-            # isEmpty guard exists to prevent.
+            # version (a manifest, cfg and meta file each, and one more
+            # link in the version chain), the exact version churn the
+            # match pipeline's isEmpty guard exists to prevent.
             return
         if feed_store is not None:
             # composite_id keeps the feed-store key id-compatible with
@@ -802,8 +802,9 @@ def streaming_curation_pipeline(
         if scored.isEmpty():
             # Every doc failed the quality gate: emit nothing and —
             # critically — skip the merge, which would otherwise commit
-            # a no-op store version per rejected micro-batch (hardlink
-            # layout: a full link-forward of every bucket, each epoch).
+            # a no-op store version per rejected micro-batch (a
+            # manifest, cfg and meta file each epoch, and a version
+            # chain that grows with every rejected batch).
             return scored.select(
                 "batch_id",
                 "n_tokens",
@@ -1047,10 +1048,9 @@ def _streaming_match_pipeline(
         if matches.isEmpty():
             # Nothing to record: skip the sink entirely — a keyed
             # matches_store merge of zero rows would still commit a
-            # fresh no-op store version per epoch (hardlink layout:
-            # a full link-forward of every bucket), and a stream of
-            # match-free batches would grow the version chain
-            # unboundedly. match_fn's own side effects (the index
+            # fresh no-op store version per epoch (a manifest, cfg and
+            # meta file each), and a stream of match-free batches
+            # would grow the version chain unboundedly. match_fn's own side effects (the index
             # merge) have already run.
             return
         if matches_store is not None:

@@ -208,32 +208,6 @@ def test_meta_carries_forward_and_never_promotes_orphans(spark, tmp_path):
     assert store.store.read_meta() == good_meta
 
 
-def test_manifest_layout_matches_hardlink_end_to_end(spark, tmp_path):
-    """Full lifecycle (seed → add → search) on the object-store
-    manifest layout, byte-parity with hardlink — and no POSIX-only op
-    anywhere in the centroid path (r7 verdict #1 done criterion)."""
-    full = _vecs(spark, range(60))
-    centroids = full.filter(F.col("vec_id") < 6)
-    queries = full.filter(F.col("vec_id") % 17 == 1)
-
-    results = {}
-    for layout in ("hardlink", "manifest"):
-        store = IvfIndexStore(
-            spark, str(tmp_path / f"ivf-{layout}"), num_buckets=16, layout=layout
-        )
-        store.seed(
-            full.filter(F.col("vec_id") % 4 != 0), centroids, "vec_id", "emb"
-        )
-        store.add(full.filter(F.col("vec_id") % 4 == 0), "vec_id", "emb", seq=1)
-        results[layout] = sorted(
-            map(
-                tuple,
-                store.search(queries, "vec_id", "emb", k=3, nprobe=2).collect(),
-            )
-        )
-    assert results["hardlink"] == results["manifest"] and results["hardlink"]
-
-
 def test_tombstone_removal_filters_without_index_rewrite(spark, tmp_path):
     """mode='tombstone' removal: O(removal) — the INDEX version does
     not move (only the log's), search filters the ids immediately, and

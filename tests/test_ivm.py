@@ -175,11 +175,11 @@ def test_maintain_joined_agg_chained_equals_scratch(spark, tmp_path):
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fschema = "fk long, v int, cust long, price double"
     dschema = "dk long, v int, grp string"
@@ -249,11 +249,11 @@ def _joined_stores(spark, tmp_path):
     neither parent algebra covers alone."""
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fschema = "fk long, v int, cust long, price double"
     dschema = "dk long, v int, grp string"
@@ -351,11 +351,11 @@ def test_maintain_joined_agg_null_group_pairs_terms(spark, tmp_path):
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fschema = "fk long, v int, cust long, price double"
     dschema = "dk long, v int, grp string"
@@ -1101,11 +1101,11 @@ def test_join_membership_all_transitions_equal_scratch(spark, tmp_path):
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fschema = "fk long, v int, cust long, price double"
     dschema = "dk long, v int, attr string"
@@ -1194,7 +1194,7 @@ def test_rollup_cascade_chained_equals_scratch(spark, tmp_path):
 
     store = SnapshotStore(
         spark, str(tmp_path / "casc"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     sch = "k long, v int, day date, cents long"
     d = lambda s: dt.date.fromisoformat(s)  # noqa: E731
@@ -1343,11 +1343,11 @@ def test_join_membership_model_random_program(spark, tmp_path, seed):
     custs = [0, 1, 2, 3, 4, 5, 6, None]
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fschema = "fk long, v int, cust long"
     live_f: dict[int, int | None] = {}
@@ -1437,15 +1437,15 @@ def test_maintain_joined3_chained_equals_scratch(spark, tmp_path):
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     cust = SnapshotStore(
         spark, str(tmp_path / "cust"), key="ck", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     nat = SnapshotStore(
         spark, str(tmp_path / "nat"), key="nk", version_col="v",
-        num_buckets=2, layout="manifest",
+        num_buckets=2,
     )
     fsch = "fk long, v int, cust long, price double"
     csch = "ck long, v int, nation long"
@@ -1547,15 +1547,15 @@ def test_joined_ivm_model_random_program(spark, tmp_path, seed):
     rng = _random.Random(seed)
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     cust = SnapshotStore(
         spark, str(tmp_path / "cust"), key="ck", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     nat = SnapshotStore(
         spark, str(tmp_path / "nat"), key="nk", version_col="v",
-        num_buckets=2, layout="manifest",
+        num_buckets=2,
     )
     fsch = "fk long, v int, cust long, price double"
     csch = "ck long, v int, nation long"
@@ -1702,11 +1702,11 @@ def test_maintain_joined_top_k_all_branches(spark, tmp_path):
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="ck", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fsch = "fk long, v int, cust long, price double"
     dsch = "ck long, v int, grp string"
@@ -1793,11 +1793,11 @@ def test_maintain_joined_top_k_same_group_dim_update_no_duplicate(
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="ck", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     fsch = "fk long, v int, cust long, price double"
     dsch = "ck long, v int, grp string"
@@ -1833,11 +1833,11 @@ def test_join_membership_delta_replay_idempotent(spark, tmp_path):
 
     fact = SnapshotStore(
         spark, str(tmp_path / "fact"), key="fk", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=2, layout="manifest",
+        num_buckets=2,
     )
     fsch = "fk long, v int, cust long"
     dim.overwrite(spark.createDataFrame([(1, 1), (2, 1)], "dk long, v int"))
@@ -1908,7 +1908,7 @@ def test_classify_membership_dim_scan_is_column_pruned(spark, tmp_path):
     )
     dim = SnapshotStore(
         spark, str(tmp_path / "dim"), key="dk", version_col="v",
-        num_buckets=2, layout="manifest",
+        num_buckets=2,
     )
     dim.overwrite(
         spark.createDataFrame(

@@ -138,9 +138,7 @@ def test_schema_evolution_on_merge(spark, tmp_path):
 def test_merge_with_removals(spark, tmp_path):
     """merge(batch, removed=...) applies deletions inside the touched
     buckets (reference DELETE..NOT IN, scanner.py:447-454) while still
-    hard-linking every untouched bucket forward."""
-    import os
-
+    carrying every untouched bucket's files forward."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v", num_buckets=8
     )
@@ -154,22 +152,11 @@ def test_merge_with_removals(spark, tmp_path):
     assert out["k0"] == "p2" and out["k200"] == "new"
     assert len(out) == 199  # 200 - 2 removed + 1 added (k0 updated in place)
 
-    # Buckets untouched by both the batch AND the removals are links.
-    def bucket_inodes(d):
-        return {
-            b: {
-                os.stat(os.path.join(d, b, f)).st_ino
-                for f in os.listdir(os.path.join(d, b))
-                if not f.startswith((".", "_"))
-            }
-            for b in os.listdir(d)
-            if b.startswith("_bucket=")
-        }
-
-    i1 = bucket_inodes(f"{store.path}/v1")
-    i2 = bucket_inodes(f"{store.path}/v2")
-    shared = [b for b in i2 if b in i1 and i2[b] & i1[b]]
-    assert len(i2) - len(shared) <= 4  # ≤4 keys touched → ≤4 buckets rewritten
+    # Buckets untouched by both the batch AND the removals keep their
+    # files: the v2 manifest entry is v1's relpath list, unchanged.
+    m1, m2 = store._read_manifest(1), store._read_manifest(2)
+    shared = [b for b in m2 if m2[b] == m1.get(b)]
+    assert len(m2) - len(shared) <= 4  # ≤4 keys touched → ≤4 buckets rewritten
     assert len(shared) >= 4
 
     # Deleting a key also works when it's the ONLY change in its bucket.
@@ -180,37 +167,21 @@ def test_merge_with_removals(spark, tmp_path):
 
 
 def test_merge_is_bucket_pruned(spark, tmp_path):
-    """A merge touching one key must hard-link (not rewrite) every
+    """A merge touching one key must carry forward (not rewrite) every
     untouched bucket — the property that keeps a small batch O(batch)
     at 100 TB table size."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v", num_buckets=8
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(200)]))
-    v1_dir = f"{store.path}/v1"
-
     store.merge(_df(spark, [("k0", 2, "p2")]))
-    v2_dir = f"{store.path}/v2"
 
-    import os
-
-    def bucket_inodes(d):
-        out = {}
-        for b in os.listdir(d):
-            if not b.startswith("_bucket="):
-                continue
-            out[b] = {
-                f: os.stat(os.path.join(d, b, f)).st_ino
-                for f in os.listdir(os.path.join(d, b))
-                if not f.startswith((".", "_"))
-            }
-        return out
-
-    i1, i2 = bucket_inodes(v1_dir), bucket_inodes(v2_dir)
-    shared = [b for b in i2 if b in i1 and set(i2[b].values()) & set(i1[b].values())]
-    rewritten = [b for b in i2 if b not in shared]
+    m1, m2 = store._read_manifest(1), store._read_manifest(2)
+    shared = [b for b in m2 if m2[b] == m1.get(b)]
+    rewritten = [b for b in m2 if b not in shared]
     assert len(rewritten) == 1  # only k0's bucket
-    assert len(shared) >= 6  # everything else linked forward
+    assert not set(m2[rewritten[0]]) & set(m1[rewritten[0]])  # fresh files
+    assert len(shared) >= 6  # everything else carried forward
 
     # And the data is still right.
     out = {r.k: r.payload for r in store.read().collect()}
@@ -223,7 +194,7 @@ def test_manifest_layout_roundtrip_and_file_reuse(spark, tmp_path):
     as the previous version (the no-link, no-rename commit protocol)."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=8, layout="manifest",
+        num_buckets=8,
     )
     assert store.read() is None
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(200)]))
@@ -242,7 +213,7 @@ def test_manifest_layout_roundtrip_and_file_reuse(spark, tmp_path):
     assert len(rewritten) <= 4  # ≤4 keys touched → ≤4 buckets rewritten
     assert len(reused) >= 4  # the rest carried forward by reference
 
-    # Stale batch must not regress (same semantics as hardlink layout).
+    # Stale batch must not regress.
     store.merge(_df(spark, [("k0", 0, "stale")]))
     assert {r.k: r.payload for r in store.read().collect()}["k0"] == "p2"
 
@@ -255,7 +226,7 @@ def test_manifest_commit_ignores_stray_files(spark, tmp_path):
 
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(20)]))
 
@@ -284,7 +255,7 @@ def test_manifest_commit_ignores_stray_files(spark, tmp_path):
 def test_manifest_vacuum_drops_unreferenced_files(spark, tmp_path):
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(50)]))
     for gen in range(2, 6):
@@ -312,13 +283,12 @@ def test_manifest_vacuum_drops_unreferenced_files(spark, tmp_path):
 import pytest
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_empty_table_reads_from_recorded_schema(spark, tmp_path, layout):
+def test_empty_table_reads_from_recorded_schema(spark, tmp_path):
     """Deleting every row must leave a READABLE empty table (schema from
     _SCHEMA.json), not a parquet schema-inference error."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout=layout,
+        num_buckets=4,
     )
     store.overwrite(_df(spark, [("a", 1, "pa"), ("b", 1, "pb")]))
     removed = spark.createDataFrame([("a",), ("b",)], "k string")
@@ -365,7 +335,7 @@ def test_manifest_vacuum_prunes_emptied_commit_dirs(spark, tmp_path):
 
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     # Three full overwrites → three commits' worth of data dirs.
     for v in (1, 2, 3):
@@ -383,15 +353,13 @@ def test_manifest_vacuum_prunes_emptied_commit_dirs(spark, tmp_path):
         assert has_content, f"empty directory survived vacuum: {root}"
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_read_buckets_prunes_and_matches_full_read(spark, tmp_path, layout):
+def test_read_buckets_prunes_and_matches_full_read(spark, tmp_path):
     """read_buckets (the index-lookup path) returns exactly the rows
-    whose _bucket is requested — pruned at the partition-directory
-    level (hardlink) or the manifest file list (manifest) — and the
-    union over all buckets equals the full read."""
+    whose _bucket is requested — pruned at the manifest file list —
+    and the union over all buckets equals the full read."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=8, layout=layout,
+        num_buckets=8,
     )
     assert store.read_buckets([0, 1]) is None  # empty store
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(200)]))
@@ -434,91 +402,87 @@ def test_time_travel_read_and_retention(spark, tmp_path):
     """read(version=) time-travels to any RETAINED version (immutable
     snapshots make this free); vacuum shrinks versions() and a dropped
     version raises a clear ValueError instead of a deep-plan file
-    error. Works on both layouts; meta payloads travel too."""
+    error. Meta payloads travel too."""
     from fs_indexer_elasticsearch_spark.sinks.snapshot import SnapshotStore
 
     import pytest
 
-    for layout in ("hardlink", "manifest"):
-        store = SnapshotStore(
-            spark,
-            str(tmp_path / f"tt-{layout}"),
-            key="k",
-            version_col="seq",
-            num_buckets=4,
-            layout=layout,
-        )
-        store.overwrite(
-            spark.createDataFrame([("a", 1, "v1")], "k string, seq long, p string"),
-            meta={"gen": 1},
-        )
-        store.merge(
-            spark.createDataFrame([("a", 2, "v2")], "k string, seq long, p string")
-        )
-        store.merge(
-            spark.createDataFrame([("b", 3, "v3")], "k string, seq long, p string")
-        )
-        assert store.versions() == [1, 2, 3]
-        # current: a@2, b@3; version 1: a@1 only
-        assert {(r.k, r.p) for r in store.read().collect()} == {
-            ("a", "v2"),
-            ("b", "v3"),
-        }
-        assert {(r.k, r.p) for r in store.read(version=1).collect()} == {
-            ("a", "v1")
-        }
-        assert store.read_meta(version=1) == {"gen": 1}
-        store.vacuum(keep=1)
-        assert store.versions() == [3]
-        with pytest.raises(ValueError, match="not retained"):
-            store.read(version=1)
+    store = SnapshotStore(
+        spark,
+        str(tmp_path / "tt"),
+        key="k",
+        version_col="seq",
+        num_buckets=4,
+    )
+    store.overwrite(
+        spark.createDataFrame([("a", 1, "v1")], "k string, seq long, p string"),
+        meta={"gen": 1},
+    )
+    store.merge(
+        spark.createDataFrame([("a", 2, "v2")], "k string, seq long, p string")
+    )
+    store.merge(
+        spark.createDataFrame([("b", 3, "v3")], "k string, seq long, p string")
+    )
+    assert store.versions() == [1, 2, 3]
+    # current: a@2, b@3; version 1: a@1 only
+    assert {(r.k, r.p) for r in store.read().collect()} == {
+        ("a", "v2"),
+        ("b", "v3"),
+    }
+    assert {(r.k, r.p) for r in store.read(version=1).collect()} == {
+        ("a", "v1")
+    }
+    assert store.read_meta(version=1) == {"gen": 1}
+    store.vacuum(keep=1)
+    assert store.versions() == [3]
+    with pytest.raises(ValueError, match="not retained"):
+        store.read(version=1)
 
 
 def test_rollback_restores_state_and_gcs_dead_branch(spark, tmp_path):
     """rollback(v): atomic pointer swap back to a retained version;
-    the dead branch above it (manifests/dirs, orphan data files, meta)
+    the dead branch above it (manifests, orphan data files, meta)
     is GC-ed, and a subsequent commit reuses its numbers cleanly."""
     from fs_indexer_elasticsearch_spark.sinks.snapshot import SnapshotStore
 
     import pytest
 
-    for layout in ("hardlink", "manifest"):
-        store = SnapshotStore(
-            spark,
-            str(tmp_path / f"rb-{layout}"),
-            key="k",
-            version_col="seq",
-            num_buckets=4,
-            layout=layout,
+    store = SnapshotStore(
+        spark,
+        str(tmp_path / "rb"),
+        key="k",
+        version_col="seq",
+        num_buckets=4,
+    )
+    store.overwrite(
+        spark.createDataFrame([("a", 1, "good")], "k string, seq long, p string"),
+        meta={"gen": 1},
+    )
+    store.merge(
+        spark.createDataFrame(
+            [("a", 2, "bad"), ("b", 2, "bad")], "k string, seq long, p string"
         )
-        store.overwrite(
-            spark.createDataFrame([("a", 1, "good")], "k string, seq long, p string"),
-            meta={"gen": 1},
-        )
-        store.merge(
-            spark.createDataFrame(
-                [("a", 2, "bad"), ("b", 2, "bad")], "k string, seq long, p string"
-            )
-        )
-        store.merge(
-            spark.createDataFrame([("c", 3, "bad")], "k string, seq long, p string")
-        )
-        assert store.rollback(1) == 1
-        assert store.versions() == [1]
-        assert store._versions_on_disk() == [1]  # dead branch GC-ed, not hidden
-        assert {(r.k, r.p) for r in store.read().collect()} == {("a", "good")}
-        assert store.read_meta() == {"gen": 1}
-        with pytest.raises(ValueError, match="not retained"):
-            store.rollback(3)
-        # the re-ingest after the bad night: numbering resumes at 2
-        v = store.merge(
-            spark.createDataFrame([("b", 5, "fixed")], "k string, seq long, p string")
-        )
-        assert v == 2
-        assert {(r.k, r.p) for r in store.read().collect()} == {
-            ("a", "good"),
-            ("b", "fixed"),
-        }
+    )
+    store.merge(
+        spark.createDataFrame([("c", 3, "bad")], "k string, seq long, p string")
+    )
+    assert store.rollback(1) == 1
+    assert store.versions() == [1]
+    assert store._versions_on_disk() == [1]  # dead branch GC-ed, not hidden
+    assert {(r.k, r.p) for r in store.read().collect()} == {("a", "good")}
+    assert store.read_meta() == {"gen": 1}
+    with pytest.raises(ValueError, match="not retained"):
+        store.rollback(3)
+    # the re-ingest after the bad night: numbering resumes at 2
+    v = store.merge(
+        spark.createDataFrame([("b", 5, "fixed")], "k string, seq long, p string")
+    )
+    assert v == 2
+    assert {(r.k, r.p) for r in store.read().collect()} == {
+        ("a", "good"),
+        ("b", "fixed"),
+    }
 
 
 def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
@@ -530,40 +494,33 @@ def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
 
     from fs_indexer_elasticsearch_spark.sinks.snapshot import SnapshotStore
 
-    for layout in ("hardlink", "manifest"):
-        store = SnapshotStore(
-            spark,
-            str(tmp_path / f"orph-{layout}"),
-            key="k",
-            version_col="seq",
-            num_buckets=4,
-            layout=layout,
-        )
-        store.overwrite(
-            spark.createDataFrame([("a", 1, "x")], "k string, seq long, p string")
-        )
-        # simulate the crash: partial version artifact above the pointer
-        if layout == "manifest":
-            orphan = store._manifest_path(5)
-            with open(orphan, "w") as f:
-                json.dump({"version": 5, "files": {}}, f)
-        else:
-            orphan = store._version_dir(5)
-            os.makedirs(orphan)
-        assert store.versions() == [1]
-        store.vacuum(keep=2)
-        assert not os.path.exists(orphan)
+    store = SnapshotStore(
+        spark,
+        str(tmp_path / "orph"),
+        key="k",
+        version_col="seq",
+        num_buckets=4,
+    )
+    store.overwrite(
+        spark.createDataFrame([("a", 1, "x")], "k string, seq long, p string")
+    )
+    # simulate the crash: partial version artifact above the pointer
+    orphan = store._manifest_path(5)
+    with open(orphan, "w") as f:
+        json.dump({"version": 5, "files": {}}, f)
+    assert store.versions() == [1]
+    store.vacuum(keep=2)
+    assert not os.path.exists(orphan)
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_rebucket_evolves_count_and_preserves_rows(spark, tmp_path, layout):
+def test_rebucket_evolves_count_and_preserves_rows(spark, tmp_path):
     """rebucket = partition evolution: one O(table) rewrite under a
     new bucket count, committed as a normal version; rows identical,
     subsequent merges prune under the NEW count, and reopening adopts
     the on-disk count regardless of the constructor value."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout=layout,
+        num_buckets=4,
     )
     rows = [(f"k{i}", 1, f"p{i}") for i in range(40)]
     store.overwrite(_df(spark, rows))
@@ -593,7 +550,7 @@ def test_rebucket_evolves_count_and_preserves_rows(spark, tmp_path, layout):
     # Reopening with a stale constructor count ADOPTS the disk truth.
     reopened = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout=layout,
+        num_buckets=4,
     )
     assert reopened.num_buckets == 16
 
@@ -712,24 +669,23 @@ def test_legacy_backfill_race_adopts_one_disk_truth(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_legacy_backfill_derives_count_from_data(spark, tmp_path, layout):
+def test_legacy_backfill_derives_count_from_data(spark, tmp_path):
     """DETERMINISTIC version of the race above (no flock lottery): a
     single opener whose constructor value is WRONG (16 on a store
     physically written with 4) must still pin 4 — the data's own
     (key, bucket) labels prove the layout — and its pruned lookups
-    must find the keys. Both physical layouts."""
+    must find the keys."""
     import os as _os
 
     path = str(tmp_path / "snap")
     store = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=4, layout=layout
+        spark, path, key="k", version_col="v", num_buckets=4
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(24)]))
     _os.remove(store._cfg_path(1))
 
     other = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=16, layout=layout
+        spark, path, key="k", version_col="v", num_buckets=16
     )
     assert other.num_buckets == 4
     assert {r.k for r in other.read_keys(["k3", "k7"]).collect()} == {
@@ -796,22 +752,21 @@ def test_legacy_backfill_full_coverage_defeats_spurious_constructor(
 
 def test_legacy_backfill_underivable_raises_loudly(spark, tmp_path):
     """A legacy store whose data contradicts every candidate count
-    (here: a bucket dir renamed to a label no pmod layout could have
-    produced) must RAISE at open instead of guessing — a silent wrong
-    adoption empties pruned reads, the worst store failure mode."""
+    (here: a manifest entry relabeled to a bucket no pmod layout could
+    have produced) must RAISE at open instead of guessing — a silent
+    wrong adoption empties pruned reads, the worst store failure mode."""
     import os as _os
 
     path = str(tmp_path / "snap")
     store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(24)]))
     _os.remove(store._cfg_path(1))
-    vdir = store._version_dir(1)
     # Mislabel one bucket: rows hashed for bucket 1 (mod 4) now claim
     # bucket 5 — consistent with no n (n=4 can't label a bucket 5;
     # anything > 5 fails the sampled rows' mod).
-    _os.rename(
-        _os.path.join(vdir, "_bucket=1"), _os.path.join(vdir, "_bucket=5")
-    )
+    files = store._read_manifest(1)
+    files[5] = files.pop(1)
+    store._write_manifest(1, files)
     with pytest.raises(RuntimeError, match="cannot derive the bucket layout"):
         SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
 
@@ -854,20 +809,38 @@ def test_store_identity_mismatch_raises(spark, tmp_path):
         SnapshotStore(spark, path, key="k", version_col="OTHER", num_buckets=4)
     with pytest.raises(ValueError, match="immutable"):
         SnapshotStore(spark, path, key="payload", version_col="v", num_buckets=4)
-    with pytest.raises(ValueError, match="immutable"):
+
+
+def test_only_the_manifest_layout_opens(spark, tmp_path):
+    """The store has one physical layout: asking for another, or
+    reopening a directory written in the retired hardlink layout,
+    raises a ValueError that names the one that exists."""
+    import json as _json
+
+    with pytest.raises(ValueError, match="manifest"):
         SnapshotStore(
-            spark, path, key="k", version_col="v", num_buckets=4, layout="manifest"
+            spark, str(tmp_path / "new"), key="k", version_col="v",
+            layout="hardlink",
         )
+    old = tmp_path / "old"
+    old.mkdir()
+    (old / "_LAYOUT.json").write_text(
+        _json.dumps(
+            {"key": ["k"], "bucket_key": "k", "version_col": "v",
+             "layout": "hardlink"}
+        )
+    )
+    with pytest.raises(ValueError, match="manifest"):
+        SnapshotStore(spark, str(old), key="k", version_col="v")
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path, layout):
+def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path):
     """bucket_stats is metadata-only measurement; maybe_rebucket is
     the policy that grows the layout when the average bucket outgrows
     its target, and stays quiet otherwise."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=2, layout=layout,
+        num_buckets=2,
     )
     assert store.bucket_stats() is None
     rows = [(f"k{i}", 1, "x" * 50) for i in range(60)]
@@ -896,14 +869,13 @@ def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path, layout):
     assert store.maybe_rebucket(target_bucket_bytes=int(new_avg) + 1) is None
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_read_keys_point_lookup(spark, tmp_path, layout):
+def test_read_keys_point_lookup(spark, tmp_path):
     """read_keys = the operational point lookup: same rows as a full
     read filtered, touching only the buckets the keys hash to, with
     the IN-predicate pushed into the parquet scan."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=16, layout=layout,
+        num_buckets=16,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, f"p{i}") for i in range(200)]))
     want = ["k3", "k77", "k150", "nope"]
@@ -937,7 +909,7 @@ def test_read_keys_point_lookup(spark, tmp_path, layout):
 def test_read_keys_prunes_buckets_and_requires_key_bucketing(spark, tmp_path):
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=32, layout="manifest",
+        num_buckets=32,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(300)]))
     # A one-key lookup opens exactly the one bucket's files: compare
@@ -975,28 +947,21 @@ def test_written_files_are_key_clustered(spark, tmp_path):
     store.overwrite(
         _df(spark, [(f"k{i:04d}", 1, "p") for i in reversed(range(500))])
     )
-    import os
-
-    vdir = store._version_dir(store.current_version())
     checked = 0
-    for root, _dirs, files in os.walk(vdir):
-        for fn in files:
-            if fn.startswith((".", "_")) or not fn.endswith(".parquet"):
-                continue
-            ks = pq.read_table(os.path.join(root, fn), columns=["k"])["k"].to_pylist()
-            assert ks == sorted(ks), os.path.join(root, fn)
-            checked += 1
+    for path in store._version_data_files(store.current_version()):
+        ks = pq.read_table(path, columns=["k"])["k"].to_pylist()
+        assert ks == sorted(ks), path
+        checked += 1
     assert checked >= 2
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_read_changes_classification(spark, tmp_path, layout):
+def test_read_changes_classification(spark, tmp_path):
     """The change feed emits exactly the true delta between two
     versions: inserts/updates post-image, deletes pre-image, and a
     rewritten-but-identical row NEVER surfaces as a phantom update."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=8, layout=layout,
+        num_buckets=8,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, f"p{i}") for i in range(40)]))
     store.merge(
@@ -1030,7 +995,7 @@ def test_read_changes_prunes_to_changed_buckets(spark, tmp_path):
     others."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=32, layout="manifest",
+        num_buckets=32,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(300)]))
     store.merge(_df(spark, [("k42", 2, "updated")]))
@@ -1083,7 +1048,7 @@ def test_read_changes_spans_rebucket_with_pruned_reads(spark, tmp_path):
     rows from coarse-bucket cohabitants)."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(300)]))  # v1
     store.merge(_df(spark, [("k42", 2, "updated42")]))                    # v2
@@ -1111,7 +1076,7 @@ def test_read_changes_spans_rebucket_with_pruned_reads(spark, tmp_path):
     store.vacuum(keep=1)
     store2 = SnapshotStore(
         spark, str(tmp_path / "snap2"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     store2.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(50)]))
     store2.merge(_df(spark, [("k7", 2, "up")]))
@@ -1374,8 +1339,7 @@ def test_read_changes_composite_key(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
-def test_history_and_age_based_vacuum(spark, tmp_path, layout):
+def test_history_and_age_based_vacuum(spark, tmp_path):
     """history() is the DESCRIBE HISTORY surface (metadata-only commit
     log); vacuum(max_age_s=) retires versions by wall-clock age on top
     of the count bound."""
@@ -1384,7 +1348,7 @@ def test_history_and_age_based_vacuum(spark, tmp_path, layout):
 
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout=layout,
+        num_buckets=4,
     )
     store.overwrite(_df(spark, [("a", 1, "p")]))
     store.merge(_df(spark, [("b", 1, "q")]), meta={"note": "idx"})

@@ -691,7 +691,7 @@ def test_maintain_cc_merge_split_chained_equals_scratch(spark, tmp_path):
 
     store = SnapshotStore(
         spark, str(tmp_path / "edges"), key="eid", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     sch = "eid long, v int, u long, vtx long"
     nodes = spark.createDataFrame(
@@ -766,7 +766,7 @@ def test_maintain_cc_rewiring_update_and_universe_growth(spark, tmp_path):
 
     store = SnapshotStore(
         spark, str(tmp_path / "edges"), key="eid", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     sch = "eid long, v int, u long, vtx long, w long"
     nodes_v2 = spark.createDataFrame(

@@ -126,9 +126,9 @@ def test_scan_is_materialized_once_per_cycle(spark, tmp_path):
 
 def test_incremental_pipeline_is_bucket_pruned(spark, tmp_path):
     """The steady-state scan cycle must be O(delta), not O(table):
-    generation 2 touches 3 files out of 30, so most of gen-1's bucket
-    files must be hard-linked (same inode) into gen-2's snapshot —
-    round 1 rewrote the whole table every cycle via overwrite()."""
+    generation 2 touches 3 files out of 30, so most of gen-1's buckets
+    must keep their files in gen-2's snapshot (the same manifest entry)
+    — round 1 rewrote the whole table every cycle via overwrite()."""
     root = str(tmp_path / "fsroot")
     for i in range(30):
         _write(f"{root}/data/f{i:02d}.txt", b"x" * (i + 1))
@@ -156,26 +156,19 @@ def test_incremental_pipeline_is_bucket_pruned(spark, tmp_path):
     assert paths["/data/f99.txt"].size_bytes == 3
     assert len([p for p in paths if paths[p].type == "file"]) == 30
 
-    # Untouched buckets are hard-links of the previous version.
-    snap = str(tmp_path / "snapshots" / "fs_entries")
+    # Untouched buckets list the previous version's files unchanged.
+    from fs_indexer_elasticsearch_spark.sinks.snapshot import SnapshotStore
 
-    def bucket_inodes(d):
-        return {
-            b: {
-                os.stat(os.path.join(d, b, f)).st_ino
-                for f in os.listdir(os.path.join(d, b))
-                if not f.startswith((".", "_"))
-            }
-            for b in os.listdir(d)
-            if b.startswith("_bucket=")
-        }
-
-    i1 = bucket_inodes(f"{snap}/v{r1.snapshot_version}")
-    i2 = bucket_inodes(f"{snap}/v{r2.snapshot_version}")
-    shared = [b for b in i2 if b in i1 and i2[b] & i1[b]]
-    # ≤4 touched keys (3 files + the /data dir) → ≥4 of 8 buckets linked.
+    store = SnapshotStore(
+        spark, str(tmp_path / "snapshots" / "fs_entries"), key="id",
+        version_col="modified_time",
+    )
+    m1 = store._read_manifest(r1.snapshot_version)
+    m2 = store._read_manifest(r2.snapshot_version)
+    shared = [b for b in m2 if m2[b] == m1.get(b)]
+    # ≤4 touched keys (3 files + the /data dir) → ≥4 of 8 buckets kept.
     assert len(shared) >= 4
-    assert len(i2) - len(shared) <= 4
+    assert len(m2) - len(shared) <= 4
 
 
 def test_link_fetches_are_incremental(spark, tmp_path):
@@ -386,9 +379,9 @@ def test_index_cli_exposes_publish_mode_and_merge_retries(
 
 @pytest.mark.slow
 def test_pipeline_retention_bounds_versions(spark, tmp_path):
-    """5 cycles with keep_versions=2 must leave at most 2 version dirs
-    per store, the current pointer readable, and shared (hard-linked)
-    bucket bytes still alive."""
+    """5 cycles with keep_versions=2 must leave at most 2 manifests
+    per store, the current pointer readable, and the data files shared
+    with vacuumed versions still alive."""
     root = str(tmp_path / "fsroot")
     for i in range(20):
         _write(f"{root}/d{i % 4}/f{i}.txt", b"x" * (i + 1))
@@ -406,8 +399,10 @@ def test_pipeline_retention_bounds_versions(spark, tmp_path):
         run_pipeline(spark, cfg, out_dir=str(tmp_path / f"o{cycle}"))
 
     store_dir = f"{tmp_path}/snap/fs_entries"
-    vdirs = sorted(d for d in os.listdir(store_dir) if d.startswith("v"))
-    assert len(vdirs) <= 2, vdirs
+    manifests = sorted(
+        d for d in os.listdir(store_dir) if d.startswith("_MANIFEST_v")
+    )
+    assert len(manifests) <= 2, manifests
     # Current pointer readable and complete after vacuum.
     from fs_indexer_elasticsearch_spark.sinks.snapshot import SnapshotStore
 
@@ -420,8 +415,9 @@ def test_pipeline_retention_bounds_versions(spark, tmp_path):
 
 
 def test_pipeline_manifest_layout_end_to_end(spark, tmp_path):
-    """The object-store snapshot layout runs the same two-generation
-    pipeline: diff, deletes, and retention all work without hard links."""
+    """The snapshot store's manifest commits carry the two-generation
+    pipeline: diff, deletes, and retention all work without hard links
+    (the object-store-safe protocol)."""
     root = str(tmp_path / "fsroot")
     _write(f"{root}/a/one.txt", b"1")
     _write(f"{root}/a/two.txt", b"22")
@@ -431,7 +427,6 @@ def test_pipeline_manifest_layout_end_to_end(spark, tmp_path):
         snapshot_path=str(tmp_path / "snap"),
         direct_links_enabled=False,
         num_buckets=4,
-        snapshot_layout="manifest",
         keep_versions=2,
     )
     r1 = run_pipeline(spark, cfg, out_dir=str(tmp_path / "o1"))
@@ -445,57 +440,12 @@ def test_pipeline_manifest_layout_end_to_end(spark, tmp_path):
     assert {"added", "removed"} <= changes  # parent dir mtime → 'changed' too
     paths = {r.relative_path for r in r2.entries.collect()}
     assert "/a/one.txt" not in paths and "/a/three.txt" in paths
-    # No v<N> directories exist in manifest layout — only manifests.
+    # No per-version directories exist — only manifests.
     store_dir = f"{tmp_path}/snap/fs_entries"
     assert not any(
         d.startswith("v") and d[1:].isdigit() for d in os.listdir(store_dir)
     )
     assert any(d.startswith("_MANIFEST_v") for d in os.listdir(store_dir))
-
-
-def test_manifest_and_hardlink_layouts_read_back_identically(spark, tmp_path):
-    """Byte-parity of the two snapshot layouts at a non-trivial size
-    (r6 verdict #7): the same two-generation pipeline (full ingest,
-    then a delta with adds/changes/removes) runs once per layout, and
-    the final snapshots must contain the IDENTICAL row set — the
-    object-store-safe manifest commit path is a pure layout change,
-    not a semantic one."""
-    root = str(tmp_path / "fsroot")
-    for d in range(12):
-        for i in range(50):
-            _write(f"{root}/dir{d}/f{i}.dat", bytes([d]) * (i + 1))
-
-    def run_two_generations(layout):
-        snap = str(tmp_path / f"snap-{layout}")
-        cfg = PipelineConfig(
-            root_path=root,
-            skip_patterns=[],
-            snapshot_path=snap,
-            direct_links_enabled=False,
-            num_buckets=8,
-            snapshot_layout=layout,
-        )
-        run_pipeline(spark, cfg, out_dir=str(tmp_path / f"o1-{layout}"))
-        return cfg
-
-    cfg_h = run_two_generations("hardlink")
-    # Delta applied between the layouts' generation-2 runs must be the
-    # same, so mutate once, then run generation 2 for BOTH layouts.
-    cfg_m = run_two_generations("manifest")
-    time.sleep(1.1)
-    os.remove(f"{root}/dir0/f0.dat")
-    _write(f"{root}/dir0/f99.dat", b"new")
-    _write(f"{root}/dir5/f10.dat", b"changed-bytes")
-    r2h = run_pipeline(spark, cfg_h, out_dir=str(tmp_path / "o2-h"))
-    r2m = run_pipeline(spark, cfg_m, out_dir=str(tmp_path / "o2-m"))
-
-    cols = ["relative_path", "size_bytes", "checksum", "type"]
-    rows_h = sorted(tuple(r) for r in r2h.entries.select(*cols).collect())
-    rows_m = sorted(tuple(r) for r in r2m.entries.select(*cols).collect())
-    assert len(rows_h) == len(rows_m)
-    assert rows_h == rows_m
-    assert any("/dir0/f99.dat" == r[0] for r in rows_h)
-    assert not any("/dir0/f0.dat" == r[0] for r in rows_h)
 
 
 def test_publish_mode_changed_ships_only_the_delta(spark, tmp_path):

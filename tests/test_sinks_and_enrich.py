@@ -141,7 +141,7 @@ def test_sync_actions_from_changes(spark, tmp_path):
 
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
-        num_buckets=4, layout="manifest",
+        num_buckets=4,
     )
     store.overwrite(
         spark.createDataFrame(
@@ -180,60 +180,59 @@ def test_sync_actions_from_changes(spark, tmp_path):
 
 def test_store_scan_sql_external_duckdb_read(spark, tmp_path):
     """store_scan_sql: plain DuckDB reads the exact snapshot Spark
-    serves — both layouts, current and time-travel versions, and the
-    pinned file list survives a subsequent merge."""
+    serves — current and time-travel versions, and the pinned file
+    list survives a subsequent merge."""
     import duckdb
 
     from fs_indexer_elasticsearch_spark.sinks.duckdb_file import store_scan_sql
     from fs_indexer_elasticsearch_spark.sinks.snapshot import SnapshotStore
 
-    for layout in ("hardlink", "manifest"):
-        store = SnapshotStore(
-            spark, str(tmp_path / layout), key="k", version_col="v",
-            num_buckets=4, layout=layout,
+    store = SnapshotStore(
+        spark, str(tmp_path / "snap"), key="k", version_col="v",
+        num_buckets=4,
+    )
+    store.overwrite(
+        spark.createDataFrame(
+            [(f"k{i}", 1, f"p{i}") for i in range(20)],
+            "k string, v int, payload string",
         )
-        store.overwrite(
-            spark.createDataFrame(
-                [(f"k{i}", 1, f"p{i}") for i in range(20)],
-                "k string, v int, payload string",
-            )
+    )
+    store.merge(
+        spark.createDataFrame(
+            [("k3", 2, "updated")], "k string, v int, payload string"
+        ),
+        removed=spark.createDataFrame([("k7",)], "k string"),
+    )
+
+    def via_duck(sql):
+        return {
+            (r[0], r[1], r[2])
+            for r in duckdb.sql(f"SELECT k, v, payload FROM ({sql})").fetchall()
+        }
+
+    def via_spark(version=None):
+        return {
+            (r.k, r.v, r.payload)
+            for r in store.read(version=version)
+            .select("k", "v", "payload")
+            .collect()
+        }
+
+    v2_sql = store_scan_sql(store)
+    assert via_duck(v2_sql) == via_spark()
+    assert via_duck(store_scan_sql(store, version=1)) == via_spark(1)
+
+    # Pinned: the SQL handed out before a later merge still reads
+    # the version it named (immutable files), not the new pointer.
+    store.merge(
+        spark.createDataFrame(
+            [("k99", 1, "fresh")], "k string, v int, payload string"
         )
-        store.merge(
-            spark.createDataFrame(
-                [("k3", 2, "updated")], "k string, v int, payload string"
-            ),
-            removed=spark.createDataFrame([("k7",)], "k string"),
-        )
+    )
+    assert via_duck(v2_sql) == via_spark(2)
 
-        def via_duck(sql):
-            return {
-                (r[0], r[1], r[2])
-                for r in duckdb.sql(f"SELECT k, v, payload FROM ({sql})").fetchall()
-            }
-
-        def via_spark(version=None):
-            return {
-                (r.k, r.v, r.payload)
-                for r in store.read(version=version)
-                .select("k", "v", "payload")
-                .collect()
-            }
-
-        v2_sql = store_scan_sql(store)
-        assert via_duck(v2_sql) == via_spark()
-        assert via_duck(store_scan_sql(store, version=1)) == via_spark(1)
-
-        # Pinned: the SQL handed out before a later merge still reads
-        # the version it named (immutable files), not the new pointer.
-        store.merge(
-            spark.createDataFrame(
-                [("k99", 1, "fresh")], "k string, v int, payload string"
-            )
-        )
-        assert via_duck(v2_sql) == via_spark(2)
-
-        with pytest.raises(ValueError, match="not retained"):
-            store_scan_sql(store, version=99)
+    with pytest.raises(ValueError, match="not retained"):
+        store_scan_sql(store, version=99)
 
 
 def test_sync_actions_format_docs_key_as_id(spark, tmp_path):
@@ -379,6 +378,18 @@ def test_publish_mode_changed_republishes_link_only_changes(spark, tmp_path):
         (root / f"dir{i}").mkdir(parents=True)
         (root / f"dir{i}" / f"f{i}.txt").write_text("x" * (i + 1))
 
+    # The cycle counters count the committed table, which here is
+    # always the tree (4 dirs + 4 files, directories sized NULL).
+    entries = list(root.rglob("*"))
+    tree = {
+        "files": sum(p.is_file() for p in entries),
+        "dirs": sum(p.is_dir() for p in entries),
+        "total_bytes": sum(p.stat().st_size for p in entries if p.is_file()),
+    }
+
+    def counters(result):
+        return {k: result.stats[k] for k in tree}
+
     cfg = PipelineConfig(
         root_path=str(root),
         snapshot_path=str(tmp_path / "snap"),
@@ -386,6 +397,7 @@ def test_publish_mode_changed_republishes_link_only_changes(spark, tmp_path):
         direct_links_enabled=False,
     )
     r1 = run_pipeline(spark, cfg, out_dir=str(tmp_path / "out1"))
+    assert counters(r1) == tree
     r1.release()
 
     # Cycle 2: NO fs change, but direct links newly enabled — every
@@ -393,6 +405,7 @@ def test_publish_mode_changed_republishes_link_only_changes(spark, tmp_path):
     # fs change feed.
     cfg.direct_links_enabled = True
     r2 = run_pipeline(spark, cfg, out_dir=str(tmp_path / "out2"))
+    assert counters(r2) == tree
     lines = []
     for part in glob.glob(os.path.join(str(tmp_path / "out2"), "bulk", "part-*")):
         with open(part) as f:
@@ -409,6 +422,7 @@ def test_publish_mode_changed_republishes_link_only_changes(spark, tmp_path):
     # Cycle 3: nothing changed at all (links fresh, fs unchanged) —
     # the changed publish ships zero index actions.
     r3 = run_pipeline(spark, cfg, out_dir=str(tmp_path / "out3"))
+    assert counters(r3) == tree
     lines3 = []
     for part in glob.glob(os.path.join(str(tmp_path / "out3"), "bulk", "part-*")):
         with open(part) as f:

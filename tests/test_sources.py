@@ -232,3 +232,20 @@ def test_load_config_keep_versions_null_means_keep_all(tmp_path):
     p3 = tmp_path / "c3.yaml"
     p3.write_text(yaml.safe_dump({"root_path": "/x", "database": {"keep_versions": 7}}))
     assert load_config(str(p3)).keep_versions == 7
+
+
+def test_load_config_accepts_only_the_manifest_layout(tmp_path):
+    """Snapshots have one physical layout: `database: {layout:
+    hardlink}` fails at load with an error naming the one that exists;
+    `layout: manifest` (or no key) loads."""
+    import pytest
+    import yaml
+
+    from fs_indexer_elasticsearch_spark.sources.config import load_config
+
+    p = tmp_path / "c.yaml"
+    p.write_text(yaml.safe_dump({"database": {"layout": "hardlink"}}))
+    with pytest.raises(ValueError, match="manifest"):
+        load_config(str(p))
+    p.write_text(yaml.safe_dump({"database": {"layout": "manifest"}}))
+    assert load_config(str(p)).snapshot_layout == "manifest"

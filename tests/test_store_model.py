@@ -59,11 +59,8 @@ def _model_diff(h_from: dict, h_to: dict) -> dict:
     return out
 
 
-@pytest.mark.parametrize("layout", ["hardlink", "manifest"])
 @pytest.mark.race
-def test_two_concurrent_writers_all_commits_land_exactly_once(
-    spark, tmp_path, layout
-):
+def test_two_concurrent_writers_all_commits_land_exactly_once(spark, tmp_path):
     """Optimistic multi-writer: two threads (each with its OWN store
     handle, as two jobs would have) race merge_with_retry on one store.
     Every merge must land EXACTLY once — the loser of each claim race
@@ -74,7 +71,7 @@ def test_two_concurrent_writers_all_commits_land_exactly_once(
 
     path = str(tmp_path / "snap")
     SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=4, layout=layout
+        spark, path, key="k", version_col="v", num_buckets=4
     ).overwrite(_df(spark, [(k, 0, "seed") for k in KEYS]))
 
     N_MERGES = 6
@@ -93,8 +90,7 @@ def test_two_concurrent_writers_all_commits_land_exactly_once(
     def run(writer: str) -> None:
         try:
             store = SnapshotStore(
-                spark, path, key="k", version_col="v", num_buckets=4,
-                layout=layout,
+                spark, path, key="k", version_col="v", num_buckets=4
             )
             for batch in programs[writer]:
                 store.merge_with_retry(
@@ -110,9 +106,7 @@ def test_two_concurrent_writers_all_commits_land_exactly_once(
         t.join()
     assert errors == []
 
-    store = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=4, layout=layout
-    )
+    store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
     # Exactly once: the seed + one version per merge, no lost commits.
     assert store.current_version() == 1 + 2 * N_MERGES
 
@@ -123,10 +117,8 @@ def test_two_concurrent_writers_all_commits_land_exactly_once(
     assert _store_state(store) == model
 
 
-@pytest.mark.parametrize("layout,seed", [("hardlink", 7), ("manifest", 11)])
-def test_store_agrees_with_model_under_random_programs(
-    spark, tmp_path, layout, seed
-):
+@pytest.mark.parametrize("seed", [7, 11])
+def test_store_agrees_with_model_under_random_programs(spark, tmp_path, seed):
     rng = random.Random(seed)
     store = SnapshotStore(
         spark,
@@ -134,7 +126,6 @@ def test_store_agrees_with_model_under_random_programs(
         key="k",
         version_col="v",
         num_buckets=4,
-        layout=layout,
     )
     model: dict[str, tuple[int, str]] = {}
     history: dict[int, dict] = {}  # committed version -> model snapshot
@@ -228,13 +219,8 @@ def test_store_agrees_with_model_under_random_programs(
             )
 
 
-@pytest.mark.parametrize(
-    "layout,seed",
-    [("hardlink", 3), pytest.param("manifest", 5, marks=pytest.mark.slow)],
-)
-def test_feed_survives_vacuumed_intermediate_versions(
-    spark, tmp_path, layout, seed
-):
+@pytest.mark.parametrize("seed", [3, pytest.param(5, marks=pytest.mark.slow)])
+def test_feed_survives_vacuumed_intermediate_versions(spark, tmp_path, seed):
     """The degradation contract (r9 verdict #7): when an intermediate
     version VANISHES mid-history — a crash-interrupted vacuum, an
     externally truncated store — the version-path walk can no longer
@@ -244,14 +230,13 @@ def test_feed_survives_vacuumed_intermediate_versions(
 
     The program builds a seeded random history with a REBUCKET in the
     middle, then removes one random intermediate version's artifacts
-    per probe round (manifest file / version dir — exactly what a
-    partial vacuum leaves). Removing the rebucket commit itself severs
+    per probe round (its manifest file — exactly what a partial vacuum
+    leaves). Removing the rebucket commit itself severs
     the provenance chain (counts differ across the gap, no
     rebucket_from match -> the honest full-diff path); removing a
     plain merge leaves a same-count gap the metadata diff still
     resolves exactly. Both must agree with the model."""
     import os
-    import shutil
 
     rng = random.Random(seed)
     store = SnapshotStore(
@@ -260,7 +245,6 @@ def test_feed_survives_vacuumed_intermediate_versions(
         key="k",
         version_col="v",
         num_buckets=4,
-        layout=layout,
     )
     model: dict[str, tuple[int, str]] = {}
     history: dict[int, dict] = {}
@@ -289,10 +273,7 @@ def test_feed_survives_vacuumed_intermediate_versions(
         commit_merge(step)
 
     def drop_version(victim: int) -> None:
-        if layout == "manifest":
-            os.remove(store._manifest_path(victim))
-        else:
-            shutil.rmtree(store._version_dir(victim))
+        os.remove(store._manifest_path(victim))
         history.pop(victim, None)
 
     # Round 1: drop the REBUCKET commit itself — the provenance chain

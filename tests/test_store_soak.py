@@ -53,7 +53,6 @@ def test_store_soak_bounded_disk_and_flat_latency(spark, tmp_path):
         key="k",
         version_col="seq",
         num_buckets=N_BUCKETS,
-        layout="manifest",  # the object-store layout is where file accrual bites
     )
 
     def batch(cycle: int):
@@ -118,7 +117,7 @@ def test_soak_with_rebucket_policy_in_the_loop(spark, tmp_path):
     evolution boundary."""
     path = str(tmp_path / "soak-evolve")
     store = SnapshotStore(
-        spark, path, key="k", version_col="seq", num_buckets=2, layout="manifest"
+        spark, path, key="k", version_col="seq", num_buckets=2
     )
     # Target must sit comfortably above parquet's per-file overhead or
     # the overhead itself re-triggers growth forever; payloads must be
