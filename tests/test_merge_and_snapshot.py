@@ -283,7 +283,7 @@ def test_manifest_vacuum_drops_unreferenced_files(spark, tmp_path):
 import pytest
 
 
-def test_empty_table_reads_from_recorded_schema(spark, tmp_path):
+def test_empty_table_reads_from_recorded_schema(spark, tmp_path, check_layout):
     """Deleting every row must leave a READABLE empty table (schema from
     _SCHEMA.json), not a parquet schema-inference error."""
     store = SnapshotStore(
@@ -301,6 +301,7 @@ def test_empty_table_reads_from_recorded_schema(spark, tmp_path):
     # And the table comes back to life on the next merge.
     store.merge(_df(spark, [("c", 1, "pc")]))
     assert {r.k for r in store.read().collect()} == {"c"}
+    check_layout(store)
 
 
 def test_insert_or_replace_collapses_duplicate_batch_keys(spark):
@@ -353,7 +354,9 @@ def test_manifest_vacuum_prunes_emptied_commit_dirs(spark, tmp_path):
         assert has_content, f"empty directory survived vacuum: {root}"
 
 
-def test_read_buckets_prunes_and_matches_full_read(spark, tmp_path):
+def test_read_buckets_prunes_and_matches_full_read(
+    spark, tmp_path, check_layout
+):
     """read_buckets (the index-lookup path) returns exactly the rows
     whose _bucket is requested — pruned at the manifest file list —
     and the union over all buckets equals the full read."""
@@ -375,6 +378,7 @@ def test_read_buckets_prunes_and_matches_full_read(spark, tmp_path):
     }
     assert everything == full
     assert store.read_buckets([]).count() == 0
+    check_layout(store)
 
 
 def test_merge_removed_requires_matching_bucket_key(spark, tmp_path):
@@ -513,7 +517,9 @@ def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
     assert not os.path.exists(orphan)
 
 
-def test_rebucket_evolves_count_and_preserves_rows(spark, tmp_path):
+def test_rebucket_evolves_count_and_preserves_rows(
+    spark, tmp_path, check_layout
+):
     """rebucket = partition evolution: one O(table) rewrite under a
     new bucket count, committed as a normal version; rows identical,
     subsequent merges prune under the NEW count, and reopening adopts
@@ -553,6 +559,7 @@ def test_rebucket_evolves_count_and_preserves_rows(spark, tmp_path):
         num_buckets=4,
     )
     assert reopened.num_buckets == 16
+    check_layout(reopened)
 
 
 def test_rebucket_rollback_restores_old_count(spark, tmp_path):
@@ -669,7 +676,9 @@ def test_legacy_backfill_race_adopts_one_disk_truth(spark, tmp_path):
     }
 
 
-def test_legacy_backfill_derives_count_from_data(spark, tmp_path):
+def test_legacy_backfill_derives_count_from_data(
+    spark, tmp_path, check_layout
+):
     """DETERMINISTIC version of the race above (no flock lottery): a
     single opener whose constructor value is WRONG (16 on a store
     physically written with 4) must still pin 4 — the data's own
@@ -692,6 +701,7 @@ def test_legacy_backfill_derives_count_from_data(spark, tmp_path):
         "k3",
         "k7",
     }
+    check_layout(other)
 
 
 def test_legacy_backfill_full_coverage_defeats_spurious_constructor(
@@ -834,7 +844,7 @@ def test_only_the_manifest_layout_opens(spark, tmp_path):
         SnapshotStore(spark, str(old), key="k", version_col="v")
 
 
-def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path):
+def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path, check_layout):
     """bucket_stats is metadata-only measurement; maybe_rebucket is
     the policy that grows the layout when the average bucket outgrows
     its target, and stays quiet otherwise."""
@@ -867,9 +877,10 @@ def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path):
     # against the NEW average rather than the old total).
     new_avg = store.bucket_stats()["avg_bucket_bytes"]
     assert store.maybe_rebucket(target_bucket_bytes=int(new_avg) + 1) is None
+    check_layout(store)
 
 
-def test_read_keys_point_lookup(spark, tmp_path):
+def test_read_keys_point_lookup(spark, tmp_path, check_layout):
     """read_keys = the operational point lookup: same rows as a full
     read filtered, touching only the buckets the keys hash to, with
     the IN-predicate pushed into the parquet scan."""
@@ -904,6 +915,7 @@ def test_read_keys_point_lookup(spark, tmp_path):
         spark, str(tmp_path / "empty"), key="k", version_col="v"
     )
     assert empty.read_keys(["a"]) is None
+    check_layout(store)
 
 
 def test_read_keys_prunes_buckets_and_requires_key_bucketing(spark, tmp_path):
@@ -955,7 +967,7 @@ def test_written_files_are_key_clustered(spark, tmp_path):
     assert checked >= 2
 
 
-def test_read_changes_classification(spark, tmp_path):
+def test_read_changes_classification(spark, tmp_path, check_layout):
     """The change feed emits exactly the true delta between two
     versions: inserts/updates post-image, deletes pre-image, and a
     rewritten-but-identical row NEVER surfaces as a phantom update."""
@@ -987,6 +999,7 @@ def test_read_changes_classification(spark, tmp_path):
         store.read_changes(0, 2)
     with pytest.raises(ValueError, match="v_from"):
         store.read_changes(3, 2)
+    check_layout(store)
 
 
 def test_read_changes_prunes_to_changed_buckets(spark, tmp_path):
@@ -1339,7 +1352,7 @@ def test_read_changes_composite_key(spark, tmp_path):
     }
 
 
-def test_history_and_age_based_vacuum(spark, tmp_path):
+def test_history_and_age_based_vacuum(spark, tmp_path, check_layout):
     """history() is the DESCRIBE HISTORY surface (metadata-only commit
     log); vacuum(max_age_s=) retires versions by wall-clock age on top
     of the count bound."""
@@ -1382,6 +1395,7 @@ def test_history_and_age_based_vacuum(spark, tmp_path):
     _json.dump(cfg2, open(store._cfg_path(3), "w"))
     store.merge(_df(spark, [("d", 1, "s")]))
     assert store.vacuum(keep=5, max_age_s=0) == []
+    check_layout(store)
 
 
 def test_upsert_dedup_current_collapses_superseded_copies(spark):

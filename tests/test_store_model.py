@@ -60,7 +60,9 @@ def _model_diff(h_from: dict, h_to: dict) -> dict:
 
 
 @pytest.mark.race
-def test_two_concurrent_writers_all_commits_land_exactly_once(spark, tmp_path):
+def test_two_concurrent_writers_all_commits_land_exactly_once(
+    spark, tmp_path, check_layout
+):
     """Optimistic multi-writer: two threads (each with its OWN store
     handle, as two jobs would have) race merge_with_retry on one store.
     Every merge must land EXACTLY once — the loser of each claim race
@@ -115,6 +117,7 @@ def test_two_concurrent_writers_all_commits_land_exactly_once(spark, tmp_path):
         for batch in batches:
             _apply_merge(model, batch, [])
     assert _store_state(store) == model
+    check_layout(store)
 
 
 @pytest.mark.parametrize("seed", [7, 11])
