@@ -79,9 +79,7 @@ from .store_common import TombstoneStore, read_pruned, remove_by_column
 # advice): a stream checkpointed under one stamping that replays a
 # pre-upgrade epoch under another would compute max_seq in the new
 # domain and admit rows the original epoch never saw. The pipeline
-# refuses a store whose stamped stride mismatches; stores seeded
-# before the stamp existed are treated as this value (the only scheme
-# any persisted store in this codebase's history streamed under).
+# refuses a store whose stamp is missing or differs.
 IVF_SEQ_STRIDE = 64
 
 #: Centroid sets up to this size ride the version META PAYLOAD (tiny
@@ -102,26 +100,6 @@ class _StaleCentroids(ConcurrentWriteError):
     a retrying add, so its cell assignments can never become valid —
     surfaced to callers as ConcurrentWriteError (the public contract)
     but routed past retry_concurrent's backoff via ``no_retry``."""
-
-
-def _with_vis(df: DataFrame) -> DataFrame:
-    """Normalize the visibility column on a stored slice: rows
-    committed before ``ivf_vis`` existed (or widened to NULL by the
-    schema migration a newer add triggers) fall back to ``ivf_seq`` —
-    i.e. the LEGACY seq cut. For a row never re-stamped before the
-    migration, add-seq == LWW-seq and the fallback reproduces its
-    original visibility exactly; for a row a pre-``ivf_vis``
-    maintain_cells had already re-stamped, the original add seq is
-    lost and the fallback reproduces the old (maintenance-seq) cut
-    that store was already serving — no worse than before the column
-    existed, exact for everything committed after it. Maintenance
-    re-stamps self-heal the column as buckets are rewritten."""
-    vis = (
-        F.coalesce(F.col("ivf_vis"), F.col("ivf_seq"))
-        if "ivf_vis" in df.columns
-        else F.col("ivf_seq")
-    )
-    return df.withColumn("ivf_vis", vis.cast("long"))
 
 
 class IvfIndexStore:
@@ -720,7 +698,6 @@ class IvfIndexStore:
                 version=v0,
             )
             .filter(F.col("cid").isin(hot_ids))
-            .transform(_with_vis)
             .select("cid", "vec_id", "emb", "ivf_seq", "ivf_vis")
         )
         # Tombstoned ids must not shape child centroids or be
@@ -980,7 +957,6 @@ class IvfIndexStore:
                 version=v0,
             )
             .filter(F.col("cid").isin(cold))
-            .transform(_with_vis)
             .select("cid", "vec_id", "emb", "ivf_seq", "ivf_vis")
         )
         cold_rows = self.tombstones.apply(
@@ -1179,8 +1155,7 @@ class IvfIndexStore:
         but carries ``ivf_vis`` through unchanged, so a rebalance
         never hides pre-existing vectors from a bounded search — the
         filter stays an exact "added before boundary N" predicate
-        across any number of maintenance commits. (Stores committed
-        before ivf_vis existed fall back to the old ivf_seq cut.)
+        across any number of maintenance commits.
         """
         if self.store.current_version() is None:
             raise ValueError("IVF index is empty — seed() it first")
@@ -1199,16 +1174,7 @@ class IvfIndexStore:
             self.store, probed, empty_msg="IVF index is empty — seed() it first"
         )
         if max_seq is not None:
-            # Per-row fallback to ivf_seq: rows committed before the
-            # visibility column existed (a migrated store widens them
-            # with NULL ivf_vis) carried add-seq == LWW-seq, so the
-            # coalesce reproduces the old cut exactly for them.
-            vis = (
-                F.coalesce(F.col("ivf_vis"), F.col("ivf_seq"))
-                if "ivf_vis" in stored.columns
-                else F.col("ivf_seq")
-            )
-            stored = stored.filter(vis < F.lit(int(max_seq)))
+            stored = stored.filter(F.col("ivf_vis") < F.lit(int(max_seq)))
         stored = self.tombstones.apply(stored, "vec_id")
         # Bucket pruning is hash-coarse; the cid equi-join below is the
         # exact cell filter (and the shuffle key).

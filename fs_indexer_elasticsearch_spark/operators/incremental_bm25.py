@@ -150,7 +150,7 @@ class Bm25IndexStore:
         ids = meta.get("tombstoned") or []
         if not ids:
             return None
-        id_type = meta.get("id_type", "bigint")
+        id_type = meta["id_type"]
         return self.spark.createDataFrame(
             [(i,) for i in ids], f"doc_id {id_type}"
         )
@@ -297,7 +297,7 @@ class Bm25IndexStore:
         listed = meta.get("tombstoned") or []
         if not listed:
             return None
-        id_type = meta.get("id_type", "bigint")
+        id_type = meta["id_type"]
         ids = self.spark.createDataFrame(
             [(i,) for i in listed], f"doc_id {id_type}"
         )

@@ -139,10 +139,7 @@ class TombstoneStore:
     generation rows behind — ignored by every probe — instead of
     silently filtering docs out of the fresh corpus forever (the one
     crash window no later commit repaired). ``clear()`` is thereby
-    pure GC. ``gen_of`` is the index's current-generation resolver;
-    logs written before generations existed read as generation 0,
-    which is also what a never-seeded-again index resolves — fully
-    backward compatible.
+    pure GC. ``gen_of`` is the index's current-generation resolver.
     """
 
     def __init__(
@@ -201,17 +198,13 @@ class TombstoneStore:
     def ids(self) -> DataFrame | None:
         """Current-GENERATION tombstoned ids (None when the log is
         empty). Rows from earlier generations — stale entries a crash
-        left behind after a re-seed — are never served; pre-generation
-        logs read as generation 0."""
+        left behind after a re-seed — are never served."""
         cur = self.store.read()
         if cur is None:
             return None
-        gen = (
-            F.coalesce(F.col("gen"), F.lit(0))
-            if "gen" in cur.columns
-            else F.lit(0)
+        return cur.filter(F.col("gen") == int(self._gen_of())).select(
+            self.id_col
         )
-        return cur.filter(gen == int(self._gen_of())).select(self.id_col)
 
     def unmark(self, ids: DataFrame) -> int | None:
         """Delete the given ids from the log — the RESURRECTION path

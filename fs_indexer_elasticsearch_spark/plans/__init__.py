@@ -86,6 +86,14 @@ from . import layout_queries  # noqa: E402,F401
 # prefix. Five multi-round driver-green queries slide below the
 # boundary by order; every family keeps a prefix anchor.
 _PRIORITY = [
+    # Rotated into the prefix for the one-format change (checkpoint
+    # topology changed, mechanical rule): the tombstone log's ids()
+    # filters on its gen column directly instead of a coalesce to 0
+    # for logs written before the column existed, and the filtered
+    # frame is inside a recorded checkpoint — same rows, same oracle
+    # hashes.
+    "dedup_incremental_tombstone",
+    "substring_incremental_tombstone",
     # Rotated into the prefix for the joined-view core (plans changed,
     # mechanical rule): the five joined maintainers now fold one
     # signed-row core (operators/ivm._KeyChain), so every query built
@@ -118,7 +126,6 @@ _PRIORITY = [
     "dedup_incremental_rebucket",
     "incremental_curation_cycle",
     "substring_dup_incremental",
-    "substring_incremental_tombstone",
     "ann_incremental_ivf_topk",
     "ann_ivf_split_topk",
     "ann_ivf_coldmerge_topk",
@@ -291,7 +298,6 @@ _PRIORITY = [
     # decontaminate_clean, store_point_lookup,
     # substring_incremental_tombstone (all unchanged since r8,
     # driver-green twice, families still anchored in the prefix).
-    "dedup_incremental_tombstone",
     # Dedup / similarity core + quality gates
     "dedup_exact",
     "dedup_minhash_lsh",

@@ -35,6 +35,14 @@ identity (key, bucket_key, version_col, layout) is immutable and
 validated on reopen against ``_LAYOUT.json`` (a store written in the
 retired one-directory-per-version ``hardlink`` layout fails there).
 
+A store opens only the format it writes: every committed version has a
+``_STORECFG`` with its bucket count and schema, and every committed
+store has ``_LAYOUT.json``. A store written before those files existed
+is refused with a ValueError naming its path (and version) — the
+Delta Lake protocol check: a reader refuses a table it cannot read
+instead of carrying a reader for every past layout. Rebuild such a
+store from its source.
+
 Writes are single-writer by contract, and the contract is ENFORCED
 fail-fast: every commit first atomically claims its version number
 (``_TXN_v<N>``, created by an atomic hard-link of a pid-stamped temp
@@ -58,6 +66,7 @@ from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.merge import upsert_newer_wins
 
@@ -279,148 +288,9 @@ class SnapshotStore:
         self.bucket_key = bucket_key or key
         os.makedirs(path, exist_ok=True)
         self._check_identity()
-        self._backfill_cfg()
-
-    def _backfill_cfg(self) -> None:
-        """First reopen of a store written before _STORECFG sidecars
-        existed: pin the CURRENT version's bucket count on disk —
-        DERIVED FROM THE COMMITTED DATA, not from any opener's
-        constructor value — so every subsequent open adopts the
-        recorded count instead of its own constructor default. The
-        constructor value is only a hypothesis here: when openers with
-        different counts race this backfill, trusting whichever wins
-        the flock would (for a wrong winner) silently hash every
-        pruned read into a phantom layout — read_keys would prune to
-        bucket files the keys don't live in and return EMPTY, the
-        worst failure mode for a store. ``_derive_legacy_buckets``
-        recovers the true count from the data's own (key, bucket)
-        labels, so the pinned value is winner-independent. New stores
-        never hit this: every commit writes its own cfg."""
-        import fcntl
-
         v = self.current_version()
-        if v is None or self._read_cfg(v) is not None:
-            return
-        # Under the store's claim flock: concurrent openers must not
-        # race the check-then-replace — one derives and writes, the
-        # rest adopt the on-disk truth (re-read after the write, so
-        # _cfg_cache can never disagree with the file).
-        with open(os.path.join(self.path, ".claims.lock"), "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                cfg = self._read_cfg(v)
-                if cfg is None:
-                    n = self._derive_legacy_buckets(v)
-                    tmp = self._cfg_path(v) + f".tmp.{os.getpid()}"
-                    with open(tmp, "w") as f:
-                        json.dump({"num_buckets": n}, f)
-                    os.replace(tmp, self._cfg_path(v))
-                    cfg = self._read_cfg(v)
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
-        self._cfg_cache = (v, cfg["num_buckets"])
-
-    def _derive_legacy_buckets(self, v: int) -> int:
-        """Recover the bucket count a cfg-less legacy version was
-        PHYSICALLY written under, from the data itself. The manifest's
-        bucket->files map labels every row with its bucket, and the writer
-        computed that label as ``pmod(xxhash64(bucket_key), n)`` — so
-        for every row, the true ``n`` divides ``xxhash64(key) −
-        bucket``. The gcd of those differences is taken over EVERY
-        row of the version (r11 advice: a per-bucket sample cap left
-        a probabilistic window — with 1-2 rows per bucket a wrong
-        constructor value has a ~1/d chance per row of spuriously
-        passing the divisibility check, and the unsampled rows then
-        hash into phantom bucket files on every pruned read). With
-        full coverage the adopted count is PROVEN consistent with the
-        data: any ``n`` dividing the full-store gcd assigns every
-        stored row exactly its physical bucket label, so pruned
-        reads, keyed lookups, and partial merges all resolve to the
-        files the rows actually live in.
-
-        The scan is distributed — each partition folds its own
-        ``gcd(h − b)`` in exact Python integers (no int64 wraparound:
-        ``|h − b|`` can exceed the long range) and the driver folds
-        one partial row per partition, never the data.
-
-        Cost: one flock-serialized, column-pruned pass over the
-        version at the first reopen of a pre-sidecar store — never on
-        the hot path; every commit since sidecars exist records its
-        own cfg."""
-        import math
-
-        files = self._read_manifest(v)
-        occupied = sorted(b for b, rels in files.items() if rels)
-        if not occupied:
-            return self._default_buckets
-        parts = []
-        for b in occupied:
-            paths = [os.path.join(self._data_dir(), r) for r in files[b]]
-            parts.append(
-                self.spark.read.option("recursiveFileLookup", "true")
-                .parquet(*paths)
-                .select(
-                    F.xxhash64(F.col(self.bucket_key)).alias("h"),
-                    F.lit(b).alias("_bucket"),
-                )
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-
-        def _partial_gcd(batches):
-            import pandas as pd
-
-            g, mx, cnt = 0, -1, 0
-            for pdf in batches:
-                hs = pdf["h"].to_numpy()
-                bs = pdf["_bucket"].to_numpy()
-                cnt += len(hs)
-                if len(bs):
-                    mx = max(mx, int(bs.max()))
-                for h, b in zip(hs.tolist(), bs.tolist()):
-                    g = math.gcd(g, h - b)
-                    if g == 1:
-                        break
-                if g == 1:
-                    break
-            # g as string: a single-row partition's |h − b| can
-            # exceed int64, and gcd never grows past its inputs.
-            yield pd.DataFrame({"g": [str(g)], "mx": [mx], "cnt": [cnt]})
-
-        partials = df.mapInPandas(
-            _partial_gcd, "g string, mx int, cnt long"
-        ).collect()  # bounded: one row per scan partition
-        if not partials or sum(r.cnt for r in partials) == 0:
-            return self._default_buckets
-        max_b = max(r.mx for r in partials)
-        g = 0
-        for r in partials:
-            g = math.gcd(g, int(r.g))
-        d = self._default_buckets
-        # Constructor value first: when it's the true count (the
-        # common case — same code opened the store that wrote it), g
-        # may be a small multiple of it; with every row folded into g
-        # the divisibility check is a proof, not a sample — keep the
-        # familiar value instead of over-splitting.
-        if d > max_b and (g == 0 or g % d == 0):
-            return d
-        if g:
-            # Smallest divisor of g that can label every occupied
-            # bucket — with full-row coverage, that's the written
-            # count (wrong counts fail the mod on some row).
-            for cand in range(max_b + 1, min(abs(g), 1 << 20) + 1):
-                if g % cand == 0:
-                    return cand
-        raise RuntimeError(
-            f"cannot derive the bucket layout of legacy store "
-            f"{self.path!r} v{v}: the rows are "
-            f"inconsistent with constructor num_buckets={d} and no "
-            f"count ≤ 2^20 fits (gcd={g}, max bucket={max_b}). "
-            "Refusing to guess — a wrong count silently empties "
-            "pruned reads. Reopen with the count the store was "
-            "written with, or rebucket after a full read()."
-        )
+        if v is not None:
+            self._cfg_cache = (v, self._cfg_count(v))
 
     # -- pointer management -------------------------------------------------
     def _pointer_path(self) -> str:
@@ -558,12 +428,19 @@ class SnapshotStore:
         pruned reads, duplicate keys scattered across buckets), so
         mismatch raises here instead. The bucket COUNT is deliberately
         not identity: it is versioned per commit and evolvable via
-        ``rebucket``."""
+        ``rebucket``. Every commit writes the identity file before
+        its pointer swap, so only a new, empty store lacks it."""
         try:
             with open(os.path.join(self.path, _LAYOUT_FILE)) as f:
                 on_disk = json.load(f)
         except (FileNotFoundError, ValueError):
-            return  # new store, or one created before identity files
+            if self.current_version() is None:
+                return
+            raise ValueError(
+                f"snapshot store at {self.path} has committed versions but "
+                f"no readable {_LAYOUT_FILE}: it predates the format this "
+                "code reads; rebuild the store"
+            )
         mine = self._identity()
         if on_disk != mine:
             raise ValueError(
@@ -588,34 +465,43 @@ class SnapshotStore:
         version's committed _STORECFG sidecar, so every probe, merge,
         and pruned read hashes against the layout the live data was
         actually written under, no matter what the constructor said.
-        Empty store: the constructor's value. A store written before
-        config sidecars existed gets its count pinned at first reopen
-        (``_backfill_cfg``), so even legacy stores stop trusting later
-        constructors after one open."""
+        Empty store: the constructor's value."""
         if self._pinned_buckets is not None:
             return self._pinned_buckets
         v = self.current_version()
         if v is None:
             return self._default_buckets
-        cached_v, cached_n = self._cfg_cache
-        if cached_v == v:
-            return cached_n
-        cfg = self._read_cfg(v)
-        n = cfg.get("num_buckets", self._default_buckets) if cfg else self._default_buckets
-        self._cfg_cache = (v, n)
-        return n
+        if self._cfg_cache[0] != v:
+            self._cfg_cache = (v, self._cfg_count(v))
+        return self._cfg_cache[1]
 
     def _cfg_path(self, version: int) -> str:
         return os.path.join(self.path, f"{_CFG_PREFIX}{version}.json")
 
-    def _read_cfg(self, version: int) -> dict | None:
+    def _read_cfg(self, version: int) -> dict:
+        """Version ``version``'s committed config. Every commit records
+        the bucket count and the schema, so a retained version without
+        them was written in an older format: refused with the store
+        path and version, never guessed."""
         try:
             with open(self._cfg_path(version)) as f:
-                return json.load(f)
+                cfg = json.load(f)
         except (FileNotFoundError, ValueError):
-            return None
+            cfg = {}
+        if "num_buckets" not in cfg or "schema_json" not in cfg:
+            raise ValueError(
+                f"snapshot store at {self.path}: version {version} has no "
+                f"{_CFG_PREFIX}{version}.json with num_buckets and "
+                "schema_json, so it predates the format this code reads; "
+                "rebuild the store"
+            )
+        return cfg
 
-    def _commit_cfg(self, version: int, schema=None) -> None:
+    def _cfg_count(self, version: int) -> int:
+        """Bucket count a retained version was written under."""
+        return self._read_cfg(version)["num_buckets"]
+
+    def _commit_cfg(self, version: int, schema) -> None:
         """Record the bucket count version ``version`` is being written
         under — before its pointer swap, same crash contract as meta:
         an orphan _STORECFG with n > pointer is never read (exact-
@@ -627,19 +513,17 @@ class SnapshotStore:
         parquet footers — every ``spark.read.parquet`` without a
         schema costs a driver-side footer fetch per call, and the
         store-backed queries issue several reads per maintenance
-        cycle. Versions committed before this field existed fall back
-        to inference (read paths check for the key)."""
+        cycle."""
         import time
 
-        n = self.num_buckets
-        cfg: dict = {"num_buckets": n, "committed_at": round(time.time(), 3)}
-        if schema is not None:
-            import json as _json
-
-            fields = [f for f in schema.fields if f.name != "_bucket"]
-            cfg["schema_json"] = _json.dumps(
+        fields = [f for f in schema.fields if f.name != "_bucket"]
+        cfg: dict = {
+            "num_buckets": self.num_buckets,
+            "committed_at": round(time.time(), 3),
+            "schema_json": json.dumps(
                 {"type": "struct", "fields": [f.jsonValue() for f in fields]}
-            )
+            ),
+        }
         if self._rebucket_base is not None:
             # Provenance tag: this version is a PURE REBUCKET of that
             # base — same rows, new physical layout. The change feed
@@ -651,18 +535,7 @@ class SnapshotStore:
         with open(tmp, "w") as f:
             json.dump(cfg, f)
         os.replace(tmp, self._cfg_path(version))
-        self._cfg_cache = (version, n)
-
-    def _pinned_schema(self, cfg: dict | None):
-        """StructType recorded at commit time for a version (None for
-        legacy versions → the caller infers from footers)."""
-        if not cfg or "schema_json" not in cfg:
-            return None
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(_json.loads(cfg["schema_json"]))
+        self._cfg_cache = (version, cfg["num_buckets"])
 
     # -- per-version meta payload --------------------------------------------
     # A small JSON document committed WITH each version by the same
@@ -743,14 +616,10 @@ class SnapshotStore:
         cast to the STORED column type (xxhash64 is type-sensitive:
         hashing a probe int against a column written as bigint would
         silently probe the wrong buckets)."""
-        stored_t = self._schema_meta()["fields"].get(self.bucket_key)
+        stored_t = self._schema_meta()["fields"][self.bucket_key]
         df = self.spark.createDataFrame(
             [(k,) for k in keys], f"`{self.bucket_key}` {stored_t}"
-            if stored_t
-            else None,
         )
-        if stored_t is None:  # pre-schema store: trust the probe type
-            df = df.toDF(self.bucket_key)
         rows = df.select(self._bucket_col().alias("b")).distinct().collect()
         return sorted(r.b for r in rows)
 
@@ -791,22 +660,13 @@ class SnapshotStore:
         when the two versions were written under different bucket
         counts (a rebucket boundary) — bucket ids aren't comparable
         across layouts, so the change feed must diff every bucket."""
-        nf = (self._read_cfg(v_from) or {}).get("num_buckets")
-        nt = (self._read_cfg(v_to) or {}).get("num_buckets")
-        if nf != nt:
+        if self._cfg_count(v_from) != self._cfg_count(v_to):
             return None
         mf, mt = self._read_manifest(v_from), self._read_manifest(v_to)
         return sorted(
             b
             for b in set(mf) | set(mt)
             if set(mf.get(b, ())) != set(mt.get(b, ()))
-        )
-
-    def _cfg_count(self, version: int) -> int:
-        """Bucket count a retained version was written under (legacy
-        cfg-less versions: the constructor seed — see read())."""
-        return (self._read_cfg(version) or {}).get(
-            "num_buckets", self._default_buckets
         )
 
     def _changed_bucket_groups(
@@ -820,20 +680,18 @@ class SnapshotStore:
         tag — contributes nothing (same rows, new layout). Returns
         ``{bucket_count: {bucket, ...}}`` (possibly several counts when
         the window spans an evolution), ``{}`` when nothing changed,
-        or None when a count change can't be proven pure (legacy
-        rebucket, vacuumed intermediate) — the caller degrades to a
-        full two-version diff, honestly."""
+        or None when a count change can't be proven pure (its
+        rebucket version was vacuumed) — the caller degrades to a full
+        two-version diff, honestly."""
         path = [v for v in self.versions() if v_from <= v <= v_to]
         groups: dict[int, set[int]] = {}
         for a, b in zip(path, path[1:]):
             na, nb = self._cfg_count(a), self._cfg_count(b)
             if na == nb:
                 ch = self.changed_buckets(a, b)
-                if ch is None:  # pragma: no cover - counts equal above
-                    return None
                 if ch:
                     groups.setdefault(na, set()).update(ch)
-            elif (self._read_cfg(b) or {}).get("rebucket_from") != a:
+            elif self._read_cfg(b).get("rebucket_from") != a:
                 return None
         return groups
 
@@ -880,12 +738,11 @@ class SnapshotStore:
         phantom insert/delete. A nightly merge that rewrites 1% of a
         100 TB store yields a change feed that reads ~2 TB (both
         versions' slices), never 200 TB. Only an UNPROVABLE count
-        change (legacy rebucket with no tag, vacuumed intermediate
-        version, non-divisible counts) degrades — honestly — to a full
-        two-version diff. Row-level classification is exact —
-        null-safe column comparison, not a hash — so a
-        rewritten-but-identical row never surfaces as a phantom
-        update. Reference parity: the scanner's new/modified/removed
+        change (vacuumed intermediate version, non-divisible counts)
+        degrades — honestly — to a full two-version diff. Row-level
+        classification is exact — null-safe column comparison, not a
+        hash — so a rewritten-but-identical row never surfaces as a
+        phantom update. Reference parity: the scanner's new/modified/removed
         detection between consecutive scans (scanner.py:414-463),
         served here from the store's own commit metadata instead of a
         rescan."""
@@ -1048,10 +905,8 @@ class SnapshotStore:
         os.replace(tmp, self._manifest_path(version))  # the atomic commit
 
     def _list_data_files(self) -> set[str]:
-        """All parquet data files under data/, as manifest relpaths.
-        Handles both on-disk shapes: ``<commit>/_bucket=N/file``
-        (current) and ``_bucket=N/file`` (stores written before commit
-        directories existed)."""
+        """All parquet data files under data/
+        (``<commit>/_bucket=N/file``), as manifest relpaths."""
         out: set[str] = set()
         data = self._data_dir()
         if not os.path.isdir(data):
@@ -1160,11 +1015,10 @@ class SnapshotStore:
         the key, so it is recomputed instead of inferred — under the
         count THIS version was written with (a time-travel read across
         a rebucket boundary must label rows by its own version's
-        physical layout). Legacy pre-_STORECFG versions were written
-        under the CONSTRUCTOR count (rebucket always records cfg, so a
-        cfg-less version's count never changed) — falling through to
-        the current version's count would mislabel rows after a later
-        rebucket."""
+        physical layout). The read pins the schema the version's cfg
+        recorded at commit time, which skips the per-call
+        footer-inference round trip (r15 optimization)."""
+        cfg = self._read_cfg(v)
         paths = [
             os.path.join(self._data_dir(), rel)
             for b, rels in self._read_manifest(v).items()
@@ -1175,16 +1029,11 @@ class SnapshotStore:
             # A table whose rows were all deleted, or a slice of empty
             # buckets, has no parquet to read: typed empty frame.
             return self._empty_df()
-        cfg = self._read_cfg(v)
-        n = cfg.get("num_buckets") if cfg else self._default_buckets
-        reader = self.spark.read.option("recursiveFileLookup", "true")
-        pinned = self._pinned_schema(cfg)
-        if pinned is not None:
-            # Schema recorded at commit time: skip the per-call
-            # footer-inference round trip (r15 optimization).
-            reader = reader.schema(pinned)
-        return reader.parquet(*paths).withColumn(
-            "_bucket", self._bucket_col(n)
+        return (
+            self.spark.read.option("recursiveFileLookup", "true")
+            .schema(StructType.fromJson(json.loads(cfg["schema_json"])))
+            .parquet(*paths)
+            .withColumn("_bucket", self._bucket_col(cfg["num_buckets"]))
         )
 
     def overwrite(
@@ -1238,7 +1087,7 @@ class SnapshotStore:
         out: list[dict] = []
         cur = self.current_version()
         for v in self.versions():
-            cfg = self._read_cfg(v) or {}
+            cfg = self._read_cfg(v)
             files, size = 0, 0
             for f in self._version_data_files(v):
                 try:
@@ -1250,7 +1099,7 @@ class SnapshotStore:
                 {
                     "version": v,
                     "committed_at": cfg.get("committed_at"),
-                    "num_buckets": cfg.get("num_buckets"),
+                    "num_buckets": cfg["num_buckets"],
                     "n_files": files,
                     "bytes": size,
                     "has_meta": os.path.exists(self._meta_path(v)),
@@ -1694,7 +1543,7 @@ class SnapshotStore:
             for v in versions:
                 if v == cur:
                     continue
-                ts = (self._read_cfg(v) or {}).get("committed_at")
+                ts = self._read_cfg(v).get("committed_at")
                 if ts is not None and ts < cutoff:
                     doomed.add(v)
         victims = sorted(doomed)

@@ -20,7 +20,6 @@ class PipelineConfig:
     skip_patterns: list[str] = field(
         default_factory=lambda: [".git", "__pycache__", "*.tmp", "node_modules", ".DS_Store"]
     )
-    scan_chunk_size: int = 100_000
     # Re-split budget: a scan task emitting more entries than this
     # hands unwalked subdirs back as frontier work (None = one round).
     max_entries_per_task: int | None = None
@@ -90,7 +89,6 @@ def load_config(path: str | None = None) -> PipelineConfig:
         root_path=data.get("root_path", "."),
         mode=data.get("mode", "elasticsearch"),
         skip_patterns=patterns,
-        scan_chunk_size=int(perf.get("scan_chunk_size", 100_000)),
         max_entries_per_task=(
             int(perf["max_entries_per_task"])
             if perf.get("max_entries_per_task")

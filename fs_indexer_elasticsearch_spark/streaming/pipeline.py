@@ -946,11 +946,9 @@ def streaming_ivf_pipeline(
     # stride change with an existing checkpoint would replay old
     # epochs with the NEW scheme's max_seq and admit rows the original
     # epoch never saw. Refuse up front — rebuilding the index (reseed)
-    # or the checkpoint is the migration. Stores seeded before the
-    # stamp existed default to the current value (the only scheme any
-    # persisted store in this codebase streamed under).
-    _meta = ivf_store.store.read_meta() or {}
-    _stamped = int(_meta.get("ivf_seq_stride", _IVF_SEQ_STRIDE))
+    # or the checkpoint is the migration. seed() always stamps it, so
+    # a missing stamp is a mismatch too.
+    _stamped = (ivf_store.store.read_meta() or {}).get("ivf_seq_stride")
     if _stamped != _IVF_SEQ_STRIDE:
         raise ValueError(
             f"streaming_ivf_pipeline: index at {ivf_store.path} was "

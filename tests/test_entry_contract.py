@@ -74,7 +74,6 @@ elasticsearch:
     assert cfg.mode == "index-only"
     assert cfg.root_path == "/mnt/fs"
     assert set(cfg.skip_patterns) == {".DS_Store", ".git", "node_modules"}
-    assert cfg.scan_chunk_size == 50000
     assert cfg.max_entries_per_task == 200000
     assert cfg.es_index == "my-index"
     assert cfg.es_bulk_size == 25000

@@ -563,6 +563,8 @@ def test_rebucket_evolves_count_and_preserves_rows(
 
 
 def test_rebucket_rollback_restores_old_count(spark, tmp_path):
+    import os as _os
+
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v", num_buckets=4
     )
@@ -574,7 +576,7 @@ def test_rebucket_rollback_restores_old_count(spark, tmp_path):
     store.rollback(1)
     assert store.num_buckets == 4  # the version's own layout wins
     # And the dead rebucketed branch's cfg sidecar is gone.
-    assert store._read_cfg(2) is None
+    assert not _os.path.exists(store._cfg_path(2))
     # Committing again after the rollback stays under the old count.
     store.merge(_df(spark, [("k0", 2, "new")]))
     assert store.num_buckets == 4
@@ -609,176 +611,46 @@ def test_crash_orphan_cfg_never_read_and_vacuumed(spark, tmp_path):
     assert not _os.path.exists(store._cfg_path(99))
 
 
-def test_legacy_cfgless_store_backfills_count_on_reopen(spark, tmp_path):
-    """A store whose current version predates _STORECFG sidecars gets
-    its bucket count PINNED at first reopen with the opener's value —
-    so a later opener with a different constructor default adopts the
-    pinned truth instead of hashing probes into a phantom layout (the
-    r8 advice: legacy stores fell back to the NEW constructor value)."""
-    import os as _os
-
-    path = str(tmp_path / "snap")
-    store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
-    store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(12)]))
-    # Simulate a legacy store: delete the committed cfg sidecar.
-    _os.remove(store._cfg_path(1))
-
-    first_reopen = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=4
-    )
-    assert first_reopen.num_buckets == 4
-    assert _os.path.exists(first_reopen._cfg_path(1))  # pinned on disk
-
-    # A second opener with a DIFFERENT constructor value adopts the
-    # backfilled truth, and its point lookups hash correctly.
-    other = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=16)
-    assert other.num_buckets == 4
-    assert {r.k for r in other.read_keys(["k3", "k7"]).collect()} == {"k3", "k7"}
-
-
-@pytest.mark.race
-def test_legacy_backfill_race_adopts_one_disk_truth(spark, tmp_path):
-    """Concurrent openers of a legacy (cfg-less) store constructed
-    with DIFFERENT num_buckets race the backfill: the check+write
-    runs under the store's claim flock, and — the r10 verdict fix —
-    the pinned value is DERIVED FROM THE COMMITTED DATA, so it is the
-    written count (4) no matter which opener wins the flock. Every
-    opener ends with a _cfg_cache identical to the one on-disk
-    sidecar, and pruned lookups hash into the real layout."""
+@pytest.mark.parametrize(
+    "damage",
+    ["cfg_removed", "schema_json_stripped", "layout_removed", "time_travel"],
+)
+def test_store_written_in_an_older_format_is_refused(spark, tmp_path, damage):
+    """A store opens only the format it writes: a committed version
+    without its complete _STORECFG (bucket count and schema), or a
+    committed store without _LAYOUT.json, raises a ValueError naming
+    the store's path — at open for the current version, and at the
+    read for a time-travel read of an older retained version (never a
+    KeyError, never a guessed bucket count or an inferred schema)."""
     import json as _json
     import os as _os
-    from concurrent.futures import ThreadPoolExecutor
+    import re
 
     path = str(tmp_path / "snap")
     store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(12)]))
-    _os.remove(store._cfg_path(1))
+    store.merge(_df(spark, [("k0", 2, "new")]))
 
-    def opener(nb):
-        return SnapshotStore(
-            spark, path, key="k", version_col="v", num_buckets=nb
-        )
+    def reopen():
+        return SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
 
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        stores = list(ex.map(opener, [16, 8, 32, 16, 8, 32, 16, 8]))
-    with open(stores[0]._cfg_path(1)) as f:
-        disk = _json.load(f)["num_buckets"]
-    # Winner-independent: no opener was constructed with 4, yet the
-    # data-derived truth is pinned.
-    assert disk == 4
-    for s in stores:
-        assert s.num_buckets == disk
-        assert s._cfg_cache == (1, disk)
-    # Lookups hash into the adopted layout, whatever opener won.
-    assert {r.k for r in stores[-1].read_keys(["k3", "k7"]).collect()} == {
-        "k3",
-        "k7",
-    }
-
-
-def test_legacy_backfill_derives_count_from_data(
-    spark, tmp_path, check_layout
-):
-    """DETERMINISTIC version of the race above (no flock lottery): a
-    single opener whose constructor value is WRONG (16 on a store
-    physically written with 4) must still pin 4 — the data's own
-    (key, bucket) labels prove the layout — and its pruned lookups
-    must find the keys."""
-    import os as _os
-
-    path = str(tmp_path / "snap")
-    store = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=4
-    )
-    store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(24)]))
-    _os.remove(store._cfg_path(1))
-
-    other = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=16
-    )
-    assert other.num_buckets == 4
-    assert {r.k for r in other.read_keys(["k3", "k7"]).collect()} == {
-        "k3",
-        "k7",
-    }
-    check_layout(other)
-
-
-def test_legacy_backfill_full_coverage_defeats_spurious_constructor(
-    spark, tmp_path
-):
-    """r11 advice: the old derivation sampled ≤64 rows per bucket, so
-    a wrong constructor value that is a spurious multiple of the true
-    count could pass the divisibility check on the sample while an
-    UNSAMPLED row contradicted it — and every pruned read of such a
-    row's key then hashed to a phantom bucket file and returned empty.
-    The derivation now folds EVERY row into the gcd, making adoption a
-    proof. This key set pins the exact hole: 64 bucket-0 keys whose
-    xxhash64 is ≡0 (mod 8) — consistent with the wrong constructor 8 —
-    plus one breaker (≡4 mod 8) that sorts LAST by hash, i.e. exactly
-    the row the old top-64-by-hash sample dropped."""
-    import os as _os
-
-    # Mined offline: all hash to bucket 0 under the true count 4 AND
-    # to 0 under the spurious constructor 8; the breaker s21462 also
-    # hashes to bucket 0 under 4 but to 4 under 8, with the LARGEST
-    # xxhash64 of the set (so a top-64-ascending sample excludes it).
-    consistent = [
-        "s53002", "s86539", "s170649", "s148165", "s158953", "s126756",
-        "s100960", "s65688", "s140920", "s181158", "s92174", "s116859",
-        "s30866", "s9094", "s120399", "s195483", "s163436", "s24254",
-        "s132458", "s137186", "s158687", "s173509", "s163442", "s179156",
-        "s150436", "s186581", "s14408", "s63649", "s185270", "s47434",
-        "s46835", "s151013", "s181852", "s158348", "s163438", "s97229",
-        "s27427", "s8581", "s162145", "s21149", "s86215", "s159897",
-        "s76634", "s164928", "s157977", "s188902", "s69134", "s102228",
-        "s130750", "s57843", "s22367", "s46912", "s12819", "s126475",
-        "s165162", "s96401", "s188096", "s195450", "s130147", "s116439",
-        "s122851", "s94323", "s170223", "s145420",
-    ]
-    breaker = "s21462"
-    # k1/k4/k2 occupy buckets 1/2/3 (mod 4), all 8-consistent — so the
-    # ONLY evidence against the constructor is the unsampled breaker.
-    fillers = ["k1", "k4", "k2"]
-    path = str(tmp_path / "snap")
-    store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
-    store.overwrite(
-        _df(spark, [(k, 1, "p") for k in consistent + [breaker] + fillers])
-    )
-    _os.remove(store._cfg_path(1))
-
-    other = SnapshotStore(
-        spark, path, key="k", version_col="v", num_buckets=8
-    )
-    assert other.num_buckets == 4
-    # The breaker's key is exactly the one a wrong adoption would
-    # black-hole: under 8 it hashes to bucket 4, a file that does not
-    # exist in the 4-bucket layout.
-    assert {r.k for r in other.read_keys([breaker, "k1"]).collect()} == {
-        breaker,
-        "k1",
-    }
-
-
-def test_legacy_backfill_underivable_raises_loudly(spark, tmp_path):
-    """A legacy store whose data contradicts every candidate count
-    (here: a manifest entry relabeled to a bucket no pmod layout could
-    have produced) must RAISE at open instead of guessing — a silent
-    wrong adoption empties pruned reads, the worst store failure mode."""
-    import os as _os
-
-    path = str(tmp_path / "snap")
-    store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
-    store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(24)]))
-    _os.remove(store._cfg_path(1))
-    # Mislabel one bucket: rows hashed for bucket 1 (mod 4) now claim
-    # bucket 5 — consistent with no n (n=4 can't label a bucket 5;
-    # anything > 5 fails the sampled rows' mod).
-    files = store._read_manifest(1)
-    files[5] = files.pop(1)
-    store._write_manifest(1, files)
-    with pytest.raises(RuntimeError, match="cannot derive the bucket layout"):
-        SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
+    if damage == "cfg_removed":
+        _os.remove(store._cfg_path(2))
+    elif damage == "schema_json_stripped":
+        with open(store._cfg_path(2)) as f:
+            cfg = _json.load(f)
+        del cfg["schema_json"]
+        with open(store._cfg_path(2), "w") as f:
+            _json.dump(cfg, f)
+    elif damage == "layout_removed":
+        _os.remove(_os.path.join(path, "_LAYOUT.json"))
+    else:
+        _os.remove(store._cfg_path(1))
+        with pytest.raises(ValueError, match=re.escape(path)):
+            reopen().read(version=1)
+        return
+    with pytest.raises(ValueError, match=re.escape(path)):
+        reopen()
 
 
 def test_merge_expected_base_pins_the_validated_state(spark, tmp_path):

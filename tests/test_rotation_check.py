@@ -5,9 +5,11 @@ near-miss, made a failing gate instead of a human judgment."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from plan_fingerprints import normalize_plan  # noqa: E402
 from rotation_check import affected_queries, check_rotation  # noqa: E402

@@ -6,13 +6,19 @@ structure exactly k times, never create cross-replica structure."""
 from __future__ import annotations
 
 import importlib.util
+import os
 
 import pyspark.sql.functions as F
 
 
 def _load_tool():
     spec = importlib.util.spec_from_file_location(
-        "scale_stress", "/root/repo/tools/scale_stress.py"
+        "scale_stress",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools",
+            "scale_stress.py",
+        ),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -2815,8 +2815,9 @@ def test_streaming_ivf_refuses_mismatched_seq_stride(spark, tmp_path):
     """Seq-scheme guard (r13 advice): a store seeded under a different
     per-epoch seq stride must be refused up front — replaying its
     checkpoints under the current stamping would admit rows from old
-    epochs into bounded searches. Also pins that seed() stamps the
-    stride into the meta at all."""
+    epochs into bounded searches. A store with no stamp at all is
+    refused the same way: seed() always stamps it. Also pins that
+    seed() stamps the stride into the meta at all."""
     import pytest as _pytest
 
     from fs_indexer_elasticsearch_spark.operators.incremental_ann import (
@@ -2846,21 +2847,25 @@ def test_streaming_ivf_refuses_mismatched_seq_stride(spark, tmp_path):
     assert (store.store.read_meta() or {})["ivf_seq_stride"] == IVF_SEQ_STRIDE
 
     # Doctor the stamped stride to simulate an index built by a code
-    # version with a different scheme.
+    # version with a different scheme, then drop the stamp entirely.
     orig = store.store.read_meta
-    store.store.read_meta = lambda *a, **kw: {
-        **(orig(*a, **kw) or {}),
-        "ivf_seq_stride": IVF_SEQ_STRIDE * 2,
-    }
-    with _pytest.raises(ValueError, match="seq stride"):
-        streaming_ivf_pipeline(
-            spark,
-            str(tmp_path / "vecs-in") + "/*",
-            vec_schema,
-            store,
-            str(tmp_path / "matches"),
-            str(tmp_path / "ckpt"),
-        )
+    doctored = [
+        lambda *a, **kw: {**orig(*a, **kw), "ivf_seq_stride": IVF_SEQ_STRIDE * 2},
+        lambda *a, **kw: {
+            k: v for k, v in orig(*a, **kw).items() if k != "ivf_seq_stride"
+        },
+    ]
+    for read_meta in doctored:
+        store.store.read_meta = read_meta
+        with _pytest.raises(ValueError, match="seq stride"):
+            streaming_ivf_pipeline(
+                spark,
+                str(tmp_path / "vecs-in") + "/*",
+                vec_schema,
+                store,
+                str(tmp_path / "matches"),
+                str(tmp_path / "ckpt"),
+            )
 
 
 def test_streaming_maintained_bm25(spark, tmp_path):

@@ -28,7 +28,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Queries with a documented reason to contain a broadcast nested-loop
 # join: a keyless join against a broadcast 1-row aggregate (scalar

@@ -7,8 +7,11 @@ For every registered query this builds the DataFrame (no execution
 beyond what plan construction itself performs — store seeding, bounded
 existence probes) and hashes the normalized analyzed logical plan:
 expression ids, plan ids and other session-unique counters are
-stripped; dataset-fingerprint-tagged store paths are KEPT (a store
-schema/tag bump is a real implementation change). The resulting
+stripped. A store read prints as ``Relation [cols] parquet`` and a
+checkpointed frame as ``LogicalRDD [cols], false``: neither carries a
+path, so the hash covers a store's columns and types and every
+expression over them, but not the store's path or its tag (a tag bump
+alone moves no fingerprint). The resulting
 name -> sha map is written to PLAN_FINGERPRINTS.json, committed per
 round; tools/rotation_check.py diffs HEAD's map against the map at the
 last driver round commit — a differing or new fingerprint means the
