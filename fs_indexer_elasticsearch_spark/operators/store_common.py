@@ -36,7 +36,7 @@ def touched_buckets(
     Bounded driver metadata: <= num_buckets ints — the one justified
     collect in the probe path (same class as SnapshotStore.merge's
     own touched-bucket listing)."""
-    n = None if version is None else snapshot_store._cfg_count(version)
+    n = None if version is None else snapshot_store._bucket_count(version)
     return sorted(
         r._bucket
         for r in rows.withColumn("_bucket", snapshot_store._bucket_col(n))

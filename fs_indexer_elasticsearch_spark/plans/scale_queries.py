@@ -220,6 +220,23 @@ def _dataset_fingerprint(sf_dir: str, *tables: str) -> str:
     return hsh.hexdigest()[:12]
 
 
+def _store_cache_path(kind: str, sf_dir: str, fp: str, parts: str) -> str:
+    """The /tmp path of a cached index store seeded from ``sf_dir``:
+    an md5 over the dataset path, its fingerprint ``fp``, the site's
+    own ``parts`` (config plus a cache version) and the snapshot
+    store's ``STORE_FORMAT``. A store format change therefore moves
+    every cached store instead of reopening one the code refuses."""
+    import hashlib
+    import os
+
+    from ..sinks.snapshot import STORE_FORMAT
+
+    tag = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}|{fp}|{parts}|format{STORE_FORMAT}".encode()
+    ).hexdigest()[:12]
+    return f"/tmp/spark-graft-{kind}-{tag}"
+
+
 from contextlib import contextmanager
 
 
@@ -337,7 +354,7 @@ def dedup_incremental_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-layout EVOLUTION under the incremental dedup cycle:
     the band index is seeded at 8 physical buckets, grown to 32 via
     ``SnapshotStore.rebucket`` (one O(table) rewrite committed as a
-    normal version whose _STORECFG sidecar records the new count),
+    normal version whose commit file records the new count),
     and THEN the O(delta) probe runs — against the post-evolution
     layout. Shares dedup_incremental_batch's oracle verbatim: the
     bucket count is a physical knob, so growing it mid-life must be
@@ -349,13 +366,11 @@ def dedup_incremental_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets every touched bucket is a ~3 TB rewrite per nightly
     merge. Growing the count (here 8 -> 32; production 32 -> 4096)
     shrinks the merge's rewrite unit without re-seeding, and because
-    the count rides in the version's own config sidecar, crash
+    the count rides in the version's own commit file, crash
     recovery, rollback, and reopening with a stale constructor value
     all resolve the layout the live data was actually written under
-    (`sinks/snapshot.py` rebucket/_commit_cfg). Idempotent across
+    (`sinks/snapshot.py` rebucket/_commit). Idempotent across
     bench/gate reruns: once grown, rebucket(32) is a no-op."""
-    import hashlib
-    import os
 
     from ..operators.incremental_dedup import MinHashBandStore
     from .llm_queries import _aug_corpus
@@ -364,10 +379,7 @@ def dedup_incremental_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = aug.filter(F.col("doc_id") < 1_000_000_000_000)
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb8rb32|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-bandstore-{tag}"
+    path = _store_cache_path("bandstore", sf_dir, fp, "nh16|b4|sh3|nb8rb32|manifest|v1")
     with _store_lock(path):
         store = MinHashBandStore(spark, path, num_buckets=8)
         if store.store.current_version() is None:
@@ -407,16 +419,11 @@ def store_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_keys/_write_data_files). The reference serves this with a
     B-tree primary key (db_duckdb schema); buckets + clustering are
     the shared-nothing equivalent."""
-    import hashlib
-    import os
 
     from ..sinks.snapshot import SnapshotStore
 
     fp = _dataset_fingerprint(sf_dir, "orders")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|orders|nb32|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-orderstore-{tag}"
+    path = _store_cache_path("orderstore", sf_dir, fp, "orders|nb32|manifest|v1")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
     with _store_lock(path):
         store = SnapshotStore(
@@ -497,16 +504,11 @@ def _cdf_store(
     (fingerprint-tagged path, flock around the cycle); replays skip
     straight to the reads — the retained versions are immutable state
     shared by every CDF-family gate query."""
-    import hashlib
-    import os
 
     from ..sinks.snapshot import SnapshotStore
 
     fp = _dataset_fingerprint(sf_dir, "orders")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|{tag_body}|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-{path_prefix}-{tag}"
+    path = _store_cache_path(path_prefix, sf_dir, fp, f"{tag_body}|manifest|v1")
     base, delta, removed = _cdf_demo_frames(spark, sf_dir, dim_col)
     with _store_lock(path):
         store = SnapshotStore(
@@ -898,16 +900,11 @@ def _demo_store(
     ...] — step N merges only when the store sits at version N, so
     reruns skip straight to the reads). ONE definition so the tag
     scheme and replay guard cannot drift between store builders."""
-    import hashlib
-    import os
 
     from ..sinks.snapshot import SnapshotStore
 
     fp = _dataset_fingerprint(sf_dir, *fp_tables)
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|{name}|nb{num_buckets}|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-{name}-{tag}"
+    path = _store_cache_path(name, sf_dir, fp, f"{name}|nb{num_buckets}|manifest|v1")
     with _store_lock(path):
         store = SnapshotStore(
             spark, path, key=key, version_col="v",
@@ -1728,8 +1725,6 @@ def incremental_view_joined_chained(
 
 
 def _incremental_batch_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
 
     from ..operators.incremental_dedup import MinHashBandStore
     from .llm_queries import _aug_corpus
@@ -1738,10 +1733,7 @@ def _incremental_batch_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = aug.filter(F.col("doc_id") < 1_000_000_000_000)
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|manifest|v2".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-bandstore-{tag}"
+    path = _store_cache_path("bandstore", sf_dir, fp, "nh16|b4|sh3|nb32|manifest|v2")
     with _store_lock(path):
         store = MinHashBandStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
@@ -1846,8 +1838,6 @@ def incremental_curation_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pure probe also makes repeated gate/bench invocations trivially
     idempotent. Quality runs FIRST so the band probe only pays for
     quality survivors — filters before joins, the usual order."""
-    import hashlib
-    import os
 
     from ..functions.text import tokens
     from ..operators.incremental_dedup import MinHashBandStore
@@ -1858,10 +1848,9 @@ def incremental_curation_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = aug.filter(F.col("doc_id") < 1_000_000_000_000)
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|cur|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-bandstore-{tag}"
+    path = _store_cache_path(
+        "bandstore", sf_dir, fp, "nh16|b4|sh3|nb32|cur|manifest|v1"
+    )
 
     bt = batch.select(
         "doc_id", "text", tokens("text").alias("toks")
@@ -1925,8 +1914,6 @@ def dedup_incremental_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(index) pass later (pytest-covered). The oracle recomputes the
     matches from scratch over corpus-minus-removed, proving the
     tombstone filter is exact — not just 'applied'."""
-    import hashlib
-    import os
 
     from ..operators.incremental_dedup import MinHashBandStore
     from .llm_queries import _aug_corpus
@@ -1935,10 +1922,9 @@ def dedup_incremental_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = aug.filter(F.col("doc_id") < 1_000_000_000_000)
     batch = aug.filter(F.col("doc_id") >= 1_000_000_000_000)
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|nh16|b4|sh3|nb32|tomb|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-bandstore-{tag}"
+    path = _store_cache_path(
+        "bandstore", sf_dir, fp, "nh16|b4|sh3|nb32|tomb|manifest|v1"
+    )
     with _store_lock(path):
         store = MinHashBandStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
@@ -1980,8 +1966,6 @@ def ann_incremental_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_ivf_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
 
     from ..operators.incremental_ann import IvfIndexStore
 
@@ -1991,10 +1975,7 @@ def _incremental_ivf_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivf|c16|nb32|manifest|v3".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-ivfstore-{tag}"
+    path = _store_cache_path("ivfstore", sf_dir, fp, "ivf|c16|nb32|manifest|v3")
     with _store_lock(path):
         store = IvfIndexStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
@@ -2027,8 +2008,6 @@ def ann_ivf_split_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed threshold, k-growing skewed corpus, flat probe time,
     recall >= 0.8 at nprobe=2 — is measured by SCALE_STRESS's
     ivf_hot_split probe."""
-    import hashlib
-    import os
 
     from ..operators.incremental_ann import IvfIndexStore
 
@@ -2040,10 +2019,9 @@ def ann_ivf_split_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivfsplit|c16|nb32|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-ivfsplitstore-{tag}"
+    path = _store_cache_path(
+        "ivfsplitstore", sf_dir, fp, "ivfsplit|c16|nb32|manifest|v1"
+    )
     with _store_lock(path):
         store = IvfIndexStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
@@ -2287,8 +2265,6 @@ def ann_ivf_coldmerge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full ones out of the ``nprobe`` budget — recall decays with no
     correctness signal; the merge is the bounded-state half of the
     maintenance pair."""
-    import hashlib
-    import os
 
     from ..operators.incremental_ann import IvfIndexStore
 
@@ -2300,10 +2276,7 @@ def ann_ivf_coldmerge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivfcold|c16|nb32|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-ivfcoldstore-{tag}"
+    path = _store_cache_path("ivfcoldstore", sf_dir, fp, "ivfcold|c16|nb32|manifest|v1")
     with _store_lock(path):
         store = IvfIndexStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
@@ -2383,8 +2356,6 @@ def substring_incremental_tombstone(spark: SparkSession, sf_dir: str) -> DataFra
     proving the log's filter is exact at the position-row level (a
     doc's EVERY shingle row must vanish, or a span would survive
     partially)."""
-    import hashlib
-    import os
 
     from ..operators.incremental_substring import ShingleSpanStore
 
@@ -2392,10 +2363,9 @@ def substring_incremental_tombstone(spark: SparkSession, sf_dir: str) -> DataFra
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|shingle|k5|nb32|tomb|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-shinglestore-{tag}"
+    path = _store_cache_path(
+        "shinglestore", sf_dir, fp, "shingle|k5|nb32|tomb|manifest|v1"
+    )
     with _store_lock(path):
         store = ShingleSpanStore(spark, path, k=5, num_buckets=32)
         if store.store.current_version() is None:
@@ -2469,8 +2439,6 @@ def substring_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches, so a prior run's merged rows are invisible to the next
     run's seq-1 match (replay purity) — byte-identical to a fresh
     store."""
-    import hashlib
-    import os
 
     from ..operators.incremental_substring import ShingleSpanStore
 
@@ -2478,10 +2446,7 @@ def substring_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|shingle|k5|nb32|manifest|v2".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-shinglestore-{tag}"
+    path = _store_cache_path("shinglestore", sf_dir, fp, "shingle|k5|nb32|manifest|v2")
     with _store_lock(path):
         store = ShingleSpanStore(spark, path, k=5, num_buckets=32)
         if store.store.current_version() is None:
@@ -3508,8 +3473,6 @@ def ann_ivf_maintain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no vector may be lost, duplicated, or stranded under a retired
     cell id. Seq domains mirror the streaming feeder: seed owns 0,
     the add owns 1, maintenance owns 2.. (one per committed op)."""
-    import hashlib
-    import os
 
     from ..operators.incremental_ann import IvfIndexStore
 
@@ -3521,10 +3484,9 @@ def ann_ivf_maintain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centroids = emb.filter(F.col("vec_id") < 16)
     fp = _dataset_fingerprint(sf_dir, "embeddings")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|ivfmaint|c16|nb32|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-ivfmaintstore-{tag}"
+    path = _store_cache_path(
+        "ivfmaintstore", sf_dir, fp, "ivfmaint|c16|nb32|manifest|v1"
+    )
     with _store_lock(path):
         store = IvfIndexStore(spark, path, num_buckets=32)
         if store.store.current_version() is None:
@@ -3976,16 +3938,11 @@ def _docs_cdf_store(spark: SparkSession, sf_dir: str):
     suffix (so updates genuinely move BM25 scores and document
     lengths), and removes %10 == 5. Persisted + flocked like every
     CDF fixture; replays skip to the reads."""
-    import hashlib
-    import os
 
     from ..sinks.snapshot import SnapshotStore
 
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|docs-cdf|nb16|manifest|v1".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-docscdfstore-{tag}"
+    path = _store_cache_path("docscdfstore", sf_dir, fp, "docs-cdf|nb16|manifest|v1")
     docs = load(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 10 != 3).select(
         "doc_id", F.lit(1).alias("v"), "text"
@@ -4119,18 +4076,13 @@ def bm25_store_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-pruned merges O(batch tokens); a query reads |terms|
     buckets; state is O(corpus tokens) — the price of serving any
     query, which is why both regimes exist."""
-    import hashlib
-    import os
 
     from ..operators.incremental_bm25 import Bm25IndexStore
     from .llm_pipeline2 import _BM25_TERMS
 
     docs = load(spark, sf_dir, "documents")
     fp = _dataset_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|bm25idx|nb16|manifest|v2".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark-graft-bm25idx-{tag}"
+    path = _store_cache_path("bm25idx", sf_dir, fp, "bm25idx|nb16|manifest|v2")
     base = docs.filter(
         (F.col("doc_id") % 10 != 3) & (F.col("doc_id") % 10 != 7)
     )

@@ -75,7 +75,7 @@ def store_scan_sql(store, version: int | None = None) -> str:
     if not files:
         # A fully-deleted snapshot still has a schema; emit an empty
         # relation with the recorded columns so SQL composes.
-        fields = store._schema_meta()["fields"]
+        fields = [f["name"] for f in store._read_commit(v)["schema"]["fields"]]
         cols = ", ".join(f'NULL AS "{n}"' for n in fields) or "NULL AS _empty"
         return f"SELECT {cols} WHERE 1=0"
     quoted = ", ".join("'" + f.replace("'", "''") + "'" for f in files)

@@ -28,20 +28,25 @@ Old versions are retained for time travel / rollback; ``vacuum``
 drops all but the newest k and deletes the data files no surviving
 manifest references.
 
-The bucket COUNT is a per-version property (``_STORECFG_v<N>``,
-committed before the pointer swap) evolvable via ``rebucket`` —
-partition evolution for a growing corpus; the rest of the physical
-identity (key, bucket_key, version_col, layout) is immutable and
-validated on reopen against ``_LAYOUT.json`` (a store written in the
-retired one-directory-per-version ``hardlink`` layout fails there).
+A committed version is ONE file, ``_MANIFEST_v<N>.json``, plus the
+pointer: the Delta Lake commit JSON, which carries the file actions,
+the table metadata and the commit info together. Besides the files per
+bucket it records the store format (``STORE_FORMAT``), the version's
+bucket count (evolvable via ``rebucket``; a pure rebucket also records
+``rebucket_from``), its schema and schema version, ``committed_at``,
+the store identity (key, bucket_key, version_col — immutable, checked
+on reopen) and an optional ``meta`` payload for index sidecar state. So
+the schema, the bucket count and the data of a version can never
+disagree, and crash recovery, rollback and time travel resolve each of
+them from the version they read.
 
-A store opens only the format it writes: every committed version has a
-``_STORECFG`` with its bucket count and schema, and every committed
-store has ``_LAYOUT.json``. A store written before those files existed
-is refused with a ValueError naming its path (and version) — the
-Delta Lake protocol check: a reader refuses a table it cannot read
-instead of carrying a reader for every past layout. Rebuild such a
-store from its source.
+A store opens only the format it writes: a commit file that is
+missing, unparsable or of another ``format`` (every store written
+before this format, including the retired one-directory-per-version
+``hardlink`` layout) is refused with a ValueError naming the store path
+and version — the Delta Lake protocol check: a reader refuses a table
+it cannot read instead of carrying a reader for every past layout.
+Rebuild such a store from its source.
 
 Writes are single-writer by contract, and the contract is ENFORCED
 fail-fast: every commit first atomically claims its version number
@@ -66,26 +71,14 @@ from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructType
 
 from ..operators.merge import upsert_newer_wins
 
 _POINTER = "_CURRENT"
-_SCHEMA = "_SCHEMA.json"
-_META_PREFIX = "_META_v"
-# Per-version physical-layout config (today: the bucket count),
-# committed before the pointer swap exactly like _META_v — so the
-# effective bucket count is a property OF THE VERSION, and crash
-# recovery / rollback / time travel all resolve the layout each
-# version was actually written under. See ``rebucket``.
-_CFG_PREFIX = "_STORECFG_v"
-# Immutable store identity, written at first commit and validated on
-# reopen: hashing probes against a store whose physical buckets were
-# laid out under a DIFFERENT bucket_key (or reading a store written in
-# another physical layout) fails silently — pruned reads return the wrong
-# slice and merges scatter duplicate keys across buckets. Mismatch is
-# therefore a constructor-time ValueError, not a runtime mystery.
-_LAYOUT_FILE = "_LAYOUT.json"
+# The on-disk format every commit file carries; a reader refuses any
+# other (see ``_read_commit``). Bump it when the commit file changes.
+STORE_FORMAT = 2
 # Per-version write claim (fail-fast concurrent-writer guard): a
 # commit of version N first atomically creates _TXN_vN (O_EXCL) —
 # see _txn().
@@ -142,6 +135,21 @@ def _pid_alive(pid: int) -> bool:
         return False
     except PermissionError:  # exists, owned by someone else
         return True
+
+
+def _as_nullable(field_json):
+    """Spark's ``asNullable`` on a schema's JSON form: every field,
+    array element and map value nullable, at any depth — what a parquet
+    read with a pinned schema yields."""
+    if isinstance(field_json, list):
+        return [_as_nullable(x) for x in field_json]
+    if not isinstance(field_json, dict):
+        return field_json
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else _as_nullable(x)
+        for k, x in field_json.items()
+    }
 
 
 def classify_changes(
@@ -275,22 +283,35 @@ class SnapshotStore:
         self.version_col = version_col
         self.dedup_current = dedup_current
         # Seed value only: once the store has a committed version the
-        # EFFECTIVE count is the one recorded with that version (the
-        # _STORECFG sidecar — see the ``num_buckets`` property), so
-        # reopening an existing store with a different constructor
-        # value ADOPTS the on-disk truth instead of silently hashing
-        # probes into the wrong physical layout. ``rebucket`` is the
-        # only way to change the count of a non-empty store.
+        # EFFECTIVE count is the one recorded in that version's commit
+        # file (see the ``num_buckets`` property), so reopening an
+        # existing store with a different constructor value ADOPTS the
+        # on-disk truth instead of silently hashing probes into the
+        # wrong physical layout. ``rebucket`` is the only way to change
+        # the count of a non-empty store.
         self._default_buckets = num_buckets
         self._pinned_buckets: int | None = None  # rebucket's override
         self._rebucket_base: int | None = None  # rebucket's provenance tag
-        self._cfg_cache: tuple[int | None, int] = (None, num_buckets)
+        self._count_cache: tuple[int | None, int] = (None, num_buckets)
         self.bucket_key = bucket_key or key
         os.makedirs(path, exist_ok=True)
-        self._check_identity()
         v = self.current_version()
         if v is not None:
-            self._cfg_cache = (v, self._cfg_count(v))
+            # Reopen-time guard: key, bucket column and version column
+            # are IMMUTABLE store properties — opening with different
+            # ones corrupts silently (wrong-slice pruned reads,
+            # duplicate keys scattered across buckets), so mismatch
+            # raises here. The bucket COUNT is not identity: it is
+            # versioned per commit and evolvable via ``rebucket``.
+            commit = self._read_commit(v)
+            if commit["identity"] != self._identity():
+                raise ValueError(
+                    f"snapshot store at {self.path} was created as "
+                    f"{commit['identity']} but opened as {self._identity()}; "
+                    "key/bucket_key/version_col are immutable (the bucket "
+                    "COUNT evolves via rebucket())"
+                )
+            self._count_cache = (v, commit["num_buckets"])
 
     # -- pointer management -------------------------------------------------
     def _pointer_path(self) -> str:
@@ -412,117 +433,71 @@ class SnapshotStore:
         finally:
             self._release(v)
 
-    # -- store identity ------------------------------------------------------
+    # -- the commit file -----------------------------------------------------
     def _identity(self) -> dict:
         return {
             "key": [self.key] if isinstance(self.key, str) else list(self.key),
             "bucket_key": self.bucket_key,
             "version_col": self.version_col,
-            "layout": "manifest",
         }
 
-    def _check_identity(self) -> None:
-        """Reopen-time guard: the merge key, bucket column, version
-        column, and physical layout are IMMUTABLE store properties —
-        opening with different ones corrupts silently (wrong-slice
-        pruned reads, duplicate keys scattered across buckets), so
-        mismatch raises here instead. The bucket COUNT is deliberately
-        not identity: it is versioned per commit and evolvable via
-        ``rebucket``. Every commit writes the identity file before
-        its pointer swap, so only a new, empty store lacks it."""
+    def _read_commit(self, version: int) -> dict:
+        """Version ``version``'s commit file. One written by this format
+        always carries every field ``_commit`` writes, so anything else
+        — missing, unparsable, another ``format`` — was written by an
+        older release: refused with the store path and version, never
+        guessed."""
         try:
-            with open(os.path.join(self.path, _LAYOUT_FILE)) as f:
-                on_disk = json.load(f)
-        except (FileNotFoundError, ValueError):
-            if self.current_version() is None:
-                return
-            raise ValueError(
-                f"snapshot store at {self.path} has committed versions but "
-                f"no readable {_LAYOUT_FILE}: it predates the format this "
-                "code reads; rebuild the store"
-            )
-        mine = self._identity()
-        if on_disk != mine:
-            raise ValueError(
-                f"snapshot store at {self.path} was created as {on_disk} "
-                f"but opened as {mine}; key/bucket_key/version_col/layout "
-                "are immutable (the bucket COUNT evolves via rebucket())"
-            )
-
-    def _write_identity(self) -> None:
-        p = os.path.join(self.path, _LAYOUT_FILE)
-        if os.path.exists(p):
-            return
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._identity(), f, indent=1)
-        os.replace(tmp, p)
-
-    # -- per-version bucket count -------------------------------------------
-    @property
-    def num_buckets(self) -> int:
-        """The bucket count of the CURRENT version — resolved from the
-        version's committed _STORECFG sidecar, so every probe, merge,
-        and pruned read hashes against the layout the live data was
-        actually written under, no matter what the constructor said.
-        Empty store: the constructor's value."""
-        if self._pinned_buckets is not None:
-            return self._pinned_buckets
-        v = self.current_version()
-        if v is None:
-            return self._default_buckets
-        if self._cfg_cache[0] != v:
-            self._cfg_cache = (v, self._cfg_count(v))
-        return self._cfg_cache[1]
-
-    def _cfg_path(self, version: int) -> str:
-        return os.path.join(self.path, f"{_CFG_PREFIX}{version}.json")
-
-    def _read_cfg(self, version: int) -> dict:
-        """Version ``version``'s committed config. Every commit records
-        the bucket count and the schema, so a retained version without
-        them was written in an older format: refused with the store
-        path and version, never guessed."""
-        try:
-            with open(self._cfg_path(version)) as f:
-                cfg = json.load(f)
-        except (FileNotFoundError, ValueError):
-            cfg = {}
-        if "num_buckets" not in cfg or "schema_json" not in cfg:
+            with open(self._manifest_path(version)) as f:
+                commit = json.load(f)
+        except (OSError, ValueError):
+            commit = None
+        if not isinstance(commit, dict) or commit.get("format") != STORE_FORMAT:
             raise ValueError(
                 f"snapshot store at {self.path}: version {version} has no "
-                f"{_CFG_PREFIX}{version}.json with num_buckets and "
-                "schema_json, so it predates the format this code reads; "
-                "rebuild the store"
+                f"readable commit manifest of format {STORE_FORMAT}, so it "
+                "was written in an older format; rebuild the store"
             )
-        return cfg
+        return commit
 
-    def _cfg_count(self, version: int) -> int:
-        """Bucket count a retained version was written under."""
-        return self._read_cfg(version)["num_buckets"]
+    def _commit(
+        self,
+        version: int,
+        files: dict[int, list[str]],
+        schema: StructType,
+        meta: dict | None,
+    ) -> None:
+        """Commit version ``version``: write its one commit file (tmp +
+        atomic replace), then swap the pointer. A crash between the two
+        leaves an orphan commit file above the pointer that
+        ``versions()`` never lists, the next commit of that number
+        overwrites, and vacuum/rollback remove.
 
-    def _commit_cfg(self, version: int, schema) -> None:
-        """Record the bucket count version ``version`` is being written
-        under — before its pointer swap, same crash contract as meta:
-        an orphan _STORECFG with n > pointer is never read (exact-
-        version resolution) and vacuum GCs it.
-
-        ``schema`` (r15, optimization): the written DataFrame's schema
-        (``_bucket`` excluded), recorded as Spark schema JSON so reads
-        of this version can PIN it instead of re-inferring from
-        parquet footers — every ``spark.read.parquet`` without a
-        schema costs a driver-side footer fetch per call, and the
-        store-backed queries issue several reads per maintenance
-        cycle."""
+        ``schema`` is the written DataFrame's schema (``_bucket``
+        excluded), recorded as-nullable — the schema a parquet read of
+        this version has — so reads PIN it instead of re-inferring it
+        from parquet footers (one driver-side footer fetch per call
+        otherwise). ``meta=None`` carries the current version's meta
+        forward: a merge must not drop an index's sidecar state."""
         import time
 
-        fields = [f for f in schema.fields if f.name != "_bucket"]
-        cfg: dict = {
+        base = self.current_version()
+        prev = self._read_commit(base) if base is not None else None
+        fields = [
+            _as_nullable(f.jsonValue()) for f in schema.fields if f.name != "_bucket"
+        ]
+        schema_js = {"type": "struct", "fields": fields}
+        commit = {
+            "format": STORE_FORMAT,
+            "files": {str(b): sorted(rels) for b, rels in sorted(files.items())},
             "num_buckets": self.num_buckets,
-            "committed_at": round(time.time(), 3),
-            "schema_json": json.dumps(
-                {"type": "struct", "fields": [f.jsonValue() for f in fields]}
+            "schema": schema_js,
+            "schema_version": (
+                1 if prev is None
+                else prev["schema_version"] + (prev["schema"] != schema_js)
             ),
+            "committed_at": round(time.time(), 3),
+            "identity": self._identity(),
         }
         if self._rebucket_base is not None:
             # Provenance tag: this version is a PURE REBUCKET of that
@@ -530,28 +505,47 @@ class SnapshotStore:
             # uses it to contribute ZERO changed keys for this
             # transition instead of degrading to a full two-version
             # diff (bucket ids alone are incomparable across counts).
-            cfg["rebucket_from"] = self._rebucket_base
-        tmp = self._cfg_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(cfg, f)
-        os.replace(tmp, self._cfg_path(version))
-        self._cfg_cache = (version, cfg["num_buckets"])
+            commit["rebucket_from"] = self._rebucket_base
+        if meta is None and prev is not None:
+            meta = prev.get("meta")
+        if meta is not None:
+            commit["meta"] = meta
+        path = self._manifest_path(version)
+        with open(path + ".tmp", "w") as f:
+            json.dump(commit, f, separators=(",", ":"))
+        os.replace(path + ".tmp", path)
+        self._count_cache = (version, commit["num_buckets"])
+        self._swap_pointer(version)
+
+    # -- per-version bucket count -------------------------------------------
+    @property
+    def num_buckets(self) -> int:
+        """The bucket count of the CURRENT version — resolved from the
+        version's commit file, so every probe, merge, and pruned read
+        hashes against the layout the live data was actually written
+        under, no matter what the constructor said. Empty store: the
+        constructor's value."""
+        if self._pinned_buckets is not None:
+            return self._pinned_buckets
+        v = self.current_version()
+        if v is None:
+            return self._default_buckets
+        if self._count_cache[0] != v:
+            self._count_cache = (v, self._bucket_count(v))
+        return self._count_cache[1]
+
+    def _bucket_count(self, version: int) -> int:
+        """Bucket count a retained version was written under."""
+        return self._read_commit(version)["num_buckets"]
 
     # -- per-version meta payload --------------------------------------------
-    # A small JSON document committed WITH each version by the same
-    # write-file-then-swap-pointer protocol the data uses: the meta
-    # file is written (tmp + atomic replace) BEFORE the pointer swap,
-    # so readers never see a version without its meta, and a crash
-    # between the two leaves an orphan _META_v{n} with n > pointer
-    # that exact-version resolution simply never reads (it is
-    # overwritten by the next commit that takes version n, and GC-ed
-    # by vacuum). This is what makes index sidecar state — e.g. the
-    # IVF centroid set (operators/incremental_ann.py) — object-store
-    # safe: no listdir-based resolution, no rmtree, no directory
-    # beside the commit protocol (r7 verdict #1).
-
-    def _meta_path(self, version: int) -> str:
-        return os.path.join(self.path, f"{_META_PREFIX}{version}.json")
+    # A small JSON document committed WITH each version inside its
+    # commit file, so readers never see a version without its meta and
+    # a crash-orphan's meta above the pointer is never resolved. This
+    # is what makes index sidecar state — e.g. the IVF centroid set
+    # (operators/incremental_ann.py) — object-store safe: no
+    # listdir-based resolution, no rmtree, no file beside the commit
+    # protocol.
 
     def read_meta(self, version: int | None = None) -> dict | None:
         """Meta payload of the CURRENT version (or, time-travel, of an
@@ -568,25 +562,7 @@ class SnapshotStore:
                 f"version {version} is not retained (have {self.versions()}); "
                 "vacuum(keep=...) controls time-travel depth"
             )
-        try:
-            with open(self._meta_path(v)) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _commit_meta(self, version: int, meta: dict | None) -> None:
-        """Write version ``version``'s meta before its pointer swap.
-        ``meta=None`` carries the current version's meta forward (a
-        merge/remove must not drop the index's sidecar state); a store
-        with no prior meta writes nothing."""
-        if meta is None:
-            meta = self.read_meta()
-            if meta is None:
-                return
-        tmp = self._meta_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path(version))
+        return self._read_commit(v).get("meta")
 
     def _bucket_col(self, n: int | None = None) -> F.Column:
         return F.pmod(
@@ -616,10 +592,8 @@ class SnapshotStore:
         cast to the STORED column type (xxhash64 is type-sensitive:
         hashing a probe int against a column written as bigint would
         silently probe the wrong buckets)."""
-        stored_t = self._schema_meta()["fields"][self.bucket_key]
-        df = self.spark.createDataFrame(
-            [(k,) for k in keys], f"`{self.bucket_key}` {stored_t}"
-        )
+        stored = self._schema(self.current_version())[self.bucket_key]
+        df = self.spark.createDataFrame([(k,) for k in keys], StructType([stored]))
         rows = df.select(self._bucket_col().alias("b")).distinct().collect()
         return sorted(r.b for r in rows)
 
@@ -647,7 +621,7 @@ class SnapshotStore:
         if self.current_version() is None:
             return None
         if not keys:
-            return self._empty_df()
+            return self.read_buckets([])
         df = self.read_buckets(self._buckets_for_keys(keys))
         return df.filter(F.col(self.key).isin(list(keys)))
 
@@ -660,11 +634,12 @@ class SnapshotStore:
         when the two versions were written under different bucket
         counts (a rebucket boundary) — bucket ids aren't comparable
         across layouts, so the change feed must diff every bucket."""
-        if self._cfg_count(v_from) != self._cfg_count(v_to):
+        cf, ct = self._read_commit(v_from), self._read_commit(v_to)
+        if cf["num_buckets"] != ct["num_buckets"]:
             return None
-        mf, mt = self._read_manifest(v_from), self._read_manifest(v_to)
+        mf, mt = cf["files"], ct["files"]
         return sorted(
-            b
+            int(b)
             for b in set(mf) | set(mt)
             if set(mf.get(b, ())) != set(mt.get(b, ()))
         )
@@ -676,7 +651,7 @@ class SnapshotStore:
         version-by-version so the feed survives rebucket boundaries:
         per adjacent retained pair, a same-count transition contributes
         its metadata-diffed buckets (under that count) and a pure
-        rebucket — identified by the cfg's ``rebucket_from`` provenance
+        rebucket — identified by its commit's ``rebucket_from`` provenance
         tag — contributes nothing (same rows, new layout). Returns
         ``{bucket_count: {bucket, ...}}`` (possibly several counts when
         the window spans an evolution), ``{}`` when nothing changed,
@@ -686,12 +661,12 @@ class SnapshotStore:
         path = [v for v in self.versions() if v_from <= v <= v_to]
         groups: dict[int, set[int]] = {}
         for a, b in zip(path, path[1:]):
-            na, nb = self._cfg_count(a), self._cfg_count(b)
+            na, nb = self._bucket_count(a), self._bucket_count(b)
             if na == nb:
                 ch = self.changed_buckets(a, b)
                 if ch:
                     groups.setdefault(na, set()).update(ch)
-            elif self._read_cfg(b).get("rebucket_from") != a:
+            elif self._read_commit(b).get("rebucket_from") != a:
                 return None
         return groups
 
@@ -763,12 +738,12 @@ class SnapshotStore:
         keys = [self.key] if isinstance(self.key, str) else list(self.key)
         if v_from == v_to:
             return (
-                self._empty_df()
+                self._scan(v_to, set())
                 .drop("_bucket")
                 .withColumn("_change", F.lit("").cast("string"))
             )
         groups = self._changed_bucket_groups(v_from, v_to)
-        nf, nt = self._cfg_count(v_from), self._cfg_count(v_to)
+        nf, nt = self._bucket_count(v_from), self._bucket_count(v_to)
         old_b: set[int] | None = set()
         new_b: set[int] | None = set()
         if groups is not None:
@@ -781,7 +756,7 @@ class SnapshotStore:
                 old_b |= po
                 new_b |= pn
         if groups is not None and not groups:
-            old = new = self._empty_df()
+            old, new = self._scan(v_from, set()), self._scan(v_to, set())
         elif groups is None:
             old, new = self.read(v_from), self.read(v_to)
         else:
@@ -815,43 +790,31 @@ class SnapshotStore:
     # NULLs (added columns) or casting old data forward (retyped
     # columns) instead of raising. Migration recreates the table (the
     # reference copies into lucidlink_files_new) and bumps the schema
-    # version recorded in _SCHEMA.json.
+    # version its commit records.
 
-    def _schema_meta(self) -> dict:
-        try:
-            with open(os.path.join(self.path, _SCHEMA)) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return {"version": 0, "fields": {}}
+    def _schema(self, version: int) -> StructType:
+        """The schema version ``version`` was committed with."""
+        return StructType.fromJson(self._read_commit(version)["schema"])
 
     def schema_version(self) -> int:
-        return self._schema_meta()["version"]
-
-    def _record_schema(self, df: DataFrame) -> None:
-        fields = {f.name: f.dataType.simpleString() for f in df.schema.fields
-                  if f.name != "_bucket"}
-        meta = self._schema_meta()
-        if fields != meta["fields"]:
-            meta = {"version": meta["version"] + 1, "fields": fields}
-            tmp = os.path.join(self.path, _SCHEMA + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(meta, f, indent=1)
-            os.replace(tmp, os.path.join(self.path, _SCHEMA))
+        v = self.current_version()
+        return 0 if v is None else self._read_commit(v)["schema_version"]
 
     def needs_schema_update(self, batch: DataFrame) -> bool:
         """True when the incoming batch's column set or types differ
-        from the stored snapshot's (db_duckdb.py:369-419)."""
-        cur = self.read()
-        if cur is None:
+        from the current version's schema (db_duckdb.py:369-419)."""
+        v = self.current_version()
+        if v is None:
             return False
-        cur_fields = {
-            f.name: f.dataType.simpleString()
-            for f in cur.schema.fields
-            if f.name != "_bucket"
-        }
-        new_fields = {f.name: f.dataType.simpleString() for f in batch.schema.fields
-                      if f.name != "_bucket"}
-        return cur_fields != new_fields
+
+        def types(schema: StructType) -> dict:
+            return {
+                f.name: f.dataType.simpleString()
+                for f in schema.fields
+                if f.name != "_bucket"
+            }
+
+        return types(self._schema(v)) != types(batch.schema)
 
     def _migrate(self, current: DataFrame, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Align both sides on the union schema: columns only in the
@@ -891,18 +854,8 @@ class SnapshotStore:
         return os.path.join(self.path, f"_MANIFEST_v{version}.json")
 
     def _read_manifest(self, version: int) -> dict[int, list[str]]:
-        with open(self._manifest_path(version)) as f:
-            return {int(k): v for k, v in json.load(f)["files"].items()}
-
-    def _write_manifest(self, version: int, files: dict[int, list[str]]) -> None:
-        tmp = self._manifest_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"version": version, "files": {str(k): sorted(v) for k, v in files.items()}},
-                f,
-                indent=1,
-            )
-        os.replace(tmp, self._manifest_path(version))  # the atomic commit
+        files = self._read_commit(version)["files"]
+        return {int(b): rels for b, rels in files.items()}
 
     def _list_data_files(self) -> set[str]:
         """All parquet data files under data/
@@ -957,15 +910,6 @@ class SnapshotStore:
                     files.setdefault(bucket, []).append(f"{commit}/{b}/{fname}")
         return files
 
-    def _empty_df(self) -> DataFrame:
-        """Typed empty snapshot from the recorded schema — the read
-        path for a table whose rows were all deleted (no parquet files
-        left to infer a schema from)."""
-        fields = self._schema_meta()["fields"]
-        ddl = ", ".join(f"`{n}` {t}" for n, t in fields.items())
-        ddl = f"{ddl}, `_bucket` int" if ddl else "`_bucket` int"
-        return self.spark.createDataFrame([], ddl)
-
     # -- read / write -------------------------------------------------------
     def _versions_on_disk(self) -> list[int]:
         """Raw version artifacts present (ascending), INCLUDING crash
@@ -1015,25 +959,26 @@ class SnapshotStore:
         the key, so it is recomputed instead of inferred — under the
         count THIS version was written with (a time-travel read across
         a rebucket boundary must label rows by its own version's
-        physical layout). The read pins the schema the version's cfg
-        recorded at commit time, which skips the per-call
-        footer-inference round trip (r15 optimization)."""
-        cfg = self._read_cfg(v)
+        physical layout). The read pins the schema the version's commit
+        recorded, which skips the per-call footer-inference round trip.
+        A slice with no files (every row deleted, or empty buckets) is
+        a typed empty frame under the same schema, ``_bucket``
+        included."""
+        commit = self._read_commit(v)
+        schema = StructType.fromJson(commit["schema"])
         paths = [
             os.path.join(self._data_dir(), rel)
-            for b, rels in self._read_manifest(v).items()
-            if buckets is None or b in buckets
+            for b, rels in commit["files"].items()
+            if buckets is None or int(b) in buckets
             for rel in rels
         ]
         if not paths:
-            # A table whose rows were all deleted, or a slice of empty
-            # buckets, has no parquet to read: typed empty frame.
-            return self._empty_df()
+            return self.spark.createDataFrame([], schema.add("_bucket", IntegerType()))
         return (
             self.spark.read.option("recursiveFileLookup", "true")
-            .schema(StructType.fromJson(json.loads(cfg["schema_json"])))
+            .schema(schema)
             .parquet(*paths)
-            .withColumn("_bucket", self._bucket_col(cfg["num_buckets"]))
+            .withColumn("_bucket", self._bucket_col(commit["num_buckets"]))
         )
 
     def overwrite(
@@ -1057,12 +1002,7 @@ class SnapshotStore:
             expected_base = self.current_version()
         df = df.drop("_bucket")
         with self._txn(expected_base) as v:
-            self._write_manifest(v, self._write_data_files(df))
-            self._record_schema(df)
-            self._write_identity()
-            self._commit_cfg(v, schema=df.schema)
-            self._commit_meta(v, meta)
-            self._swap_pointer(v)
+            self._commit(v, self._write_data_files(df), df.schema, meta)
         return v
 
     def _version_data_files(self, v: int) -> list[str]:
@@ -1080,14 +1020,13 @@ class SnapshotStore:
         DESCRIBE HISTORY surface: per version, when it committed, the
         bucket count it was written under, its physical file count and
         bytes, and whether it carries a meta payload (index sidecar
-        state). Metadata-only — manifests and file sizes, no parquet
+        state). Metadata-only — commit files and file sizes, no parquet
         opened — so it is cheap enough for an operator
-        dashboard to poll. ``committed_at`` is None for versions
-        written before timestamps were recorded."""
+        dashboard to poll."""
         out: list[dict] = []
         cur = self.current_version()
         for v in self.versions():
-            cfg = self._read_cfg(v)
+            commit = self._read_commit(v)
             files, size = 0, 0
             for f in self._version_data_files(v):
                 try:
@@ -1098,11 +1037,11 @@ class SnapshotStore:
             out.append(
                 {
                     "version": v,
-                    "committed_at": cfg.get("committed_at"),
-                    "num_buckets": cfg["num_buckets"],
+                    "committed_at": commit["committed_at"],
+                    "num_buckets": commit["num_buckets"],
                     "n_files": files,
                     "bytes": size,
-                    "has_meta": os.path.exists(self._meta_path(v)),
+                    "has_meta": "meta" in commit,
                     "is_current": v == cur,
                 }
             )
@@ -1185,13 +1124,13 @@ class SnapshotStore:
         the per-delta rewrite unit without re-seeding the index.
 
         One O(table) rewrite committed as a NORMAL version: data files
-        are written under the new hashing, the version's _STORECFG
-        records the new count (before the pointer swap), and the
-        pointer swap publishes both atomically. Crash before the swap
-        leaves orphans the next commit overwrites and vacuum GCs;
-        ``rollback`` across a rebucket boundary restores the OLD count
-        automatically because the count is resolved from the version
-        the pointer names. Meta (index sidecar state, e.g. IVF
+        are written under the new hashing, the version's commit file
+        records the new count and ``rebucket_from`` (before the pointer
+        swap), and the pointer swap publishes both atomically. Crash
+        before the swap leaves orphans the next commit overwrites and
+        vacuum GCs; ``rollback`` across a rebucket boundary restores
+        the OLD count automatically because the count is resolved from
+        the version the pointer names. Meta (index sidecar state, e.g. IVF
         centroids) is carried forward unless ``meta`` overrides it.
 
         On an EMPTY store this just re-seeds the default for the first
@@ -1362,15 +1301,11 @@ class SnapshotStore:
             if b not in touched
         }
         manifest.update(new_files)
-        self._write_manifest(v, manifest)
-        self._write_identity()
         # Touched buckets were rewritten under the batch's schema;
         # untouched files carry the same one (drift took the
         # migrate/overwrite path above), so the batch schema IS the
         # version's schema.
-        self._commit_cfg(v, schema=batch.schema)
-        self._commit_meta(v, meta)
-        self._swap_pointer(v)
+        self._commit(v, manifest, batch.schema, meta)
         return v
 
     def merge_with_retry(
@@ -1444,7 +1379,6 @@ class SnapshotStore:
         for v in self._versions_on_disk():
             if v > version:
                 self._remove_manifest(v)
-        self._vacuum_meta([])  # drops meta above the (new) pointer
         self._gc_unreferenced_data()
         return version
 
@@ -1481,29 +1415,6 @@ class SnapshotStore:
                 except OSError:
                     pass
 
-    def _vacuum_meta(self, victims: list[int]) -> None:
-        """Drop victims' meta AND config sidecars plus crash orphans
-        (n > current — a commit that wrote its sidecars but died
-        before the pointer swap)."""
-        cur = self.current_version() or 0
-        doomed = set(victims)
-        for name in os.listdir(self.path):
-            prefix = next(
-                (p for p in (_META_PREFIX, _CFG_PREFIX) if name.startswith(p)),
-                None,
-            )
-            if prefix is None or not name.endswith(".json"):
-                continue
-            try:
-                n = int(name[len(prefix) : -len(".json")])
-            except ValueError:
-                continue
-            if n in doomed or n > cur:
-                try:
-                    os.remove(os.path.join(self.path, name))
-                except OSError:
-                    pass
-
     def vacuum(
         self,
         keep: int = 2,
@@ -1520,10 +1431,8 @@ class SnapshotStore:
         is older than ``now - max_age_s`` is dropped even if it is
         inside the newest ``keep`` — the "retain 7 days of time
         travel" policy a nightly pipeline states in hours, not
-        version counts. Versions written before timestamps were
-        recorded have no age and are never age-expired (conservative;
-        the count bound still applies). ``now`` defaults to the wall
-        clock; tests inject it."""
+        version counts. ``now`` defaults to the wall clock; tests
+        inject it."""
         import time as _time
 
         cur = self.current_version()
@@ -1543,12 +1452,10 @@ class SnapshotStore:
             for v in versions:
                 if v == cur:
                     continue
-                ts = self._read_cfg(v).get("committed_at")
-                if ts is not None and ts < cutoff:
+                if self._read_commit(v)["committed_at"] < cutoff:
                     doomed.add(v)
         victims = sorted(doomed)
         for v in victims:
             os.remove(self._manifest_path(v))
         self._gc_unreferenced_data()
-        self._vacuum_meta(victims)
         return victims

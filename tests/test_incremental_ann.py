@@ -150,14 +150,25 @@ def test_remove_vecs_enables_cross_cell_update(spark, tmp_path):
     assert len(rows) == 1 and rows[0].ivf_seq == 5
 
 
-def test_orphan_meta_is_never_resolved(spark, tmp_path):
-    """A crash between the meta write and the pointer swap leaves an
-    orphan _META_v{n} with n > pointer. Meta resolution is by EXACT
-    version number (no directory-listing scan), so the committed
-    centroid set keeps resolving — A5 semantics for centroids, now via
-    the snapshot's own commit protocol (r8: object-store-safe, no
-    POSIX sidecar)."""
+def _write_orphan_commit(snapshot_store, version):
+    """A crashed re-seed's commit file above the pointer: a copy of the
+    current commit whose meta names an empty centroid set."""
     import json
+
+    with open(snapshot_store._manifest_path(snapshot_store.current_version())) as f:
+        commit = json.load(f)
+    commit["meta"] = {"centroids": [], "dim": 1, "id_type": "bigint"}
+    with open(snapshot_store._manifest_path(version), "w") as f:
+        json.dump(commit, f)
+
+
+def test_orphan_meta_is_never_resolved(spark, tmp_path):
+    """A crash between the commit-file write and the pointer swap
+    leaves an orphan commit file _MANIFEST_v{n} (with its meta) at
+    n > pointer. Meta resolution is by EXACT version number (no
+    directory-listing scan), so the committed centroid set keeps
+    resolving — A5 semantics for centroids, via the snapshot's own
+    commit protocol (object-store-safe, no POSIX sidecar)."""
     import os
 
     full = _vecs(spark, range(20))
@@ -166,9 +177,8 @@ def test_orphan_meta_is_never_resolved(spark, tmp_path):
     store.seed(full, full.filter(F.col("vec_id") < 4), "vec_id", "emb")
     committed = store.store.current_version()
     good_meta = store.store.read_meta()
-    # simulate the crashed re-seed: orphan meta above the pointer
-    with open(store.store._meta_path(committed + 7), "w") as f:
-        json.dump({"centroids": [], "dim": 1, "id_type": "bigint"}, f)
+    # simulate the crashed re-seed: orphan commit above the pointer
+    _write_orphan_commit(store.store, committed + 7)
     fresh = IvfIndexStore(spark, path, num_buckets=16)
     assert fresh.store.read_meta() == good_meta
     got = fresh.search(
@@ -177,16 +187,14 @@ def test_orphan_meta_is_never_resolved(spark, tmp_path):
     assert len(got) == 2
     # vacuum GCs the orphan (n > current pointer)
     fresh.store.vacuum(keep=2)
-    assert not os.path.exists(store.store._meta_path(committed + 7))
+    assert not os.path.exists(store.store._manifest_path(committed + 7))
 
 
 def test_meta_carries_forward_and_never_promotes_orphans(spark, tmp_path):
     """A LATER add() advances the pointer past a crashed re-seed's
-    orphan meta; the commit must carry the COMMITTED centroids forward
-    onto its own version (overwriting the orphan), so assignment keeps
-    using the committed set (r7 review finding, meta-protocol form)."""
-    import json
-
+    orphan commit file; the commit must carry the COMMITTED centroids
+    forward onto its own version (overwriting the orphan), so
+    assignment keeps using the committed set (meta-protocol form)."""
     full = _vecs(spark, range(30))
     path = str(tmp_path / "ivf")
     store = IvfIndexStore(spark, path, num_buckets=16)
@@ -197,10 +205,9 @@ def test_meta_carries_forward_and_never_promotes_orphans(spark, tmp_path):
         "emb",
     )
     good_meta = store.store.read_meta()
-    # crashed re-seed wrote its meta at the version the NEXT commit takes
+    # crashed re-seed wrote its commit at the version the NEXT commit takes
     v_next = store.store.current_version() + 1
-    with open(store.store._meta_path(v_next), "w") as f:
-        json.dump({"centroids": [], "dim": 1, "id_type": "bigint"}, f)
+    _write_orphan_commit(store.store, v_next)
 
     store.add(full.filter(F.col("vec_id") >= 20), "vec_id", "emb", seq=1)
     assert store.store.current_version() == v_next
@@ -922,7 +929,6 @@ def test_large_centroid_regime_sidecar(spark, tmp_path):
     an independent reference computed from the same assignment
     function directly on the corpus frames (no store)."""
     import json
-    import os
 
     import pyspark.sql.types as T
 
@@ -967,8 +973,8 @@ def test_large_centroid_regime_sidecar(spark, tmp_path):
     assert "centroids" not in meta
     assert meta["centroid_count"] == K_CELLS
     assert meta["centroids_ref"] == "CENTROIDS_v1"
-    raw = os.path.getsize(store.store._meta_path(1))
-    assert raw < 2048, f"meta file is {raw} bytes — not O(1)"
+    raw = len(json.dumps(meta))
+    assert raw < 2048, f"meta is {raw} bytes — not O(1)"
     assert store.centroid_count() == K_CELLS
     assert store.centroids().count() == K_CELLS
 
@@ -1032,8 +1038,7 @@ def test_large_centroid_regime_sidecar(spark, tmp_path):
     # survivors = exactly the cells that held at least one row
     assert 1 <= meta2["centroid_count"] <= 260 + 60
     assert store.centroids().count() == meta2["centroid_count"]
-    raw2 = os.path.getsize(store.store._meta_path(store.store.current_version()))
-    assert raw2 < 2048
+    assert len(json.dumps(meta2)) < 2048
     assert {
         r.vec_id for r in store.store.read().select("vec_id").collect()
     } == live_before
@@ -1048,7 +1053,7 @@ def test_large_regime_split_hot_cell(spark, tmp_path):
     direction (positive first axis; all others negative-first-axis),
     and 150 spread vectors land in its cell — the split must commit,
     grow the centroid count, keep the meta O(1), and lose no row."""
-    import os
+    import json
 
     import pyspark.sql.types as T
 
@@ -1107,8 +1112,7 @@ def test_large_regime_split_hot_cell(spark, tmp_path):
     assert "centroids" not in meta2
     assert meta2["centroid_count"] > k
     assert store.centroids().count() == meta2["centroid_count"]
-    raw = os.path.getsize(store.store._meta_path(store.store.current_version()))
-    assert raw < 2048
+    assert len(json.dumps(meta2)) < 2048
     live = store.tombstones.apply(
         store.store.read().join(
             F.broadcast(store.centroids().select(F.col("vec_id").alias("cid"))),

@@ -285,7 +285,7 @@ import pytest
 
 def test_empty_table_reads_from_recorded_schema(spark, tmp_path, check_layout):
     """Deleting every row must leave a READABLE empty table (schema from
-    _SCHEMA.json), not a parquet schema-inference error."""
+    the version's commit file), not a parquet schema-inference error."""
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
         num_buckets=4,
@@ -302,6 +302,62 @@ def test_empty_table_reads_from_recorded_schema(spark, tmp_path, check_layout):
     store.merge(_df(spark, [("c", 1, "pc")]))
     assert {r.k for r in store.read().collect()} == {"c"}
     check_layout(store)
+
+
+def test_empty_version_is_typed_by_its_own_schema(spark, tmp_path):
+    """An all-deleted version keeps ITS schema after a later commit
+    widens the store: a time-travel read, an empty change feed and the
+    DuckDB scan of that version carry its columns, not the newer ones
+    — and the empty read has the same types and nullability as a
+    non-empty read of the same schema."""
+    from fs_indexer_elasticsearch_spark.sinks.duckdb_file import store_scan_sql
+
+    store = SnapshotStore(
+        spark, str(tmp_path / "snap"), key="k", version_col="v",
+        num_buckets=4,
+    )
+    v1 = store.overwrite(_df(spark, [("a", 1, "pa"), ("b", 1, "pb")]))
+    removed = spark.createDataFrame([("a",), ("b",)], "k string")
+    v_empty = store.merge(_df(spark, []), removed=removed)
+    widened = spark.createDataFrame(
+        [("c", 1, "pc", "carol")],
+        "k string, v int, payload string, owner string",
+    )
+    store.merge(widened)
+    assert "owner" in store.read().columns
+
+    narrow = ["k", "v", "payload"]
+    empty = store.read(version=v_empty)
+    assert empty.count() == 0
+    assert empty.schema == store.read(version=v1).schema
+    assert store.read_changes(v_empty, v_empty).columns == narrow + ["_change"]
+    assert store_scan_sql(store, version=v_empty) == (
+        'SELECT NULL AS "k", NULL AS "v", NULL AS "payload" WHERE 1=0'
+    )
+
+
+def test_a_version_is_one_commit_file(spark, tmp_path):
+    """Every committed version is exactly one _MANIFEST_v<N>.json next
+    to the _CURRENT pointer: after overwrite, merge with meta,
+    rebucket, rollback and vacuum the store directory holds nothing
+    else but claim/lock files and data/."""
+    import os as _os
+
+    store = SnapshotStore(
+        spark, str(tmp_path / "snap"), key="k", version_col="v",
+        num_buckets=4,
+    )
+    store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(12)]))
+    store.merge(_df(spark, [("k0", 2, "new")]), meta={"gen": 1})
+    store.rebucket(8)
+    store.merge(_df(spark, [("k1", 2, "new")]))
+    store.rollback(3)
+    store.vacuum(keep=2)
+    assert store.read_meta() == {"gen": 1}
+    names = set(_os.listdir(store.path))
+    assert names - {"_CURRENT", ".claims.lock", "data"} == {
+        "_MANIFEST_v2.json", "_MANIFEST_v3.json",
+    }
 
 
 def test_insert_or_replace_collapses_duplicate_batch_keys(spark):
@@ -490,9 +546,9 @@ def test_rollback_restores_state_and_gcs_dead_branch(spark, tmp_path):
 
 
 def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
-    """A crashed write's partial version artifact (above the pointer)
-    must never be served by read(version=) — versions() excludes it —
-    and vacuum GCs it (the data-file analog of orphan-meta GC)."""
+    """A crashed write's commit file above the pointer must never be
+    served by read(version=) — versions() excludes it — nor perturb
+    the store's meta, and vacuum GCs it."""
     import json
     import os
 
@@ -508,11 +564,17 @@ def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
     store.overwrite(
         spark.createDataFrame([("a", 1, "x")], "k string, seq long, p string")
     )
-    # simulate the crash: partial version artifact above the pointer
+    # simulate the crash: a complete commit file above the pointer
+    with open(store._manifest_path(1)) as f:
+        commit = json.load(f)
+    commit.update(files={}, meta={"gen": 9})
     orphan = store._manifest_path(5)
     with open(orphan, "w") as f:
-        json.dump({"version": 5, "files": {}}, f)
+        json.dump(commit, f)
     assert store.versions() == [1]
+    assert store.read_meta() is None
+    with pytest.raises(ValueError, match="not retained"):
+        store.read(version=5)
     store.vacuum(keep=2)
     assert not os.path.exists(orphan)
 
@@ -575,8 +637,8 @@ def test_rebucket_rollback_restores_old_count(spark, tmp_path):
 
     store.rollback(1)
     assert store.num_buckets == 4  # the version's own layout wins
-    # And the dead rebucketed branch's cfg sidecar is gone.
-    assert not _os.path.exists(store._cfg_path(2))
+    # And the dead rebucketed branch's commit file is gone.
+    assert not _os.path.exists(store._manifest_path(2))
     # Committing again after the rollback stays under the old count.
     store.merge(_df(spark, [("k0", 2, "new")]))
     assert store.num_buckets == 4
@@ -594,9 +656,9 @@ def test_rebucket_meta_carried_forward(spark, tmp_path):
 
 
 def test_crash_orphan_cfg_never_read_and_vacuumed(spark, tmp_path):
-    """A _STORECFG above the pointer (a rebucket that died before its
-    pointer swap) must not perturb the effective count, and vacuum
-    GCs it."""
+    """A rebucket that died before its pointer swap leaves a commit
+    file above the pointer carrying another bucket count: it must not
+    perturb the effective count, and vacuum GCs it."""
     import json as _json
     import os as _os
 
@@ -604,53 +666,74 @@ def test_crash_orphan_cfg_never_read_and_vacuumed(spark, tmp_path):
         spark, str(tmp_path / "snap"), key="k", version_col="v", num_buckets=4
     )
     store.overwrite(_df(spark, [("a", 1, "p"), ("b", 1, "p")]))
-    with open(store._cfg_path(99), "w") as f:
-        _json.dump({"num_buckets": 1000}, f)
+    with open(store._manifest_path(1)) as f:
+        commit = _json.load(f)
+    commit.update(files={}, num_buckets=1000)
+    with open(store._manifest_path(99), "w") as f:
+        _json.dump(commit, f)
     assert store.num_buckets == 4
+    assert SnapshotStore(
+        spark, store.path, key="k", version_col="v", num_buckets=4
+    ).num_buckets == 4
     store.vacuum(keep=2)
-    assert not _os.path.exists(store._cfg_path(99))
+    assert not _os.path.exists(store._manifest_path(99))
 
 
 @pytest.mark.parametrize(
     "damage",
-    ["cfg_removed", "schema_json_stripped", "layout_removed", "time_travel"],
+    ["parent_manifest", "wrong_format", "hardlink_layout", "time_travel"],
 )
 def test_store_written_in_an_older_format_is_refused(spark, tmp_path, damage):
-    """A store opens only the format it writes: a committed version
-    without its complete _STORECFG (bucket count and schema), or a
-    committed store without _LAYOUT.json, raises a ValueError naming
-    the store's path — at open for the current version, and at the
-    read for a time-travel read of an older retained version (never a
-    KeyError, never a guessed bucket count or an inferred schema)."""
+    """A store opens only the format it writes: a commit file without
+    this format's ``format`` stamp (a manifest of the previous format,
+    which held only the version and its files, or another format
+    number), or a directory of the retired hardlink layout (a pointer
+    and a ``v1/`` directory, no commit file), raises a ValueError
+    naming the store's path — at open for the current version, and at
+    the read for a time-travel read of an older retained version
+    (never a KeyError, never a guessed bucket count or schema)."""
     import json as _json
     import os as _os
     import re
 
+    from fs_indexer_elasticsearch_spark.sinks.snapshot import STORE_FORMAT
+
     path = str(tmp_path / "snap")
-    store = SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
-    store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(12)]))
-    store.merge(_df(spark, [("k0", 2, "new")]))
 
     def reopen():
         return SnapshotStore(spark, path, key="k", version_col="v", num_buckets=4)
 
-    if damage == "cfg_removed":
-        _os.remove(store._cfg_path(2))
-    elif damage == "schema_json_stripped":
-        with open(store._cfg_path(2)) as f:
-            cfg = _json.load(f)
-        del cfg["schema_json"]
-        with open(store._cfg_path(2), "w") as f:
-            _json.dump(cfg, f)
-    elif damage == "layout_removed":
-        _os.remove(_os.path.join(path, "_LAYOUT.json"))
+    if damage == "hardlink_layout":
+        _os.makedirs(_os.path.join(path, "v1", "_bucket=0"))
+        with open(_os.path.join(path, "_CURRENT"), "w") as f:
+            f.write("1")
+        with open(_os.path.join(path, "_LAYOUT.json"), "w") as f:
+            _json.dump(
+                {"key": ["k"], "bucket_key": "k", "version_col": "v",
+                 "layout": "hardlink"}, f,
+            )
+        with pytest.raises(ValueError, match=re.escape(path)):
+            reopen()
+        return
+
+    store = reopen()
+    store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(12)]))
+    store.merge(_df(spark, [("k0", 2, "new")]))
+    victim = 1 if damage == "time_travel" else 2
+    with open(store._manifest_path(victim)) as f:
+        commit = _json.load(f)
+    if damage == "wrong_format":
+        commit["format"] = STORE_FORMAT + 1
     else:
-        _os.remove(store._cfg_path(1))
+        commit = {"version": victim, "files": commit["files"]}
+    with open(store._manifest_path(victim), "w") as f:
+        _json.dump(commit, f)
+    if damage == "time_travel":
         with pytest.raises(ValueError, match=re.escape(path)):
             reopen().read(version=1)
-        return
-    with pytest.raises(ValueError, match=re.escape(path)):
-        reopen()
+    else:
+        with pytest.raises(ValueError, match=re.escape(path)):
+            reopen()
 
 
 def test_merge_expected_base_pins_the_validated_state(spark, tmp_path):
@@ -694,26 +777,15 @@ def test_store_identity_mismatch_raises(spark, tmp_path):
 
 
 def test_only_the_manifest_layout_opens(spark, tmp_path):
-    """The store has one physical layout: asking for another, or
-    reopening a directory written in the retired hardlink layout,
-    raises a ValueError that names the one that exists."""
-    import json as _json
-
+    """The store has one physical layout: asking for another raises a
+    ValueError that names the one that exists (a directory written in
+    the retired hardlink layout is refused as an older format, see
+    test_store_written_in_an_older_format_is_refused)."""
     with pytest.raises(ValueError, match="manifest"):
         SnapshotStore(
             spark, str(tmp_path / "new"), key="k", version_col="v",
             layout="hardlink",
         )
-    old = tmp_path / "old"
-    old.mkdir()
-    (old / "_LAYOUT.json").write_text(
-        _json.dumps(
-            {"key": ["k"], "bucket_key": "k", "version_col": "v",
-             "layout": "hardlink"}
-        )
-    )
-    with pytest.raises(ValueError, match="manifest"):
-        SnapshotStore(spark, str(old), key="k", version_col="v")
 
 
 def test_bucket_stats_and_maybe_rebucket_policy(spark, tmp_path, check_layout):
@@ -938,7 +1010,7 @@ def test_read_changes_spans_rebucket_with_pruned_reads(spark, tmp_path):
     store.overwrite(_df(spark, [(f"k{i}", 1, "p") for i in range(300)]))  # v1
     store.merge(_df(spark, [("k42", 2, "updated42")]))                    # v2
     assert store.rebucket(8) == 3                                         # v3
-    assert (store._read_cfg(3) or {}).get("rebucket_from") == 2
+    assert store._read_commit(3)["rebucket_from"] == 2
     store.merge(_df(spark, [("k17", 2, "updated17"), ("k301", 1, "new")]))  # v4
 
     feed = store.read_changes(1, 4)
@@ -1229,7 +1301,6 @@ def test_history_and_age_based_vacuum(spark, tmp_path, check_layout):
     log); vacuum(max_age_s=) retires versions by wall-clock age on top
     of the count bound."""
     import json as _json
-    import os
 
     store = SnapshotStore(
         spark, str(tmp_path / "snap"), key="k", version_col="v",
@@ -1248,25 +1319,20 @@ def test_history_and_age_based_vacuum(spark, tmp_path, check_layout):
     assert [h["has_meta"] for h in hist] == [False, True, True]  # carried fwd
     assert [h["is_current"] for h in hist] == [False, False, True]
 
-    # Backdate v1 by rewriting its cfg sidecar, then age-vacuum: v1
+    # Backdate v1 by rewriting its commit file, then age-vacuum: v1
     # falls to the age bound even though keep=3 would retain it.
-    cfg_path = store._cfg_path(1)
-    cfg = _json.load(open(cfg_path))
-    cfg["committed_at"] = cfg["committed_at"] - 10_000
-    _json.dump(cfg, open(cfg_path, "w"))
+    commit_path = store._manifest_path(1)
+    with open(commit_path) as f:
+        commit = _json.load(f)
+    commit["committed_at"] -= 10_000
+    with open(commit_path, "w") as f:
+        _json.dump(commit, f)
     assert store.vacuum(keep=3, max_age_s=3_600) == [1]
     assert store.versions() == [2, 3]
     # The current version is never age-expired.
     assert store.vacuum(keep=1, max_age_s=0) == [2]
     assert store.versions() == [3]
     assert store.read().count() == 3
-
-    # Pre-timestamp versions (no committed_at) are never age-expired.
-    cfg2 = _json.load(open(store._cfg_path(3)))
-    del cfg2["committed_at"]
-    _json.dump(cfg2, open(store._cfg_path(3), "w"))
-    store.merge(_df(spark, [("d", 1, "s")]))
-    assert store.vacuum(keep=5, max_age_s=0) == []
     check_layout(store)
 
 

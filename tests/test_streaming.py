@@ -680,8 +680,8 @@ def test_streaming_maintained_view_zero_base_rescans(spark, tmp_path):
     cycle, and after the first derivation the base is read again ONLY
     for an extremum-departure recompute. Scan accounting: versioned
     ``store.read(version=...)`` calls are exactly the base-aggregate
-    reads (merge's needs_schema_update peeks read() with no version —
-    a lazy parquet-footer schema check, not a data scan), so the
+    reads (merge's needs_schema_update reads the current commit's
+    schema, not the data), so the
     counter must stay at 1 across the insert-only steady cycles and
     reach exactly 2 after the max-retiring update."""
     from fs_indexer_elasticsearch_spark.streaming.pipeline import (
@@ -3130,7 +3130,7 @@ def test_streaming_ivf_maintenance_large_regime_sidecar(spark, tmp_path):
     through the DataFrame centroid-set path — sidecar + O(1) meta
     updated under the same pinned merge, no vector lost, hot cell
     bounded — with the cadence effectively off."""
-    import os
+    import json
 
     from fs_indexer_elasticsearch_spark.operators.incremental_ann import (
         CENTROID_META_MAX,
@@ -3229,10 +3229,7 @@ def test_streaming_ivf_maintenance_large_regime_sidecar(spark, tmp_path):
         # splits actually happened, sidecar followed, meta stayed O(1)
         meta = store.store.read_meta()
         assert meta["centroid_count"] > k
-        raw = os.path.getsize(
-            store.store._meta_path(store.store.current_version())
-        )
-        assert raw < 2048
+        assert len(json.dumps(meta)) < 2048
         # no vector lost across hint-triggered maintenance commits
         live_ids = {
             r.vec_id
