@@ -952,6 +952,69 @@ def classify_membership(
     )
 
 
+class _Membership:
+    """The four terms of one join-membership window, shared by the
+    whole-view fold (:func:`maintain_join_membership`) and the delta
+    fold (:func:`join_membership_delta`):
+
+    - ``removed``: the fact pks the window deleted;
+    - ``adds``: the fact feed's insert and update post-images,
+      classified against the dim post-state key column (the window's
+      one dim scan: column-pruned, and AQE broadcasts the typically
+      small adds side);
+    - ``transitions``: the dim keys whose existence changed, ``_tk``
+      with its new membership ``_to`` (True for an appearance, False
+      for a disappearance). The dim store is keyed on the dim key, so
+      a collapsed 'update' keeps the key on both sides of the window
+      and never drives a flip;
+    - ``rest``: the view minus every pk the fact feed touched. Those
+      rows re-enter through ``adds`` (insert/update) or leave
+      (delete), so each pk reaches a fold once.
+
+    ``view`` is the view at the window start (fact columns +
+    ``matched``, an optional ``_bucket`` is dropped); it is read once,
+    by ``rest``."""
+
+    def __init__(
+        self, fact_store, dim_store, fact_window, dim_window, view,
+        *, fact_key_col, dim_key_col,
+    ):
+        pk = fact_store.key
+        pks = [pk] if isinstance(pk, str) else list(pk)
+        self.fact_key = fact_key_col
+        self.cols = [c for c in view.columns if c != "_bucket"]
+        ffeed = fact_store.read_changes(*fact_window).transform(ckpt_shared)
+        self.removed = ffeed.filter(F.col("_change") == "delete").select(*pks)
+        self.adds = classify_membership(
+            ffeed.filter(F.col("_change").isin("insert", "update")).drop(
+                "_change"
+            ),
+            dim_store,
+            dim_window[1],
+            fact_key_col=fact_key_col,
+            dim_key_col=dim_key_col,
+        ).select(*self.cols)
+        self.transitions = (
+            dim_store.read_changes(*dim_window)
+            .filter(F.col("_change") != "update")
+            .select(
+                F.col(dim_key_col).alias("_tk"),
+                (F.col("_change") == "insert").alias("_to"),
+            )
+        )
+        self.rest = view.select(*self.cols).join(
+            ffeed.select(*pks), pks, "left_anti"
+        )
+
+    def rest_with(self, how: str) -> DataFrame:
+        """``rest`` joined to ``transitions`` on the fact key (``how``
+        'left' keeps every row, 'inner' only the transitioned ones); a
+        NULL fact key never matches a dim key (SQL join semantics)."""
+        return self.rest.join(
+            self.transitions, F.col(self.fact_key) == F.col("_tk"), how
+        )
+
+
 def maintain_join_membership(
     fact_store,
     dim_store,
@@ -974,16 +1037,15 @@ def maintain_join_membership(
     orphans from rows the view already holds — neither direction ever
     rescans the fact store.
 
-    Per cycle the inputs are: both change feeds, plus ONE
-    column-pruned scan of the dim post-state KEY column (to classify
-    brand-new fact keys the previous view has never seen — the one
-    question neither feed can answer; dim ≪ fact at scale, the scan
-    reads a single parquet column, and AQE broadcasts the typically
-    small fact-add side). Dim 'update' rows change attributes, never
-    key existence (the dim store is keyed on ``dim_key_col``), so only
-    its insert/delete rows drive flips. A NULL fact key never matches
-    any dim key (SQL join semantics) and therefore stays
-    ``matched=false`` through every cycle without special casing.
+    Per cycle the inputs are both change feeds plus ONE column-pruned
+    scan of the dim post-state KEY column (to classify brand-new fact
+    keys the previous view has never seen — the one question neither
+    feed can answer; dim ≪ fact at scale). A NULL fact key never
+    matches any dim key (SQL join semantics) and therefore stays
+    ``matched=false`` through every cycle without special casing. The
+    view is the fold of :class:`_Membership`'s terms: the rest of the
+    view with ``matched`` set by the dim-key transitions, plus the
+    classified adds.
 
     ``old_view`` is this function's own previous output (fact columns
     + ``matched``); omitted, the first derivation joins the two
@@ -993,8 +1055,6 @@ def maintain_join_membership(
     Reference parity: the reference's orphan checks are full NOT-IN
     rescans per scan cycle (scanner.py:447-454, db_duckdb.py:296-312);
     this is the scale path those rescans become."""
-    fact_pk = fact_store.key
-    pks = [fact_pk] if isinstance(fact_pk, str) else list(fact_pk)
     if old_view is None:
         old_view = classify_membership(
             fact_store.read(version=v_from).drop("_bucket"),
@@ -1003,53 +1063,61 @@ def maintain_join_membership(
             fact_key_col=fact_key_col,
             dim_key_col=dim_key_col,
         )
-    out_cols = old_view.columns
-
-    # Fact feed: an update is remove-pre-image + add-post-image; the
-    # collapsed feed already carries post-images for insert/update and
-    # pre-images for delete, so pks(update|delete) drop and rows
-    # (insert|update) re-enter through the add path.
-    ffeed = fact_store.read_changes(v_from, v_to).transform(ckpt_shared)
-    gone_pks = ffeed.filter(F.col("_change").isin("update", "delete")).select(
-        *pks
-    )
-    adds = ffeed.filter(F.col("_change").isin("insert", "update")).drop(
-        "_change"
-    )
-
-    # Dim feed: only insert/delete change key existence. A collapsed
-    # 'update' has the key present on both sides of the window.
-    dfeed = dim_store.read_changes(v_from, v_to).transform(ckpt_shared)
-    appeared = (
-        dfeed.filter(F.col("_change") == "insert")
-        .select(F.col(dim_key_col).alias("_ak"), F.lit(True).alias("_ap"))
-    )
-    vanished = (
-        dfeed.filter(F.col("_change") == "delete")
-        .select(F.col(dim_key_col).alias("_vk"), F.lit(True).alias("_va"))
-    )
-
-    survivors = old_view.join(gone_pks, pks, "left_anti")
-    flipped = (
-        survivors.join(appeared, F.col(fact_key_col) == F.col("_ak"), "left")
-        .join(vanished, F.col(fact_key_col) == F.col("_vk"), "left")
-        .withColumn(
-            "matched",
-            F.when(F.col("_ap"), F.lit(True))
-            .when(F.col("_va"), F.lit(False))
-            .otherwise(F.col("matched")),
-        )
-        .select(*out_cols)
-    )
-
-    # Brand-new fact rows classify against the dim POST-state key
-    # column — the cycle's one dim scan (column-pruned; adds side
-    # broadcasts under AQE when small).
-    classified_adds = classify_membership(
-        adds, dim_store, v_to,
+    m = _Membership(
+        fact_store, dim_store, (v_from, v_to), (v_from, v_to), old_view,
         fact_key_col=fact_key_col, dim_key_col=dim_key_col,
-    ).select(*out_cols)
-    return flipped.unionByName(classified_adds)
+    )
+    return (
+        m.rest_with("left")
+        .withColumn("matched", F.coalesce("_to", "matched"))
+        .select(*m.cols)
+        .unionByName(m.adds)
+    )
+
+
+def join_membership_delta(
+    fact_store,
+    dim_store,
+    v_from: int,
+    v_to: int,
+    *,
+    fact_key_col: str,
+    dim_key_col: str,
+    view_df: DataFrame,
+    dim_window: tuple[int, int] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The DELTA form of :func:`maintain_join_membership`, for a view
+    that is PUBLISHED AS A KEYED STORE rather than rewritten whole:
+    the full partition view is O(|fact|), so a streaming publisher
+    that overwrote it per epoch would pay a fact-sized write for a
+    feed-sized change. This returns exactly what changed —
+
+    - ``upserts``: fact adds (insert/update post-images) classified
+      against the dim post-state key column, PLUS rows of the current
+      view whose flag actually flips under the window's dim-key
+      appearances/disappearances (rows whose flag already agrees are
+      not re-emitted);
+    - ``removed``: the fact pks deleted in the window (updates re-enter
+      through upserts — a keyed merge replaces them in place).
+
+    Merging these into the view store costs O(feed + flips), never
+    O(|fact|). ``view_df`` is the current published view (fact columns
+    + ``matched``); the caller reads it from the view store, so the
+    store IS the feedback loop. ``dim_window`` lets the dim's
+    ``(from, to)`` window differ from the fact window (an out-of-band
+    dim writer has its own version counter); it defaults to the fact
+    window."""
+    m = _Membership(
+        fact_store, dim_store, (v_from, v_to), dim_window or (v_from, v_to),
+        view_df, fact_key_col=fact_key_col, dim_key_col=dim_key_col,
+    )
+    flips = (
+        m.rest_with("inner")
+        .filter(F.col("matched") != F.col("_to"))
+        .withColumn("matched", F.col("_to"))
+        .select(*m.cols)
+    )
+    return m.adds.unionByName(flips), m.removed
 
 
 def _merge_count_sum(
@@ -1228,75 +1296,6 @@ def maintain_cms(
         )
         .filter(F.col("cnt") > 0)
     )
-
-
-def join_membership_delta(
-    fact_store,
-    dim_store,
-    v_from: int,
-    v_to: int,
-    *,
-    fact_key_col: str,
-    dim_key_col: str,
-    view_df: DataFrame,
-    dim_window: tuple[int, int] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The DELTA form of :func:`maintain_join_membership`, for a view
-    that is PUBLISHED AS A KEYED STORE rather than rewritten whole:
-    the full partition view is O(|fact|), so a streaming publisher
-    that overwrote it per epoch would pay a fact-sized write for a
-    feed-sized change. This returns exactly what changed —
-
-    - ``upserts``: fact adds (insert/update post-images) classified
-      against the dim post-state key column, PLUS rows of the current
-      view whose flag actually flips under the window's dim-key
-      appearances/disappearances (rows whose flag already agrees are
-      not re-emitted);
-    - ``removed``: the fact pks deleted in the window (updates re-enter
-      through upserts — a keyed merge replaces them in place).
-
-    Merging these into the view store costs O(feed + flips), never
-    O(|fact|). ``view_df`` is the current published view (fact columns
-    + ``matched``); the caller reads it from the view store, so the
-    store IS the feedback loop. ``dim_window`` lets the dim's
-    ``(from, to)`` window differ from the fact window (an out-of-band
-    dim writer has its own version counter); it defaults to the fact
-    window."""
-    dvf, dvt = dim_window or (v_from, v_to)
-    out_cols = [c for c in view_df.columns if c != "_bucket"]
-    view_df = view_df.drop("_bucket")
-    fact_pk = fact_store.key
-    pks = [fact_pk] if isinstance(fact_pk, str) else list(fact_pk)
-
-    ffeed = fact_store.read_changes(v_from, v_to).transform(ckpt_shared)
-    removed = ffeed.filter(F.col("_change") == "delete").select(*pks)
-    adds = ffeed.filter(F.col("_change").isin("insert", "update")).drop(
-        "_change"
-    )
-    classified_adds = classify_membership(
-        adds, dim_store, dvt,
-        fact_key_col=fact_key_col, dim_key_col=dim_key_col,
-    ).select(*out_cols)
-
-    dfeed = dim_store.read_changes(dvf, dvt)
-    appeared = dfeed.filter(F.col("_change") == "insert").select(
-        F.col(dim_key_col).alias("_tk"), F.lit(True).alias("_to")
-    )
-    vanished = dfeed.filter(F.col("_change") == "delete").select(
-        F.col(dim_key_col).alias("_tk"), F.lit(False).alias("_to")
-    )
-    transitions = appeared.unionByName(vanished)
-    # Rows re-entering through adds are classified fresh there; exclude
-    # them from the flip path so one upsert per pk reaches the merge.
-    flips = (
-        view_df.join(adds.select(*pks), pks, "left_anti")
-        .join(removed, pks, "left_anti")
-        .join(transitions, F.col(fact_key_col) == F.col("_tk"))
-        .filter(F.col("matched") != F.col("_to"))
-        .withColumn("matched", F.col("_to"))
-        .select(*out_cols)
-    )
-    return classified_adds.unionByName(flips), removed
 
 
 def maintain_joined3_agg(

@@ -86,6 +86,20 @@ from . import layout_queries  # noqa: E402,F401
 # prefix. Five multi-round driver-green queries slide below the
 # boundary by order; every family keeps a prefix anchor.
 _PRIORITY = [
+    # Rotated into the prefix for the streaming-layer change (plans
+    # changed, mechanical rule): the whole-view membership maintainer
+    # is now a fold over the same terms as its delta form — one
+    # anti-join of the view on every pk the fact feed touched, one
+    # left join on the dim-key transitions, and the dim feed read once
+    # instead of checkpointed for two consumers — same rows, same
+    # oracle hashes. The pair: every fact row tagged with live dim
+    # membership, dim-key appearance/disappearance flipping flags on
+    # rows the view already owns (zero fact rescans), and the chained
+    # form where window 2 consumes window 1's output across dedicated
+    # three-version fact/dim stores (delete-then-reinsert keys on both
+    # sides make the feedback loop unfakeable).
+    "incremental_view_join_membership",
+    "incremental_view_join_membership_chained",
     # Rotated into the prefix for the one-format change (checkpoint
     # topology changed, mechanical rule): the tombstone log's ids()
     # filters on its gen column directly instead of a coalesce to 0
@@ -225,14 +239,6 @@ _PRIORITY = [
     # Rotated into the prefix for r13: q15's scalar max moved from an
     # unpartitioned window to a 1-row aggregate + keyless broadcast
     # join (r12 verdict #5) — plan changed, so the driver re-verifies.
-    # New in r12 (late additions) — the join-membership (semi/anti
-    # partition) maintenance pair: every fact row tagged with live dim
-    # membership, dim-key appearance/disappearance flipping flags on
-    # rows the view already owns (zero fact rescans), and the chained
-    # form where window 2 consumes window 1's output across dedicated
-    # three-version fact/dim stores (delete-then-reinsert keys on both
-    # sides make the feedback loop unfakeable).
-    "incremental_view_join_membership",
     # ... and the day->month rollup cascade: the coarse level is
     # maintained from the fine level's delta (feed aggregated once,
     # O(changed days) per coarser level, zero base rescans) — the
@@ -302,7 +308,6 @@ _PRIORITY = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_connected_components",
-    "similarity_lsh_ann_topk",
     # Text analysis / profiling
     "text_quality_stats",
     # Corpus curation / analytics layer (r5; first driver rows)
@@ -314,6 +319,10 @@ _PRIORITY = [
     # Event-time windows and temporal joins (+ r6 range-frame MA) —
     # window_moving_avg_7d is the family's prefix anchor
     "window_moving_avg_7d",
+    # Swapped below the boundary for the streaming-layer rotation
+    # (plan unchanged): its LSH and embedding families stay anchored
+    # by dedup_minhash_lsh and the IVF/PQ queries.
+    "similarity_lsh_ann_topk",
     # Swapped below the boundary for the single-table core rotation:
     # the r15 rotations (eager-checkpoint topology flips), the r14
     # optimisation-round rotations and the Z-order maintained scan, all
@@ -350,7 +359,6 @@ _PRIORITY = [
     # families stay anchored in the prefix by join_membership,
     # histogram, topk, minmax, joined, ann_ivf_maintain_topk and
     # the sketch pair.
-    "incremental_view_join_membership_chained",
     "incremental_view_rollup_cascade",
     "incremental_view_cms_topk",
     # Swapped below the boundary for the joined-view core rotation:

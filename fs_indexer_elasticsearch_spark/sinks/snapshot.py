@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from contextlib import contextmanager
 
 import pyspark.sql.functions as F
@@ -76,6 +77,9 @@ from pyspark.sql.types import IntegerType, StructType
 from ..operators.merge import upsert_newer_wins
 
 _POINTER = "_CURRENT"
+# A version's commit file, or the ``.tmp`` its writer renames into
+# place (left behind when the writer dies before ``os.replace``).
+_COMMIT_FILE = re.compile(r"_MANIFEST_v(\d+)\.json(\.tmp)?")
 # The on-disk format every commit file carries; a reader refuses any
 # other (see ``_read_commit``). Bump it when the commit file changes.
 STORE_FORMAT = 2
@@ -469,9 +473,9 @@ class SnapshotStore:
     ) -> None:
         """Commit version ``version``: write its one commit file (tmp +
         atomic replace), then swap the pointer. A crash between the two
-        leaves an orphan commit file above the pointer that
-        ``versions()`` never lists, the next commit of that number
-        overwrites, and vacuum/rollback remove.
+        leaves an orphan commit file (or its ``.tmp``) above the
+        pointer that ``versions()`` never lists, the next commit of
+        that number overwrites, and vacuum/rollback remove.
 
         ``schema`` is the written DataFrame's schema (``_bucket``
         excluded), recorded as-nullable — the schema a parquet read of
@@ -913,11 +917,11 @@ class SnapshotStore:
     # -- read / write -------------------------------------------------------
     def _versions_on_disk(self) -> list[int]:
         """Raw version artifacts present (ascending), INCLUDING crash
-        orphans above the pointer — vacuum's GC input."""
+        orphans above the pointer."""
         return sorted(
-            int(name[len("_MANIFEST_v") : -len(".json")])
-            for name in os.listdir(self.path)
-            if name.startswith("_MANIFEST_v") and name.endswith(".json")
+            int(m.group(1))
+            for m in map(_COMMIT_FILE.fullmatch, os.listdir(self.path))
+            if m and not m.group(2)
         )
 
     def versions(self) -> list[int]:
@@ -1374,19 +1378,23 @@ class SnapshotStore:
                 f"version {version} is not retained (have {self.versions()})"
             )
         self._swap_pointer(version)
-        # Dead branches sit ABOVE the new pointer, so list raw disk
-        # artifacts — versions() deliberately filters them out now.
-        for v in self._versions_on_disk():
-            if v > version:
-                self._remove_manifest(v)
+        self._remove_above(version)
         self._gc_unreferenced_data()
         return version
 
-    def _remove_manifest(self, v: int) -> None:
-        try:
-            os.remove(self._manifest_path(v))
-        except OSError:
-            pass
+    def _remove_above(self, version: int) -> None:
+        """Remove every commit file above ``version``, ``.tmp`` ones
+        included: a rolled-back branch, or a crashed writer's orphan
+        (complete, or killed between its tmp write and the rename).
+        They sit above the pointer, so this lists raw disk artifacts —
+        ``versions()`` deliberately filters them out."""
+        for name in os.listdir(self.path):
+            m = _COMMIT_FILE.fullmatch(name)
+            if m and int(m.group(1)) > version:
+                try:
+                    os.remove(os.path.join(self.path, name))
+                except OSError:
+                    pass
 
     def _gc_unreferenced_data(self) -> None:
         """Delete data files no surviving manifest references, then
@@ -1440,9 +1448,7 @@ class SnapshotStore:
         # version) are unconditionally GC-ed — they are unreadable by
         # contract (versions() excludes them) and a later commit would
         # overwrite their numbers anyway.
-        for v in self._versions_on_disk():
-            if v > (cur or 0):
-                self._remove_manifest(v)
+        self._remove_above(cur or 0)
         versions = self.versions()
         doomed = {
             v for v in (versions[:-keep] if keep > 0 else versions) if v != cur

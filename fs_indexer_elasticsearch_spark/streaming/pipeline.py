@@ -8,7 +8,10 @@ Structured Streaming gives each one natively:
  - queue/back-pressure  → source back-pressure + maxFilesPerTrigger
  - micro-batches        → foreachBatch
  - snapshot-diff        → the same merge operator, applied per batch
- - counters             → observe() / StreamingQueryListener
+
+Every file-driven stream here starts through ONE driver,
+``_micro_batch_stream``, and every maintained view advances through
+ONE crash-safe loop, ``_maintained_view_stream``.
 
 ``run_incremental_pipeline`` watches a directory of fs-entry parquet
 drops and merges each micro-batch into a SnapshotStore — the
@@ -29,6 +32,36 @@ from pyspark.sql.types import StructType
 from ..functions import composite_id
 from ..sinks.snapshot import SnapshotStore
 from ..tables import ckpt_shared
+
+
+def _micro_batch_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: StructType,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    on_batch,
+) -> StreamingQuery:
+    """The module's one micro-batch driver: a parquet file source
+    throttled by ``maxFilesPerTrigger`` (the reference's bounded queue
+    and size-thresholded batches) feeding a ``foreachBatch`` sink
+    checkpointed at ``checkpoint_dir``. ``on_batch(batch, epoch_id)``
+    never sees an empty micro-batch. No stream here aggregates, so
+    the sink runs in the default ``append`` output mode."""
+
+    def run(batch: DataFrame, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            on_batch(batch, epoch_id)
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .start()
+    )
 
 
 def _dedup_newest(batch: DataFrame, store: SnapshotStore) -> DataFrame:
@@ -66,27 +99,15 @@ def run_incremental_pipeline(
     *,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    """Merge every micro-batch of entry files into the snapshot store
-    (exactly-once per epoch via the checkpointed foreachBatch)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        # Within one micro-batch the same key may appear twice; keep
-        # the newest (same rule the merge applies across batches),
-        # with a deterministic tiebreak for equal versions.
-        store.merge(_dedup_newest(batch, store))
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    """Merge every micro-batch of entry files into the snapshot store.
+    ``foreachBatch`` is at-least-once: a crash after the merge replays
+    the epoch, and the newer-wins merge is what makes that replay
+    idempotent. Within one micro-batch the same key may appear twice;
+    the newest is kept (the rule the merge applies across batches),
+    with a deterministic tiebreak for equal versions."""
+    return _micro_batch_stream(
+        spark, input_dir, schema, checkpoint_dir, max_files_per_trigger,
+        lambda batch, _epoch: store.merge(_dedup_newest(batch, store)),
     )
 
 
@@ -286,20 +307,58 @@ def streaming_maintained_nstore_pipeline(
     maintain,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    """The ONE crash-safe maintained-view loop, for a view over a base
-    ``fact_store`` and ANY NUMBER of dim stores (none for a
-    single-store view) that evolve out of band on their own version
-    counters. Each micro-batch merges, deduped, into ``fact_store``;
-    then the view advances across ALL stores' windows and publishes
-    to ``view_store``. The view's commit meta records one reflected
-    version PER STORE (``store_versions`` — index 0 the fact, then
-    the dims in order), so the telescoping decompositions (joined,
-    joined3, joined top-k, ...) never require the counters to align.
+    """A maintained view over a base ``fact_store`` and ANY NUMBER of
+    dim stores (none for a single-store view) that evolve out of band
+    on their own version counters, on the one crash-safe loop
+    (``_maintained_view_stream``: deduped fact merge, per-store
+    reflected versions, replay and empty-feed guards, self-heal).
 
     ``derive(versions) -> DataFrame`` rebuilds the view from scratch
-    at the given per-store versions; ``maintain(windows, old_view) ->
-    DataFrame`` advances the fed-back view across one ``(reflected,
-    current)`` window per store, same order.
+    at the given per-store versions (index 0 the fact, then the dims
+    in order); ``maintain(windows, old_view) -> DataFrame`` advances
+    the fed-back view across one ``(reflected, current)`` window per
+    store, same order. Both are published by ``overwrite`` (the view
+    is O(groups), tiny next to the base; a keyed merge would need
+    removals for vanished groups)."""
+    return _maintained_view_stream(
+        spark, input_dir, schema, fact_store, dim_stores, view_store,
+        checkpoint_dir, max_files_per_trigger,
+        derive=derive, maintain=maintain,
+        publish=lambda view, **commit: view_store.overwrite(
+            view.localCheckpoint(eager=False), **commit
+        ),
+    )
+
+
+def _maintained_view_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: StructType,
+    fact_store: SnapshotStore,
+    dim_stores: list,
+    view_store: SnapshotStore,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    *,
+    derive,
+    maintain,
+    publish,
+) -> StreamingQuery:
+    """The ONE crash-safe maintained-view loop. Each micro-batch
+    merges, deduped, into ``fact_store``; then the view advances
+    across ALL stores' windows and publishes to ``view_store``. The
+    view's commit meta records one reflected version PER STORE
+    (``store_versions`` — index 0 the fact, then the dims in order),
+    so the telescoping decompositions (joined, joined3, joined top-k,
+    membership, ...) never require the counters to align.
+
+    ``derive(versions)`` is the whole view at the given per-store
+    versions, published by overwrite. ``maintain(windows, old_view)``
+    advances the view read back from ``view_store`` (``_bucket``
+    dropped) across one ``(reflected, current)`` window per store;
+    ``publish(maintained, meta=, expected_base=)`` commits whatever it
+    returned — an overwrite for an O(groups) view, a keyed merge of a
+    delta for an O(|fact|) one.
 
     CRASH SAFETY: foreachBatch is at-least-once, and a crash can land
     BETWEEN the fact merge and the view publish. Every epoch therefore
@@ -317,11 +376,9 @@ def streaming_maintained_nstore_pipeline(
       or no-change epoch) the commit is skipped — the reflected
       versions stay put, because a view over an empty window is the
       same view.
-    - Publication is ``overwrite`` (the view is O(groups), tiny next
-      to the base; a keyed merge would need removals for vanished
-      groups) with ``expected_base`` pinned to the view version the
-      old view was read from — a concurrent publisher raises instead
-      of silently folding over the feedback loop.
+    - Every publication pins ``expected_base`` to the view version
+      the old view was read from — a concurrent publisher raises
+      instead of silently folding over the feedback loop.
     - SELF-HEAL: a vacuum of ANY store deeper than the view's lag
       makes a window unreadable ("not retained"); the epoch degrades
       once to ``derive``, which re-stamps the reflected versions and
@@ -333,15 +390,8 @@ def streaming_maintained_nstore_pipeline(
     batch-driven trade (a caller needing tighter dim freshness drops
     a zero-row marker file to tick the stream)."""
     stores = [fact_store, *dim_stores]
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         fact_store.merge(_dedup_newest(batch, fact_store))
         nows = [s.current_version() for s in stores]
         view_base = view_store.current_version()
@@ -351,38 +401,28 @@ def streaming_maintained_nstore_pipeline(
         refs = meta.get("store_versions")
         if refs is not None and list(refs) == nows:
             return  # replay after a completed publish
-
-        def publish(view: DataFrame) -> None:
-            view_store.overwrite(
-                view.localCheckpoint(eager=False),
-                meta={"store_versions": nows},
-                expected_base=view_base,
-            )
-
-        if refs is None:
-            publish(derive(nows))
-            return
-        windows = list(zip(refs, nows))
-        try:
-            if all(
-                s.read_changes(vf, vt, update_images="both").isEmpty()
-                for s, (vf, vt) in zip(stores, windows)
-            ):
+        commit = {"meta": {"store_versions": nows}, "expected_base": view_base}
+        if refs is not None:
+            windows = list(zip(refs, nows))
+            try:
+                if all(
+                    s.read_changes(vf, vt, update_images="both").isEmpty()
+                    for s, (vf, vt) in zip(stores, windows)
+                ):
+                    return
+                old = view_store.read(version=view_base).drop("_bucket")
+                maintained = maintain(windows, old)
+            except ValueError as e:
+                if "not retained" not in str(e):
+                    raise
+            else:
+                publish(maintained, **commit)
                 return
-            old = view_store.read(version=view_base).drop("_bucket")
-            view = maintain(windows, old)
-        except ValueError as e:
-            if "not retained" not in str(e):
-                raise
-            publish(derive(nows))
-            return
-        publish(view)
+        view_store.overwrite(derive(nows), **commit)
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _micro_batch_stream(
+        spark, input_dir, schema, checkpoint_dir, max_files_per_trigger,
+        on_batch,
     )
 
 
@@ -676,15 +716,7 @@ def streaming_changefeed_pipeline(
     from ..operators.merge import upsert_newer_wins
     from ..sinks.snapshot import classify_changes
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         # _dedup_newest, NOT an inline version-only window: this is
         # the one pipeline whose contract is replay-deterministic
         # delta publication, so an equal-version duplicate key must
@@ -717,9 +749,9 @@ def streaming_changefeed_pipeline(
             # Replayed or no-change epoch: the classification proved
             # the merge would be a no-op, so skip BOTH sinks AND the
             # store merge — otherwise every such epoch commits a no-op
-            # version (a manifest, cfg and meta file each, and one more
-            # link in the version chain), the exact version churn the
-            # match pipeline's isEmpty guard exists to prevent.
+            # version (one more commit file, and one more link in the
+            # version chain), the exact version churn the match
+            # pipeline's isEmpty guard exists to prevent.
             return
         if feed_store is not None:
             # composite_id keeps the feed-store key id-compatible with
@@ -737,11 +769,9 @@ def streaming_changefeed_pipeline(
             feed.write.mode("append").parquet(feed_dir)
         store.merge(deduped)
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _micro_batch_stream(
+        spark, input_dir, schema, checkpoint_dir, max_files_per_trigger,
+        on_batch,
     )
 
 
@@ -802,9 +832,9 @@ def streaming_curation_pipeline(
         if scored.isEmpty():
             # Every doc failed the quality gate: emit nothing and —
             # critically — skip the merge, which would otherwise commit
-            # a no-op store version per rejected micro-batch (a
-            # manifest, cfg and meta file each epoch, and a version
-            # chain that grows with every rejected batch).
+            # a no-op store version per rejected micro-batch (one
+            # commit file each epoch, and a version chain that grows
+            # with every rejected batch).
             return scored.select(
                 "batch_id",
                 "n_tokens",
@@ -1031,25 +1061,18 @@ def _streaming_match_pipeline(
     the store's match_and_merge per epoch, land matches in
     append-parquet (at-least-once) or a SnapshotStore keyed on
     ``key_cols`` (effectively-once under epoch replay)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         matches = match_fn(batch, epoch_id).withColumn(
             "epoch", F.lit(epoch_id).cast("long")
         )
         if matches.isEmpty():
             # Nothing to record: skip the sink entirely — a keyed
             # matches_store merge of zero rows would still commit a
-            # fresh no-op store version per epoch (a manifest, cfg and
-            # meta file each), and a stream of match-free batches
-            # would grow the version chain unboundedly. match_fn's own side effects (the index
-            # merge) have already run.
+            # fresh no-op store version per epoch (one commit file
+            # each), and a stream of match-free batches would grow the
+            # version chain unboundedly. match_fn's own side effects
+            # (the index merge) have already run.
             return
         if matches_store is not None:
             matches_store.merge(
@@ -1061,11 +1084,9 @@ def _streaming_match_pipeline(
             return
         matches.write.mode("append").parquet(matches_dir)
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _micro_batch_stream(
+        spark, input_dir, schema, checkpoint_dir, max_files_per_trigger,
+        on_batch,
     )
 
 
@@ -1167,94 +1188,54 @@ def streaming_maintained_partition_pipeline(
     stamped with a maintenance version column ``_vm`` = the fact
     version they reflect, so replayed merges resolve newer-wins.
 
-    Crash contract (per store, like the joined-histogram stream): the
-    view's commit meta records the fact and dim versions it reflects;
-    a crash between the fact merge and the publish is caught up by
-    the next epoch's spanning windows; an epoch with both feeds empty
-    skips; a vacuum deeper than the lag self-heals with one
-    from-scratch classify (overwrite). Dim-only changes ride the next
-    fact epoch (drop a zero-row marker file for tighter dim
-    freshness). Reference parity: this is the standing form of the
-    reference's per-scan orphan NOT-IN rescan (scanner.py:447-454)."""
+    The stream runs on the one maintained-view loop
+    (``_maintained_view_stream``), so its crash contract is every
+    maintained view's: the view's meta records ``store_versions`` =
+    ``[fact, dim]``; a crash between the fact merge and the publish
+    is caught up by the next epoch's spanning windows; an epoch with
+    both feeds empty skips; a vacuum deeper than the lag (or a view
+    store without ``store_versions``) self-heals with one
+    from-scratch classify, published by overwrite. Dim-only changes
+    ride the next fact epoch (drop a zero-row marker file for tighter
+    dim freshness). Reference parity: this is the standing form of
+    the reference's per-scan orphan NOT-IN rescan
+    (scanner.py:447-454)."""
     from ..operators.ivm import classify_membership, join_membership_delta
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    def derive(versions) -> DataFrame:
+        f_now, d_now = versions
+        return classify_membership(
+            fact_store.read(version=f_now).drop("_bucket"),
+            dim_store,
+            d_now,
+            fact_key_col=fact_key_col,
+            dim_key_col=dim_key_col,
+        ).withColumn("_vm", F.lit(f_now))
 
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fact_store.merge(_dedup_newest(batch, fact_store))
-        f_now = fact_store.current_version()
-        d_now = dim_store.current_version()
-        view_base = view_store.current_version()
-        meta = (
-            view_store.read_meta(view_base) or {}
-        ) if view_base is not None else {}
-        f_ref, d_ref = meta.get("fact_version"), meta.get("dim_version")
-        if f_ref == f_now and d_ref == d_now:
-            return  # replay after a completed publish
+    def maintain(windows, old_view):
+        (f_ref, f_now), dim_window = windows
+        upserts, removed = join_membership_delta(
+            fact_store,
+            dim_store,
+            f_ref,
+            f_now,
+            fact_key_col=fact_key_col,
+            dim_key_col=dim_key_col,
+            view_df=old_view.drop("_vm"),
+            dim_window=dim_window,
+        )
+        return upserts.withColumn("_vm", F.lit(f_now)), removed
 
-        vmeta = {"fact_version": f_now, "dim_version": d_now}
-
-        def derive() -> DataFrame:
-            return classify_membership(
-                fact_store.read(version=f_now).drop("_bucket"),
-                dim_store,
-                d_now,
-                fact_key_col=fact_key_col,
-                dim_key_col=dim_key_col,
-            ).withColumn("_vm", F.lit(f_now))
-
-        if f_ref is None or d_ref is None:
-            view_store.overwrite(
-                derive(), meta=vmeta, expected_base=view_base
-            )
-            return
-        try:
-            if (
-                fact_store.read_changes(
-                    f_ref, f_now, update_images="both"
-                ).isEmpty()
-                and dim_store.read_changes(
-                    d_ref, d_now, update_images="both"
-                ).isEmpty()
-            ):
-                return
-            upserts, removed = join_membership_delta(
-                fact_store,
-                dim_store,
-                f_ref,
-                f_now,
-                fact_key_col=fact_key_col,
-                dim_key_col=dim_key_col,
-                view_df=view_store.read(version=view_base).drop("_vm"),
-                dim_window=(d_ref, d_now),
-            )
-        except ValueError as e:
-            if "not retained" not in str(e):
-                raise
-            view_store.overwrite(
-                derive(), meta=vmeta, expected_base=view_base
-            )
-            return
+    def publish(delta, **commit) -> None:
+        upserts, removed = delta
         view_store.merge(
-            upserts.withColumn("_vm", F.lit(f_now)).localCheckpoint(
-                eager=False
-            ),
-            removed=removed,
-            meta=vmeta,
-            expected_base=view_base,
+            upserts.localCheckpoint(eager=False), removed=removed, **commit
         )
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _maintained_view_stream(
+        spark, input_dir, schema, fact_store, [dim_store], view_store,
+        checkpoint_dir, max_files_per_trigger,
+        derive=derive, maintain=maintain, publish=publish,
     )
 
 
@@ -1350,15 +1331,7 @@ def streaming_zorder_pipeline(
 
     from ..sinks.zorder import append_zordered, write_zordered
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         if not os.path.exists(os.path.join(layout_dir, "_ZONES.json")):
             # Seed records its own epoch: a replay of the seeding batch
             # after the manifest committed must take the append path's
@@ -1383,9 +1356,7 @@ def streaming_zorder_pipeline(
             epoch=f"stream-{epoch_id}",
         )
 
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _micro_batch_stream(
+        spark, input_dir, schema, checkpoint_dir, max_files_per_trigger,
+        on_batch,
     )

@@ -548,7 +548,9 @@ def test_rollback_restores_state_and_gcs_dead_branch(spark, tmp_path):
 def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
     """A crashed write's commit file above the pointer must never be
     served by read(version=) — versions() excludes it — nor perturb
-    the store's meta, and vacuum GCs it."""
+    the store's meta, and vacuum GCs it. The same holds for the
+    ``.json.tmp`` a writer killed before its rename leaves: vacuum and
+    rollback both remove it."""
     import json
     import os
 
@@ -577,6 +579,16 @@ def test_crash_orphan_version_is_not_retained_and_vacuumed(spark, tmp_path):
         store.read(version=5)
     store.vacuum(keep=2)
     assert not os.path.exists(orphan)
+
+    # a writer killed between the tmp write and os.replace
+    tmp = store._manifest_path(2) + ".tmp"
+    for gc in (lambda: store.vacuum(keep=1), lambda: store.rollback(1)):
+        with open(tmp, "w") as f:
+            json.dump(commit, f)
+        assert store.versions() == [1]
+        gc()
+        assert not os.path.exists(tmp)
+        assert store.versions() == [1]
 
 
 def test_rebucket_evolves_count_and_preserves_rows(

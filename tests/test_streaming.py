@@ -1449,7 +1449,9 @@ def test_streaming_partition_delta_publication(spark, tmp_path):
     first derivation (asserted by counting versioned fact reads), the
     dim evolves out of band between epochs, and after every epoch the
     published view equals a from-scratch classification of the two
-    post states."""
+    post states. The view meta records ``store_versions`` = [fact,
+    dim] like every maintained view, and an epoch whose fact merge
+    changes nothing (both feeds empty) publishes nothing."""
     from fs_indexer_elasticsearch_spark.streaming.pipeline import (
         streaming_maintained_partition_pipeline,
     )
@@ -1496,6 +1498,11 @@ def test_streaming_partition_delta_publication(spark, tmp_path):
             for r in view.read().select("k", "cust", "matched").collect()
         }
 
+    def reflected():
+        return view.read_meta()["store_versions"] == [
+            fact.current_version(), dim.current_version()
+        ]
+
     def scratch():
         dk = dim.read().select(F.col("dk"), F.lit(True).alias("m"))
         return {
@@ -1514,6 +1521,7 @@ def test_streaming_partition_delta_publication(spark, tmp_path):
     try:
         q.processAllAvailable()
         assert view_now() == scratch()
+        assert reflected()
         derivation_reads = len(fact_reads)
         assert derivation_reads >= 1  # the first derivation
 
@@ -1529,6 +1537,7 @@ def test_streaming_partition_delta_publication(spark, tmp_path):
         assert got == scratch()
         assert got[11] == (2, False) and got[12] == (9, True)
         assert got[14] == (2, False) and got[10] == (9, True)
+        assert reflected()
         assert len(fact_reads) == derivation_reads  # no fact rescan
 
         # Out-of-band fact delete spans into the next epoch's window.
@@ -1541,6 +1550,17 @@ def test_streaming_partition_delta_publication(spark, tmp_path):
         got = view_now()
         assert got == scratch()
         assert 13 not in got and got[15] == (1, True)
+        assert reflected()
+        assert len(fact_reads) == derivation_reads
+
+        # A re-drop of b3's row: the fact merge commits a version, but
+        # both feeds are empty, so the view store does not move.
+        fact_before, view_before = fact.current_version(), view.current_version()
+        drop("b4", [(15, 1, 1)])
+        q.processAllAvailable()
+        assert fact.current_version() > fact_before
+        assert view.current_version() == view_before
+        assert view_now() == scratch()
         assert len(fact_reads) == derivation_reads
     finally:
         q.stop()
@@ -1735,6 +1755,22 @@ def test_streaming_module_has_single_dedup_implementation():
     )
     dedup_src = inspect.getsource(pl._dedup_newest)
     assert 'withColumn("_rn"' in dedup_src
+
+
+def test_streaming_module_has_single_micro_batch_driver():
+    """Every file-driven stream starts through _micro_batch_stream:
+    the module holds exactly one readStream source and one
+    foreachBatch sink, so the empty-batch skip, the trigger throttle
+    and the checkpoint wiring cannot drift between streams."""
+    import inspect
+
+    import fs_indexer_elasticsearch_spark.streaming.pipeline as pl
+
+    src = inspect.getsource(pl)
+    assert src.count("readStream") == 1
+    assert src.count("foreachBatch(") == 1
+    driver_src = inspect.getsource(pl._micro_batch_stream)
+    assert "readStream" in driver_src and "foreachBatch(" in driver_src
 
 
 @pytest.mark.slow
